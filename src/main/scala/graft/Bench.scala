@@ -10,6 +10,12 @@ import org.apache.spark.sql.SparkSession
   * conflated with "fast".
   */
 object Bench {
+  /** A query's reported time: the min over its successful reps (a failed
+    * rep is -1.0), or -1.0 only when every rep failed. The name lands in
+    * `errors` on any failure, and `failed_reps` counts them per query. */
+  def minOk(times: Seq[Double]): Double =
+    times.filter(_ >= 0).minOption.getOrElse(-1.0)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -127,9 +133,9 @@ object Bench {
       }
       name -> times
     }
-    val results = allTimes.map { case (name, times) =>
-      name -> (if (times.contains(-1.0)) -1.0 else times.min)
-    }
+    val results = allTimes.map { case (name, times) => name -> minOk(times) }
+    val failedReps = allTimes.map { case (name, ts) => name -> ts.count(_ < 0) }
+      .collect { case (k, n) if n > 0 => "\"" + k + "\":" + n }.mkString("{", ",", "}")
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       // average the two middle elements for even rep counts — s(size/2)
@@ -140,8 +146,8 @@ object Bench {
     }
     // min/median spread across reps: how far the kept min sits from a
     // typical rep — a one-number noise witness for the sweep
-    val totalMedian = allTimes
-      .collect { case (_, ts) if !ts.contains(-1.0) => median(ts) }.sum
+    val totalMedian = allTimes.map(_._2.filter(_ >= 0)).filter(_.nonEmpty)
+      .map(median).sum
     val loadAfterSweep = loadavg()
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -182,7 +188,7 @@ object Bench {
             spark.catalog.clearCache()
             if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
           }
-          name -> (if (times.contains(-1.0)) -1.0 else times.min)
+          name -> minOk(times)
         }.toMap
     val streamJson = streamIsolated.toSeq.sortBy(_._1)
       .map { case (k, v) =>
@@ -276,7 +282,7 @@ object Bench {
     // with r18-and-earlier artifacts — the tag makes that machine-visible
     // instead of relying on readers knowing the cutover round.
     val hostJson = s"""{"loadavg_before":$loadBefore,"loadavg_after_sweep":$loadAfterSweep,"loadavg_end":${loadavg()},"cpus":"$cpus","code_cache":"$codeCache","total_min_sec":$total,"total_median_sec":$totalMedian,"median_def":"mid_avg_since_r19"}"""
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","warmup":$warmup,"queries":$qs,"stream_isolated_min3":$streamJson,"errors":$errJson,"reps":$reps,"host":$hostJson,"pbf_ingest_sec":$pbfIngest,"graph_e2e_sec":$graphE2e,"pbf_baseline_osmosis_sec":160.171,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","warmup":$warmup,"queries":$qs,"failed_reps":$failedReps,"stream_isolated_min3":$streamJson,"errors":$errJson,"reps":$reps,"host":$hostJson,"pbf_ingest_sec":$pbfIngest,"graph_e2e_sec":$graphE2e,"pbf_baseline_osmosis_sec":160.171,"sf":"$sfDir"}"""
     println(line)
     // LAST stdout line: the COMPLETE per-query map, one bare JSON line
     // (VERDICT r21 item 1 — the r12-r21 1.2 KB truncation meant the
@@ -290,7 +296,7 @@ object Bench {
       def f3(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
       val all = results.map { case (k, v) => "\"" + k + "\":" + f3(v) }
         .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","n_queries":${results.size},"warmup":$warmup,"queries":$all,"stream_isolated_min3":$streamJson,"full_precision_artifact":"BENCH_COLD.json|BENCH_STEADY.json","errors":$errJson,"reps":$reps,"host":$hostJson,"pbf_ingest_sec":${f3(pbfIngest)},"graph_e2e_sec":${f3(graphE2e)},"pbf_baseline_osmosis_sec":160.171,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","n_queries":${results.size},"warmup":$warmup,"queries":$all,"failed_reps":$failedReps,"stream_isolated_min3":$streamJson,"full_precision_artifact":"BENCH_COLD.json|BENCH_STEADY.json","errors":$errJson,"reps":$reps,"host":$hostJson,"pbf_ingest_sec":${f3(pbfIngest)},"graph_e2e_sec":${f3(graphE2e)},"pbf_baseline_osmosis_sec":160.171,"sf":"$sfDir"}"""
     }
     println(finalJson)
     // the driver's captured stdout tail truncates long runs — also land

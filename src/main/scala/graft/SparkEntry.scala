@@ -2748,22 +2748,16 @@ object SparkEntry {
         .withColumn("sequence_id", (row_number().over(w) - 1).cast("int"))
         .drop("l_linenumber")
         .localCheckpoint(true) // feeds 5 downstream stages
-      // materialize EVERY intermediate once, exactly like the reference's
+      // materialize every reused intermediate once, like the reference's
       // step tables (osm-road-graphs.sql creates a table per step): the
-      // chain references shared/lengths/splits/limits 2-4x each, and
-      // left as views the DAG inlines each use — measured 48 scans of wn
-      // and 52 shuffles in one plan. Checkpointed, the plan is linear and
-      // each stage computes once. (On a cluster these would be bucketed
-      // step tables / reliable checkpoints — see q_s11_bucketed.)
+      // chain references shared/lengths/limits 2-4x each, and left as
+      // views the DAG inlines each use — measured 48 scans of wn and 52
+      // shuffles in one plan. Staged, the plan is linear and each stage
+      // computes once. (On a cluster these would be bucketed step
+      // tables / reliable checkpoints — see q_s11_bucketed.)
       val net = wn.select(col("way_id").as("edge_id")).distinct()
         .localCheckpoint(true)
-      val shared = osm.RoadGraph.sharedNodes(wn, net).localCheckpoint(true)
-      val lengths = osm.RoadGraph.waysLength(wn, net).localCheckpoint(true)
-      val splits = osm.RoadGraph.splitNodes(wn, net, shared, lengths)
-        .localCheckpoint(true)
-      val limits = osm.RoadGraph.mergeLimits(wn, splits, shared, lengths)
-        .localCheckpoint(true)
-      val ntm = osm.RoadGraph.nodesToMerge(wn, net, limits).localCheckpoint(true)
+      val ntm = osm.RoadGraph.splitChain(wn, net, net)
       val segs = ntm.groupBy("way_id", "group_id")
         .agg(array_join(
           RelOps.orderedListAgg(col("sequence_id"), col("node_id").cast("string")),

@@ -76,6 +76,19 @@ object OsmModel {
       .select(col("way_id"), col("node_id"), col("sequence_id").cast("int").as("sequence_id"))
   }
 
+  /** Way linestrings rebuilt from node coordinates in way order — what
+    * Osmosis derives at load time (PBF ways carry no geometry). `ways`
+    * needs `id` and `nodes`; returns `(id, linestring)`. A node missing
+    * from `nodes` is skipped, and a way with none present gets no row. */
+  def linestringsOf(ways: DataFrame, nodes: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
+    ways.select(col("id"), posexplode(col("nodes")).as(Seq("seq", "node_id")))
+      .join(nodes.select(col("id").as("node_id"), col("geom")), Seq("node_id"))
+      .groupBy(col("id"))
+      .agg(transform(array_sort(collect_list(struct(col("seq"), col("geom")))),
+        e => e.getField("geom")).as("linestring"))
+  }
+
   private[osm] def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
   /** Relation fixture companion to [[microFixture]]: 6 relations over

@@ -7,11 +7,16 @@ import graft.functions.{Geo, GraftFunctions => GF}
 import graft.ops.RelOps
 
 /** The flagship road-network graph pipeline (osm-road-graphs.sql,
-  * EP3 in SURVEY §3), re-expressed as one linear composition of
-  * DataFrame transforms. The reference materializes eleven staging
-  * tables; here every stage is a lazy plan — callers `.cache()` the
-  * documented reuse points (SURVEY §3: car_network, ways_merge_limits,
-  * car_network_merged are each consumed 2+ times).
+  * EP3 in SURVEY §3), re-expressed as DataFrame transforms. Each public
+  * stage function is a lazy plan. The reference writes eleven staging
+  * tables once each and later steps read them; [[buildMergedNetwork]]
+  * does the same for the stages read more than once: it
+  * `localCheckpoint`s the filtered, imputed network and the merged
+  * output, and [[splitChain]] the shared nodes, way lengths, merge
+  * limits and nodes-to-merge. Left lazy, every consumer inlines its
+  * own copy: one plan then holds ~22 copies of the network and ~1,300
+  * logical operators, and the driver spends longer planning it than
+  * the executors spend running it.
   *
   * Unit policy (SURVEY §7.4-3): the reference mixes planar meters
   * (osm-road-graphs.sql:11) and geodesic km (:156); we standardize on
@@ -193,10 +198,20 @@ object RoadGraph {
         Geo.geodesicLengthMeters(col("geom")).as("length"),
         col("speed_limit"), col("highway"), col("oneway"), col("geom"))
 
-    val untouched = network
-      .join(segs.select("edge_id"), Seq("edge_id"), "left_anti")
-      .select("start_node", "end_node", "edge_id", "tags", "nodes",
-        "length", "speed_limit", "highway", "oneway", "geom")
+    // PBF ways arrive without a linestring (Osmosis derives it at load
+    // time), so a way kept whole has no geometry yet: rebuild it from
+    // the node coordinates. A way that has one keeps it unchanged.
+    val whole = network.join(segs.select("edge_id"), Seq("edge_id"), "left_anti")
+    val rebuilt = OsmModel.linestringsOf(
+        whole.filter(col("geom").isNull).select(col("edge_id").as("id"), col("nodes")),
+        nodes)
+      .select(col("id").as("edge_id"), col("linestring").as("__ls"))
+    val untouched = whole.join(rebuilt, Seq("edge_id"), "left")
+      .select(col("start_node"), col("end_node"), col("edge_id"), col("tags"),
+        col("nodes"),
+        coalesce(col("length"), Geo.geodesicLengthMeters(col("__ls"))).as("length"),
+        col("speed_limit"), col("highway"), col("oneway"),
+        coalesce(col("geom"), col("__ls")).as("geom"))
     merged.unionByName(untouched)
   }
 
@@ -315,18 +330,41 @@ object RoadGraph {
       merged.select(col("edge_id"), col("geom")), "edge_id", col("geom"),
       maxDist = maxDeg, cellDeg = cellDeg)
 
-  /** Full pipeline: filtered+imputed network -> split -> merged. The
-    * intermediate stages consumed more than once are cached by the
-    * caller when materialization matters (S4 policy, SURVEY §4).
+  /** Steps 7-11a ([[sharedNodes]] -> [[waysLength]] -> [[splitNodes]]
+    * -> [[mergeLimits]] -> [[nodesToMerge]]), each run once like the
+    * reference's step tables (osm-road-graphs.sql:66-127 CTAS each
+    * one). `shared` and `lengths` are read twice and are
+    * `localCheckpoint`ed; `limits` is read once, but its plan holds two
+    * copies of the chain above it, so it is cut too; `splits` is read
+    * once and stays lazy. `network` is read four times: pass it
+    * materialized. `sharedOver` is the network whose ways count towards
+    * a node's shared status — `network` itself, or the whole network
+    * when only some ways are rebuilt. Returns nodes-to-merge,
+    * materialized. */
+  def splitChain(wayNodes: DataFrame, network: DataFrame,
+      sharedOver: DataFrame): DataFrame = {
+    val shared = sharedNodes(wayNodes, sharedOver).localCheckpoint(true)
+    val lengths = waysLength(wayNodes, network).localCheckpoint(true)
+    val splits = splitNodes(wayNodes, network, shared, lengths)
+    val limits = mergeLimits(wayNodes, splits, shared, lengths).localCheckpoint(true)
+    nodesToMerge(wayNodes, network, limits).localCheckpoint(true)
+  }
+
+  /** Full pipeline: filtered+imputed network -> split -> merged, with
+    * every stage read more than once materialized: the network (read by
+    * the split chain and the merge), the split chain's reuse points,
+    * and the merged output, which [[directed]]'s 4-branch union reads
+    * four times.
     */
-  def buildMergedNetwork(tables: OsmTables): DataFrame = {
+  def buildMergedNetwork(tables: OsmTables): DataFrame =
+    stagedMergedNetwork(tables).localCheckpoint(true)
+
+  /** [[buildMergedNetwork]] before its output is materialized: the
+    * network and split-chain stages are, so this plan stays small. */
+  private[graft] def stagedMergedNetwork(tables: OsmTables): DataFrame = {
     val net = imputeSpeedLimits(excludeModes(carNetwork(tables.ways)))
-    val shared = sharedNodes(tables.wayNodes, net)
-    val lengths = waysLength(tables.wayNodes, net)
-    val splits = splitNodes(tables.wayNodes, net, shared, lengths)
-    val limits = mergeLimits(tables.wayNodes, splits, shared, lengths)
-    val ntm = nodesToMerge(tables.wayNodes, net, limits)
-    mergedNetwork(ntm, tables.nodes, net)
+      .localCheckpoint(true)
+    mergedNetwork(splitChain(tables.wayNodes, net, net), tables.nodes, net)
   }
 
   /** [[buildMergedNetwork]] materialized ONCE per (session, fixture
@@ -335,12 +373,13 @@ object RoadGraph {
     * split/merge result into persistent tables during ETL and every
     * later `pgr_*` call reads the prebuilt relation — the network is
     * not re-derived per query there, and it shouldn't be here. The
-    * first caller pays the 7-stage pipeline and `localCheckpoint`s the
-    * edge relation (tiny relative to executor memory even at planet
-    * scale — the planet's routable network is ~10^8 edges vs the 10^11
-    * raw rows it was derived from); later operators reuse the
-    * materialized copy. Callers must pass a `key` that uniquely names
-    * the deterministic fixture the tables were built from. */
+    * first caller pays the pipeline, which already returns the merged
+    * edge relation materialized (tiny relative to executor memory even
+    * at planet scale — the planet's routable network is ~10^8 edges vs
+    * the 10^11 raw rows it was derived from), so the memo adds no
+    * checkpoint of its own. Later operators reuse the materialized
+    * copy. Callers must pass a `key` that uniquely names the
+    * deterministic fixture the tables were built from. */
   def buildMergedNetworkCached(tables: OsmTables, key: String): DataFrame = {
     val spark = tables.ways.sparkSession
     // evict entries whose owning SparkContext has stopped — their
@@ -350,8 +389,7 @@ object RoadGraph {
     mergedMemo.entrySet().removeIf(
       e => e.getValue.sparkSession.sparkContext.isStopped)
     val k = spark.sparkContext.applicationId + "/" + key
-    mergedMemo.computeIfAbsent(k,
-      _ => buildMergedNetwork(tables).localCheckpoint(true))
+    mergedMemo.computeIfAbsent(k, _ => buildMergedNetwork(tables))
   }
 
   private val mergedMemo =

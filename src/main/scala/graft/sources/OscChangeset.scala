@@ -165,12 +165,7 @@ object OscChangeset {
         .select(col("way_id").as("id")))
       .distinct()
     val stale = waysMerged.join(touchedWayIds, Seq("id"), "left_semi")
-    val fresh = stale
-      .select(col("id"), posexplode(col("nodes")).as(Seq("seq", "node_id")))
-      .join(nodes.select(col("id").as("node_id"), col("geom")), Seq("node_id"))
-      .groupBy(col("id"))
-      .agg(transform(array_sort(collect_list(struct(col("seq"), col("geom")))),
-        e => e.getField("geom")).as("linestring"))
+    val fresh = OsmModel.linestringsOf(stale, nodes)
     val ways = waysMerged.join(touchedWayIds, Seq("id"), "left_anti")
       .unionByName(stale.drop("linestring")
         .join(fresh, Seq("id"), "left")

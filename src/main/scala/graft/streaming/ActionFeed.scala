@@ -73,15 +73,11 @@ object ActionFeed {
     // with an unaffected way still splits) — only the assembled ways are
     // restricted.
     val net = RoadGraph.imputeSpeedLimits(RoadGraph.excludeModes(
-      RoadGraph.carNetwork(ways)))
+      RoadGraph.carNetwork(ways))).localCheckpoint(true)
     val allNet = RoadGraph.imputeSpeedLimits(RoadGraph.excludeModes(
       RoadGraph.carNetwork(tables.ways)))
-    val shared = RoadGraph.sharedNodes(tables.wayNodes, allNet)
-    val lengths = RoadGraph.waysLength(tables.wayNodes, net)
-    val splits = RoadGraph.splitNodes(tables.wayNodes, net, shared, lengths)
-    val limits = RoadGraph.mergeLimits(tables.wayNodes, splits, shared, lengths)
-    val ntm = RoadGraph.nodesToMerge(tables.wayNodes, net, limits)
-    RoadGraph.mergedNetwork(ntm, tables.nodes, net)
+    RoadGraph.mergedNetwork(RoadGraph.splitChain(tables.wayNodes, net, allNet),
+      tables.nodes, net)
   }
 
   /** Merge semantics for the materialized output (the foreachBatch body

@@ -126,6 +126,65 @@ class RoadGraphSpec extends SparkTestBase {
     assert(comp(1L) !== comp(9L))
   }
 
+  test("buildMergedNetwork plans each reuse point once (plan-size bound)") {
+    def size(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.collect { case p => p }.size
+    // Left lazy, the chain inlines the network ~22 times and the
+    // optimized plan of the directed edge list has ~1,380 nodes; with
+    // the network and split-chain stages materialized it has ~160 ...
+    val staged = size(RoadGraph.minimalDirectedGraph(RoadGraph.stagedMergedNetwork(t)))
+    assert(staged < 300, s"staged plan has $staged nodes")
+    // ... and with the merged output materialized too, a handful
+    val built = size(RoadGraph.minimalDirectedGraph(RoadGraph.buildMergedNetwork(t)))
+    assert(built < 30, s"built plan has $built nodes")
+  }
+
+  test("buildMergedNetwork == lazy composition of the public stage functions") {
+    val n = RoadGraph.imputeSpeedLimits(
+      RoadGraph.excludeModes(RoadGraph.carNetwork(t.ways)))
+    val shared = RoadGraph.sharedNodes(t.wayNodes, n)
+    val lengths = RoadGraph.waysLength(t.wayNodes, n)
+    val splits = RoadGraph.splitNodes(t.wayNodes, n, shared, lengths)
+    val limits = RoadGraph.mergeLimits(t.wayNodes, splits, shared, lengths)
+    val lazyMerged = RoadGraph.mergedNetwork(
+      RoadGraph.nodesToMerge(t.wayNodes, n, limits), t.nodes, n)
+    def bag(df: org.apache.spark.sql.DataFrame) =
+      df.collect().toSeq.groupBy(identity).view.mapValues(_.size).toMap
+    val staged = RoadGraph.buildMergedNetwork(t)
+    assert(staged.columns.toSeq === lazyMerged.columns.toSeq)
+    assert(bag(staged) === bag(lazyMerged))
+    assert(staged.count() === 8)
+  }
+
+  test("ways without a linestring get one from their node coordinates") {
+    import spark.implicits._
+    val ts = java.sql.Timestamp.valueOf("2020-05-08 12:00:00")
+    def node(id: Long, lon: Double, lat: Double) =
+      osm.OsmNode(id, 1, 1, ts, 1L, Map.empty, osm.Point(lon, lat))
+    def way(id: Long, nodes: Seq[Long], line: Seq[osm.Point]) =
+      osm.OsmWay(id, 1, 1, ts, 1L, Map("highway" -> "residential"), nodes, line)
+    val nodes = Seq(node(1, 0.0, 0.0), node(2, 0.01, 0.0), node(3, 0.01, 0.01),
+      node(4, 0.05, 0.0), node(5, 0.06, 0.0)).toDF()
+    // way 1 arrives like a PBF way, with a NULL linestring; way 2 carries
+    // its own (with a vertex no node has), which must be kept as is
+    val given = Seq(osm.Point(0.05, 0.0), osm.Point(0.055, 0.0), osm.Point(0.06, 0.0))
+    val ways = Seq(way(1, Seq(1L, 2L, 3L), null), way(2, Seq(4L, 5L), given)).toDF()
+    val tt = osm.OsmTables(nodes, ways, OsmModel.wayNodesOf(spark, ways))
+    val rows = RoadGraph.buildMergedNetwork(tt).collect()
+      .map(r => r.getAs[Long]("edge_id") -> r).toMap
+    assert(rows.keySet === Set(1L, 2L)) // no shared node: both kept whole
+    def pts(r: org.apache.spark.sql.Row) =
+      r.getSeq[org.apache.spark.sql.Row](r.fieldIndex("geom"))
+        .map(p => (p.getDouble(0), p.getDouble(1)))
+    assert(pts(rows(1L)) === Seq((0.0, 0.0), (0.01, 0.0), (0.01, 0.01)))
+    // 0.01 deg along the equator, then 0.01 deg along a meridian: each
+    // haversine leg is R * 0.01 * pi / 180 with R = 6371008.8 m, so
+    // 2 * 1111.9508... = 2223.9016... m
+    assert(math.abs(rows(1L).getAs[Double]("length") - 2223.9016) < 1e-3)
+    assert(pts(rows(2L)) === given.map(p => (p.lon, p.lat)))
+    assert(math.abs(rows(2L).getAs[Double]("length") - 1111.9508) < 1e-3)
+  }
+
   test("array-form split == relational chain on the micro fixture") {
     val wn = t.wayNodes.join(net.select("edge_id"),
       t.wayNodes("way_id") === col("edge_id"), "left_semi")
