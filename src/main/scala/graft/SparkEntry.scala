@@ -1553,7 +1553,7 @@ object SparkEntry {
     //      VALUES oracle — no nondeterministic column escapes — and
     //      LlmSpec "IVF recall" pins the exact per-query recall on the
     //      fixed sf0.001 corpus. nprobe=12 (not 4) is what buys recall
-    //      1.0 here: RecallProbe at sf0.01 measures nprobe=4 → two
+    //      1.0 here: a recall sweep at sf0.01 measured nprobe=4 → two
     //      queries at 0.8, nprobe=8/10 → one at 0.8, nprobe=12 → all
     //      1.0. Probing 12/16 lists prunes little on THIS corpus —
     //      synthetic near-isotropic random vectors have no cluster

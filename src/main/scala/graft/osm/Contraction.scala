@@ -67,27 +67,23 @@ object Contraction {
   /** Input: (edge_id LONG, source LONG, target LONG, cost DOUBLE).
     * `forbidden`: vertices exempt from contraction (pgr_contraction's
     * forbidden_vertices). Below `localThreshold` edges the whole
-    * cycle runs on the driver (the GraphCheck broadcast-local pattern:
-    * the distributed fixpoint costs O(cycles × peel rounds × joins)
-    * job launches — pure overhead on a driver-sized graph); the local
-    * walk mirrors the distributed steps operation for operation, so
-    * results are identical (pinned in ContractionSpec). `localThreshold
-    * = 0` forces the distributed loop. */
+    * cycle runs on the driver ([[LocalGate]]); the local walk mirrors
+    * the distributed steps operation for operation, so results are
+    * identical. */
   def contractGraph(edges: DataFrame, forbidden: Seq[Long] = Nil,
       maxPeelRounds: Int = 64, maxCycles: Int = 8,
-      localThreshold: Long = 100000L): Contracted = {
+      localThreshold: Long = LocalGate.Threshold): Contracted = {
     val spark = edges.sparkSession
     var cur = chk(edges.select(col("edge_id").cast("long"),
       col("source").cast("long"), col("target").cast("long"),
       col("cost").cast("double"),
       array().cast("array<long>").as("contracted")))
-    if (localThreshold > 0 &&
-        cur.limit(math.min(localThreshold + 1, Int.MaxValue.toLong).toInt)
-          .count() <= localThreshold)
+    LocalGate.rows(cur, localThreshold).foreach { rows =>
       return contractLocal(spark,
-        cur.collect().map(r => LocalEdge(r.getLong(0), r.getLong(1),
+        rows.map(r => LocalEdge(r.getLong(0), r.getLong(1),
           r.getLong(2), r.getDouble(3), Vector.empty)),
         forbidden.toSet, maxPeelRounds, maxCycles)
+    }
     var vmap = chk(spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       new org.apache.spark.sql.types.StructType()
@@ -318,28 +314,15 @@ object Contraction {
       }
       if (incByV.nonEmpty) {
         // chain components over the edge graph: union-find by min root
-        // (= hash-min CC labels); self-loop incidences (min == max
-        // edge id) contribute no link, matching the distributed filter
-        val parent = mutable.Map.empty[Long, Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent(r) != r) r = parent(r)
-          var c = x
-          while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
-        incByV.values.foreach { ids =>
-          ids.foreach(id => parent.getOrElseUpdate(id, id))
-          val (lo, hi) = (ids.min, ids.max)
-          if (lo != hi) {
-            val (ra, rb) = (find(lo), find(hi))
-            if (ra < rb) parent(rb) = ra
-            else if (rb < ra) parent(ra) = rb
-          }
-        }
+        // (= hash-min CC labels); a self-loop incidence (min == max
+        // edge id) is a self-pair, which links nothing — the
+        // distributed filter drops it and the single-edge chain rule
+        // labels that edge with itself
+        val comp = GraphCheck.unionFind(
+          incByV.values.map(ids => (ids.min, ids.max)))
         val byId = cur.map(e => e.id -> e).toMap
-        val membersByComp = parent.keys.toSeq.sorted
-          .groupBy(find).map { case (c, ids) => c -> ids.map(byId) }
+        val membersByComp = comp.keys.toSeq.sorted
+          .groupBy(comp).map { case (c, ids) => c -> ids.map(byId) }
         case class Chain(component: Long, ends: Seq[Long],
           interior: Seq[Long], cost: Double, carried: Seq[Long])
         val chains = membersByComp.toSeq.sortBy(_._1).flatMap {

@@ -2,6 +2,7 @@ package graft.osm
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.types.LongType
 
 /** Graph-construction validation utilities over the exported edge list.
   *
@@ -30,7 +31,7 @@ object GraphCheck {
 
   /** (node_id, component) for the undirected graph of the edge list. */
   def connectedComponents(edges: DataFrame, maxIter: Int = 50,
-      localThreshold: Long = 100000L): DataFrame =
+      localThreshold: Long = LocalGate.Threshold): DataFrame =
     connectedComponentsWithRounds(edges, maxIter, localThreshold)._1
 
   /** Same, also returning the number of rounds to the fixpoint —
@@ -38,44 +39,44 @@ object GraphCheck {
     * on a long chain in RoadGraphSpec, which forces the distributed
     * loop with `localThreshold = 0`). */
   def connectedComponentsWithRounds(edges: DataFrame,
-      maxIter: Int = 50, localThreshold: Long = 100000L): (DataFrame, Int) = {
-    // Broadcast-local fast path — the multiSourceShortestPaths pattern
-    // (GraphCheck:157): a component labelling that fits on the driver
-    // pays O(log diameter) multi-stage shuffle rounds for nothing.
-    // Union-find with path compression produces THE SAME labels by
-    // construction (component = min node id in the component — the
-    // hash-min fixpoint). Rounds reports 0 to mark the local path;
-    // localThreshold = 0 forces the distributed loop (ScaleSmoke's
-    // convergence witness and the composed operators' scale paths).
-    if (localThreshold > 0) {
-      val eChk = edges
-        .select(col("start_node").cast("long"), col("end_node").cast("long"))
-        .localCheckpoint(true)
-      if (eChk.limit(math.min(localThreshold + 1, Int.MaxValue.toLong).toInt)
-          .count() <= localThreshold) {
-        val spark = eChk.sparkSession
-        import spark.implicits._
-        val es = eChk.collect().map(r => (r.getLong(0), r.getLong(1)))
-        val parent = scala.collection.mutable.Map.empty[Long, Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent(r) != r) r = parent(r)
-          var c = x
-          while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
-        es.foreach { case (a, b) =>
-          parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-          val (ra, rb) = (find(a), find(b))
-          // union by MIN root so the final root IS the component min
-          if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
-        }
-        val rows = parent.keys.toSeq.sorted.map(n => (n, find(n)))
-        return (rows.toDF("node_id", "component"), 0)
-      }
-      return connectedComponentsDistributed(eChk, maxIter)
+      maxIter: Int = 50,
+      localThreshold: Long = LocalGate.Threshold): (DataFrame, Int) = {
+    val eChk = edges
+      .select(col("start_node").cast("long"), col("end_node").cast("long"))
+      .localCheckpoint(true)
+    // Local twin: union-find with path compression produces THE SAME
+    // labels by construction (component = min node id in the
+    // component — the hash-min fixpoint). Rounds reports 0 to mark the
+    // local path.
+    LocalGate.rows(eChk, localThreshold).foreach { es =>
+      val spark = eChk.sparkSession
+      import spark.implicits._
+      val parent = unionFind(es.map(r => (r.getLong(0), r.getLong(1))))
+      return (parent.keys.toSeq.sorted.map(n => (n, parent(n)))
+        .toDF("node_id", "component"), 0)
     }
-    connectedComponentsDistributed(edges, maxIter)
+    connectedComponentsDistributed(eChk, maxIter)
+  }
+
+  /** Union-find by MIN root over `pairs`, fully compressed: every key
+    * maps to the minimum node id of its component. */
+  private[osm] def unionFind(
+      pairs: Iterable[(Long, Long)]): scala.collection.Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    pairs.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keys.foreach(find)
+    parent
   }
 
   private def connectedComponentsDistributed(edges: DataFrame,
@@ -158,6 +159,14 @@ object GraphCheck {
       .localCheckpoint(true)
   }
 
+  /** [[LocalGate]] over a materialized `(start_node, end_node, w)`
+    * relation: its weighted adjacency (w as double) when it is small
+    * and NULL-free — the input of every Dijkstra twin. */
+  private def localAdjacency(eChk: DataFrame,
+      threshold: Long): Option[Map[Long, Array[(Long, Double)]]] =
+    LocalGate.rows(eChk.select(col("start_node"), col("end_node"),
+      col("w").cast("double")), threshold).map(LocalGate.adjacency)
+
   /** Single-source shortest paths over a weighted DIRECTED edge list —
     * the `pgr_dijkstra` analog the reference's graphs are built to
     * feed (`osm-road-graphs.sql` exports exactly this edge shape into
@@ -197,48 +206,22 @@ object GraphCheck {
     * the frontier only by strictly improving, and non-negative weights
     * make improvements finite). */
   def multiSourceShortestPaths(edges: DataFrame, sources: Seq[Long],
-      maxIter: Int = 100, localThreshold: Long = 100000L): (DataFrame, Int) = {
+      maxIter: Int = 100,
+      localThreshold: Long = LocalGate.Threshold): (DataFrame, Int) = {
     val spark = edges.sparkSession
     import spark.implicits._
     // one upstream execution total: checkpoint the edge relation FIRST,
-    // then the threshold probe and either path read the materialized
-    // copy instead of re-running the (possibly expensive) upstream DAG
+    // then the gate and either path read the materialized copy instead
+    // of re-running the (possibly expensive) upstream DAG
     val eChk = materializeEdges(edges)
-    // Broadcast-local fast path — the same adaptive decision a
-    // broadcast join makes: a graph that fits on the driver pays tens
-    // of per-round job launches in the distributed loop for nothing.
-    // Collect it, run Dijkstra, parallelize the result. Distances are
-    // identical (path sums accumulate in the same order); rounds
-    // reports 0 to mark the local path. Set localThreshold = 0 to
-    // force the distributed loop.
-    if (localThreshold > 0 &&
-        eChk.limit(math.min(localThreshold + 1, Int.MaxValue.toLong).toInt)
-          .count() <= localThreshold) {
-      val isLong = eChk.schema("w").dataType ==
-        org.apache.spark.sql.types.LongType
-      val es = eChk.select(col("start_node"), col("end_node"),
-          col("w").cast("double")).collect()
-        .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
-        .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
-      val dist = scala.collection.mutable.Map[Long, Double]()
-      val pq = scala.collection.mutable.PriorityQueue
-        .empty[(Double, Long)](Ordering.by[(Double, Long), Double](_._1).reverse)
-      sources.foreach { s => dist(s) = 0.0; pq.enqueue((0.0, s)) }
-      while (pq.nonEmpty) {
-        val (d, u) = pq.dequeue()
-        if (d <= dist(u)) {
-          es.getOrElse(u, Array.empty[(Long, Double)]).foreach { case (v, w) =>
-            val nd = d + w
-            if (!dist.contains(v) || nd < dist(v)) {
-              dist(v) = nd; pq.enqueue((nd, v))
-            }
-          }
-        }
-      }
-      val rows = dist.toSeq.sortBy(_._1)
+    // Local twin: Dijkstra gives identical distances (path sums
+    // accumulate in the same order); rounds reports 0 to mark the
+    // local path.
+    localAdjacency(eChk, localThreshold).foreach { adj =>
+      val rows = LocalGate.dijkstra(adj, sources)._1.toSeq.sortBy(_._1)
       val out =
-        if (isLong) rows.map { case (n, d) => (n, d.toLong) }
-          .toDF("node_id", "dist")
+        if (eChk.schema("w").dataType == LongType)
+          rows.map { case (n, d) => (n, d.toLong) }.toDF("node_id", "dist")
         else rows.toDF("node_id", "dist")
       return (out, 0)
     }
@@ -574,26 +557,14 @@ object GraphCheck {
     * fixed budget, not data-dependent. Isolated nodes (only
     * self-loops) drop with the self-loops. */
   def labelPropagation(edges: DataFrame, rounds: Int,
-      localThreshold: Long = 100000L): DataFrame = {
-    val sym = edges
-      .select(col("start_node").as("a"), col("end_node").as("b"))
-      .unionByName(
-        edges.select(col("end_node").as("a"), col("start_node").as("b")))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(true)
-    // Broadcast-local fast path (the connectedComponents localThreshold
-    // pattern): a fixture-sized graph pays `rounds` x (join + 2 hash-agg
-    // + checkpoint) driver jobs for microseconds of counting. The local
-    // sweep reproduces the synchronous (max count, min label) argmax
-    // exactly — counts are exact longs in both forms; pinned
-    // local == distributed in RoadGraphSpec. localThreshold = 0 forces
-    // the distributed loop (scale witnesses, plan audits).
-    collectIfSmallLongs(sym, localThreshold).foreach { rows =>
+      localThreshold: Long = LocalGate.Threshold): DataFrame = {
+    val sym = symmetricEdges(edges)
+    // Local twin: the sweep reproduces the synchronous (max count, min
+    // label) argmax exactly — counts are exact longs in both forms.
+    localPairs(sym, localThreshold).foreach { pairs =>
       val spark = sym.sparkSession
       import spark.implicits._
-      return lpaLocal(rows.map(r => (r.getLong(0), r.getLong(1))), rounds)
-        .toDF("node_id", "label")
+      return lpaLocal(pairs, rounds).toDF("node_id", "label")
     }
     var labels = sym.select(col("a").as("node_id")).distinct()
       .withColumn("label", col("node_id"))
@@ -614,22 +585,29 @@ object GraphCheck {
     labels
   }
 
-  /** Collect a ≤`threshold`-row all-LongType relation in ONE job, or
-    * None when it is larger (or not all-long, which would change the
-    * output schema on the local paths). `df` must be materialized
-    * (localCheckpoint) so the limit probe is a cheap local scan; when
-    * the limit(threshold+1) collect comes back with ≤ threshold rows it
-    * IS the whole relation — no second job. */
-  private def collectIfSmallLongs(df: DataFrame,
-      threshold: Long): Option[Array[org.apache.spark.sql.Row]] = {
-    if (threshold <= 0) return None
-    if (!df.schema.fields.forall(_.dataType ==
-        org.apache.spark.sql.types.LongType)) return None
-    val probe = df
-      .limit(math.min(threshold + 1, Int.MaxValue.toLong).toInt)
-      .collect()
-    if (probe.length <= threshold) Some(probe) else None
-  }
+  /** Symmetric, loop-free, distinct `(a, b)` relation of the edge
+    * list, materialized — the input of [[labelPropagation]] and
+    * [[coreness]]. */
+  private def symmetricEdges(edges: DataFrame): DataFrame =
+    edges.select(col("start_node").as("a"), col("end_node").as("b"))
+      .unionByName(
+        edges.select(col("end_node").as("a"), col("start_node").as("b")))
+      .filter(col("a") =!= col("b"))
+      .distinct()
+      .localCheckpoint(true)
+
+  /** Whether every column is LongType. The twins emit long ids while
+    * the distributed loops keep the input's id type, so only all-long
+    * frames may take the local path. */
+  private def isLongs(df: DataFrame): Boolean =
+    df.schema.fields.forall(_.dataType == LongType)
+
+  /** [[LocalGate]] over [[symmetricEdges]]: the collected pairs. */
+  private def localPairs(sym: DataFrame,
+      threshold: Long): Option[Array[(Long, Long)]] =
+    if (!isLongs(sym)) None
+    else LocalGate.rows(sym, threshold)
+      .map(_.map(r => (r.getLong(0), r.getLong(1))))
 
   /** Broadcast-local twin of the [[labelPropagation]] round loop over a
     * collected SYMMETRIC distinct edge set: every node simultaneously
@@ -733,7 +711,7 @@ object GraphCheck {
     * weight sums degenerate to the edge counts above, value-for-value
     * (oracle-re-certified after the unification). */
   def refineCommunities(edges: DataFrame, labels: DataFrame,
-      localThreshold: Long = 100000L): DataFrame =
+      localThreshold: Long = LocalGate.Threshold): DataFrame =
     refineCommunitiesRounds(edges, labels, rounds = 1, localThreshold)
 
   /** Canonical unit-weight frame `(a, b, __ew = 1)` of a simple graph
@@ -757,18 +735,14 @@ object GraphCheck {
     * simultaneous-mover interference modularity is non-decreasing
     * round over round (spec-gated). */
   def refineCommunitiesRounds(edges: DataFrame, labels: DataFrame,
-      rounds: Int, localThreshold: Long = 100000L): DataFrame = {
+      rounds: Int, localThreshold: Long = LocalGate.Threshold): DataFrame = {
     // canonicalize ONCE; every sweep reuses the materialized frame
     // instead of re-paying the distinct() shuffle
     val und = canonUnitEdges(edges).localCheckpoint(true)
-    // Broadcast-local fast path (the connectedComponents localThreshold
-    // pattern): each distributed sweep is ~6 joins + 4 hash-aggs + a
-    // checkpoint of driver jobs for a fixture-sized graph. The local
-    // sweep is the step-for-step twin of [[refineWeightedCore]] — same
-    // exact-integer gain algebra (BigInt == the DECIMAL(38,0)
+    // Local twin: the step-for-step twin of [[refineWeightedCore]] —
+    // same exact-integer gain algebra (BigInt == the DECIMAL(38,0)
     // products), same (max gain, min community) tie order, same
-    // synchronous move gate — pinned row-identical in RoadGraphSpec.
-    // localThreshold = 0 forces the distributed loop.
+    // synchronous move gate.
     localRefineInputs(und, labels, localThreshold).foreach {
       case (wedges, lab0) =>
         val spark = und.sparkSession
@@ -793,21 +767,22 @@ object GraphCheck {
     l
   }
 
-  /** Gate + one-job collect for the louvain-family local paths: the
-    * MATERIALIZED canonical weighted frame `(a, b, __ew)` and the
-    * labeling, both under `threshold` rows and all-long. */
+  /** [[LocalGate]] for the louvain-family twins: the MATERIALIZED
+    * canonical weighted frame `(a, b, __ew)` and the labeling as a map.
+    * A `node_id` labelled twice fans out in the distributed label
+    * joins, which a map cannot mirror, so it keeps the distributed
+    * path. */
   private def localRefineInputs(undChk: DataFrame, labels: DataFrame,
       threshold: Long)
       : Option[(Array[(Long, Long, Long)], Map[Long, Long])] =
-    collectIfSmallLongs(undChk, threshold).flatMap { es =>
-      collectIfSmallLongs(
-        labels.select(col("node_id").cast("long"),
-          col("label").cast("long")).localCheckpoint(true), threshold)
-        .map { ls =>
-          (es.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))),
-            ls.map(r => r.getLong(0) -> r.getLong(1)).toMap)
-        }
-    }
+    if (!isLongs(undChk)) None
+    else for {
+      es <- LocalGate.rows(undChk, threshold)
+      ls <- LocalGate.rows(labels.select(col("node_id").cast("long"),
+        col("label").cast("long")).localCheckpoint(true), threshold)
+      lm = ls.map(r => r.getLong(0) -> r.getLong(1)).toMap
+      if lm.size == ls.length
+    } yield (es.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))), lm)
 
   /** Broadcast-local twin of ONE [[refineWeightedCore]] sweep over
     * collected canonical weighted edges (a ≤ b, parallel rows summed,
@@ -892,15 +867,12 @@ object GraphCheck {
     * hash-agg; output is |communities|²-bounded but in practice tiny
     * relative to the input — the whole point of coarsening. */
   def coarsenGraph(edges: DataFrame, labels: DataFrame,
-      localThreshold: Long = 100000L): DataFrame = {
+      localThreshold: Long = LocalGate.Threshold): DataFrame = {
     val und = canonUnitEdges(edges).localCheckpoint(true)
-    // Broadcast-local fast path (the connectedComponents localThreshold
-    // pattern): both label-attach joins + the (cA, cB) hash-agg become
-    // one in-memory group-by over the collected canonical edge set —
-    // labeled endpoints only (the inner joins), ties oriented
-    // (min, max) exactly like the distributed agg keys. Pinned
-    // local == distributed in RoadGraphSpec; localThreshold = 0 forces
-    // the distributed form.
+    // Local twin: both label-attach joins + the (cA, cB) hash-agg
+    // become one in-memory group-by — labeled endpoints only (the
+    // inner joins), ties oriented (min, max) exactly like the
+    // distributed agg keys.
     localRefineInputs(und, labels, localThreshold).foreach {
       case (wedges, lm) =>
         val spark = und.sparkSession
@@ -1081,17 +1053,13 @@ object GraphCheck {
     * magnitude smaller; the projection is one keyed join. */
   def louvainTwoLevel(edges: DataFrame, labels: DataFrame,
       level1Rounds: Int, level2Rounds: Int,
-      localThreshold: Long = 100000L): DataFrame = {
+      localThreshold: Long = LocalGate.Threshold): DataFrame = {
     val und = canonUnitEdges(edges).localCheckpoint(true)
-    // Broadcast-local fast path (the connectedComponents localThreshold
-    // pattern): the whole two-level pipeline — phase-1 sweeps, coarsen,
-    // gated phase-2 sweeps, projection — runs driver-local on the
-    // collected canonical edge set. Each local step is the twin of its
-    // distributed counterpart ([[refineWeightedLocal]] both phases —
-    // same BigInt gain algebra, same parity/down-only gating; coarsen
-    // is the same inner-label-join + (min,max) count). Pinned
-    // local == distributed in RoadGraphSpec; localThreshold = 0 forces
-    // the distributed pipeline.
+    // Local twin: the whole two-level pipeline — phase-1 sweeps,
+    // coarsen, gated phase-2 sweeps, projection — in memory. Each step
+    // is the twin of its distributed counterpart ([[refineWeightedLocal]]
+    // both phases — same BigInt gain algebra, same parity/down-only
+    // gating; coarsen is the same inner-label-join + (min,max) count).
     localRefineInputs(und, labels, localThreshold).foreach {
       case (wedges, lab0) =>
         val spark = und.sparkSession
@@ -1228,28 +1196,16 @@ object GraphCheck {
     * so the per-node fold is tiny. localCheckpoint per round keeps
     * plans flat. */
   def coreness(edges: DataFrame, rounds: Int,
-      localThreshold: Long = 100000L): DataFrame = {
-    val sym = edges
-      .select(col("start_node").as("a"), col("end_node").as("b"))
-      .unionByName(
-        edges.select(col("end_node").as("a"), col("start_node").as("b")))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(true)
-    // Broadcast-local fast path (the connectedComponents localThreshold
-    // pattern): `rounds` x (join + 2 hash-agg + checkpoint) driver jobs
-    // collapse to an in-memory H-index sweep over the collected
-    // symmetric edge set. The local H-index over the sorted-descending
-    // neighbor values equals the distributed histogram fold exactly
-    // (same max-over-prefixes of min(value, count) — integer algebra,
-    // no floats); pinned local == distributed in RoadGraphSpec.
-    // localThreshold = 0 forces the distributed loop (the Window-free
-    // plan audit and scale witnesses run that form).
-    collectIfSmallLongs(sym, localThreshold).foreach { rows =>
+      localThreshold: Long = LocalGate.Threshold): DataFrame = {
+    val sym = symmetricEdges(edges)
+    // Local twin: the H-index over the sorted-descending neighbor
+    // values equals the distributed histogram fold exactly (same
+    // max-over-prefixes of min(value, count) — integer algebra, no
+    // floats).
+    localPairs(sym, localThreshold).foreach { pairs =>
       val spark = sym.sparkSession
       import spark.implicits._
-      return corenessLocal(rows.map(r => (r.getLong(0), r.getLong(1))),
-        rounds).toDF("node_id", "coreness")
+      return corenessLocal(pairs, rounds).toDF("node_id", "coreness")
     }
     var vals = sym.groupBy(col("a")).agg(count(lit(1)).as("value"))
       .select(col("a").as("node_id"), col("value"))
@@ -1390,40 +1346,23 @@ object GraphCheck {
           .otherwise(lit(0.0)).as("transitivity"))
 
   def pageRank(edges: DataFrame, iters: Int = 20,
-      damping: Double = 0.85, localThreshold: Long = 100000L): DataFrame = {
+      damping: Double = 0.85,
+      localThreshold: Long = LocalGate.Threshold): DataFrame = {
     val e = edges.select(col("start_node").as("src"),
       col("end_node").as("dst")).localCheckpoint(true)
-    // Broadcast-local fast path (same adaptive decision as
-    // [[multiSourceShortestPaths]]): a graph that fits on the driver
-    // pays `iters` join+agg job launches for nothing. The local loop is
-    // the identical synchronous update (teleport + damping * sum of
-    // inbound rank/outdeg, dangling mass leaking), so ranks agree with
-    // the distributed path to float addition order — which the
-    // consumer-side round(…, 8) absorbs. localThreshold = 0 forces the
-    // distributed loop.
-    if (localThreshold > 0 &&
-        e.limit(math.min(localThreshold + 1, Int.MaxValue.toLong).toInt)
-          .count() <= localThreshold) {
+    // Local twin: the identical synchronous update (teleport + damping
+    // * sum of inbound rank/outdeg, dangling mass leaking), so ranks
+    // agree with the distributed path to float addition order — which
+    // the consumer-side round(…, 8) absorbs.
+    LocalGate.rows(e, localThreshold).foreach { rows =>
       val spark = edges.sparkSession
       import spark.implicits._
-      val es = e.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val ids = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
-      val idx = ids.zipWithIndex.toMap
+      val (ids, es) = LocalGate.denseEdges(rows)
       val n = ids.length
-      val deg = new Array[Long](n)
-      es.foreach { case (s, _) => deg(idx(s)) += 1 }
-      val teleport = (1.0 - damping) / n
-      var rank = Array.fill(n)(1.0 / n)
-      var it = 0
-      while (it < iters) {
-        val next = Array.fill(n)(teleport)
-        es.foreach { case (s, d) =>
-          next(idx(d)) += damping * rank(idx(s)) / deg(idx(s)) }
-        rank = next
-        it += 1
-      }
-      return ids.toIndexedSeq.map(id => (id, rank(idx(id))))
-        .toDF("node_id", "rank")
+      val rank = pageRankLocal(es, iters, damping,
+        rank0 = Array.fill(n)(1.0 / n),
+        teleport = Array.fill(n)((1.0 - damping) / n))
+      return ids.indices.map(i => (ids(i), rank(i))).toDF("node_id", "rank")
     }
     val nodes = e.select(col("src").as("node_id"))
       .unionByName(e.select(col("dst").as("node_id")))
@@ -1450,6 +1389,23 @@ object GraphCheck {
     rank
   }
 
+  /** `iters` synchronous PageRank updates over dense-index edges:
+    * rank' = teleport + damping · Σ inbound rank/outdeg, dangling mass
+    * leaking — the local twin of both distributed loops. */
+  private def pageRankLocal(es: Array[(Int, Int)], iters: Int,
+      damping: Double, rank0: Array[Double],
+      teleport: Array[Double]): Array[Double] = {
+    val deg = new Array[Long](rank0.length)
+    es.foreach { case (s, _) => deg(s) += 1 }
+    var rank = rank0
+    for (_ <- 1 to iters) {
+      val next = teleport.clone()
+      es.foreach { case (s, d) => next(d) += damping * rank(s) / deg(s) }
+      rank = next
+    }
+    rank
+  }
+
   /** Personalized PageRank (igraph `personalized_pagerank`, the
     * random-walk-with-restart relevance score): [[pageRank]] with the
     * teleport mass concentrated on `seeds` — restart probability
@@ -1459,7 +1415,7 @@ object GraphCheck {
     * the identical chain. */
   def personalizedPageRank(edges: DataFrame, seeds: Seq[Long],
       iters: Int = 20, damping: Double = 0.85,
-      localThreshold: Long = 100000L): DataFrame = {
+      localThreshold: Long = LocalGate.Threshold): DataFrame = {
     // dedup seeds and make them part of the node universe: a repeated
     // seed must not halve its restart share, and a seed with no edges
     // must still hold its teleport mass (igraph keeps the vertex)
@@ -1469,32 +1425,15 @@ object GraphCheck {
       col("end_node").as("dst")).localCheckpoint(true)
     val seedSet = seedIds.toSet
     val tp = (1.0 - damping) / seedIds.size
-    if (localThreshold > 0 &&
-        e.limit(math.min(localThreshold + 1, Int.MaxValue.toLong).toInt)
-          .count() <= localThreshold) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val es = e.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val ids = (es.map(_._1) ++ es.map(_._2) ++ seedIds).distinct.sorted
-      val idx = ids.zipWithIndex.toMap
-      val n = ids.length
-      val deg = new Array[Long](n)
-      es.foreach { case (s, _) => deg(idx(s)) += 1 }
-      var rank = ids.map(id =>
-        if (seedSet(id)) 1.0 / seedIds.size else 0.0).toArray
-      var it = 0
-      while (it < iters) {
-        val next = ids.map(id => if (seedSet(id)) tp else 0.0).toArray
-        es.foreach { case (s, d) =>
-          next(idx(d)) += damping * rank(idx(s)) / deg(idx(s)) }
-        rank = next
-        it += 1
-      }
-      return ids.toIndexedSeq.map(id => (id, rank(idx(id))))
-        .toDF("node_id", "rank")
-    }
     val spark = edges.sparkSession
     import spark.implicits._
+    LocalGate.rows(e, localThreshold).foreach { rows =>
+      val (ids, es) = LocalGate.denseEdges(rows, seedIds)
+      val rank = pageRankLocal(es, iters, damping,
+        rank0 = ids.map(id => if (seedSet(id)) 1.0 / seedIds.size else 0.0),
+        teleport = ids.map(id => if (seedSet(id)) tp else 0.0))
+      return ids.indices.map(i => (ids(i), rank(i))).toDF("node_id", "rank")
+    }
     val nodes = e.select(col("src").as("node_id"))
       .unionByName(e.select(col("dst").as("node_id")))
       .unionByName(seedIds.toDF("node_id"))
@@ -1532,7 +1471,7 @@ object GraphCheck {
     * integer weights; the VRP/logistics input surface. */
   def costMatrix(edges: DataFrame, sources: Seq[Long],
       targets: Seq[Long], maxIter: Int = 100,
-      localThreshold: Long = 100000L): DataFrame = {
+      localThreshold: Long = LocalGate.Threshold): DataFrame = {
     require(sources.nonEmpty, "costMatrix: sources must be non-empty")
     val eChk = materializeEdges(edges)
     sources.map { s0 =>
@@ -1556,50 +1495,28 @@ object GraphCheck {
     * is the space-syntax accessibility surface the reference's exports
     * feed (osm-pg-etl.md's igraph hand-off). */
   def closenessFromSources(edges: DataFrame, sources: Seq[Long],
-      maxIter: Int = 100, localThreshold: Long = 100000L): DataFrame = {
+      maxIter: Int = 100,
+      localThreshold: Long = LocalGate.Threshold): DataFrame = {
     require(sources.nonEmpty, "closenessFromSources: sources must be non-empty")
     val eChk = materializeEdges(edges)
-    // Broadcast-local fast path: ONE collect of the edge relation, k
-    // driver-side Dijkstras, one result relation — instead of k
-    // independent (probe + collect + createDataFrame) round-trips plus
-    // a k-way union-aggregate. Integer-centimeter weights stay exact in
-    // doubles (< 2^53), so sums match the distributed path bit-for-bit.
-    if (localThreshold > 0 &&
-        eChk.limit(math.min(localThreshold + 1, Int.MaxValue.toLong).toInt)
-          .count() <= localThreshold) {
+    // Local twin: ONE collect of the edge relation, k driver-side
+    // Dijkstras, one result relation — instead of k independent gated
+    // SSSPs plus a k-way union-aggregate. Integer-centimeter weights
+    // stay exact in doubles (< 2^53), so sums match the distributed
+    // path bit-for-bit.
+    localAdjacency(eChk, localThreshold).foreach { adj =>
       val spark = edges.sparkSession
       import spark.implicits._
-      val isLong = eChk.schema("w").dataType ==
-        org.apache.spark.sql.types.LongType
-      val es = eChk.select(col("start_node"), col("end_node"),
-          col("w").cast("double")).collect()
-        .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
-        .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
       val sumD = scala.collection.mutable.Map[Long, Double]()
       val cnt = scala.collection.mutable.Map[Long, Long]()
       sources.foreach { s0 =>
-        val dist = scala.collection.mutable.Map[Long, Double]()
-        val pq = scala.collection.mutable.PriorityQueue
-          .empty[(Double, Long)](Ordering.by[(Double, Long), Double](_._1).reverse)
-        dist(s0) = 0.0; pq.enqueue((0.0, s0))
-        while (pq.nonEmpty) {
-          val (d, u) = pq.dequeue()
-          if (d <= dist(u)) {
-            es.getOrElse(u, Array.empty[(Long, Double)]).foreach { case (v, w) =>
-              val nd = d + w
-              if (!dist.contains(v) || nd < dist(v)) {
-                dist(v) = nd; pq.enqueue((nd, v))
-              }
-            }
-          }
-        }
-        dist.foreach { case (nd, d) =>
+        LocalGate.dijkstra(adj, Seq(s0))._1.foreach { case (nd, d) =>
           sumD(nd) = sumD.getOrElse(nd, 0.0) + d
           cnt(nd) = cnt.getOrElse(nd, 0L) + 1L
         }
       }
       val rows = sumD.keys.toSeq.sorted
-      return if (isLong)
+      return if (eChk.schema("w").dataType == LongType)
         rows.map(nd => (nd, sumD(nd).toLong, cnt(nd)))
           .toDF("node_id", "sum_dist", "n_from")
       else rows.map(nd => (nd, sumD(nd), cnt(nd)))
@@ -1622,7 +1539,8 @@ object GraphCheck {
     * The 1/d terms are double; consumers round for cross-engine
     * comparison (the pageRank contract). */
   def harmonicFromSources(edges: DataFrame, sources: Seq[Long],
-      maxIter: Int = 100, localThreshold: Long = 100000L): DataFrame = {
+      maxIter: Int = 100,
+      localThreshold: Long = LocalGate.Threshold): DataFrame = {
     require(sources.nonEmpty, "harmonicFromSources: sources must be non-empty")
     val eChk = materializeEdges(edges)
     sources.map { s0 =>
@@ -1642,7 +1560,8 @@ object GraphCheck {
     * road scale, or take [[pseudoDiameter]]'s two-sweep bound).
     * Exact integer output on integer weights. */
   def eccentricityFromSources(edges: DataFrame, sources: Seq[Long],
-      maxIter: Int = 100, localThreshold: Long = 100000L): DataFrame = {
+      maxIter: Int = 100,
+      localThreshold: Long = LocalGate.Threshold): DataFrame = {
     require(sources.nonEmpty, "eccentricityFromSources: sources must be non-empty")
     val spark = edges.sparkSession
     import spark.implicits._
@@ -1663,7 +1582,8 @@ object GraphCheck {
     * `(from_node, to_node, pseudo_diameter)`; deterministic, so an
     * independent BFS replay reproduces it. */
   def pseudoDiameter(edges: DataFrame, seed: Long,
-      maxIter: Int = 100, localThreshold: Long = 100000L): DataFrame = {
+      maxIter: Int = 100,
+      localThreshold: Long = LocalGate.Threshold): DataFrame = {
     val hop = edges.select(col("start_node"), col("end_node"),
       lit(1L).as("w"))
     def farthest(s: Long): DataFrame =
@@ -1691,34 +1611,27 @@ object GraphCheck {
     * norms ride broadcast cross joins, localCheckpoint keeps plans
     * flat; broadcast-local fast path below the same threshold. */
   def hits(edges: DataFrame, iters: Int = 10,
-      localThreshold: Long = 100000L): DataFrame = {
+      localThreshold: Long = LocalGate.Threshold): DataFrame = {
     val e = edges.select(col("start_node").as("src"),
       col("end_node").as("dst")).localCheckpoint(true)
-    if (localThreshold > 0 &&
-        e.limit(math.min(localThreshold + 1, Int.MaxValue.toLong).toInt)
-          .count() <= localThreshold) {
+    LocalGate.rows(e, localThreshold).foreach { rows =>
       val spark = edges.sparkSession
       import spark.implicits._
-      val es = e.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val ids = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
-      val idx = ids.zipWithIndex.toMap
+      val (ids, es) = LocalGate.denseEdges(rows)
       val n = ids.length
       var hub = Array.fill(n)(1.0 / n)
       var auth = Array.fill(n)(0.0)
-      var it = 0
-      while (it < iters) {
+      for (_ <- 1 to iters) {
         val a = new Array[Double](n)
-        es.foreach { case (u, v) => a(idx(v)) += hub(idx(u)) }
+        es.foreach { case (u, v) => a(v) += hub(u) }
         val as = a.sum
         auth = if (as > 0) a.map(_ / as) else a
         val h = new Array[Double](n)
-        es.foreach { case (u, v) => h(idx(u)) += auth(idx(v)) }
+        es.foreach { case (u, v) => h(u) += auth(v) }
         val hs = h.sum
         hub = if (hs > 0) h.map(_ / hs) else h
-        it += 1
       }
-      return ids.toIndexedSeq
-        .map(id => (id, hub(idx(id)), auth(idx(id))))
+      return ids.indices.map(i => (ids(i), hub(i), auth(i)))
         .toDF("node_id", "hub", "authority")
     }
     val nodes = e.select(col("src").as("node_id"))
@@ -1774,7 +1687,7 @@ object GraphCheck {
     * Returns every graph node with its (float) centrality — consumers
     * round for cross-engine comparison. */
   def betweennessFromSources(edges: DataFrame, sources: Seq[Long],
-      maxIter: Int = 100, localThreshold: Long = 100000L,
+      maxIter: Int = 100, localThreshold: Long = LocalGate.Threshold,
       waveSize: Int = 32): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
@@ -1790,13 +1703,7 @@ object GraphCheck {
     val allNodes = eChk.select(col("start_node").as("node_id"))
       .unionByName(eChk.select(col("end_node").as("node_id")))
       .distinct().localCheckpoint(true)
-    if (localThreshold > 0 &&
-        eChk.limit(math.min(localThreshold + 1, Int.MaxValue.toLong).toInt)
-          .count() <= localThreshold) {
-      val es = eChk.select(col("start_node"), col("end_node"),
-          col("w").cast("double")).collect()
-        .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
-        .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+    localAdjacency(eChk, localThreshold).foreach { es =>
       val bc = scala.collection.mutable.Map[Long, Double]()
       sources.foreach { s =>
         val dist = scala.collection.mutable.Map[Long, Double]()
@@ -1978,23 +1885,16 @@ object GraphCheck {
     * -1 on the distributed delegation (no meaningful single count). */
   def aStarPathTo(edges: DataFrame, coords: DataFrame, source: Long,
       target: Long, maxIter: Int = 100,
-      localThreshold: Long = 100000L): Option[(Seq[Long], Double, Long)] = {
+      localThreshold: Long = LocalGate.Threshold): Option[(Seq[Long], Double, Long)] = {
     val eChk = materializeEdges(edges)
-    val isLocal = localThreshold > 0 &&
-      eChk.limit(math.min(localThreshold + 1, Int.MaxValue.toLong).toInt)
-        .count() <= localThreshold
-    if (!isLocal)
-      return aStarDistributed(eChk, coords, source, target, maxIter)
+    val adj = localAdjacency(eChk, localThreshold).getOrElse(
+      return aStarDistributed(eChk, coords, source, target, maxIter))
     val nodes = eChk.select(col("start_node").as("node_id"))
       .unionByName(eChk.select(col("end_node").as("node_id"))).distinct()
     val xy = coords.select(col("node_id"), col("lon"), col("lat"))
       .join(nodes, Seq("node_id"), "left_semi")
       .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2)))
       .toMap
-    val adj = eChk.select(col("start_node"), col("end_node"),
-        col("w").cast("double")).collect()
-      .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
-      .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
     if (!xy.contains(target)) return None
     val (tLon, tLat) = xy(target)
     // rounding slack: stored integer-cm weights can round DOWN up to
@@ -2042,11 +1942,8 @@ object GraphCheck {
       }
     }
     if (!closed(target)) None
-    else {
-      var path = List(target); var cur = target
-      while (cur != source) { cur = pred(cur); path = cur :: path }
-      Some((path, dist(target), settled))
-    }
+    else Some((LocalGate.walkBack(pred, source, target), dist(target),
+      settled))
   }
 
   /** Distributed goal-directed best-path search — the scale branch of
@@ -2173,29 +2070,22 @@ object GraphCheck {
     * independent of full-graph size. */
   def kShortestPaths(edges: DataFrame, source: Long, target: Long,
       k: Int, maxIter: Int = 100,
-      localThreshold: Long = 100000L, pruneSlack: Double = 0.5,
+      localThreshold: Long = LocalGate.Threshold, pruneSlack: Double = 0.5,
       maxEscalations: Int = 3,
       localYen: Boolean = true): Seq[(Seq[Long], Double)] = {
     val eChk = materializeEdges(edges)
-    // Fully-local fast path (r21): when the WHOLE graph fits the
-    // broadcast-local threshold, every spur search was already running
-    // the local Dijkstra — but each spur still paid a DataFrame
-    // anti-join + re-materialization + probe count to build its
-    // filtered edge relation (3-4 driver jobs per spur, dozens per
-    // query, pure fixed cost). Collect the adjacency ONCE and run Yen
-    // in memory with the exact same semantics: spur SSSPs use the same
-    // smaller-predecessor tie rule as shortestPathTo's local path, the
-    // candidate ordering is the same (cost, path-string), so the
-    // result is bit-identical. The ellipse prune is a cost device for
-    // planet graphs and is unnecessary here (both paths return the
-    // exact global top-k).
-    if (localYen && localThreshold > 0 &&
-        eChk.limit(math.min(localThreshold + 1, Int.MaxValue.toLong).toInt)
-          .count() <= localThreshold) {
-      val es = eChk.select(col("start_node"), col("end_node"),
-          col("w").cast("double")).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      return yenLocal(es, source, target, k)
+    // Local twin: when the WHOLE graph fits the gate, every spur
+    // search would run the local Dijkstra anyway — but each spur would
+    // still pay a DataFrame anti-join + re-materialization + gate to
+    // build its filtered edge relation (3-4 driver jobs per spur).
+    // Collect the adjacency ONCE and run Yen in memory with the exact
+    // same semantics: spur SSSPs use the same smaller-predecessor tie
+    // rule as shortestPathTo, the candidate ordering is the same (cost,
+    // path-string), so the result is bit-identical. The ellipse prune
+    // is a cost device for planet graphs and is unnecessary here (both
+    // paths return the exact global top-k).
+    if (localYen) localAdjacency(eChk, localThreshold).foreach { adj =>
+      return yenLocal(adj, source, target, k)
     }
     val first = shortestPathTo(eChk, source, target, maxIter, localThreshold)
     if (first.isEmpty || k <= 0) return Seq.empty
@@ -2262,29 +2152,9 @@ object GraphCheck {
     val spark = edges.sparkSession
     import spark.implicits._
     val eChk = materializeEdges(edges)
-    if (localThreshold > 0 &&
-        eChk.limit(math.min(localThreshold + 1, Int.MaxValue.toLong).toInt)
-          .count() <= localThreshold) {
-      val adj = eChk.select(col("start_node"), col("end_node"),
-          col("w").cast("double")).collect()
-        .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
-        .groupBy(_._1).map { case (kk, v) => kk -> v.map(_._2) }
-      val dist = scala.collection.mutable.Map(source -> 0.0)
-      val pq = scala.collection.mutable.PriorityQueue
-        .empty[(Double, Long)](Ordering.by[(Double, Long), Double](_._1).reverse)
-      pq.enqueue((0.0, source))
-      while (pq.nonEmpty) {
-        val (d, u) = pq.dequeue()
-        if (d <= dist(u) && d <= bound) {
-          adj.getOrElse(u, Array.empty[(Long, Double)]).foreach { case (v, w) =>
-            val nd = d + w
-            if (nd <= bound && (!dist.contains(v) || nd < dist(v))) {
-              dist(v) = nd; pq.enqueue((nd, v))
-            }
-          }
-        }
-      }
-      return dist.toSeq.sortBy(_._1).toDF("node_id", "dist")
+    localAdjacency(eChk, localThreshold).foreach { adj =>
+      return LocalGate.dijkstra(adj, Seq(source), bound)._1.toSeq
+        .sortBy(_._1).toDF("node_id", "dist")
     }
     val e = eChk.select(col("start_node").as("src"),
       col("end_node").as("dst"), col("w").cast("double").as("w"))
@@ -2322,47 +2192,23 @@ object GraphCheck {
     * continuation edges / root-path nodes are filtered per spur, and
     * candidates rank by (cost, path-string). Pinned bit-identical to
     * the distributed loop in RoadGraphSpec. */
-  private def yenLocal(es: Array[(Long, Long, Double)], source: Long,
+  private def yenLocal(adj: Map[Long, Array[(Long, Double)]], source: Long,
       target: Long, k: Int): Seq[(Seq[Long], Double)] = {
-    val adj = es.map { case (a, b, w) => (a, (b, w)) }
-      .groupBy(_._1).map { case (kk, v) => kk -> v.map(_._2) }
-    // Dijkstra with excluded edges/nodes; smaller-pred tie rule
+    // spur Dijkstra with excluded edges/nodes
     def sp(removedEdges: Set[(Long, Long)], removedNodes: Set[Long],
         from: Long): Option[(Seq[Long], Double)] = {
       if (removedNodes.contains(from)) return None
-      val dist = scala.collection.mutable.Map(from -> 0.0)
-      val pred = scala.collection.mutable.Map(from -> from)
-      val pq = scala.collection.mutable.PriorityQueue
-        .empty[(Double, Long)](
-          Ordering.by[(Double, Long), Double](_._1).reverse)
-      pq.enqueue((0.0, from))
-      while (pq.nonEmpty) {
-        val (d, u) = pq.dequeue()
-        if (d <= dist(u)) {
-          adj.getOrElse(u, Array.empty[(Long, Double)]).foreach {
-            case (v, w) =>
-              if (!removedNodes.contains(v) &&
-                  !removedEdges.contains((u, v))) {
-                val nd = d + w
-                if (!dist.contains(v) || nd < dist(v)) {
-                  dist(v) = nd; pred(v) = u; pq.enqueue((nd, v))
-                } else if (nd == dist(v) && u < pred(v)) pred(v) = u
-              }
-          }
-        }
-      }
-      dist.get(target).map { total =>
-        var path = List(target); var cur = target
-        while (cur != from) { cur = pred(cur); path = cur :: path }
-        (path, total)
-      }
+      val (dist, pred) = LocalGate.dijkstra(adj, Seq(from),
+        skip = (u, v) => removedNodes.contains(v) ||
+          removedEdges.contains((u, v)))
+      dist.get(target).map(LocalGate.walkBack(pred, from, target) -> _)
     }
     val first = sp(Set.empty, Set.empty, source)
     if (first.isEmpty || k <= 0) return Seq.empty
     if (k == 1) return Seq(first.get)
     // per-pair min weights (pairWeights' local twin)
-    val minW = es.groupBy(e => (e._1, e._2))
-      .map { case (kk, v) => kk -> v.map(_._3).min }
+    val minW = (for ((a, vs) <- adj.toSeq; (b, w) <- vs) yield (a, b) -> w)
+      .groupBy(_._1).map { case (kk, v) => kk -> v.map(_._2).min }
     val accepted = scala.collection.mutable.ArrayBuffer(first.get)
     implicit val candOrd: Ordering[(Double, Seq[Long])] =
       Ordering.by { case (c, p) => (c, p.mkString(",")) }
@@ -2486,26 +2332,20 @@ object GraphCheck {
     * Isolated nodes (no edges) are not in the node universe, matching
     * the edge-list domain. */
   def stronglyConnectedComponents(edges: DataFrame,
-      maxIter: Int = 50, localThreshold: Long = 100000L): DataFrame = {
-    // Broadcast-local fast path: the peel loop costs O(peels × rounds)
-    // job launches, pure overhead on a driver-sized graph. Iterative
-    // Tarjan gives the exact same relation — labels are defined as the
-    // max node id of each SCC in BOTH paths, so results are
-    // bit-identical, not merely equivalent. localThreshold = 0 forces
-    // the distributed peel loop (what ScaleSmoke witnesses).
+      maxIter: Int = 50,
+      localThreshold: Long = LocalGate.Threshold): DataFrame = {
     val e0 = edges.select(col("start_node").as("src"), col("end_node").as("dst"))
       .distinct().localCheckpoint(true)
-    if (localThreshold > 0 &&
-        e0.limit(math.min(localThreshold + 1, Int.MaxValue.toLong).toInt)
-          .count() <= localThreshold) {
+    // Local twin: iterative Tarjan gives the exact same relation —
+    // labels are defined as the max node id of each SCC in BOTH paths,
+    // so results are bit-identical, not merely equivalent.
+    LocalGate.rows(e0, localThreshold).foreach { rows =>
       val spark = edges.sparkSession
       import spark.implicits._
-      val es = e0.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val ids = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
-      val idx = ids.zipWithIndex.toMap
+      val (ids, es) = LocalGate.denseEdges(rows)
       val n = ids.length
       val adj = Array.fill(n)(List.empty[Int])
-      es.foreach { case (a, b) => adj(idx(a)) ::= idx(b) }
+      es.foreach { case (a, b) => adj(a) ::= b }
       val index = Array.fill(n)(-1)
       val low = new Array[Int](n)
       val onStack = new Array[Boolean](n)
@@ -2550,7 +2390,7 @@ object GraphCheck {
       val maxId = Array.fill(nComp)(Long.MinValue)
       for (i <- 0 until n)
         maxId(comp(i)) = math.max(maxId(comp(i)), ids(i))
-      return ids.toIndexedSeq.map(id => (id, maxId(comp(idx(id)))))
+      return ids.indices.map(i => (ids(i), maxId(comp(i))))
         .toDF("node_id", "scc")
     }
     stronglyConnectedComponentsWithStats(e0
@@ -2569,8 +2409,11 @@ object GraphCheck {
     val e0 = edges.select(col("start_node").as("src"), col("end_node").as("dst"))
       .distinct().localCheckpoint(true)
     var remE = e0
+    // a NULL endpoint is no node: it can never root a color class, so
+    // keeping it would spin the peel loop to maxIter
     var remaining = e0.select(col("src").as("node_id"))
       .unionByName(e0.select(col("dst").as("node_id")))
+      .filter(col("node_id").isNotNull)
       .distinct().localCheckpoint(true)
     var out: DataFrame = remaining.limit(0)
       .withColumn("scc", col("node_id"))
@@ -2648,41 +2491,16 @@ object GraphCheck {
     * Returns (path nodes source..target, total distance), or None if
     * unreachable. */
   def shortestPathTo(edges: DataFrame, source: Long, target: Long,
-      maxIter: Int = 100, localThreshold: Long = 100000L): Option[(Seq[Long], Double)] = {
+      maxIter: Int = 100,
+      localThreshold: Long = LocalGate.Threshold): Option[(Seq[Long], Double)] = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // broadcast-local fast path (see multiSourceShortestPaths); the
-    // equal-distance tie keeps the SMALLER predecessor, matching the
-    // distributed min(struct(dist, pred)) exactly
+    // local twin: the shared Dijkstra's equal-distance tie keeps the
+    // SMALLER predecessor, matching min(struct(dist, pred)) exactly
     val eChk = materializeEdges(edges)
-    if (localThreshold > 0 &&
-        eChk.limit(math.min(localThreshold + 1, Int.MaxValue.toLong).toInt)
-          .count() <= localThreshold) {
-      val adj = eChk.select(col("start_node"), col("end_node"),
-          col("w").cast("double")).collect()
-        .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
-        .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
-      val dist = scala.collection.mutable.Map(source -> 0.0)
-      val pred = scala.collection.mutable.Map(source -> source)
-      val pq = scala.collection.mutable.PriorityQueue
-        .empty[(Double, Long)](Ordering.by[(Double, Long), Double](_._1).reverse)
-      pq.enqueue((0.0, source))
-      while (pq.nonEmpty) {
-        val (d, u) = pq.dequeue()
-        if (d <= dist(u)) {
-          adj.getOrElse(u, Array.empty[(Long, Double)]).foreach { case (v, w) =>
-            val nd = d + w
-            if (!dist.contains(v) || nd < dist(v)) {
-              dist(v) = nd; pred(v) = u; pq.enqueue((nd, v))
-            } else if (nd == dist(v) && u < pred(v)) pred(v) = u
-          }
-        }
-      }
-      return dist.get(target).map { total =>
-        var path = List(target); var cur = target
-        while (cur != source) { cur = pred(cur); path = cur :: path }
-        (path, total)
-      }
+    localAdjacency(eChk, localThreshold).foreach { adj =>
+      val (dist, pred) = LocalGate.dijkstra(adj, Seq(source))
+      return dist.get(target).map(LocalGate.walkBack(pred, source, target) -> _)
     }
     val e = eChk.select(col("start_node").as("src"),
       col("end_node").as("dst"), col("w").cast("double").as("w"))
@@ -2800,7 +2618,7 @@ object GraphCheck {
     * `edges` must carry `(start_node, end_node, edge_id, w)`. */
   def drivingDistanceRows(edges: DataFrame, sources: Seq[Long],
       cutoff: Double, maxIter: Int = 100,
-      localThreshold: Long = 100000L): DataFrame = {
+      localThreshold: Long = LocalGate.Threshold): DataFrame = {
     val eChk = edges
       .select(col("start_node"), col("end_node"), col("edge_id"), col("w"))
       .localCheckpoint(true)

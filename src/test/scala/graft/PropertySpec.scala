@@ -404,4 +404,137 @@ class PropertySpec extends SparkTestBase {
         s"trial $trial: area ${out.getDouble(2)} != $exp")
     }
   }
+
+  // ---- local twin == distributed loop on dirty inputs: every operator
+  //      behind LocalGate, at the default gate and forced distributed
+
+  /** Row multiset of a result, doubles rounded to the 8-place contract
+    * of the pageRank pins, arrays sorted. */
+  private def rowBag(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().toSeq.map(_.toSeq.map {
+      case d: Double =>
+        BigDecimal(d).setScale(8, BigDecimal.RoundingMode.HALF_UP).toString
+      case xs: scala.collection.Seq[_] =>
+        xs.map(String.valueOf).sorted.mkString("[", ",", "]")
+      case v => String.valueOf(v)
+    }.mkString("|")).sorted
+
+  /** Each gated operator as a function of its `localThreshold`.
+    * `e` is `(start_node, end_node, w)`; `labels` is
+    * `(node_id, label)`; `src`/`tgt` are graph nodes and `lone` a node
+    * without edges. */
+  private def gatedOps(e: org.apache.spark.sql.DataFrame,
+      labels: org.apache.spark.sql.DataFrame, src: Long, tgt: Long,
+      lone: Long): Seq[(String, Long => Any)] = {
+    import graft.osm.{Contraction, GraphCheck => G}
+    val pairs = e.select("start_node", "end_node")
+    Seq(
+      "cc" -> (t => rowBag(G.connectedComponents(pairs, localThreshold = t))),
+      "sssp" -> (t => rowBag(G.multiSourceShortestPaths(e, Seq(src, lone),
+        localThreshold = t)._1)),
+      "closeness" -> (t => rowBag(G.closenessFromSources(e, Seq(src, tgt),
+        localThreshold = t))),
+      "shortestPathTo" -> (t => G.shortestPathTo(e, src, tgt,
+        localThreshold = t)),
+      "ksp" -> (t => G.kShortestPaths(e, src, tgt, k = 3,
+        localThreshold = t)),
+      "pagerank" -> (t => rowBag(G.pageRank(pairs, localThreshold = t))),
+      "ppr" -> (t => rowBag(G.personalizedPageRank(pairs, Seq(src, lone),
+        localThreshold = t))),
+      "hits" -> (t => rowBag(G.hits(pairs, localThreshold = t))),
+      "scc" -> (t => rowBag(G.stronglyConnectedComponents(pairs,
+        localThreshold = t))),
+      "lpa" -> (t => rowBag(G.labelPropagation(pairs, rounds = 3, t))),
+      "refine" -> (t => rowBag(G.refineCommunitiesRounds(pairs, labels,
+        rounds = 2, t))),
+      "coarsen" -> (t => rowBag(G.coarsenGraph(pairs, labels, t))),
+      "louvain" -> (t => rowBag(G.louvainTwoLevel(pairs, labels,
+        level1Rounds = 2, level2Rounds = 2, t))),
+      "coreness" -> (t => rowBag(G.coreness(pairs, rounds = 4, t))),
+      "contraction" -> { t =>
+        val c = Contraction.contractGraph(e.select(
+          monotonically_increasing_id().as("edge_id"),
+          col("start_node").as("source"), col("end_node").as("target"),
+          col("w").cast("double").as("cost")), localThreshold = t)
+        (rowBag(c.edges), rowBag(c.vertexAbsorptions))
+      })
+  }
+
+  private def assertTwinsAgree(e: org.apache.spark.sql.DataFrame,
+      labels: org.apache.spark.sql.DataFrame, src: Long, tgt: Long,
+      lone: Long, ctx: String, only: Set[String] = Set.empty): Unit = {
+    val eChk = e.localCheckpoint(true)
+    val lChk = labels.localCheckpoint(true)
+    gatedOps(eChk, lChk, src, tgt, lone)
+      .filter { case (name, _) => only.isEmpty || only(name) }
+      .foreach { case (name, run) =>
+        assert(run(graft.osm.LocalGate.Threshold) === run(0L),
+          s"$name: local twin != distributed loop ($ctx)")
+      }
+  }
+
+  test("gated graph operators: local == distributed on random graphs " +
+      "with self-loops, multi-edges and isolated nodes") {
+    val r = new scala.util.Random(4242L)
+    (1 to 2).foreach { g =>
+      val n = 6 + r.nextInt(7) // nodes 1..n, <= 12
+      val base = for {
+        a <- 1 to n; b <- 1 to n
+        if a != b && r.nextInt(100) < 22
+      } yield (a.toLong, b.toLong, (1 + r.nextInt(9)).toLong)
+      val loops = Seq.fill(2)(1L + r.nextInt(n)).map(v => (v, v, 3L))
+      val multi = base.take(3).map { case (a, b, w) => (a, b, w + 2) }
+      // n + 1 has only a self-loop; n + 2 has no edge at all
+      val edges = base ++ loops ++ multi :+ ((n + 1L, n + 1L, 1L))
+      val labels = (1L to n + 2L).map(v => (v, 1L + r.nextInt(3)))
+      val (src, tgt) = (edges.head._1, edges.last._1 % n + 1)
+      assertTwinsAgree(edges.toDF("start_node", "end_node", "w"),
+        labels.toDF("node_id", "label"), src, tgt, lone = n + 2L,
+        s"graph $g, n=$n, ${edges.size} edges")
+    }
+  }
+
+  test("gated graph operators: a NULL endpoint keeps the distributed path") {
+    // (1,2),(2,3),(NULL,4),(5,6): CC has 7 rows, the NULL one included;
+    // the twins read primitives, so the gate must send this input to
+    // the distributed loops
+    val e = Seq[(Option[Long], Option[Long], Long)](
+      (Some(1L), Some(2L), 1L), (Some(2L), Some(3L), 2L),
+      (None, Some(4L), 1L), (Some(5L), Some(6L), 1L))
+      .toDF("start_node", "end_node", "w")
+    val pairs = e.select("start_node", "end_node")
+    val (cc, rounds) = graft.osm.GraphCheck.connectedComponentsWithRounds(pairs)
+    assert(rounds > 0, "a NULL endpoint must not take the local path")
+    assert(cc.count() === 7L)
+    val labels = (1L to 6L).map(v => (v, v % 2)).toDF("node_id", "label")
+    assertTwinsAgree(e, labels, src = 1L, tgt = 3L, lone = 9L, "NULL endpoint")
+  }
+
+  test("gated graph operators: a node labelled twice keeps the distributed path") {
+    import graft.osm.GraphCheck
+    val e = Seq((1L, 2L, 1L), (2L, 3L, 1L), (3L, 1L, 1L), (3L, 4L, 1L),
+      (4L, 5L, 1L), (5L, 6L, 1L), (6L, 4L, 1L))
+      .toDF("start_node", "end_node", "w")
+    // node 3 carries two labels: the distributed label joins fan it out
+    val labels = Seq((1L, 1L), (2L, 1L), (3L, 1L), (3L, 4L), (4L, 4L),
+      (5L, 4L), (6L, 4L)).toDF("node_id", "label")
+    val pairs = e.select("start_node", "end_node")
+    assert(GraphCheck.refineCommunities(pairs, labels, 0L).count() >
+      labels.select("node_id").distinct().count(), "expected fan-out")
+    assertTwinsAgree(e, labels, src = 1L, tgt = 6L, lone = 9L,
+      "duplicate label", only = Set("refine", "coarsen", "louvain"))
+  }
+
+  test("LocalGate.rows: one probe; None at t <= 0, above t, or on a NULL") {
+    import graft.osm.LocalGate
+    val five = (1L to 5L).toDF("v").localCheckpoint(true)
+    assert(LocalGate.rows(five, 0L).isEmpty)
+    assert(LocalGate.rows(five, -1L).isEmpty)
+    assert(LocalGate.rows(five, 5L).map(_.map(_.getLong(0)).sorted.toSeq) ===
+      Some(Seq(1L, 2L, 3L, 4L, 5L)))
+    assert(LocalGate.rows(five, 4L).isEmpty)
+    val withNull = Seq(Some(1L), None, Some(3L)).toDF("v").localCheckpoint(true)
+    assert(LocalGate.rows(withNull, 3L).isEmpty)
+    assert(LocalGate.rows(withNull.na.drop(), 3L).map(_.length) === Some(2))
+  }
 }
