@@ -1,7 +1,7 @@
 package graft.osm
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.types.LongType
 
 /** Graph-construction validation utilities over the exported edge list.
@@ -113,21 +113,31 @@ object GraphCheck {
       // so the inner join is total.
       val ptr = lowered
         .select(col("node_id").as("__c"), col("component").as("__cc"))
-      val next = lowered.join(ptr, lowered("component") === ptr("__c"))
-        .select(col("node_id"), col("__cc").as("component"))
-        .localCheckpoint(true)
       // cast BEFORE summing: planet-scale node ids (~1e10) over ~1e9
       // nodes overflow a Long accumulator (ANSI mode throws); a
       // decimal(38,0) accumulator has ~19 digits of headroom. An empty
       // edge set yields a null sum — treat it as converged.
-      val s = next.agg(sum(col("component").cast("decimal(38,0)"))).head()
-        .getDecimal(0)
+      val (next, s) = checkpointObserved[java.math.BigDecimal](
+        lowered.join(ptr, lowered("component") === ptr("__c"))
+          .select(col("node_id"), col("__cc").as("component")),
+        sum(col("component").cast("decimal(38,0)")))
       converged = s == null || s.compareTo(prevSum) == 0
       prevSum = if (s == null) prevSum else s
       labels = next
       i += 1
     }
     (labels, i)
+  }
+
+  /** `df` materialized by `localCheckpoint`, plus the value of
+    * `metric` (one aggregate) over its rows, read off the checkpoint's
+    * own job with `Dataset.observe`: a loop's convergence value without
+    * a second job over the checkpoint. */
+  private def checkpointObserved[T](df: DataFrame,
+      metric: Column): (DataFrame, T) = {
+    val obs = Observation()
+    val chk = df.observe(obs, metric.as("v")).localCheckpoint(true)
+    (chk, obs.get("v").asInstanceOf[T])
   }
 
   /** Component count + size of the largest — the one-line health check
@@ -171,20 +181,19 @@ object GraphCheck {
     * the `pgr_dijkstra` analog the reference's graphs are built to
     * feed (`osm-road-graphs.sql` exports exactly this edge shape into
     * pgRouting). Bellman–Ford/Pregel relaxation: each round one
-    * equi-join relaxes every edge whose source is settled, a min-agg
-    * merges, and the frontier is checkpointed — the GraphX Pregel
-    * shape, with rounds bounded by the shortest-path-tree HOP depth
-    * (road networks: a few hundred at continent scale; delta-stepping
-    * buckets are the refinement when that dominates). Unreachable
-    * nodes are absent from the result.
+    * equi-join relaxes every edge out of the frontier, one min-agg
+    * merges the candidates into the state, and the state is
+    * checkpointed — the GraphX Pregel shape, with rounds bounded by the
+    * shortest-path-tree HOP depth (road networks: a few hundred at
+    * continent scale; delta-stepping buckets are the refinement when
+    * that dominates). Unreachable nodes are absent from the result.
     *
     * `edges` carries `(start_node, end_node, w)`; weights must be
     * non-negative (longs stay exact under path summation — the bench
     * queries ride integer centimeters for cross-engine bit equality).
     *
-    * Convergence detector: distances only decrease and the settled set
-    * only grows, so the (count, sum) pair is a fixpoint witness — one
-    * scalar aggregate per round, no join-and-count. */
+    * Convergence detector: the frontier going empty, counted on the
+    * round's own checkpoint job (see `relaxFrontier`). */
   def shortestPathsWithRounds(edges: DataFrame, source: Long,
       maxIter: Int = 100): (DataFrame, Int) =
     multiSourceShortestPaths(edges, Seq(source), maxIter)
@@ -225,38 +234,69 @@ object GraphCheck {
         else rows.toDF("node_id", "dist")
       return (out, 0)
     }
-    val e = eChk.select(col("start_node").as("src"),
-      col("end_node").as("dst"), col("w"))
-    val wType = e.schema("w").dataType
-    var dist = sources.map((_, 0L)).toDF("node_id", "dist")
-      .select(col("node_id"), col("dist").cast(wType))
-      .localCheckpoint(true)
-    var frontier = dist
-    var frontierSize = sources.size.toLong
+    relaxFrontier(eChk, sources.map((_, 0L)).toDF("node_id", "dist"),
+      sources.size, maxIter)
+  }
+
+  /** The frontier relaxation shared by [[multiSourceShortestPaths]],
+    * `boundedSssp` and the batched SSSP of [[betweennessFromSources]],
+    * run to the fixpoint or `maxIter` rounds over `edges` =
+    * `(start_node, end_node, w)`. `seeds` holds the `nSeeds` starting
+    * rows `(keys…, node_id, dist)`: any columns besides `node_id` and
+    * `dist` (the batched SSSP's `src`) are search keys carried through,
+    * so one loop relaxes many independent searches at once.
+    *
+    * The state is `(keys…, node_id, dist, fresh)`. Each round is ONE
+    * union-aggregate and ONE materialization: the edges out of the
+    * fresh rows (last round's improvements) become `dist + w`
+    * candidates, the state unions in as the old distances, and one
+    * `groupBy` takes `min` of each side. A row is fresh when it is new,
+    * or when a candidate beat (or first gave a value to) its old
+    * distance. The fresh count — the next frontier's size, and 0 at
+    * convergence — is observed on the round's checkpoint job.
+    *
+    * Dirty input: a NULL weight gives a NULL candidate, which `min`
+    * ignores; a node first reached only through one keeps a NULL
+    * distance, and a NULL-distance node turns fresh again only on a
+    * real candidate, so a NULL-weight cycle converges. Candidates to a
+    * NULL `end_node` collect in one NULL-keyed row that never relaxes
+    * anything, so it is never fresh. `bound` drops candidates above it
+    * (and NULL ones). Returns `(keys…, node_id, dist)` and the rounds
+    * run. */
+  private def relaxFrontier(edges: DataFrame, seeds: DataFrame, nSeeds: Long,
+      maxIter: Int, bound: Option[Double] = None): (DataFrame, Int) = {
+    val wType = edges.schema("w").dataType
+    val keys = (seeds.columns.toSeq.filterNot(Set("node_id", "dist")) :+
+      "node_id").map(col)
+    val none = lit(null).cast(wType)
+    var state = seeds.select(keys :+ col("dist").cast(wType).as("dist") :+
+      lit(true).as("fresh"): _*)
+    var frontier = nSeeds
     var i = 0
-    while (frontierSize > 0 && i < maxIter) {
-      // candidate improvements reachable from last round's winners;
-      // min-agg dedups multiple in-round paths to the same node
-      val cand = e.join(frontier, e("src") === frontier("node_id"))
-        .select(col("dst").as("node_id"), (col("dist") + col("w")).as("dist"))
-        .groupBy("node_id").agg(min(col("dist")).as("dist"))
-      // keep only strict improvements (or first sightings): these are
-      // the next frontier AND the rows that change the settled relation
-      val improved = cand.join(dist.withColumnRenamed("dist", "__old"),
-          Seq("node_id"), "left_outer")
-        .filter(col("__old").isNull || col("dist") < col("__old"))
-        .select(col("node_id"), col("dist"))
-        .localCheckpoint(true)
-      frontierSize = improved.count()
-      if (frontierSize > 0) {
-        dist = dist.unionByName(improved)
-          .groupBy("node_id").agg(min(col("dist")).as("dist"))
-          .localCheckpoint(true)
-        frontier = improved
-      }
+    while (frontier > 0 && i < maxIter) {
+      val cand = edges
+        .join(state.filter(col("fresh")), col("start_node") === col("node_id"))
+        .select(keys.init :+ col("end_node").as("node_id") :+
+          none.as("__old") :+ (col("dist") + col("w")).as("__new") :+
+          lit(false).as("__seen"): _*)
+      val (next, fresh) = checkpointObserved[Long](
+        state.select(keys :+ col("dist").as("__old") :+ none.as("__new") :+
+            lit(true).as("__seen"): _*)
+          .unionByName(bound.fold(cand)(b => cand.filter(col("__new") <= b)))
+          .groupBy(keys: _*)
+          .agg(min(col("__old")).as("__old"), min(col("__new")).as("__new"),
+            max(col("__seen")).as("__seen"))
+          .select(keys :+ least(col("__old"), col("__new")).as("dist") :+
+            (col("node_id").isNotNull && (!col("__seen") ||
+              col("__new").isNotNull &&
+                (col("__old").isNull || col("__new") < col("__old"))))
+              .as("fresh"): _*),
+        count(when(col("fresh"), 1)))
+      state = next
+      frontier = fresh
       i += 1
     }
-    (dist, i)
+    (state.drop("fresh"), i)
   }
 
   /** [[shortestPathsWithRounds]] without the round count. */
@@ -264,19 +304,6 @@ object GraphCheck {
       maxIter: Int = 100): DataFrame =
     shortestPathsWithRounds(edges, source, maxIter)._1
 
-  /** PageRank over the directed edge list — fixed iteration count,
-    * classic join-aggregate Pregel shape: one pass computes out-degrees
-    * (joined onto the edge relation ONCE, outside the loop), then each
-    * iteration is one equi-join (rank flows along edges as
-    * rank/outdeg) + one sum-agg + the teleport term. Dangling nodes
-    * keep the teleport share only (mass leaks — the simplest
-    * consistent semantics, mirrored exactly by the oracle's unrolled
-    * iterations). Checkpoint every iteration keeps plans flat.
-    *
-    * 100 TB shape: per-iteration cost is exactly one shuffle join +
-    * one shuffle agg over E — the same loop economics as
-    * [[connectedComponentsWithRounds]]; iteration count is a fixed
-    * budget (20 ≈ 1e-7 residual at damping 0.85), not data-dependent. */
   /** Turn-restricted single-source shortest paths — the `pgr_trsp`
     * analog: SSSP over the EDGE-EXPANDED graph (the line graph), where
     * a state is "arrived at edge e's head along e" and a transition
@@ -1345,6 +1372,20 @@ object GraphCheck {
         when(col("__w2") > 0, col("__ti") * 2.0 / col("__w2"))
           .otherwise(lit(0.0)).as("transitivity"))
 
+  /** PageRank over the directed edge list — fixed iteration count,
+    * Pregel shape: one aggregate gives every node its out-degree (and
+    * the node count `n`, observed on that checkpoint's job), then each
+    * iteration is one equi-join (rank flows along edges as rank/outdeg)
+    * feeding one sum-agg that also carries the node's own row, plus the
+    * teleport term (see [[pageRankRounds]]). Dangling nodes keep the
+    * teleport share only (mass leaks — the simplest consistent
+    * semantics, mirrored exactly by the oracle's unrolled iterations).
+    * Checkpoint every iteration keeps plans flat.
+    *
+    * 100 TB shape: per-iteration cost is exactly one shuffle join +
+    * one shuffle agg over E — the same loop economics as
+    * [[connectedComponentsWithRounds]]; iteration count is a fixed
+    * budget (20 ≈ 1e-7 residual at damping 0.85), not data-dependent. */
   def pageRank(edges: DataFrame, iters: Int = 20,
       damping: Double = 0.85,
       localThreshold: Long = LocalGate.Threshold): DataFrame = {
@@ -1364,29 +1405,52 @@ object GraphCheck {
         teleport = Array.fill(n)((1.0 - damping) / n))
       return ids.indices.map(i => (ids(i), rank(i))).toDF("node_id", "rank")
     }
-    val nodes = e.select(col("src").as("node_id"))
-      .unionByName(e.select(col("dst").as("node_id")))
-      .distinct().localCheckpoint(true)
-    val n = nodes.count()
-    val teleport = (1.0 - damping) / n
-    // out-degree rides the edge relation from the start: the per-round
-    // join is rank-only
-    val ew = e.join(e.groupBy("src").agg(count(lit(1)).as("__deg")), "src")
-      .localCheckpoint(true)
-    var rank = nodes.withColumn("rank", lit(1.0 / n)).localCheckpoint(true)
-    var i = 0
-    while (i < iters) {
-      val inbound = ew.join(rank, ew("src") === rank("node_id"))
-        .select(col("dst"), (col("rank") / col("__deg")).as("__c"))
-        .groupBy("dst").agg(sum(col("__c")).as("__s"))
-      rank = nodes.join(inbound, nodes("node_id") === inbound("dst"), "left_outer")
-        .select(col("node_id"),
-          (lit(teleport) + lit(damping) * coalesce(col("__s"), lit(0.0)))
-            .as("rank"))
+    val (state, n) = checkpointObserved[Long](outDegrees(e), count(lit(1)))
+    pageRankRounds(e, state.withColumn("rank", lit(1.0 / n)), iters, damping,
+      teleport = lit((1.0 - damping) / n))
+  }
+
+  /** `(node_id, deg)`: every endpoint of `e` = `(src, dst)` plus
+    * `extra` node ids, with its out-degree (0 for sinks) — one
+    * aggregate. An edge to a NULL `dst` still counts toward its
+    * source's degree. */
+  private def outDegrees(e: DataFrame,
+      extra: Option[DataFrame] = None): DataFrame = {
+    val ends = e.select(col("src").as("node_id"), lit(1L).as("__o"))
+      .unionByName(e.select(col("dst").as("node_id"), lit(0L).as("__o")))
+    extra.fold(ends)(x => ends.unionByName(
+        x.select(col("node_id"), lit(0L).as("__o"))))
+      .groupBy("node_id").agg(sum(col("__o")).as("deg"))
+  }
+
+  /** `iters` synchronous PageRank rounds over `e` = `(src, dst)` from
+    * `state` = `(node_id, deg, rank)`, shared by [[pageRank]] and
+    * [[personalizedPageRank]]: rank' = teleport + damping · Σ inbound
+    * rank/deg, dangling mass leaking. Each round is ONE union-aggregate
+    * and ONE materialization: the edges out of every node carry
+    * rank/deg to their `dst`, the state's own rows union in with 0.0
+    * (so sinks and unreached nodes keep their row), and one `groupBy`
+    * sums the contributions and carries `deg` through with `max`.
+    * Messages to a NULL `dst` are dropped; a NULL `src` never matches
+    * a node. `teleport` is evaluated per aggregated row. Returns
+    * `(node_id, rank)`. */
+  private def pageRankRounds(e: DataFrame, state0: DataFrame, iters: Int,
+      damping: Double, teleport: Column): DataFrame = {
+    var state = state0
+    for (_ <- 1 to iters) {
+      val sent = e.join(state, col("src") === col("node_id"))
+        .filter(col("dst").isNotNull)
+        .select(col("dst").as("node_id"), lit(null).cast(LongType).as("deg"),
+          (col("rank") / col("deg")).as("__c"))
+      state = state.select(col("node_id"), col("deg"), lit(0.0).as("__c"))
+        .unionByName(sent)
+        .groupBy("node_id")
+        .agg(max(col("deg")).as("deg"), sum(col("__c")).as("__s"))
+        .select(col("node_id"), col("deg"),
+          (teleport + lit(damping) * col("__s")).as("rank"))
         .localCheckpoint(true)
-      i += 1
     }
-    rank
+    state.select(col("node_id"), col("rank"))
   }
 
   /** `iters` synchronous PageRank updates over dense-index edges:
@@ -1434,33 +1498,12 @@ object GraphCheck {
         teleport = ids.map(id => if (seedSet(id)) tp else 0.0))
       return ids.indices.map(i => (ids(i), rank(i))).toDF("node_id", "rank")
     }
-    val nodes = e.select(col("src").as("node_id"))
-      .unionByName(e.select(col("dst").as("node_id")))
-      .unionByName(seedIds.toDF("node_id"))
-      .distinct()
-      .withColumn("__tp",
-        when(col("node_id").isin(seedIds: _*), lit(tp)).otherwise(lit(0.0)))
+    val seed = col("node_id").isin(seedIds: _*)
+    val state = outDegrees(e, Some(seedIds.toDF("node_id")))
       .localCheckpoint(true)
-    val ew = e.join(e.groupBy("src").agg(count(lit(1)).as("__deg")), "src")
-      .localCheckpoint(true)
-    var rank = nodes.select(col("node_id"),
-        when(col("node_id").isin(seedIds: _*), lit(1.0 / seedIds.size))
-          .otherwise(lit(0.0)).as("rank"))
-      .localCheckpoint(true)
-    var i = 0
-    while (i < iters) {
-      val inbound = ew.join(rank, ew("src") === rank("node_id"))
-        .select(col("dst"), (col("rank") / col("__deg")).as("__c"))
-        .groupBy("dst").agg(sum(col("__c")).as("__s"))
-      rank = nodes
-        .join(inbound, nodes("node_id") === inbound("dst"), "left_outer")
-        .select(col("node_id"),
-          (col("__tp") + lit(damping) * coalesce(col("__s"), lit(0.0)))
-            .as("rank"))
-        .localCheckpoint(true)
-      i += 1
-    }
-    rank
+    pageRankRounds(e, state.withColumn("rank",
+        when(seed, lit(1.0 / seedIds.size)).otherwise(lit(0.0))),
+      iters, damping, teleport = when(seed, lit(tp)).otherwise(lit(0.0)))
   }
 
   /** Many-to-many cost matrix (`pgr_dijkstraCost` / igraph
@@ -1754,37 +1797,12 @@ object GraphCheck {
     // igraph-style whole-network sweeps with hundreds of seeds.
     val eb = eChk.select(col("start_node").as("src_n"),
       col("end_node").as("dst_n"), col("w"))
-    val wType = eChk.schema("w").dataType
     val waveDeltas = sources.grouped(waveSize).map { wave =>
-      // batched SSSP: per-(src, node) distances, the frontier-relaxation
-      // loop of multiSourceShortestPaths widened with the source key
-      var dist = wave.toDF("src")
-        .select(col("src"), col("src").as("node_id"),
-          lit(0L).cast(wType).as("dist"))
-        .localCheckpoint(true)
-      var frontier = dist
-      var frontierSize = wave.size.toLong
-      var i = 0
-      while (frontierSize > 0 && i < maxIter) {
-        val cand = eb.join(frontier, eb("src_n") === frontier("node_id"))
-          .select(col("src"), col("dst_n").as("node_id"),
-            (col("dist") + col("w")).as("dist"))
-          .groupBy("src", "node_id").agg(min(col("dist")).as("dist"))
-        val improved = cand
-          .join(dist.withColumnRenamed("dist", "__old"),
-            Seq("src", "node_id"), "left_outer")
-          .filter(col("__old").isNull || col("dist") < col("__old"))
-          .select(col("src"), col("node_id"), col("dist"))
-          .localCheckpoint(true)
-        frontierSize = improved.count()
-        if (frontierSize > 0) {
-          dist = dist.unionByName(improved)
-            .groupBy("src", "node_id").agg(min(col("dist")).as("dist"))
-            .localCheckpoint(true)
-          frontier = improved
-        }
-        i += 1
-      }
+      // batched SSSP: per-(src, node) distances, the frontier relaxation
+      // of multiSourceShortestPaths keyed by the source
+      val dist = relaxFrontier(eChk,
+        wave.toDF("src").select(col("src"), col("src").as("node_id"),
+          lit(0L).as("dist")), wave.size, maxIter)._1
       // per-source shortest-path DAG: dist(u) + w = dist(v) edges
       val du = dist.select(col("src"), col("node_id").as("u"),
         col("dist").as("__du"))
@@ -1803,7 +1821,7 @@ object GraphCheck {
             .as("sigma"))
         .localCheckpoint(true)
       var prevSum = Double.NaN
-      i = 0
+      var i = 0
       var stable = false
       while (!stable && i < maxIter) {
         val sg = sigma.select(col("src"), col("node_id").as("u"),
@@ -2156,33 +2174,9 @@ object GraphCheck {
       return LocalGate.dijkstra(adj, Seq(source), bound)._1.toSeq
         .sortBy(_._1).toDF("node_id", "dist")
     }
-    val e = eChk.select(col("start_node").as("src"),
-      col("end_node").as("dst"), col("w").cast("double").as("w"))
-    var dist = Seq((source, 0.0)).toDF("node_id", "dist")
-      .localCheckpoint(true)
-    var frontier = dist
-    var frontierSize = 1L
-    var i = 0
-    while (frontierSize > 0 && i < maxIter) {
-      val cand = e.join(frontier, e("src") === frontier("node_id"))
-        .select(col("dst").as("node_id"), (col("dist") + col("w")).as("dist"))
-        .filter(col("dist") <= bound)
-        .groupBy("node_id").agg(min(col("dist")).as("dist"))
-      val improved = cand.join(dist.withColumnRenamed("dist", "__old"),
-          Seq("node_id"), "left_outer")
-        .filter(col("__old").isNull || col("dist") < col("__old"))
-        .select(col("node_id"), col("dist"))
-        .localCheckpoint(true)
-      frontierSize = improved.count()
-      if (frontierSize > 0) {
-        dist = dist.unionByName(improved)
-          .groupBy("node_id").agg(min(col("dist")).as("dist"))
-          .localCheckpoint(true)
-        frontier = improved
-      }
-      i += 1
-    }
-    dist
+    relaxFrontier(eChk.select(col("start_node"), col("end_node"),
+        col("w").cast("double").as("w")),
+      Seq((source, 0.0)).toDF("node_id", "dist"), 1, maxIter, Some(bound))._1
   }
 
   /** In-memory Yen over a collected edge array — [[kShortestPaths]]'s

@@ -76,7 +76,10 @@ case class PbfScan(fullSchema: StructType, required: StructType,
     * resolve through the Hadoop FileSystem API (exactly like a parquet
     * scan): local files, HDFS, and object stores all work, and the
     * partition carries the fully-qualified URI so executors on other
-    * hosts open the same filesystem, not their local disk. */
+    * hosts open the same filesystem, not their local disk. A file ends
+    * cleanly only at a blob boundary (an empty file has no blobs); a
+    * frame cut short or outside the spec's size limits raises
+    * [[OsmPbf.PbfFormatException]] with the file and byte offset. */
   override def planInputPartitions(): Array[InputPartition] = {
     val conf = org.apache.spark.sql.SparkSession.active
       .sessionState.newHadoopConf()
@@ -88,44 +91,62 @@ case class PbfScan(fullSchema: StructType, required: StructType,
           .sortBy(_.getPath.getName).map(_.getPath)
       else Array(root)
     files.flatMap { f =>
+      val fileLen = fs.getFileStatus(f).getLen
       val in = new java.io.DataInputStream(
         new java.io.BufferedInputStream(fs.open(f)))
       val parts = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
+      // a file may end only at a blob boundary: every length read below
+      // is checked against the file length before it is trusted
+      def corrupt(at: Long, what: String) =
+        new OsmPbf.PbfFormatException(s"$f at byte offset $at: $what")
       var offset = 0L
       try {
-        while (true) {
-          val headerLen = in.readInt() // EOFException ends the loop
+        while (offset < fileLen) {
+          if (fileLen - offset < 4)
+            throw corrupt(offset, "file ends inside a BlobHeader length")
+          val headerLen = in.readInt()
+          if (headerLen < 0 || headerLen > OsmPbf.MaxHeaderBytes)
+            throw corrupt(offset, s"BlobHeader length $headerLen " +
+              s"outside [0, ${OsmPbf.MaxHeaderBytes}]")
+          if (offset + 4 + headerLen > fileLen)
+            throw corrupt(offset,
+              s"file ends inside a $headerLen-byte BlobHeader")
           val header = new Array[Byte](headerLen)
           in.readFully(header)
           val h = new PbView(header, 0, headerLen)
           var blobType = ""
-          var dataSize = 0
+          var dataSize = 0L
           while (h.hasMore) h.nextField() match {
             case 1 => blobType = h.readString()
-            case 3 => dataSize = h.readVarint().toInt
+            case 3 => dataSize = h.readVarint()
             case _ => h.skip()
           }
           val blobStart = offset + 4 + headerLen
+          if (dataSize < 0 || dataSize > OsmPbf.MaxBlobBytes)
+            throw corrupt(blobStart, s"Blob length $dataSize " +
+              s"outside [0, ${OsmPbf.MaxBlobBytes}]")
+          if (blobStart + dataSize > fileLen)
+            throw corrupt(blobStart, s"file ends inside a $dataSize-byte " +
+              s"$blobType Blob (${fileLen - blobStart} bytes left)")
           if (blobType == "OSMData") {
             parts += PbfBlobPartition(
-              fs.makeQualified(f).toString, blobStart, dataSize)
-            var toSkip = dataSize
-            while (toSkip > 0) toSkip -= in.skipBytes(toSkip)
+              fs.makeQualified(f).toString, blobStart, dataSize.toInt)
+            in.skipNBytes(dataSize)
           } else if (blobType == "OSMHeader") {
             // a conforming reader must REFUSE files whose
             // required_features it does not implement (PBF spec) —
             // silently decoding e.g. historical data would be wrong
-            val blob = new Array[Byte](dataSize)
+            val blob = new Array[Byte](dataSize.toInt)
             in.readFully(blob)
             OsmPbf.checkRequiredFeatures(blob)
-          } else {
-            var toSkip = dataSize
-            while (toSkip > 0) toSkip -= in.skipBytes(toSkip)
-          }
+          } else in.skipNBytes(dataSize)
           offset = blobStart + dataSize
         }
-      } catch { case _: java.io.EOFException => () }
-      in.close()
+      } catch {
+        // the stream ended before the length the file system reported
+        case e: java.io.EOFException =>
+          throw corrupt(offset, s"unexpected end of stream (${e.getMessage})")
+      } finally in.close()
       parts
     }
   }
@@ -239,6 +260,15 @@ private[sources] final class PbView(buf: Array[Byte], start: Int, len: Int) {
 
 object OsmPbf {
   import PgSnapshotDump.pointType
+
+  /** A `.osm.pbf` file whose framing is cut short or out of bounds; the
+    * message names the file and the byte offset of the bad frame. */
+  class PbfFormatException(msg: String) extends java.io.IOException(msg)
+
+  /** The largest BlobHeader and Blob this reader accepts: the PBF
+    * spec's 64 KiB and 32 MiB caps. */
+  val MaxHeaderBytes: Int = 64 * 1024
+  val MaxBlobBytes: Int = 32 * 1024 * 1024
 
   /** Same five pgsnapshot entity schemas as the TSV dump reader. */
   def schemaFor(entity: String): StructType = PgSnapshotDump.schemaFor(entity)

@@ -203,6 +203,70 @@ class OsmPbfSpec extends SparkTestBase {
         e.getCause.getMessage.contains("HistoricalInformation"))
   }
 
+  /** `bytes` written to a fresh temp dir as `name`. */
+  private def writePbf(name: String, bytes: Array[Byte]): String = {
+    val f = new java.io.File(Files.createTempDirectory("pbfcut").toFile, name)
+    Files.write(f.toPath, bytes)
+    f.getPath
+  }
+
+  /** The error a node scan of `file` raises, within 60 s (a reader
+    * that spins at EOF fails the test instead of hanging the suite). */
+  private def scanError(file: String): Throwable = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val scan = Future {
+      spark.read.format(fmt).option("entity", "nodes").load(file).count()
+    }
+    Await.ready(scan, scala.concurrent.duration.Duration(60, "s"))
+    val err = scan.value.get.failed
+    assert(err.isSuccess, s"scan of $file returned ${scan.value.get}")
+    err.get
+  }
+
+  private def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .map(x => String.valueOf(x.getMessage)).mkString(" | ")
+
+  test("a file cut inside a blob fails fast, naming the file and offset") {
+    val full = Files.readAllBytes(new java.io.File(path).toPath)
+    val cut = writePbf("cut.osm.pbf", full.take(full.length - 10))
+    val msg = messages(scanError(cut))
+    assert(msg.contains(cut), msg)
+    val at = raw"byte offset (\d+)".r.findFirstMatchIn(msg).map(_.group(1).toLong)
+    // the OSMData blob starts after the OSMHeader frame and runs past
+    // the cut
+    assert(at.exists(o => o > 4 && o < full.length - 10), msg)
+    assert(msg.contains("file ends inside"), msg)
+  }
+
+  test("a 1-byte file fails; an empty file reads 0 rows") {
+    val one = writePbf("one.osm.pbf", Array[Byte](0))
+    val msg = messages(scanError(one))
+    assert(msg.contains(one) && msg.contains("byte offset 0"), msg)
+    val empty = writePbf("empty.osm.pbf", Array.empty[Byte])
+    assert(spark.read.format(fmt).option("entity", "nodes").load(empty)
+      .count() === 0L)
+  }
+
+  test("BlobHeader and Blob lengths outside the spec limits are refused") {
+    val dos = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(dos)
+    out.writeInt(64 * 1024 + 1); out.close()
+    val big = writePbf("bighdr.osm.pbf", dos.toByteArray ++ new Array[Byte](8))
+    assert(messages(scanError(big)).contains("BlobHeader length 65537"))
+    val neg = writePbf("neghdr.osm.pbf", Array[Byte](-1, -1, -1, -1, 0, 0))
+    assert(messages(scanError(neg)).contains("BlobHeader length -1"))
+    val hdr = str(1, "OSMData") ++ vi(3, 32L * 1024 * 1024 + 1)
+    val bos = new java.io.ByteArrayOutputStream()
+    val o2 = new java.io.DataOutputStream(bos)
+    o2.writeInt(hdr.length); o2.write(hdr); o2.close()
+    val hugeBlob = writePbf("bigblob.osm.pbf", bos.toByteArray)
+    val msg = messages(scanError(hugeBlob))
+    assert(msg.contains("Blob length 33554433") &&
+      msg.contains(s"byte offset ${4 + hdr.length}"), msg)
+  }
+
   test("pbf feeds the road-graph pipeline end to end") {
     implicit val s = spark
     val nodes = spark.read.format(fmt).option("entity", "nodes").load(path)

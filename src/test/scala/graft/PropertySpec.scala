@@ -525,6 +525,98 @@ class PropertySpec extends SparkTestBase {
       "duplicate label", only = Set("refine", "coarsen", "louvain"))
   }
 
+  // ---- the distributed loops on dirty graphs: rows pinned as literals
+  //      (those of the loops' earlier two-job-per-round form)
+
+  private case class DirtyGraph(name: String,
+      edges: Seq[(Option[Long], Option[Long], Option[Long])], kspTarget: Long,
+      ssspRounds: Int, rows: Map[String, Seq[String]])
+
+  /** One edge; `null` marks a NULL field. */
+  private def edge(a: Integer, b: Integer, w: Integer) =
+    (Option(a).map(_.toLong), Option(b).map(_.toLong), Option(w).map(_.toLong))
+
+  // PageRank and PPR (seeds 1 and the edgeless 9), SSSP from 1 and 9,
+  // k = 3 shortest paths from 1, betweenness from 1 and 2; doubles at
+  // 8 places (rowBag). `ssspRounds` is the earlier loop's round count:
+  // it counted a NULL-distance node as improved whenever it was
+  // relaxed, so on the NULL-weight cycle (3 <-> 4, reached only through
+  // the NULL edge 2 -> 3) it spun to maxIter = 20.
+  private val dirtyGraphs = Seq(
+    DirtyGraph("NULL end_node", Seq(edge(1, 2, 1), edge(2, 3, 2),
+        edge(2, null, 4), edge(3, 1, 1), edge(3, 4, 3), edge(4, null, 1)),
+      kspTarget = 4L, ssspRounds = 5, Map(
+        "pagerank" -> Seq("1|0.05690581", "2|0.07837034", "3|0.06330780",
+          "4|0.05690581", "null|0.03000000"),
+        "ppr" -> Seq("1|0.08860321", "2|0.07531273", "3|0.03200992",
+          "4|0.01360321", "9|0.07500000", "null|0E-8"),
+        "sssp" -> Seq("1|0", "2|1", "3|3", "4|6", "9|0", "null|5"),
+        "ksp" -> Seq("1>2>3>4=6.0"),
+        "betweenness" -> Seq("1|0E-8", "2|2.00000000", "3|3.00000000",
+          "4|0E-8", "null|0E-8"))),
+    DirtyGraph("NULL w", Seq(edge(1, 2, 1), edge(2, 3, null), edge(3, 4, 1),
+        edge(1, 4, 5), edge(4, 5, null), edge(5, 6, 2)),
+      kspTarget = 2L, ssspRounds = 4, Map(
+        "pagerank" -> Seq("1|0.02500000", "2|0.03562500", "3|0.05528125",
+          "4|0.08261406", "5|0.09522195", "6|0.10593866"),
+        "ppr" -> Seq("1|0.07500000", "2|0.03187500", "3|0.02709375",
+          "4|0.05490469", "5|0.04666898", "6|0.03966864", "9|0.07500000"),
+        "sssp" -> Seq("1|0", "2|1", "3|null", "4|5", "5|null", "6|null",
+          "9|0"),
+        "ksp" -> Seq("1>2=1.0"),
+        "betweenness" -> Seq("1|0E-8", "2|0E-8", "3|0E-8", "4|0E-8",
+          "5|0E-8", "6|0E-8"))),
+    DirtyGraph("NULL-weight cycle", Seq(edge(1, 2, 1), edge(2, 3, null),
+        edge(3, 4, 2), edge(4, 3, 1), edge(4, 5, 1), edge(1, 6, 3),
+        edge(6, 5, 4)),
+      kspTarget = 6L, ssspRounds = 20, Map(
+        "pagerank" -> Seq("1|0.02500000", "2|0.03562500", "3|0.10318780",
+          "4|0.11271500", "5|0.10318780", "6|0.03562500"),
+        "ppr" -> Seq("1|0.07500000", "2|0.03187500", "3|0.04243131",
+          "4|0.03605053", "5|0.04243131", "6|0.03187500", "9|0.07500000"),
+        "sssp" -> Seq("1|0", "2|1", "3|null", "4|null", "5|7", "6|3", "9|0"),
+        "ksp" -> Seq("1>6=3.0"),
+        "betweenness" -> Seq("1|0E-8", "2|0E-8", "3|0E-8", "4|0E-8",
+          "5|0E-8", "6|1.00000000"))),
+    DirtyGraph("self-loops and multi-edges", Seq(edge(1, 1, 2),
+        edge(1, 2, 3), edge(1, 2, 1), edge(2, 3, 2), edge(2, 3, 2),
+        edge(3, 3, 1), edge(3, 1, 4), edge(3, 4, 5)),
+      kspTarget = 4L, ssspRounds = 4, Map(
+        "pagerank" -> Seq("1|0.12352712", "2|0.10753136", "3|0.17995172",
+          "4|0.08851144"),
+        "ppr" -> Seq("1|0.14264237", "2|0.08085769", "3|0.09597453",
+          "4|0.02721352", "9|0.07500000"),
+        "sssp" -> Seq("1|0", "2|1", "3|3", "4|8", "9|0"),
+        "ksp" -> Seq("1>2>3>4=8.0"),
+        "betweenness" -> Seq("1|0E-8", "2|2.00000000", "3|3.00000000",
+          "4|0E-8"))))
+
+  dirtyGraphs.foreach { g =>
+    test(s"distributed loops keep their pinned rows on a dirty graph: ${g.name}") {
+      import graft.osm.{GraphCheck => G}
+      val e = g.edges.toDF("start_node", "end_node", "w").localCheckpoint(true)
+      val pairs = e.select("start_node", "end_node")
+      val (sssp, rounds) = G.multiSourceShortestPaths(e, Seq(1L, 9L),
+        maxIter = 20, localThreshold = 0L)
+      val got = Map(
+        "pagerank" -> rowBag(G.pageRank(pairs, localThreshold = 0L)),
+        "ppr" -> rowBag(G.personalizedPageRank(pairs, Seq(1L, 9L),
+          localThreshold = 0L)),
+        "sssp" -> rowBag(sssp),
+        "ksp" -> G.kShortestPaths(e, 1L, g.kspTarget, k = 3, maxIter = 20,
+          localThreshold = 0L).map { case (p, c) => p.mkString(">") + "=" + c },
+        "betweenness" -> rowBag(G.betweennessFromSources(e, Seq(1L, 2L),
+          maxIter = 20, localThreshold = 0L)))
+      got.foreach { case (op, rows) =>
+        assert(rows === g.rows(op), s"$op on ${g.name}")
+      }
+      info(s"sssp rounds: $rounds (pinned ${g.ssspRounds})")
+      assert(rounds > 0 && rounds <= g.ssspRounds,
+        s"sssp took $rounds rounds (pinned ${g.ssspRounds})")
+      if (g.ssspRounds == 20) assert(rounds < 20, "the NULL cycle still spins")
+    }
+  }
+
   test("LocalGate.rows: one probe; None at t <= 0, above t, or on a NULL") {
     import graft.osm.LocalGate
     val five = (1L to 5L).toDF("v").localCheckpoint(true)

@@ -347,6 +347,69 @@ class RoadGraphSpec extends SparkTestBase {
     assert(comp.forall(_._2 === 1L), "all labels must reach the chain min")
   }
 
+  /** Spark jobs `body` starts, counted by a listener on a job group of
+    * its own. A marker job in a second group drains the listener bus:
+    * events arrive in order, so once the marker's start is seen every
+    * job of `body` has been counted. */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`marker`) => drained.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    jobs.get()
+  }
+
+  test("distributed graph loops: each extra round costs a fixed few jobs") {
+    import spark.implicits._
+    // a 64-node chain: no loop converges within the rounds run here, so
+    // k + 1 rounds cost exactly one round more than k. Each round is one
+    // union-aggregate plus one checkpoint whose job also yields the
+    // convergence value; a second action per round (a count, an
+    // agg().head()) would add a job and fail these bounds. The loops
+    // that ran those actions took 5, 9 and 6 jobs per round here.
+    val e = (1L until 64L).map(k => (k, k + 1, 1L))
+      .toDF("start_node", "end_node", "w").localCheckpoint(true)
+    val pairs = e.select("start_node", "end_node")
+    def perRound(run: Int => Unit): Int = {
+      run(2) // plans the loop's shapes once before counting
+      jobsOf(run(4)) - jobsOf(run(3))
+    }
+    val pr = perRound(k => GraphCheck.pageRank(pairs, iters = k,
+      localThreshold = 0L))
+    val sssp = perRound { k =>
+      val (_, r) = GraphCheck.multiSourceShortestPaths(e, Seq(1L),
+        maxIter = k, localThreshold = 0L)
+      assert(r === k)
+    }
+    val cc = perRound { k =>
+      val (_, r) = GraphCheck.connectedComponentsWithRounds(pairs,
+        maxIter = k, localThreshold = 0L)
+      assert(r === k)
+    }
+    info(s"jobs per round: pagerank $pr, sssp $sssp, cc $cc")
+    assert(pr > 0 && pr <= 3, s"pagerank: $pr jobs per round")
+    assert(sssp > 0 && sssp <= 3, s"sssp: $sssp jobs per round")
+    assert(cc > 0 && cc <= 4, s"cc: $cc jobs per round")
+  }
+
   test("connected components: broadcast-local path == distributed loop (r21)") {
     import spark.implicits._
     // adversarial mix: chain, star, cycle, self-loop, duplicate and
