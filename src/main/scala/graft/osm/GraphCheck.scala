@@ -1,7 +1,7 @@
 package graft.osm
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.types.LongType
 
 /** Graph-construction validation utilities over the exported edge list.
@@ -153,12 +153,11 @@ object GraphCheck {
     * ONCE, idempotently: if the incoming plan is already a bare
     * checkpoint scan of exactly that shape — as produced by this
     * helper in an enclosing call — reuse it. Composite operators
-    * (KSP's prune + spur searches, closeness's k sources, A*'s
-    * delegation, the pgRouting edge-row projection) route the same
-    * relation through several public entry points; without this guard
-    * each hop re-materialized the full edge list, which at planet
-    * scale multiplies the single largest I/O cost of the whole
-    * operator by the call depth. */
+    * (KSP's prune + spur searches, A*'s delegation, the pgRouting
+    * edge-row projection) route the same relation through several
+    * public entry points; without this guard each hop re-materialized
+    * the full edge list, which at planet scale multiplies the single
+    * largest I/O cost of the whole operator by the call depth. */
   private def materializeEdges(edges: DataFrame): DataFrame = {
     val already =
       edges.columns.toSeq == Seq("start_node", "end_node", "w") &&
@@ -1506,24 +1505,56 @@ object GraphCheck {
       iters, damping, teleport = when(seed, lit(tp)).otherwise(lit(0.0)))
   }
 
+  /** Sources that relax together in one source-keyed frontier loop:
+    * the sampled-source operators' waves, and [[betweennessFromSources]]'
+    * default `waveSize`. */
+  private final val SourceWave = 32
+
+  /** `(src, node_id, dist)`: the shortest distance from each distinct
+    * source to every node it reaches, over the materialized
+    * `(start_node, end_node, w)` relation `eChk` — the one distance
+    * primitive the sampled-source operators fold. Below the gate, ONE
+    * probe collects the graph and one driver-side Dijkstra runs per
+    * source; above it, sources advance in waves of [[SourceWave]]
+    * through [[relaxFrontier]] keyed by `src`, so a wave costs the
+    * rounds of its deepest source, not one loop per source. Distances
+    * are long on long weights, as [[multiSourceShortestPaths]] returns
+    * them; integer-centimeter weights stay exact in the Dijkstra's
+    * doubles (< 2^53). */
+  private def sourceDistances(eChk: DataFrame, sources: Seq[Long],
+      maxIter: Int, localThreshold: Long): DataFrame = {
+    val spark = eChk.sparkSession
+    import spark.implicits._
+    val srcs = sources.distinct
+    localAdjacency(eChk, localThreshold).foreach { adj =>
+      val rows = srcs.flatMap(s => LocalGate.dijkstra(adj, Seq(s))._1.toSeq
+        .map { case (n, d) => (s, n, d) })
+      return if (eChk.schema("w").dataType == LongType)
+        rows.map { case (s, n, d) => (s, n, d.toLong) }
+          .toDF("src", "node_id", "dist")
+      else rows.toDF("src", "node_id", "dist")
+    }
+    srcs.grouped(SourceWave).map(wave => relaxFrontier(eChk,
+        wave.toDF("src").select(col("src"), col("src").as("node_id"),
+          lit(0L).as("dist")), wave.size, maxIter)._1)
+      .reduce(_.unionByName(_))
+  }
+
   /** Many-to-many cost matrix (`pgr_dijkstraCost` / igraph
-    * `distances(v, to)`): one SSSP per source over ONE materialized
-    * edge relation, filtered to the target set — pgRouting-shaped rows
-    * `(start_vid, end_vid, agg_cost)`, unreachable pairs absent and —
-    * pgr_dijkstraCost semantics — no self rows. Exact integers on
+    * `distances(v, to)`): [[sourceDistances]] filtered to the target
+    * set — pgRouting-shaped rows `(start_vid, end_vid, agg_cost)`,
+    * unreachable pairs absent and — pgr_dijkstraCost semantics — no
+    * self rows; a repeated source counts once. Exact integers on
     * integer weights; the VRP/logistics input surface. */
   def costMatrix(edges: DataFrame, sources: Seq[Long],
       targets: Seq[Long], maxIter: Int = 100,
       localThreshold: Long = LocalGate.Threshold): DataFrame = {
     require(sources.nonEmpty, "costMatrix: sources must be non-empty")
-    val eChk = materializeEdges(edges)
-    sources.map { s0 =>
-      multiSourceShortestPaths(eChk, Seq(s0), maxIter, localThreshold)._1
-        .filter(col("node_id").isin(targets: _*) &&
-          col("node_id") =!= s0)
-        .select(lit(s0).as("start_vid"), col("node_id").as("end_vid"),
-          col("dist").as("agg_cost"))
-    }.reduce(_.unionByName(_))
+    sourceDistances(materializeEdges(edges), sources, maxIter, localThreshold)
+      .filter(col("node_id").isin(targets: _*) &&
+        col("node_id") =!= col("src"))
+      .select(col("src").as("start_vid"), col("node_id").as("end_vid"),
+        col("dist").as("agg_cost"))
   }
 
   /** Sampled closeness centrality: per node, the SUM of network
@@ -1532,42 +1563,15 @@ object GraphCheck {
     * (emit the division at presentation time; sums and counts stay
     * hash-exact). Exact closeness is all-pairs SSSP — O(V) relaxations,
     * off the table at road-network scale — so the standard estimator
-    * runs k sampled sources; this is that, as k driver-orchestrated
-    * SSSP jobs over ONE materialized edge relation (each run takes the
-    * broadcast-local or distributed path per its own size check). This
-    * is the space-syntax accessibility surface the reference's exports
-    * feed (osm-pg-etl.md's igraph hand-off). */
+    * runs k sampled sources; this is that, as one aggregate over
+    * [[sourceDistances]] (a repeated source counts once). This is the
+    * space-syntax accessibility surface the reference's exports feed
+    * (osm-pg-etl.md's igraph hand-off). */
   def closenessFromSources(edges: DataFrame, sources: Seq[Long],
       maxIter: Int = 100,
       localThreshold: Long = LocalGate.Threshold): DataFrame = {
     require(sources.nonEmpty, "closenessFromSources: sources must be non-empty")
-    val eChk = materializeEdges(edges)
-    // Local twin: ONE collect of the edge relation, k driver-side
-    // Dijkstras, one result relation — instead of k independent gated
-    // SSSPs plus a k-way union-aggregate. Integer-centimeter weights
-    // stay exact in doubles (< 2^53), so sums match the distributed
-    // path bit-for-bit.
-    localAdjacency(eChk, localThreshold).foreach { adj =>
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val sumD = scala.collection.mutable.Map[Long, Double]()
-      val cnt = scala.collection.mutable.Map[Long, Long]()
-      sources.foreach { s0 =>
-        LocalGate.dijkstra(adj, Seq(s0))._1.foreach { case (nd, d) =>
-          sumD(nd) = sumD.getOrElse(nd, 0.0) + d
-          cnt(nd) = cnt.getOrElse(nd, 0L) + 1L
-        }
-      }
-      val rows = sumD.keys.toSeq.sorted
-      return if (eChk.schema("w").dataType == LongType)
-        rows.map(nd => (nd, sumD(nd).toLong, cnt(nd)))
-          .toDF("node_id", "sum_dist", "n_from")
-      else rows.map(nd => (nd, sumD(nd), cnt(nd)))
-        .toDF("node_id", "sum_dist", "n_from")
-    }
-    sources.map { s0 =>
-      multiSourceShortestPaths(eChk, Seq(s0), maxIter, localThreshold)._1
-    }.reduce(_.unionByName(_))
+    sourceDistances(materializeEdges(edges), sources, maxIter, localThreshold)
       .groupBy("node_id")
       .agg(sum(col("dist")).as("sum_dist"), count(lit(1)).as("n_from"))
   }
@@ -1577,18 +1581,15 @@ object GraphCheck {
     * contribute 0 instead of poisoning the mean): per node,
     * `inv_sum` = Σ_s 1/d(s, node) over the sources that reach it at
     * d > 0, plus the reaching count. Same sampled-sources estimator
-    * and loop economics as [[closenessFromSources]] — k SSSP jobs over
-    * one materialized edge relation — only the final fold differs.
-    * The 1/d terms are double; consumers round for cross-engine
-    * comparison (the pageRank contract). */
+    * as [[closenessFromSources]] — one aggregate over
+    * [[sourceDistances]] — only the fold differs. The 1/d terms are
+    * double; consumers round for cross-engine comparison (the pageRank
+    * contract). */
   def harmonicFromSources(edges: DataFrame, sources: Seq[Long],
       maxIter: Int = 100,
       localThreshold: Long = LocalGate.Threshold): DataFrame = {
     require(sources.nonEmpty, "harmonicFromSources: sources must be non-empty")
-    val eChk = materializeEdges(edges)
-    sources.map { s0 =>
-      multiSourceShortestPaths(eChk, Seq(s0), maxIter, localThreshold)._1
-    }.reduce(_.unionByName(_))
+    sourceDistances(materializeEdges(edges), sources, maxIter, localThreshold)
       .filter(col("dist") > 0)
       .groupBy("node_id")
       .agg(sum(lit(1.0) / col("dist")).as("inv_sum"),
@@ -1597,23 +1598,19 @@ object GraphCheck {
 
   /** Sampled eccentricity (igraph `eccentricity` on chosen vertices):
     * for each SOURCE, the max shortest-path distance to any node it
-    * reaches, plus the reached count. max over the sampled sources is
-    * the classic diameter lower bound, min an upper bound on radius
-    * (exact when sources = V — all-pairs, micro-scale only; sample at
-    * road scale, or take [[pseudoDiameter]]'s two-sweep bound).
-    * Exact integer output on integer weights. */
+    * reaches, plus the reached count — one aggregate over
+    * [[sourceDistances]]. max over the sampled sources is the classic
+    * diameter lower bound, min an upper bound on radius (exact when
+    * sources = V — all-pairs, micro-scale only; sample at road scale,
+    * or take [[pseudoDiameter]]'s two-sweep bound). Exact integer
+    * output on integer weights. */
   def eccentricityFromSources(edges: DataFrame, sources: Seq[Long],
       maxIter: Int = 100,
       localThreshold: Long = LocalGate.Threshold): DataFrame = {
     require(sources.nonEmpty, "eccentricityFromSources: sources must be non-empty")
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val eChk = materializeEdges(edges)
-    sources.map { s0 =>
-      multiSourceShortestPaths(eChk, Seq(s0), maxIter, localThreshold)._1
-        .agg(max(col("dist")).as("ecc"), count(lit(1)).as("reached"))
-        .select(lit(s0).as("node_id"), col("ecc"), col("reached"))
-    }.reduce(_.unionByName(_))
+    sourceDistances(materializeEdges(edges), sources, maxIter, localThreshold)
+      .groupBy(col("src").as("node_id"))
+      .agg(max(col("dist")).as("ecc"), count(lit(1)).as("reached"))
   }
 
   /** Pseudo-diameter by the classical DOUBLE SWEEP (igraph
@@ -1677,10 +1674,9 @@ object GraphCheck {
       return ids.indices.map(i => (ids(i), hub(i), auth(i)))
         .toDF("node_id", "hub", "authority")
     }
-    val nodes = e.select(col("src").as("node_id"))
-      .unionByName(e.select(col("dst").as("node_id")))
-      .distinct().localCheckpoint(true)
-    val n = nodes.count()
+    val (nodes, n) = checkpointObserved[Long](e.select(col("src").as("node_id"))
+      .unionByName(e.select(col("dst").as("node_id"))).distinct(),
+      count(lit(1)))
     var hub = nodes.withColumn("hub", lit(1.0 / n)).localCheckpoint(true)
     var auth = nodes.withColumn("authority", lit(0.0))
     var i = 0
@@ -1719,19 +1715,20 @@ object GraphCheck {
     * the table at road scale).
     *
     * Broadcast-local fast path: textbook Dijkstra-Brandes per source.
-    * Distributed path (localThreshold = 0 forces it): per source,
-    * (1) the existing distributed SSSP settles distances; (2) the
-    * shortest-path DAG is one join (`dist(u) + w = dist(v)` — exact on
-    * integer weights); (3) path counts σ flow FORWARD over the DAG by
-    * monotone fixpoint (one join+agg per round, rounds = shortest-path
-    * hop depth, the same bound ScaleSmoke pins for SSSP); (4)
-    * dependencies δ flow BACKWARD the same way. Per-source cost is
-    * therefore ~3 SSSP-equivalents; sources is the sample budget.
+    * Distributed path (localThreshold = 0 forces it), per wave of
+    * `waveSize` sources keyed by `src`: (1) [[relaxFrontier]] settles
+    * distances; (2) the shortest-path DAG is one join
+    * (`dist(u) + w = dist(v)` — exact on integer weights); (3) path
+    * counts σ flow FORWARD over the DAG and (4) dependencies δ flow
+    * BACKWARD, both through [[dagFlow]] (one aggregate per round,
+    * rounds = shortest-path hop depth, the same bound ScaleSmoke pins
+    * for SSSP). A wave therefore costs ~3 SSSP-equivalents; sources is
+    * the sample budget.
     * Returns every graph node with its (float) centrality — consumers
     * round for cross-engine comparison. */
   def betweennessFromSources(edges: DataFrame, sources: Seq[Long],
       maxIter: Int = 100, localThreshold: Long = LocalGate.Threshold,
-      waveSize: Int = 32): DataFrame = {
+      waveSize: Int = SourceWave): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val eChk = materializeEdges(edges)
@@ -1813,71 +1810,70 @@ object GraphCheck {
         .filter(col("__du") + col("w") === col("__dv"))
         .select(col("src"), col("u"), col("v"))
         .localCheckpoint(true)
-      // forward σ keyed (src, node): each key's value is monotone
-      // toward its fixpoint, so the TOTAL sum is monotone and a stable
-      // global sum is convergence for every source in the wave at once
-      var sigma = dist.select(col("src"), col("node_id"),
+      // σ flows forward over the DAG (the source's own 1 is its base);
+      // δ flows backward, each edge carrying σu/σv · (δv + 1)
+      val sigma = dagFlow(
+        sp.select(col("src"), col("u").as("from"), col("v").as("to"),
+          lit(1.0).as("a"), lit(0.0).as("b")),
+        dist.select(col("src"), col("node_id"),
           when(col("node_id") === col("src"), 1.0).otherwise(0.0)
-            .as("sigma"))
-        .localCheckpoint(true)
-      var prevSum = Double.NaN
-      var i = 0
-      var stable = false
-      while (!stable && i < maxIter) {
-        val sg = sigma.select(col("src"), col("node_id").as("u"),
-          col("sigma"))
-        val inflow = sp.join(sg, Seq("src", "u"))
-          .groupBy(col("src"), col("v")).agg(sum(col("sigma")).as("__in"))
-          .withColumnRenamed("v", "node_id")
-        sigma = dist.select(col("src"), col("node_id"))
-          .join(inflow, Seq("src", "node_id"), "left_outer")
-          .select(col("src"), col("node_id"),
-            when(col("node_id") === col("src"), 1.0)
-              .otherwise(coalesce(col("__in"), lit(0.0))).as("sigma"))
-          .localCheckpoint(true)
-        val sSum = sigma.agg(sum(col("sigma"))).head().getDouble(0)
-        stable = sSum == prevSum
-        prevSum = sSum
-        i += 1
-      }
-      // backward δ: same monotone-fixpoint argument on the reversed DAG
-      var delta = dist.select(col("src"), col("node_id"),
-          lit(0.0).as("delta"))
-        .localCheckpoint(true)
-      prevSum = Double.NaN
-      i = 0
-      stable = false
-      while (!stable && i < maxIter) {
-        val su = sigma.select(col("src"), col("node_id").as("u"),
-          col("sigma").as("__sigu"))
-        val sv = sigma.select(col("src"), col("node_id").as("v"),
-          col("sigma").as("__sigv"))
-        val dl = delta.select(col("src"), col("node_id").as("v"),
-          col("delta").as("__dl"))
-        val terms = sp.join(su, Seq("src", "u")).join(sv, Seq("src", "v"))
-          .join(dl, Seq("src", "v"))
-          .select(col("src"), col("u").as("node_id"),
-            (col("__sigu") / col("__sigv") * (lit(1.0) + col("__dl")))
-              .as("__t"))
-          .groupBy("src", "node_id").agg(sum(col("__t")).as("__d"))
-        delta = dist.select(col("src"), col("node_id"))
-          .join(terms, Seq("src", "node_id"), "left_outer")
-          .select(col("src"), col("node_id"),
-            coalesce(col("__d"), lit(0.0)).as("delta"))
-          .localCheckpoint(true)
-        val dSum = delta.agg(sum(col("delta"))).head().getDouble(0)
-        stable = dSum == prevSum
-        prevSum = dSum
-        i += 1
-      }
+            .as("base")), maxIter)
+      val su = sigma.select(col("src"), col("node_id").as("u"),
+        col("value").as("__sigu"))
+      val sv = sigma.select(col("src"), col("node_id").as("v"),
+        col("value").as("__sigv"))
+      val delta = dagFlow(
+        sp.join(su, Seq("src", "u")).join(sv, Seq("src", "v"))
+          .select(col("src"), col("v").as("from"), col("u").as("to"),
+            (col("__sigu") / col("__sigv")).as("a"), lit(1.0).as("b"))
+          .localCheckpoint(true),
+        dist.select(col("src"), col("node_id"), lit(0.0).as("base")),
+        maxIter)
       delta.filter(col("node_id") =!= col("src"))
-        .select(col("node_id"), col("delta"))
+        .select(col("node_id"), col("value").as("delta"))
     }.toSeq
     val acc = waveDeltas.reduce(_.unionByName(_))
       .groupBy("node_id").agg(sum(col("delta")).as("__bc"))
     allNodes.join(acc, Seq("node_id"), "left_outer")
       .select(col("node_id"),
         coalesce(col("__bc"), lit(0.0)).as("betweenness"))
+  }
+
+  /** Values flowing over a DAG to their fixpoint — betweenness's σ
+    * and δ: `value(n) = base(n) + Σ a · (value(m) + b)` over the `flow`
+    * edges `(src, from = m, to = n, a, b)`, per search key `src`, with
+    * `base` = `(src, node_id, base)` naming every node. Each round is
+    * ONE union-aggregate — the base rows plus one message per edge out
+    * of the last round's values — and ONE materialization, whose job
+    * observes the total. Every value is monotone toward its fixpoint,
+    * so a stable total is convergence for every key at once. Returns
+    * `(src, node_id, value)`. */
+  private def dagFlow(flow: DataFrame, base: DataFrame,
+      maxIter: Int): DataFrame = {
+    var state = base.withColumn("value", col("base"))
+    var prevSum = Double.NaN
+    var stable = false
+    var i = 0
+    while (!stable && i < maxIter) {
+      val sent = flow
+        .join(state.select(col("src"), col("node_id").as("from"),
+          col("value")), Seq("src", "from"))
+        .select(col("src"), col("to").as("node_id"),
+          lit(null).cast("double").as("base"),
+          (col("a") * (col("value") + col("b"))).as("__m"))
+      val (next, s) = checkpointObserved[Double](
+        state.select(col("src"), col("node_id"), col("base"),
+            col("base").as("__m"))
+          .unionByName(sent)
+          .groupBy("src", "node_id")
+          .agg(max(col("base")).as("base"), sum(col("__m")).as("value")),
+        sum(col("value")))
+      stable = s == prevSum
+      prevSum = s
+      state = next
+      i += 1
+    }
+    state.select(col("src"), col("node_id"), col("value"))
   }
 
   /** A* shortest path (`pgr_aStar` analog) with the great-circle
@@ -1887,10 +1883,9 @@ object GraphCheck {
     * overestimates (admissible) and obeys the spherical triangle
     * inequality (consistent) — A* returns THE shortest path while
     * settling fewer nodes. The heuristic is a visit-order acceleration
-    * for the collected regime; above `localThreshold` the search
-    * delegates to [[shortestPathTo]]'s distributed frontier relaxation
-    * (whose improved-only frontier plays the same pruning role), so
-    * results are identical at any scale.
+    * for the collected regime; above `localThreshold` the search runs
+    * `aStarDistributed`, a relaxation loop that prunes by the same
+    * heuristic, so results are identical at any scale.
     *
     * `coords` is `(node_id, lon, lat)` in degrees — semi-join-pruned to
     * the graph's node universe before collection, so passing the full
@@ -1965,12 +1960,15 @@ object GraphCheck {
   }
 
   /** Distributed goal-directed best-path search — the scale branch of
-    * [[aStarPathTo]]. The relaxation loop is [[shortestPathTo]]'s, plus
-    * one A*-style frontier prune per round once the target is reached:
+    * [[aStarPathTo]]. Its own relaxation loop carries each node's
+    * `min(struct(dist, pred))` — the only loop whose state is pruned,
+    * so it cannot run on [[relaxFrontier]] — plus one A*-style prune
+    * per round once the target is reached:
     * rows with `dist(v) + h(v) > bestKnown` are dropped, where `h` is
     * the great-circle lower bound to the target (minus the 0.5·maxIter
     * rounding slack, clamped at 0) and `bestKnown` is the target's
-    * current distance, read for free off the convergence aggregate.
+    * current distance, observed with the settled count and distance
+    * sum (the convergence witness) on the round's checkpoint job.
     * Pruning never removes a node of any optimal path (its
     * `dist + h ≤ total ≤ bestKnown`), and equal-distance predecessor
     * candidates share one prune decision, so path, total, AND the
@@ -2030,10 +2028,9 @@ object GraphCheck {
         next = next.join(hRel, next("node_id") === hRel("__hn"), "left_outer")
           .filter(col("dist") + coalesce(col("__h"), lit(0.0)) <= bestKnown)
           .select(col("node_id"), col("dist"), col("pred"))
-      val nextChk = next.localCheckpoint(true)
-      val s = nextChk.agg(count(lit(1)),
+      val (nextChk, s) = checkpointObserved[Row](next, struct(count(lit(1)),
         sum(col("dist").cast("decimal(38,6)")),
-        min(when(col("node_id") === target, col("dist")))).head()
+        min(when(col("node_id") === target, col("dist")))))
       val cur = (s.getLong(0),
         Option(s.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO))
       if (!s.isNullAt(2)) bestKnown = s.getDouble(2)
@@ -2042,7 +2039,7 @@ object GraphCheck {
       dist = nextChk
       i += 1
     }
-    val settledCount = dist.count()
+    val settledCount = if (i == 0) 1L else prev._1
     reconstructPath(dist, source, target, maxIter)
       .map { case (p, d) => (p, d, settledCount) }
   }
@@ -2405,14 +2402,15 @@ object GraphCheck {
     var remE = e0
     // a NULL endpoint is no node: it can never root a color class, so
     // keeping it would spin the peel loop to maxIter
-    var remaining = e0.select(col("src").as("node_id"))
-      .unionByName(e0.select(col("dst").as("node_id")))
-      .filter(col("node_id").isNotNull)
-      .distinct().localCheckpoint(true)
+    var (remaining, left) = checkpointObserved[Long](
+      e0.select(col("src").as("node_id"))
+        .unionByName(e0.select(col("dst").as("node_id")))
+        .filter(col("node_id").isNotNull).distinct(),
+      count(lit(1)))
     var out: DataFrame = remaining.limit(0)
       .withColumn("scc", col("node_id"))
     var outer = 0
-    while (remaining.limit(1).count() > 0 && outer < maxIter) {
+    while (left > 0 && outer < maxIter) {
       // (1) forward max-color propagation to fixpoint. Colors only
       // increase, so the color SUM is a one-scalar fixpoint witness
       // (decimal accumulator: planet ids ~1e10 over ~1e9 nodes
@@ -2425,11 +2423,10 @@ object GraphCheck {
       while (!converged && i < maxIter) {
         val prop = remE.join(color, remE("src") === color("node_id"))
           .select(col("dst").as("node_id"), col("color"))
-        val next = color.unionByName(prop)
-          .groupBy("node_id").agg(max(col("color")).as("color"))
-          .localCheckpoint(true)
-        val s = next.agg(sum(col("color").cast("decimal(38,0)"))).head()
-          .getDecimal(0)
+        val (next, s) = checkpointObserved[java.math.BigDecimal](
+          color.unionByName(prop)
+            .groupBy("node_id").agg(max(col("color")).as("color")),
+          sum(col("color").cast("decimal(38,0)")))
         converged = prevSum != null && s.compareTo(prevSum) == 0
         prevSum = s
         color = next
@@ -2439,11 +2436,11 @@ object GraphCheck {
       // (2) backward containment from the roots, restricted to the
       // color class at every hop. Membership only grows; count is the
       // fixpoint witness.
-      var scc = color.filter(col("color") === col("node_id"))
-        .select(col("node_id"), col("node_id").as("scc"))
-        .localCheckpoint(true)
+      var (scc, n) = checkpointObserved[Long](
+        color.filter(col("color") === col("node_id"))
+          .select(col("node_id"), col("node_id").as("scc")),
+        count(lit(1)))
       var prevN = -1L
-      var n = scc.count()
       var j = 0
       while (n != prevN && j < maxIter) {
         prevN = n
@@ -2452,16 +2449,18 @@ object GraphCheck {
           .join(color, Seq("node_id"))
           .filter(col("color") === col("scc"))
           .select(col("node_id"), col("scc"))
-        scc = scc.unionByName(grow)
-          .groupBy("node_id").agg(min(col("scc")).as("scc"))
-          .localCheckpoint(true)
-        n = scc.count()
+        val (next, m) = checkpointObserved[Long](scc.unionByName(grow)
+          .groupBy("node_id").agg(min(col("scc")).as("scc")), count(lit(1)))
+        scc = next
+        n = m
         j += 1
       }
       out = out.unionByName(scc).localCheckpoint(true)
       // (3) peel: drop settled nodes and every edge touching them
-      remaining = remaining.join(scc, Seq("node_id"), "left_anti")
-        .localCheckpoint(true)
+      val (rest, r) = checkpointObserved[Long](
+        remaining.join(scc, Seq("node_id"), "left_anti"), count(lit(1)))
+      remaining = rest
+      left = r
       val settledIds = scc.select(col("node_id"))
       remE = remE
         .join(settledIds.withColumnRenamed("node_id", "src"), Seq("src"), "left_anti")
@@ -2473,14 +2472,17 @@ object GraphCheck {
   }
 
   /** Shortest PATH (node sequence + distance) from `source` to
-    * `target` — what `pgr_dijkstra` actually returns. Same relaxation
-    * loop but the per-node state is `min(struct(dist, pred))`, so on
-    * equal-distance ties the smaller predecessor wins deterministically
-    * (an independent oracle can reproduce the exact node sequence).
-    * The walk back from `target` is one filtered lookup per hop —
-    * O(path length) driver round-trips against the settled relation,
+    * `target` — what `pgr_dijkstra` actually returns. Distributed, the
+    * distances come from [[relaxFrontier]] over double weights, then
+    * ONE join attributes each node's predecessor ([[pathTree]]): the
+    * smallest `u` with `dist(u) + w = dist(v)`, so on equal-distance
+    * ties the smaller predecessor wins deterministically (an
+    * independent oracle can reproduce the exact node sequence), and
+    * the source is its own predecessor. [[reconstructPath]] then walks
+    * back from `target` in O(log path) rounds against that relation —
     * never a full collect (the distance table may be a whole
-    * continent; the path is a few hundred rows).
+    * continent; the path is a few hundred rows). A node reached only
+    * through a NULL weight has a NULL distance and no path.
     *
     * Returns (path nodes source..target, total distance), or None if
     * unreachable. */
@@ -2490,39 +2492,52 @@ object GraphCheck {
     val spark = edges.sparkSession
     import spark.implicits._
     // local twin: the shared Dijkstra's equal-distance tie keeps the
-    // SMALLER predecessor, matching min(struct(dist, pred)) exactly
+    // SMALLER predecessor, the same rule as pathTree
     val eChk = materializeEdges(edges)
     localAdjacency(eChk, localThreshold).foreach { adj =>
       val (dist, pred) = LocalGate.dijkstra(adj, Seq(source))
       return dist.get(target).map(LocalGate.walkBack(pred, source, target) -> _)
     }
-    val e = eChk.select(col("start_node").as("src"),
-      col("end_node").as("dst"), col("w").cast("double").as("w"))
-    var dist = Seq((source, 0.0, source)).toDF("node_id", "dist", "pred")
+    val e = eChk.select(col("start_node"), col("end_node"),
+      col("w").cast("double").as("w"))
+    val dist = relaxFrontier(e, Seq((source, 0.0)).toDF("node_id", "dist"),
+      1, maxIter)._1
+    val tree = Seq((source, 0.0, source)).toDF("node_id", "dist", "pred")
+      .unionByName(pathTree(e, dist, Seq(source))
+        .select(col("node_id"), col("dist"), col("pred")))
       .localCheckpoint(true)
-    var prev = (0L, java.math.BigDecimal.ZERO)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val relaxed = e.join(dist, e("src") === dist("node_id"))
-        .select(col("dst").as("node_id"),
-          (col("dist") + col("w")).as("dist"), col("src").as("pred"))
-      val next = dist.unionByName(relaxed)
-        .groupBy("node_id")
-        .agg(min(struct(col("dist"), col("pred"))).as("__b"))
-        .select(col("node_id"), col("__b.dist").as("dist"),
-          col("__b.pred").as("pred"))
-        .localCheckpoint(true)
-      val s = next.agg(count(lit(1)),
-        sum(col("dist").cast("decimal(38,6)"))).head()
-      val cur = (s.getLong(0),
-        Option(s.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO))
-      converged = cur._1 == prev._1 && cur._2.compareTo(prev._2) == 0
-      prev = cur
-      dist = next
-      i += 1
-    }
-    reconstructPath(dist, source, target, maxIter)
+    reconstructPath(tree, source, target, maxIter)
+  }
+
+  /** Shortest-path-tree attribution from final distances: for every
+    * node of `dist` = `(node_id, dist)` except the `seeds`, the edge of
+    * `edges` = `(start_node, end_node, w, tie…)` that realizes its
+    * distance (`dist(u) + w = dist(v)`) with the smallest
+    * `(u, tie…)`. Floating-point addition is monotone, so the realizing
+    * edges are exactly the candidates a relaxation loop that carried
+    * `min(struct(dist, pred))` would have compared, and the smallest
+    * `u` is its winner. A NULL distance or weight realizes nothing.
+    * Seeds are left out: a zero-weight edge could otherwise
+    * re-attribute one. Returns `(node_id, dist, pred, tie…, pred_dist)`,
+    * distances as double. */
+  private def pathTree(edges: DataFrame, dist: DataFrame,
+      seeds: Seq[Long]): DataFrame = {
+    val spark = dist.sparkSession
+    import spark.implicits._
+    val tie = edges.columns.toSeq
+      .filterNot(Set("start_node", "end_node", "w")).map(col)
+    val du = dist.select(col("node_id").as("__u"),
+      col("dist").cast("double").as("__du"))
+    val dv = dist.select(col("node_id").as("__v"),
+      col("dist").cast("double").as("__dv"))
+    edges.join(du, col("start_node") === col("__u"))
+      .join(dv, col("end_node") === col("__v"))
+      .filter(col("__du") + col("w").cast("double") === col("__dv"))
+      .join(seeds.toDF("__v"), Seq("__v"), "left_anti")
+      .groupBy(col("__v").as("node_id"))
+      .agg(first(col("__dv")).as("dist"), min(struct(col("__u").as("pred") +:
+        tie :+ col("__du").as("pred_dist"): _*)).as("__b"))
+      .select("node_id", "dist", "__b.*")
   }
 
   /** Rebuild the source→target node sequence from a settled SSSP
@@ -2545,13 +2560,14 @@ object GraphCheck {
     * check) yields the sequence.
     *
     * Returns (path source..target, total distance), None if `target`
-    * is not settled or its chain doesn't reach `source` within
-    * `maxHops`. */
+    * is not settled, has a NULL distance (reached only through a NULL
+    * weight), or its chain doesn't reach `source` within `maxHops`. */
   def reconstructPath(settled: DataFrame, source: Long, target: Long,
       maxHops: Int): Option[(Seq[Long], Double)] = {
     val spark = settled.sparkSession
     import spark.implicits._
-    val tgt = settled.filter(col("node_id") === target)
+    val tgt = settled.filter(col("node_id") === target &&
+        col("dist").isNotNull)
       .select(col("dist").cast("double")).collect()
     if (tgt.isEmpty) return None
     val total = tgt.head.getDouble(0)
@@ -2600,21 +2616,19 @@ object GraphCheck {
     *
     * Derivation is fully relational and loop-free beyond the SSSP
     * itself: run [[multiSourceShortestPaths]] (cutoff-filtered), then
-    * ONE join attributes each settled node to the edges that realize
-    * its distance (`dist(u) + w = dist(v)`, exact on integer-centimeter
-    * weights) and a hash-agg picks `min(pred, edge_id)` — the same
-    * smaller-predecessor tie rule as [[shortestPathTo]], with the edge
-    * id as the final tiebreak over parallel edges. No predecessor
-    * state rides the relaxation loop, so the SSSP keeps its frontier
-    * shape; the attribution join is one shuffle over the
-    * service-area-sized settled relation, not the graph.
+    * [[pathTree]]'s ONE join attributes each settled node to the edge
+    * that realizes its distance (exact on integer-centimeter weights)
+    * with the smallest `(pred, edge_id)` — [[shortestPathTo]]'s
+    * smaller-predecessor tie rule, with the edge id as the final
+    * tiebreak over parallel edges. The attribution join is one shuffle
+    * over the service-area-sized settled relation, not the graph.
     *
     * `edges` must carry `(start_node, end_node, edge_id, w)`. */
   def drivingDistanceRows(edges: DataFrame, sources: Seq[Long],
       cutoff: Double, maxIter: Int = 100,
       localThreshold: Long = LocalGate.Threshold): DataFrame = {
-    val eChk = edges
-      .select(col("start_node"), col("end_node"), col("edge_id"), col("w"))
+    val eChk = edges.select(col("start_node"), col("end_node"), col("w"),
+        col("edge_id").cast("long").as("edge_id"))
       .localCheckpoint(true)
     val dist = multiSourceShortestPaths(
         eChk.select("start_node", "end_node", "w"),
@@ -2623,32 +2637,12 @@ object GraphCheck {
       .localCheckpoint(true)
     val spark = edges.sparkSession
     import spark.implicits._
-    val du = dist.select(col("node_id").as("__u"),
-      col("dist").cast("double").as("__du"))
-    val dv = dist.select(col("node_id").as("__v"),
-      col("dist").cast("double").as("__dv"))
-    // per settled non-seed node: among edges realizing its distance,
-    // the smallest predecessor wins, then the smallest edge id (the
-    // realized weight is determined by the predecessor, so carrying
-    // __du third in the min-struct is a free ride, not a tiebreak)
-    val best = eChk
-      .join(du, eChk("start_node") === du("__u"))
-      .join(dv, eChk("end_node") === dv("__v"))
-      .filter(col("__du") + col("w").cast("double") === col("__dv"))
-      .groupBy(col("__v").as("node_id"))
-      .agg(min(struct(col("__u").as("p"),
-          col("edge_id").cast("long").as("e"),
-          col("__du").as("d"))).as("__b"),
-        first(col("__dv")).as("agg_cost"))
-      .select(col("node_id"), col("__b.e").as("edge"),
-        (col("agg_cost") - col("__b.d")).as("cost"), col("agg_cost"))
-    val seeds = sources.distinct.sorted
-      .toDF("node_id")
+    sources.distinct.sorted.toDF("node_id")
       .select(col("node_id"), lit(-1L).as("edge"),
         lit(0.0).as("cost"), lit(0.0).as("agg_cost"))
-    // zero-weight edges could otherwise re-attribute a seed (du+0 = 0)
-    seeds.unionByName(
-      best.join(seeds.select("node_id"), Seq("node_id"), "left_anti"))
+      .unionByName(pathTree(eChk, dist, sources).select(col("node_id"),
+        col("edge_id").as("edge"), (col("dist") - col("pred_dist")).as("cost"),
+        col("dist").as("agg_cost")))
   }
 
   /** pgRouting result-relation projection: expand node-sequence paths

@@ -52,8 +52,9 @@ private[graft] object LocalGate {
     * distance and predecessor of every reached node. Relaxations to a
     * distance above `bound`, and edges `(u, v)` with `skip(u, v)`, are
     * ignored. On an equal-distance tie the SMALLER predecessor wins —
-    * the distributed `min(struct(dist, pred))` rule — and a source is
-    * its own predecessor. Distances do not depend on predecessor
+    * the rule of the distributed path attribution in
+    * [[GraphCheck.shortestPathTo]] — and a source is its own
+    * predecessor. Distances do not depend on predecessor
     * tracking: path sums accumulate from the source in the same order
     * as the distributed frontier relaxation. */
   def dijkstra(adj: Map[Long, Array[(Long, Double)]], sources: Seq[Long],

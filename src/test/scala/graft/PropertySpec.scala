@@ -617,6 +617,31 @@ class PropertySpec extends SparkTestBase {
     }
   }
 
+  test("distributed shortestPathTo and kShortestPaths route around NULL weights") {
+    import graft.osm.{GraphCheck => G}
+    // Expectations by hand. "NULL w": 1>2 (1), 2>3 (NULL), 3>4 (1),
+    // 1>4 (5). Node 3 has a NULL distance, so 3>4 offers 4 no real
+    // distance: dist(4) = 5, realized only by 1>4. Yen's one spur
+    // (from 1 without 1>4) reaches 4 only through 2>3, so k = 3 still
+    // returns one path. "NULL-weight cycle": 1>6 (3), 6>5 (4), and the
+    // cycle 3 <-> 4 is reached only through the NULL 2>3, so 3 and 4
+    // have NULL distances. dist(5) = 7 via 6 (4>5 realizes nothing);
+    // both spurs (1 without 1>6, 6 without 6>5) find no real route.
+    // Node 4 has no path at all.
+    val cases = Seq(("NULL w", 4L, Seq("1>4=5.0")),
+      ("NULL-weight cycle", 5L, Seq("1>6>5=7.0")),
+      ("NULL-weight cycle", 4L, Seq.empty))
+    cases.foreach { case (name, tgt, want) =>
+      val e = dirtyGraphs.find(_.name == name).get.edges
+        .toDF("start_node", "end_node", "w").localCheckpoint(true)
+      def show(p: (Seq[Long], Double)) = p._1.mkString(">") + "=" + p._2
+      assert(G.shortestPathTo(e, 1L, tgt, maxIter = 20, localThreshold = 0L)
+        .map(show).toSeq === want, s"shortestPathTo 1 -> $tgt on $name")
+      assert(G.kShortestPaths(e, 1L, tgt, k = 3, maxIter = 20,
+        localThreshold = 0L).map(show) === want, s"ksp 1 -> $tgt on $name")
+    }
+  }
+
   test("LocalGate.rows: one probe; None at t <= 0, above t, or on a NULL") {
     import graft.osm.LocalGate
     val five = (1L to 5L).toDF("v").localCheckpoint(true)

@@ -384,7 +384,7 @@ class RoadGraphSpec extends SparkTestBase {
     // union-aggregate plus one checkpoint whose job also yields the
     // convergence value; a second action per round (a count, an
     // agg().head()) would add a job and fail these bounds. The loops
-    // that ran those actions took 5, 9 and 6 jobs per round here.
+    // that ran those actions took 5, 9, 6 and 5 jobs per round here.
     val e = (1L until 64L).map(k => (k, k + 1, 1L))
       .toDF("start_node", "end_node", "w").localCheckpoint(true)
     val pairs = e.select("start_node", "end_node")
@@ -404,10 +404,72 @@ class RoadGraphSpec extends SparkTestBase {
         maxIter = k, localThreshold = 0L)
       assert(r === k)
     }
-    info(s"jobs per round: pagerank $pr, sssp $sssp, cc $cc")
+    // node 64 is not reached within 4 rounds: the path reconstruction
+    // is one lookup whatever the rounds
+    val path = perRound { k =>
+      assert(GraphCheck.shortestPathTo(e, 1L, 64L, maxIter = k,
+        localThreshold = 0L).isEmpty)
+    }
+    info(s"jobs per round: pagerank $pr, sssp $sssp, cc $cc, " +
+      s"shortestPathTo $path")
     assert(pr > 0 && pr <= 3, s"pagerank: $pr jobs per round")
     assert(sssp > 0 && sssp <= 3, s"sssp: $sssp jobs per round")
     assert(cc > 0 && cc <= 4, s"cc: $cc jobs per round")
+    assert(path > 0 && path <= 3, s"shortestPathTo: $path jobs per round")
+  }
+
+  /** `(start_node, end_node, w)` of an n-cycle in both directions,
+    * unit weights. */
+  private def twoWayCycle(n: Long): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    (1L to n).flatMap(k => Seq((k, k % n + 1, 1L), (k % n + 1, k, 1L)))
+      .toDF("start_node", "end_node", "w").localCheckpoint(true)
+  }
+
+  test("sampled-source operators: 4 sources cost the jobs of 1 plus a few") {
+    // a two-way 12-cycle: every source is 6 hops from its farthest node,
+    // so 4 sources relaxing in one wave run the rounds of 1. One loop
+    // per source paid about 4x here (85-89 jobs against 22-23).
+    val e = twoWayCycle(12L)
+    val ops = Seq[(String, Seq[Long] => org.apache.spark.sql.DataFrame)](
+      "closeness" -> (s => GraphCheck.closenessFromSources(e, s,
+        localThreshold = 0L)),
+      "harmonic" -> (s => GraphCheck.harmonicFromSources(e, s,
+        localThreshold = 0L)),
+      "eccentricity" -> (s => GraphCheck.eccentricityFromSources(e, s,
+        localThreshold = 0L)),
+      "costMatrix" -> (s => GraphCheck.costMatrix(e, s, Seq(6L, 7L),
+        localThreshold = 0L)))
+    ops.foreach { case (name, op) =>
+      op(Seq(1L)).collect() // plans the shapes once before counting
+      val one = jobsOf(op(Seq(1L)).collect())
+      val four = jobsOf(op(Seq(1L, 4L, 7L, 10L)).collect())
+      info(s"$name: $one jobs for 1 source, $four for 4")
+      assert(four <= one + 4, s"$name: $four jobs for 4 sources, $one for 1")
+    }
+  }
+
+  test("SCC and betweenness: pinned job totals of one distributed call") {
+    import spark.implicits._
+    // the core-plus-pockets graph of the SCC stats test, and betweenness
+    // from 2 sources on a two-way 12-cycle
+    val tree = Seq((1L, 2L), (1L, 3L), (2L, 4L), (2L, 5L), (3L, 6L), (3L, 7L))
+    val scc = (tree ++ tree.map(_.swap) ++ Seq((2L, 20L), (20L, 21L),
+      (21L, 22L), (3L, 30L), (30L, 31L), (31L, 3L)))
+      .toDF("start_node", "end_node").localCheckpoint(true)
+    val cyc = twoWayCycle(12L)
+    def sccRun() = GraphCheck.stronglyConnectedComponents(scc,
+      localThreshold = 0L).collect()
+    def bcRun() = GraphCheck.betweennessFromSources(cyc, Seq(1L, 2L),
+      localThreshold = 0L).collect()
+    sccRun(); bcRun() // plans the shapes once before counting
+    val (sccJobs, bcJobs) = (jobsOf(sccRun()), jobsOf(bcRun()))
+    info(s"jobs: scc $sccJobs, betweenness $bcJobs")
+    // measured 92-96 and 108-109 over repeated calls (adaptive stage
+    // timing moves a few jobs); the loops that read each round's
+    // convergence value with a second job took 135 and 163-169
+    assert(sccJobs <= 100, s"scc: $sccJobs jobs")
+    assert(bcJobs <= 112, s"betweenness: $bcJobs jobs")
   }
 
   test("connected components: broadcast-local path == distributed loop (r21)") {
