@@ -1,5 +1,6 @@
 package graft
 
+import graft.queries.StreamingQueries
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Each query is forced through full evaluation
@@ -11,9 +12,33 @@ package graft
 object Bench {
   /** A query's reported time: the min over its successful reps (a failed
     * rep is -1.0), or -1.0 only when every rep failed. The name lands in
-    * `errors` on any failure, and `failed_reps` counts them per query. */
+    * `errors` on any failure, and `failed_reps` counts them per query
+    * over the sweep and the isolated streaming re-measure. */
   def minOk(times: Seq[Double]): Double =
     times.filter(_ >= 0).minOption.getOrElse(-1.0)
+
+  /** Runs `rep` `reps` times and returns each rep's seconds. A rep that
+    * throws is reported on stderr and timed -1.0; `after` runs after
+    * every rep, failed or not, inside the timed span. */
+  def timeReps(label: String, reps: Int, after: () => Unit)(
+      rep: => Unit): Seq[Double] =
+    (1 to reps).map { _ =>
+      val t0 = System.nanoTime()
+      val ok =
+        try { rep; true }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $label FAILED: ${e.getMessage}")
+          false
+        }
+      after()
+      if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+    }
+
+  /** Each query with at least one failed rep, by name, with its failed
+    * reps summed over every run list it appears in. */
+  def failures(runs: Seq[(String, Seq[Double])]): Seq[(String, Int)] =
+    runs.groupMapReduce(_._1)(_._2.count(_ < 0))(_ + _).toSeq
+      .filter(_._2 > 0).sortBy(_._1)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -110,29 +135,17 @@ object Bench {
       spark.sparkContext.setJobDescription(null)
     }
 
-    var errors = List.empty[String]
-    val allTimes = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.findFirstIn(name).isDefined) }
-      .map { case (name, fn) =>
-      val times = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-            if (!errors.contains(name)) errors ::= name
-            false
-          }
-        // operators persist self-join inputs internally; drop them between
-        // queries so earlier queries' cache doesn't skew later timings
-        spark.catalog.clearCache()
-        if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+    def selected(name: String) = only.forall(_.findFirstIn(name).isDefined)
+    // `n` timed reps of one query through the noop sink. Operators
+    // persist self-join inputs internally; drop them after each rep so
+    // earlier queries' cache doesn't skew later timings.
+    def timeQuery(q: Query, n: Int, label: String): Seq[Double] =
+      timeReps(label, n, () => spark.catalog.clearCache()) {
+        q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
       }
-      name -> times
-    }
+    val allTimes = SparkEntry.registry.filter(q => selected(q.name))
+      .sortBy(_.name).map(q => q.name -> timeQuery(q, reps, q.name))
     val results = allTimes.map { case (name, times) => name -> minOk(times) }
-    val failedReps = allTimes.map { case (name, ts) => name -> ts.count(_ < 0) }
-      .collect { case (k, n) if n > 0 => "\"" + k + "\":" + n }.mkString("{", ",", "}")
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       // average the two middle elements for even rep counts — s(size/2)
@@ -150,8 +163,8 @@ object Bench {
       .mkString("{", ",", "}")
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
 
-    // Trigger-loop rows (streaming foreachBatch pipelines over file /
-    // memory sources) are dominated by trigger scheduling + sink
+    // Trigger-loop rows (`StreamingQueries`: foreachBatch pipelines over
+    // file / memory sources) are dominated by trigger scheduling + sink
     // commits, not data-plane work, and have produced phantom 2-10x
     // single-shot swings three rounds running (VERDICT r20 items 1-2,
     // r21 item 4: ~2 pages of adjudication per round). Re-measure them
@@ -160,36 +173,21 @@ object Bench {
     // the rep count in `stream_isolated_reps`): the sweep's `queries`
     // map keeps the untouched single-shot protocol so the driver's cold
     // totals stay round-over-round comparable, while this field is the
-    // number to trust for the streaming rows themselves.
+    // number to trust for the streaming rows themselves. A failed
+    // isolated rep lands in `errors` and `failed_reps` like a sweep rep.
     // SPARK_GRAFT_STREAM_REPS=0 skips.
-    val streamRows = Seq("q_e_dedup_stream", "q_e_interval_join",
-      "q_e_neardup_stream", "q_cc_wet_stream", "q_cc_curation_stream",
-      "q_s_index_stream")
     val streamReps = sys.env.get("SPARK_GRAFT_STREAM_REPS")
       .map(_.toInt).getOrElse(3)
-    val streamIsolated =
-      if (streamReps <= 0) Map.empty[String, Double]
-      else streamRows
-        .filter(n => SparkEntry.queries.contains(n) &&
-          only.forall(_.findFirstIn(n).isDefined))
-        .map { name =>
-          val fn = SparkEntry.queries(name)
-          val times = (1 to streamReps).map { _ =>
-            val t0 = System.nanoTime()
-            val ok =
-              try { fn(spark, sfDir).write.format("noop")
-                      .mode("overwrite").save(); true }
-              catch { case e: Throwable =>
-                System.err.println(
-                  s"[bench] $name isolated rep FAILED: ${e.getMessage}")
-                false
-              }
-            spark.catalog.clearCache()
-            if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-          }
-          name -> minOk(times)
-        }.toMap
-    val streamJson = streamIsolated.toSeq.sortBy(_._1)
+    val isolatedTimes =
+      if (streamReps <= 0) Seq.empty
+      else StreamingQueries.all.filter(q => selected(q.name))
+        .map(q => q.name -> timeQuery(q, streamReps, s"${q.name} isolated rep"))
+    val streamIsolated = isolatedTimes.map { case (n, ts) => n -> minOk(ts) }
+    val failed = failures(allTimes ++ isolatedTimes)
+    var errors = failed.map(_._1).toList
+    val failedReps = failed.map { case (k, n) => "\"" + k + "\":" + n }
+      .mkString("{", ",", "}")
+    val streamJson = streamIsolated.sortBy(_._1)
       .map { case (k, v) =>
         "\"" + k + "\":" + "%.3f".formatLocal(java.util.Locale.ROOT, v) }
       .mkString("{", ",", "}")

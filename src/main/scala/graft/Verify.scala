@@ -1,6 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Correctness dump: each registry query's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -16,12 +16,13 @@ object Verify {
     // only — the driver never sets it); oracle_sql.json is filtered the
     // same way so tools/check.py compares exactly what was dumped.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)
-    def wanted(name: String) = only.forall(_.findFirstIn(name).isDefined)
-    SparkEntry.queries.filter(kv => wanted(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    val wanted = SparkEntry.registry
+      .filter(q => only.forall(_.findFirstIn(q.name).isDefined))
+    wanted.foreach { query =>
+      try query.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${query.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${query.name} failed: ${e.getMessage}")
       }
       finally spark.catalog.clearCache() // operators persist internally
     }
@@ -37,8 +38,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => wanted(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = wanted.map(x => s"${q(x.name)}: ${q(x.oracle)}")
+      .mkString("{", ",", "}")
     // a SPARK_GRAFT_ONLY run writes its subset to a DISTINCT filename:
     // pointing a filtered dev run at the canonical outDir must never
     // silently replace the full oracle artifact with a partial one

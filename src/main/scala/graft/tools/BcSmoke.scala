@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Distributed-betweenness scale witness on a graph with a CLOSED-FORM
@@ -19,12 +18,7 @@ object BcSmoke {
   def main(args: Array[String]): Unit = {
     val depth = if (args.nonEmpty) args(0).toInt else 6
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(cpus.toInt)
 
     // complete 10-ary tree, nodes 0..(10^(d+1)-1)/9 - 1 in level order:
     // node k's children are 10k+1 .. 10k+10

@@ -98,13 +98,7 @@ object LlmScaleSmoke {
     val opFilter = if (args.length > 2) args(2).split(",").toSet else Set.empty[String]
     def wanted(op: String) = opFilter.isEmpty || opFilter(op)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(cpus.toInt)
 
     val nLo = (baseK * 1e3).toLong
     val nHi = (nLo * factor).toLong

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Multipolygon-assembly scale witness: synthesizes millions of
@@ -19,12 +18,7 @@ object MpSmoke {
   def main(args: Array[String]): Unit = {
     val nLo = if (args.nonEmpty) args(0).toLong else 500000L
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(cpus.toInt)
 
     def pt(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column) =
       struct(x.cast("double").as("lon"), y.cast("double").as("lat"))

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Ingest benchmark against the reference's ONE published wall-clock
   * anchor: Osmosis `--read-pbf --write-pgsql` loaded the Montenegro
   * extract (~1.4M nodes, ~160k ways, way_nodes + relations +
@@ -134,11 +132,9 @@ object PbfIngestBench {
     generate(pbf, nNodes, nWays, nRels)
     val genSec = (System.nanoTime() - tGen0) / 1e9
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
     spark.sparkContext.setLogLevel("ERROR")
 
     val entities = Seq("nodes", "ways", "way_nodes", "relations",

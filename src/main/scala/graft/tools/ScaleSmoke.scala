@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-headroom smoke: synthesizes inputs 10-100x beyond the sf0.1
@@ -31,13 +30,7 @@ object ScaleSmoke {
     val waysM = if (args.nonEmpty) args(0).toDouble else 2.0
     val chainsK = if (args.length > 1) args(1).toDouble else 200.0
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(cpus.toInt)
 
     val nWays = (waysM * 1e6).toLong
     val perWay = 8

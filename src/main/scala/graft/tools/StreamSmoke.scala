@@ -221,17 +221,12 @@ object StreamSmoke {
       case _ => "org.apache.spark.sql.execution.streaming.state." +
         "HDFSBackedStateStoreProvider"
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      // state-partition count is the knob a cluster sizes to key
-      // cardinality x throughput; fixed across both scales here so the
-      // exponent isolates the per-event cost
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.streaming.stateStore.providerClass", providerClass)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(cpus.toInt)
+    // state-partition count is the knob a cluster sizes to key
+    // cardinality x throughput; fixed across both scales here so the
+    // exponent isolates the per-event cost
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass", providerClass)
 
     def probe(n: Long): (Double, Double, Double, Long, Double, Long) = {
       require(n % 200 == 0, "n must be a multiple of 200")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** WARC/WET ingest scale witness: generates a synthetic Common-Crawl
@@ -21,12 +20,7 @@ object WarcSmoke {
     val filesLo = if (args.nonEmpty) args(0).toInt else 32
     val recsPerFile = if (args.length > 1) args(1).toInt else 10000
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(cpus.toInt)
 
     def genArchive(nFiles: Int): (String, Long) = {
       val dir = java.nio.file.Files.createTempDirectory("warcsmoke").toString

@@ -199,7 +199,7 @@ class PlanAuditSpec extends SparkTestBase {
     // partials before it); a second would mean the vocabulary is
     // globally sorted. (The upstream round-robin spread of the
     // single-split documents scan is a deliberate non-hash exchange —
-    // see SparkEntry.spreadDocs — and doesn't move grouped data.)
+    // see QueryHelpers.spreadDocs — and doesn't move grouped data.)
     val exchanges = "Exchange hashpartitioning".r.findAllIn(p).length
     assert(exchanges === 1,
       s"expected 1 hash exchange, got $exchanges:\n$p")
