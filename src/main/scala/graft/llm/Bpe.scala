@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
+import graft.osm.LocalGate
+
 /** Distributed byte-pair-encoding (BPE) vocabulary training — the
   * standard tokenizer-prep job of a training-data pipeline (Sennrich
   * et al., ACL 2016: iterated merging of the most frequent adjacent
@@ -48,88 +50,6 @@ object Bpe {
         slice(col("syms"), lit(2), n - 1).as("r"))).as("p"))
       .groupBy(col("p.l").as("l"), col("p.r").as("r"))
       .agg(sum("cnt").as("c"))
-  }
-
-  /** One greedy merge pass over a symbol array as a fold: carry
-    * (accumulated array, pending symbol); when (pending, current)
-    * equals the winning pair, emit the merged symbol and clear pending
-    * so the merged token cannot cascade within the same pass —
-    * exactly the left-to-right non-overlapping rewrite the oracle's
-    * string `replace` performs. */
-  private[graft] def mergeOnce(syms: Column, l: String, r: String): Column = {
-    val init = struct(
-      array().cast("array<string>").as("acc"),
-      lit(null).cast("string").as("p"))
-    aggregate(syms, init,
-      (st, x) => {
-        val acc = st.getField("acc")
-        val p = st.getField("p")
-        when(p === lit(l) && x === lit(r),
-          struct(concat(acc, array(lit(l + r))).as("acc"),
-            lit(null).cast("string").as("p")))
-        .otherwise(
-          struct(when(p.isNull, acc).otherwise(concat(acc, array(p))).as("acc"),
-            x.as("p")))
-      },
-      st => when(st.getField("p").isNull, st.getField("acc"))
-        .otherwise(concat(st.getField("acc"), array(st.getField("p")))))
-  }
-
-  /** True iff `syms` contains the ADJACENT pair (l, r) — the words a
-    * merge round actually touches. Same zip shape as [[pairCounts]]. */
-  private[graft] def hasAdjacentPair(syms: Column, l: String,
-      r: String): Column = {
-    val n = size(syms)
-    exists(arrays_zip(
-        slice(syms, lit(1), n - 1).as("l"), slice(syms, lit(2), n - 1).as("r")),
-      p => p.getField("l") === lit(l) && p.getField("r") === lit(r))
-  }
-
-  // a space can't occur in symbols ([a-z]+ alphabet + concatenations),
-  // so "<l> <r>" is an unambiguous pair key for the batch-merge map
-  private def pairKey(l: Column, r: Column): Column =
-    concat(l, lit(" "), r)
-
-  private def batchMap(pairs: Seq[(String, String)]): Column =
-    map(pairs.flatMap { case (l, r) =>
-      Seq(lit(l + " " + r), lit(l + r)) }: _*)
-
-  /** True iff `syms` contains ANY of the batch's pairs adjacently. */
-  private[graft] def hasAdjacentAny(syms: Column,
-      pairs: Seq[(String, String)]): Column = {
-    val m = batchMap(pairs)
-    val n = size(syms)
-    exists(arrays_zip(
-        slice(syms, lit(1), n - 1).as("l"), slice(syms, lit(2), n - 1).as("r")),
-      p => element_at(m, pairKey(p.getField("l"), p.getField("r"))).isNotNull)
-  }
-
-  /** One combined greedy pass applying a SYMBOL-DISJOINT batch of
-    * merges — same fold as [[mergeOnce]] with a map lookup instead of
-    * one literal pair. Because no two batch pairs share a symbol,
-    * their merge sites can't overlap, so one combined left-to-right
-    * pass produces exactly the result of applying each pair's own
-    * pass in sequence (any order). */
-  private[graft] def mergeBatch(syms: Column,
-      pairs: Seq[(String, String)]): Column = {
-    val m = batchMap(pairs)
-    val init = struct(
-      array().cast("array<string>").as("acc"),
-      lit(null).cast("string").as("p"))
-    aggregate(syms, init,
-      (st, x) => {
-        val acc = st.getField("acc")
-        val p = st.getField("p")
-        val merged = element_at(m, pairKey(p, x))
-        when(p.isNotNull && merged.isNotNull,
-          struct(concat(acc, array(merged)).as("acc"),
-            lit(null).cast("string").as("p")))
-        .otherwise(
-          struct(when(p.isNull, acc).otherwise(concat(acc, array(p))).as("acc"),
-            x.as("p")))
-      },
-      st => when(st.getField("p").isNull, st.getField("acc"))
-        .otherwise(concat(st.getField("acc"), array(st.getField("p")))))
   }
 
   /** The SEQUENCE-PRESERVING batch of merges from a sorted top-K
@@ -240,18 +160,19 @@ object Bpe {
       localThreshold: Long = 100000L,
       batchWindow: Int = 64,
       localSymThreshold: Long = 32000000L): Seq[(String, String)] = {
-    if (localThreshold > 0 &&
-        symWords
-          .limit(math.min(localThreshold + 1, Int.MaxValue.toLong).toInt)
-          .count() <= localThreshold) {
-      val local = symWords.collect()
-        .map(r => (r.getSeq[String](0).toIndexedSeq, r.getLong(1)))
-      return trainBpeLocalIndexed(local, numMerges)
+    // one probe job; NULL `syms` or `cnt` stays on the distributed path
+    LocalGate.rows(symWords, localThreshold).foreach { rows =>
+      return trainBpeLocalIndexed(
+        rows.toSeq.map(r => (r.getSeq[String](0).toIndexedSeq, r.getLong(1))),
+        numMerges)
     }
     val spark = symWords.sparkSession
     import spark.implicits._
+    // a NULL word or count holds no pair (pairCounts' explode and sum
+    // skip it), so dropping it up front keeps the typed rewrite NULL-free
     var words = symWords
       .select(col("syms"), col("cnt"))
+      .filter(col("syms").isNotNull && col("cnt").isNotNull)
       .localCheckpoint(true)
     def activeSymbols(): Long =
       words.filter(size(col("syms")) > 1)
@@ -475,8 +396,8 @@ object Bpe {
       wordCounts.select(byteSyms(col("word")).as("syms"), col("cnt")),
       numMerges, localThreshold, batchWindow, localSymThreshold)
 
-  /** Greedy left-to-right non-overlapping merge pass (local form of
-    * [[mergeOnce]]). */
+  /** Greedy left-to-right non-overlapping merge pass of one pair over
+    * one word: the rewrite rule of the determinism contract. */
   private[graft] def mergeLocal(syms: IndexedSeq[String],
       pair: (String, String)): IndexedSeq[String] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]

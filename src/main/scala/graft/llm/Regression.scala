@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.osm.LocalGate
+
 /** Distributed linear-model fitting via the normal equations — the
   * quality-regression step of a curation pipeline ("predict human
   * quality ratings from cheap scan-local features, score every doc").
@@ -187,14 +189,15 @@ object Regression {
     // spec (and the consumers' round(5)) already absorb. The
     // distributed loop remains the shape for million-bucket models
     // over unbounded label sets (`localThreshold = 0` forces it).
-    if (localThreshold > 0 &&
-        f.limit(math.min(localThreshold + 1, Int.MaxValue.toLong).toInt)
-          .count() <= localThreshold) {
+    // The gate is `LocalGate.rows`: one probe job, and a NULL feature
+    // (which the twin could not read) keeps the run on the distributed
+    // loop, whose SQL sums skip it.
+    LocalGate.rows(f, localThreshold).foreach { probe =>
       val spark = f.sparkSession
       import spark.implicits._
       // fixed traversal order (id string, bucket) makes reruns
       // bit-identical to each other
-      val rows = f.collect()
+      val rows = probe
         .map(r => (r.get(0), r.getLong(1), r.getDouble(2)))
         .sortBy { case (id, b, _) => (String.valueOf(id), b) }
       val yMap = y.collect().map(r => r.get(0) -> r.getDouble(1)).toMap

@@ -1,14 +1,10 @@
 package graft.sources
 
-import java.util
-
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData}
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 reader for OSM PBF (the reference's true ingest input:
@@ -19,7 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * sints, length-delimited fields, zlib blobs).
   *
   * Scale design: a PBF file is a sequence of INDEPENDENTLY decodable
-  * blobs (~8k entities each). `planInputPartitions` seeks through the
+  * blobs (~8k entities each). [[PbfFormat.split]] seeks through the
   * file reading only the 4-byte+BlobHeader framing (no decompression)
   * to index blob offsets, then hands each OSMData blob to its own
   * partition — scan parallelism is blob-granular exactly like the
@@ -35,156 +31,87 @@ import org.apache.spark.unsafe.types.UTF8String
   *   spark.read.format("graft.sources.OsmPbfSource")
   *     .option("entity", "ways").load(path)
   */
-class OsmPbfSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    OsmPbf.schemaFor(options.get("entity"))
+class OsmPbfSource extends FileSource(o => PbfFormat(o.get("entity")))
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    PbfTable(schema, properties.get("path"), properties.get("entity"))
+/** The PBF rules of the [[FileSource]] skeleton: a directory contributes
+  * its `.pbf` files, a file splits into one chunk per OSMData blob, and
+  * a chunk decodes with [[OsmPbf.decodeBlob]]. */
+case class PbfFormat(entity: String) extends FileFormat("osm_pbf") {
+  override def schema: StructType = OsmPbf.schemaFor(entity)
+  override def name(path: String): String = s"osm_pbf($path/$entity)"
+  override def keep(fileName: String): Boolean = fileName.endsWith(".pbf")
 
-  override def supportsExternalMetadata(): Boolean = true
-}
-
-case class PbfTable(tableSchema: StructType, path: String, entity: String)
-    extends Table with SupportsRead {
-  override def schema(): StructType = tableSchema
-  override def name(): String = s"osm_pbf($path/$entity)"
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new PbfScanBuilder(tableSchema, path, entity)
-}
-
-class PbfScanBuilder(fullSchema: StructType, path: String, entity: String)
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType = fullSchema
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-  override def build(): Scan = PbfScan(fullSchema, required, path, entity)
-}
-
-case class PbfBlobPartition(file: String, offset: Long, length: Int)
-    extends InputPartition
-
-case class PbfScan(fullSchema: StructType, required: StructType,
-    path: String, entity: String) extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  /** Index OSMData blob extents by reading only the framing. Paths
-    * resolve through the Hadoop FileSystem API (exactly like a parquet
-    * scan): local files, HDFS, and object stores all work, and the
-    * partition carries the fully-qualified URI so executors on other
-    * hosts open the same filesystem, not their local disk. A file ends
-    * cleanly only at a blob boundary (an empty file has no blobs); a
-    * frame cut short or outside the spec's size limits raises
+  /** Index OSMData blob extents by reading only the framing. A file
+    * ends cleanly only at a blob boundary (an empty file has no blobs);
+    * a frame cut short or outside the spec's size limits raises
     * [[OsmPbf.PbfFormatException]] with the file and byte offset. */
-  override def planInputPartitions(): Array[InputPartition] = {
-    val conf = org.apache.spark.sql.SparkSession.active
-      .sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    val files =
-      if (fs.getFileStatus(root).isDirectory)
-        fs.listStatus(root).filter(_.getPath.getName.endsWith(".pbf"))
-          .sortBy(_.getPath.getName).map(_.getPath)
-      else Array(root)
-    files.flatMap { f =>
-      val fileLen = fs.getFileStatus(f).getLen
-      val in = new java.io.DataInputStream(
-        new java.io.BufferedInputStream(fs.open(f)))
-      val parts = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-      // a file may end only at a blob boundary: every length read below
-      // is checked against the file length before it is trusted
-      def corrupt(at: Long, what: String) =
-        new OsmPbf.PbfFormatException(s"$f at byte offset $at: $what")
-      var offset = 0L
-      try {
-        while (offset < fileLen) {
-          if (fileLen - offset < 4)
-            throw corrupt(offset, "file ends inside a BlobHeader length")
-          val headerLen = in.readInt()
-          if (headerLen < 0 || headerLen > OsmPbf.MaxHeaderBytes)
-            throw corrupt(offset, s"BlobHeader length $headerLen " +
-              s"outside [0, ${OsmPbf.MaxHeaderBytes}]")
-          if (offset + 4 + headerLen > fileLen)
-            throw corrupt(offset,
-              s"file ends inside a $headerLen-byte BlobHeader")
-          val header = new Array[Byte](headerLen)
-          in.readFully(header)
-          val h = new PbView(header, 0, headerLen)
-          var blobType = ""
-          var dataSize = 0L
-          while (h.hasMore) h.nextField() match {
-            case 1 => blobType = h.readString()
-            case 3 => dataSize = h.readVarint()
-            case _ => h.skip()
-          }
-          val blobStart = offset + 4 + headerLen
-          if (dataSize < 0 || dataSize > OsmPbf.MaxBlobBytes)
-            throw corrupt(blobStart, s"Blob length $dataSize " +
-              s"outside [0, ${OsmPbf.MaxBlobBytes}]")
-          if (blobStart + dataSize > fileLen)
-            throw corrupt(blobStart, s"file ends inside a $dataSize-byte " +
-              s"$blobType Blob (${fileLen - blobStart} bytes left)")
-          if (blobType == "OSMData") {
-            parts += PbfBlobPartition(
-              fs.makeQualified(f).toString, blobStart, dataSize.toInt)
-            in.skipNBytes(dataSize)
-          } else if (blobType == "OSMHeader") {
-            // a conforming reader must REFUSE files whose
-            // required_features it does not implement (PBF spec) —
-            // silently decoding e.g. historical data would be wrong
-            val blob = new Array[Byte](dataSize.toInt)
-            in.readFully(blob)
-            OsmPbf.checkRequiredFeatures(blob)
-          } else in.skipNBytes(dataSize)
-          offset = blobStart + dataSize
+  override def split(file: FileStatus, conf: Configuration): Seq[FileChunk] = {
+    val f = file.getPath
+    val fileLen = file.getLen
+    val in = new java.io.DataInputStream(
+      new java.io.BufferedInputStream(FileSource.open(f.toString, conf)))
+    val parts = scala.collection.mutable.ArrayBuffer.empty[FileChunk]
+    // a file may end only at a blob boundary: every length read below
+    // is checked against the file length before it is trusted
+    def corrupt(at: Long, what: String) =
+      new OsmPbf.PbfFormatException(s"$f at byte offset $at: $what")
+    var offset = 0L
+    try {
+      while (offset < fileLen) {
+        if (fileLen - offset < 4)
+          throw corrupt(offset, "file ends inside a BlobHeader length")
+        val headerLen = in.readInt()
+        if (headerLen < 0 || headerLen > OsmPbf.MaxHeaderBytes)
+          throw corrupt(offset, s"BlobHeader length $headerLen " +
+            s"outside [0, ${OsmPbf.MaxHeaderBytes}]")
+        if (offset + 4 + headerLen > fileLen)
+          throw corrupt(offset,
+            s"file ends inside a $headerLen-byte BlobHeader")
+        val header = new Array[Byte](headerLen)
+        in.readFully(header)
+        val h = new PbView(header, 0, headerLen)
+        var blobType = ""
+        var dataSize = 0L
+        while (h.hasMore) h.nextField() match {
+          case 1 => blobType = h.readString()
+          case 3 => dataSize = h.readVarint()
+          case _ => h.skip()
         }
-      } catch {
-        // the stream ended before the length the file system reported
-        case e: java.io.EOFException =>
-          throw corrupt(offset, s"unexpected end of stream (${e.getMessage})")
-      } finally in.close()
-      parts
-    }
+        val blobStart = offset + 4 + headerLen
+        if (dataSize < 0 || dataSize > OsmPbf.MaxBlobBytes)
+          throw corrupt(blobStart, s"Blob length $dataSize " +
+            s"outside [0, ${OsmPbf.MaxBlobBytes}]")
+        if (blobStart + dataSize > fileLen)
+          throw corrupt(blobStart, s"file ends inside a $dataSize-byte " +
+            s"$blobType Blob (${fileLen - blobStart} bytes left)")
+        if (blobType == "OSMData") {
+          parts += FileChunk(f.toString, blobStart, dataSize)
+          in.skipNBytes(dataSize)
+        } else if (blobType == "OSMHeader") {
+          // a conforming reader must REFUSE files whose
+          // required_features it does not implement (PBF spec) —
+          // silently decoding e.g. historical data would be wrong
+          val blob = new Array[Byte](dataSize.toInt)
+          in.readFully(blob)
+          OsmPbf.checkRequiredFeatures(blob)
+        } else in.skipNBytes(dataSize)
+        offset = blobStart + dataSize
+      }
+    } catch {
+      // the stream ended before the length the file system reported
+      case e: java.io.EOFException =>
+        throw corrupt(offset, s"unexpected end of stream (${e.getMessage})")
+    } finally in.close()
+    parts.toSeq
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = org.apache.spark.sql.SparkSession.active
-      .sessionState.newHadoopConf()
-    PbfReaderFactory(required, entity,
-      new org.apache.spark.util.SerializableConfiguration(conf))
-  }
-}
-
-case class PbfReaderFactory(required: StructType, entity: String,
-    conf: org.apache.spark.util.SerializableConfiguration)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[PbfBlobPartition]
-    new PbfBlobReader(required, entity, p, conf)
-  }
-}
-
-/** Decodes one OSMData blob into rows of the requested entity. */
-class PbfBlobReader(required: StructType, entity: String,
-    part: PbfBlobPartition,
-    conf: org.apache.spark.util.SerializableConfiguration)
-    extends PartitionReader[InternalRow] {
-  private val rows: Iterator[InternalRow] = {
-    val p = new org.apache.hadoop.fs.Path(part.file)
-    val in = p.getFileSystem(conf.value).open(p)
-    val blob = new Array[Byte](part.length)
-    try { in.readFully(part.offset, blob) } finally { in.close() }
+  /** Decodes one OSMData blob into rows of the requested entity. */
+  override def read(chunk: FileChunk, in: FSDataInputStream,
+      schema: StructType, required: StructType): Iterator[InternalRow] = {
+    val blob = new Array[Byte](chunk.length.toInt)
+    in.readFully(chunk.offset, blob)
     OsmPbf.decodeBlob(blob, entity, required).iterator
   }
-  private var current: InternalRow = _
-  override def next(): Boolean =
-    if (rows.hasNext) { current = rows.next(); true } else false
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
 }
 
 /** Wire-format cursor over a byte slice (protobuf subset: varint,

@@ -1,14 +1,9 @@
 package graft.sources
 
-import java.util
-
+import org.apache.hadoop.fs.FSDataInputStream
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, DateTimeUtils}
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 reader for the pgsnapshot COPY-dump format — the TSV
@@ -28,26 +23,17 @@ import org.apache.spark.unsafe.types.UTF8String
   *     OR PostGIS hex EWKB (what a real `--write-pgsql-dump` emits) —
   *     both byte orders, SRID flag handled.
   *
-  * Connector surface exercised: TableProvider -> Table(SupportsRead) ->
-  * ScanBuilder with REAL column pruning (SupportsPushDownRequiredColumns
-  * — unprojected columns are never parsed, which for this row-oriented
-  * text format is the dominant cost) -> Batch with one InputPartition
-  * per file -> PartitionReader[InternalRow].
+  * The DSv2 plumbing is the shared [[FileSource]] skeleton, with REAL
+  * column pruning (unprojected columns are never parsed, which for this
+  * row-oriented text format is the dominant cost) and one input
+  * partition per file; [[PgDumpFormat]] is the COPY-specific part.
   *
   * Usage:
   *   spark.read.format("graft.sources.PgSnapshotDumpSource")
   *     .option("entity", "ways").load(path)
   */
-class PgSnapshotDumpSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    PgSnapshotDump.schemaFor(options.get("entity"))
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    PgDumpTable(schema, properties.get("path"))
-
-  override def supportsExternalMetadata(): Boolean = true
-}
+class PgSnapshotDumpSource
+    extends FileSource(o => PgDumpFormat(o.get("entity")))
 
 object PgSnapshotDump {
   val pointType: StructType = StructType(Seq(
@@ -239,101 +225,51 @@ object PgSnapshotDump {
   }
 }
 
-case class PgDumpTable(tableSchema: StructType, path: String)
-    extends Table with SupportsRead {
-  override def schema(): StructType = tableSchema
-  override def name(): String = s"pgsnapshot_dump($path)"
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new PgDumpScanBuilder(tableSchema, path)
-}
+/** The COPY rules of the [[FileSource]] skeleton: one chunk per file,
+  * read as UTF-8 lines (the encoding [[PgSnapshotDumpWriter]] writes),
+  * split on tabs, parsing ONLY the required columns (column pruning pays
+  * here — hstore/array parsing dominates). */
+case class PgDumpFormat(entity: String) extends FileFormat("pgsnapshot_dump") {
+  override def schema: StructType = PgSnapshotDump.schemaFor(entity)
 
-class PgDumpScanBuilder(fullSchema: StructType, path: String)
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType = fullSchema
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-  override def build(): Scan = PgDumpScan(fullSchema, required, path)
-}
-
-case class PgDumpFilePartition(file: String) extends InputPartition
-
-case class PgDumpScan(fullSchema: StructType, required: StructType, path: String)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val f = new java.io.File(path)
-    val files =
-      if (f.isDirectory)
-        f.listFiles().filter(_.isFile)
-          // skip Hadoop sink artifacts so a PgSnapshotDumpWriter output
-          // directory reads back directly (_SUCCESS, .part-*.crc)
-          .filterNot(x => x.getName.startsWith("_") || x.getName.startsWith("."))
-          .map(_.getPath).sorted
-      else Array(path)
-    files.map(PgDumpFilePartition(_): InputPartition)
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    PgDumpReaderFactory(fullSchema, required)
-}
-
-case class PgDumpReaderFactory(fullSchema: StructType, required: StructType)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new PgDumpReader(fullSchema, required,
-      partition.asInstanceOf[PgDumpFilePartition].file)
-}
-
-/** Line reader: splits on tabs, parses ONLY the required columns
-  * (column pruning pays here — hstore/array parsing dominates). */
-class PgDumpReader(fullSchema: StructType, required: StructType, file: String)
-    extends PartitionReader[InternalRow] {
-  private val source = scala.io.Source.fromFile(file)
-  private val lines = source.getLines()
-  // position of each required column in the file's full column order
-  private val fieldIdx = required.fields.map(f => fullSchema.fieldIndex(f.name))
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    if (!lines.hasNext) return false
-    val cells = lines.next().split("\t", -1)
-    val values = new Array[Any](required.length)
-    var i = 0
-    while (i < fieldIdx.length) {
-      val cell = cells(fieldIdx(i))
-      // \N is the null marker only BEFORE escape decoding (a data cell
-      // containing the two chars \N arrives as \\N)
-      val raw = if (cell == "\\N") null
-        else PgSnapshotDump.decodeCopyEscapes(cell)
-      values(i) =
-        if (raw == null) null
-        else required.fields(i).dataType match {
-          case LongType => raw.toLong
-          case IntegerType => raw.toInt
-          case TimestampType =>
-            DateTimeUtils.stringToTimestampAnsi(UTF8String.fromString(raw),
-              java.time.ZoneOffset.UTC)
-          case MapType(StringType, StringType, _) =>
-            val (ks, vs) = PgSnapshotDump.parseHstore(raw)
-            ArrayBasedMapData(ks.asInstanceOf[Array[Any]], vs.asInstanceOf[Array[Any]])
-          case ArrayType(LongType, _) =>
-            ArrayData.toArrayData(PgSnapshotDump.parseLongArray(raw))
-          case t if t == PgSnapshotDump.pointType => PgSnapshotDump.parsePoint(raw)
-          case ArrayType(e, _) if e == PgSnapshotDump.pointType =>
-            PgSnapshotDump.parseLine(raw)
-          case StringType => UTF8String.fromString(raw)
-          case other => throw new IllegalStateException(s"unhandled type $other")
-        }
-      i += 1
+  override def read(chunk: FileChunk, in: FSDataInputStream,
+      schema: StructType, required: StructType): Iterator[InternalRow] = {
+    val lines = new java.io.BufferedReader(
+      new java.io.InputStreamReader(in, java.nio.charset.StandardCharsets.UTF_8))
+    // position of each required column in the file's full column order
+    val fieldIdx = required.fields.map(f => schema.fieldIndex(f.name))
+    Iterator.continually(lines.readLine()).takeWhile(_ != null).map { line =>
+      val cells = line.split("\t", -1)
+      val values = new Array[Any](required.length)
+      var i = 0
+      while (i < fieldIdx.length) {
+        val cell = cells(fieldIdx(i))
+        // \N is the null marker only BEFORE escape decoding (a data cell
+        // containing the two chars \N arrives as \\N)
+        val raw = if (cell == "\\N") null
+          else PgSnapshotDump.decodeCopyEscapes(cell)
+        values(i) =
+          if (raw == null) null
+          else required.fields(i).dataType match {
+            case LongType => raw.toLong
+            case IntegerType => raw.toInt
+            case TimestampType =>
+              DateTimeUtils.stringToTimestampAnsi(UTF8String.fromString(raw),
+                java.time.ZoneOffset.UTC)
+            case MapType(StringType, StringType, _) =>
+              val (ks, vs) = PgSnapshotDump.parseHstore(raw)
+              ArrayBasedMapData(ks.asInstanceOf[Array[Any]], vs.asInstanceOf[Array[Any]])
+            case ArrayType(LongType, _) =>
+              ArrayData.toArrayData(PgSnapshotDump.parseLongArray(raw))
+            case t if t == PgSnapshotDump.pointType => PgSnapshotDump.parsePoint(raw)
+            case ArrayType(e, _) if e == PgSnapshotDump.pointType =>
+              PgSnapshotDump.parseLine(raw)
+            case StringType => UTF8String.fromString(raw)
+            case other => throw new IllegalStateException(s"unhandled type $other")
+          }
+        i += 1
+      }
+      InternalRow.fromSeq(values.toIndexedSeq)
     }
-    current = InternalRow.fromSeq(values.toIndexedSeq)
-    true
   }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = source.close()
 }

@@ -1,17 +1,13 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, EOFException, FileInputStream, InputStream}
-import java.util
+import java.io.{BufferedInputStream, EOFException, InputStream}
 import java.util.zip.GZIPInputStream
 
+import org.apache.hadoop.fs.FSDataInputStream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, DateTimeUtils}
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 reader for WARC / WET archives — the ISO 28500 record
@@ -41,16 +37,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *   spark.read.format("graft.sources.WarcSource").load(dirOrFile)
   *   graft.sources.Warc.read(spark, path)            // same
   */
-class WarcSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    Warc.schema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    WarcTable(schema, properties.get("path"))
-
-  override def supportsExternalMetadata(): Boolean = true
-}
+class WarcSource extends FileSource(_ => WarcFormat)
 
 object Warc {
   val schema: StructType = StructType(Seq(
@@ -68,7 +55,7 @@ object Warc {
     spark.read.format("graft.sources.WarcSource").load(path)
 
   /** Streaming entry point: incremental ingest of a growing crawl-dump
-    * directory (see [[WarcMicroBatchStream]]). */
+    * directory (see [[FileMicroBatchStream]]). */
   def readStream(spark: SparkSession, path: String): DataFrame =
     spark.readStream.format("graft.sources.WarcSource").load(path)
 
@@ -122,7 +109,7 @@ object Warc {
     * UTC, so `date_format` emits the ISO form the reader parses back
     * losslessly. Local-filesystem sink (this sandbox); production
     * would resolve `dir` through the Hadoop FileSystem API like the
-    * PBF reader does. */
+    * readers do. */
   def write(df: DataFrame, dir: String, gzipPerRecord: Boolean = true): Unit = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
     val ext = if (gzipPerRecord) ".warc.gz" else ".warc"
@@ -162,136 +149,29 @@ object Warc {
   }
 }
 
-case class WarcTable(tableSchema: StructType, path: String)
-    extends Table with SupportsRead {
-  override def schema(): StructType = tableSchema
-  override def name(): String = s"warc($path)"
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new WarcScanBuilder(tableSchema, path)
-}
+/** The WARC rules of the [[FileSource]] skeleton: one chunk per file
+  * (`.gz` files read through `GZIPInputStream`), records parsed by
+  * [[WarcRecords]], and a growing directory can be read as a stream
+  * (see [[FileMicroBatchStream]]). */
+case object WarcFormat extends FileFormat("warc") {
+  override def schema: StructType = Warc.schema
+  override def streaming: Boolean = true
 
-class WarcScanBuilder(fullSchema: StructType, path: String)
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType = fullSchema
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-  override def build(): Scan = WarcScan(required, path)
-}
-
-case class WarcFilePartition(file: String) extends InputPartition
-
-case class WarcScan(required: StructType, path: String)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val f = new java.io.File(path)
-    require(f.exists(), s"warc source: no such path: $path")
-    val files =
-      if (f.isDirectory) {
-        // listFiles() is null on an unreadable dir — fail with the path,
-        // not an opaque NPE inside planning (ADVICE r12)
-        val ls = f.listFiles()
-        require(ls != null, s"warc source: cannot list directory: $path")
-        ls.filter(_.isFile)
-          .filterNot(x => x.getName.startsWith("_") || x.getName.startsWith("."))
-          .map(_.getPath).sorted
-      } else Array(path)
-    files.map(WarcFilePartition(_): InputPartition)
+  override def read(chunk: FileChunk, in: FSDataInputStream,
+      schema: StructType, required: StructType): Iterator[InternalRow] = {
+    val records = new WarcRecords(chunk.file, new BufferedInputStream(
+      if (chunk.file.endsWith(".gz")) new GZIPInputStream(in) else in, 1 << 16),
+      required)
+    Iterator.continually(records.next()).takeWhile(_ != null)
   }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    WarcReaderFactory(required)
-
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new WarcMicroBatchStream(required, path)
 }
 
-/** Streaming side of the WARC source: monitor a crawl-dump directory
-  * and ingest newly-landed archives incrementally. Crawl output is
-  * append-only with lexicographically increasing names (the Common
-  * Crawl convention — `part-…`, segment timestamps), so the OFFSET is
-  * simply the highest file name ingested: a micro-batch is "every file
-  * whose name sorts in (start, end]", which makes offsets trivially
-  * serializable, replayable from the checkpoint log, and exactly-once
-  * at FILE granularity (a file is either fully in a batch or not yet
-  * seen — the batch boundary can't split a file). Per-batch work
-  * parallelizes exactly like the batch reader: one partition per new
-  * file. */
-class WarcMicroBatchStream(required: StructType, path: String)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
-  import org.apache.spark.sql.connector.read.streaming.Offset
-
-  private def listNames(): Array[String] = {
-    val f = new java.io.File(path)
-    require(f.exists(), s"warc stream: no such path: $path")
-    if (!f.isDirectory) Array(f.getName)
-    else {
-      val ls = f.listFiles()
-      require(ls != null, s"warc stream: cannot list directory: $path")
-      ls.filter(_.isFile)
-        .filterNot(x => x.getName.startsWith("_") || x.getName.startsWith("."))
-        .map(_.getName).sorted
-    }
-  }
-
-  override def initialOffset(): Offset = WarcOffset("")
-  override def latestOffset(): Offset =
-    WarcOffset(listNames().lastOption.getOrElse(""))
-  override def deserializeOffset(json: String): Offset = WarcOffset(json)
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-
-  override def planInputPartitions(start: Offset,
-      end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[WarcOffset].watermark
-    val e = end.asInstanceOf[WarcOffset].watermark
-    val dir = new java.io.File(path)
-    // when `path` is a single file, the one "name" maps back to the
-    // path ITSELF — joining it onto the file would fabricate a
-    // nonexistent '<file>/<file>' child (ADVICE r12), mirroring the
-    // batch reader's else-branch instead
-    listNames().filter(n => n > s && n <= e)
-      .map(n => WarcFilePartition(
-        if (dir.isDirectory) new java.io.File(dir, n).getPath else path)
-        : InputPartition)
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    WarcReaderFactory(required)
-}
-
-/** Lexicographic file-name watermark (see [[WarcMicroBatchStream]]);
-  * the json form is the raw name — opaque to Spark's offset log. */
-case class WarcOffset(watermark: String)
-    extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String = watermark
-}
-
-case class WarcReaderFactory(required: StructType)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new WarcReader(required,
-      partition.asInstanceOf[WarcFilePartition].file)
-}
-
-/** Streaming record reader: headers are always parsed (they ARE the
+/** Streaming record parser: headers are always parsed (they ARE the
   * record framing); the payload is read only when projected, else
   * skipped in-stream. Never holds more than one record's payload. */
-class WarcReader(required: StructType, file: String)
-    extends PartitionReader[InternalRow] {
-  private val in: InputStream = {
-    val fis = new FileInputStream(file)
-    new BufferedInputStream(
-      if (file.endsWith(".gz")) new GZIPInputStream(fis) else fis, 1 << 16)
-  }
+private[sources] class WarcRecords(file: String, in: InputStream,
+    required: StructType) {
   private val needPayload = required.fieldNames.contains("payload")
-  private var current: InternalRow = _
 
   /** Read one `\r\n`/`\n`-terminated header line as UTF-8; null at EOF. */
   private def readLine(): String = {
@@ -305,11 +185,12 @@ class WarcReader(required: StructType, file: String)
     new String(buf.toByteArray, "UTF-8")
   }
 
-  override def next(): Boolean = {
+  /** The next record as a row; null at EOF, which also closes `in`. */
+  def next(): InternalRow = {
     // skip inter-record blank lines until the next version line or EOF
     var line = readLine()
     while (line != null && line.isEmpty) line = readLine()
-    if (line == null) return false
+    if (line == null) { in.close(); return null }
     require(line.startsWith("WARC/"),
       s"malformed WARC record header: '$line' in $file")
     val headers = scala.collection.mutable.LinkedHashMap[String, String]()
@@ -355,10 +236,6 @@ class WarcReader(required: StructType, file: String)
         case other => throw new IllegalStateException(s"unknown column $other")
       }
     }
-    current = InternalRow.fromSeq(values.toIndexedSeq)
-    true
+    InternalRow.fromSeq(values.toIndexedSeq)
   }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = in.close()
 }

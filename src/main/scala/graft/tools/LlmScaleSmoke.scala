@@ -315,6 +315,8 @@ object LlmScaleSmoke {
     // >=256 merges on a forced-distributed vocabulary without the
     // per-round cost tracking vocabulary size. Gate: completes all 256
     // merges; wall time reported for the round-over-round economics.
+    // the BPE word tables scale with the base: 150k words at the default
+    val bpeTableWords = nLo / 2
     def bpeWordTable(nWords: Long): DataFrame =
       spark.range(nWords).select(
         md5(col("id").cast("string"))
@@ -336,12 +338,12 @@ object LlmScaleSmoke {
       bpeRun(5000L, 8, 0L) // warm
       // forced-distributed 256 merges: tracks the incremental
       // delta-maintenance economics round over round
-      val (bpeSec, bpeMerges, bpeWords) = bpeRun(150000L, 256, 0L)
+      val (bpeSec, bpeMerges, bpeWords) = bpeRun(bpeTableWords, 256, 0L)
       // PRODUCTION-VOCAB economics (VERDICT r17 item 6): 1024 merges
       // with the active-set hand-off enabled — the symbol-sum probe
       // fires and the indexed local loop finishes the tail with zero
       // further shuffle rounds
-      val (bpe1kSec, bpe1kMerges, _) = bpeRun(150000L, 1024,
+      val (bpe1kSec, bpe1kMerges, _) = bpeRun(bpeTableWords, 1024,
         32000000L)
       Seq(s""""bpe_words":$bpeWords,"bpe_merges":$bpeMerges,""" +
         f""""bpe_sec":$bpeSec%.2f,""" +
@@ -362,7 +364,7 @@ object LlmScaleSmoke {
     // concatenation and every emitted token is in the trained
     // vocabulary (initial alphabet + merge outputs).
     val bpe32kParts = if (wanted("bpe32k")) {
-      val wc = bpeWordTable(150000L)
+      val wc = bpeWordTable(bpeTableWords)
       val nw = wc.count()
       val t0 = System.nanoTime()
       val ms = graft.llm.Bpe.trainBpe(wc, 32000, localThreshold = 0,

@@ -124,11 +124,13 @@ object MpSmoke {
     val (secLo, ringsLo, _, _) = run(nLo)
     val (secHi, ringsHi, _, _) = run(nLo * 4)
     val exp = math.log(secHi / secLo) / math.log(4.0)
-    // skew gate: the 4n uniform load PLUS one 500k-way mega-relation
-    // (one task stitches the whole thing) must stay within 2x of the
-    // uniform 4n wall-clock — the endpoint-indexed stitcher makes the
-    // hot task linear, so the bound holds with a wide margin
-    val megaWays = 500000L
+    // skew gate: the 4n uniform load PLUS one n-way mega-relation
+    // (one task stitches the whole thing; 500k ways at the default n)
+    // must stay within 2x of the uniform 4n wall-clock — the
+    // endpoint-indexed stitcher makes the hot task linear, so the bound
+    // holds with a wide margin, and sizing the mega-relation by n keeps
+    // the gate scale-free (a multiple of 4, so the square ring closes)
+    val megaWays = nLo - nLo % 4
     val (secSkew, _, _, _) = run(nLo * 4, megaWays)
     require(secSkew <= 2.0 * secHi,
       f"skew gate: $secSkew%.2f s > 2x uniform $secHi%.2f s")

@@ -40,13 +40,6 @@ class BpeSpec extends SparkTestBase {
       === IndexedSeq("aa", "a"))
     assert(Bpe.mergeLocal(IndexedSeq("a", "a", "a", "a"), ("a", "a"))
       === IndexedSeq("aa", "aa"))
-    // the column form agrees with the local form
-    val df = Seq(Seq("a", "a", "a"), Seq("a", "a", "a", "a"),
-      Seq("b", "a", "a"), Seq("a")).toDF("syms")
-    val merged = df.select(Bpe.mergeOnce(col("syms"), "a", "a").as("m"))
-      .collect().map(_.getSeq[String](0).toList)
-    assert(merged.toList === List(
-      List("aa", "a"), List("aa", "aa"), List("b", "aa"), List("a")))
   }
 
   test("applyBpe retokenizes with trained merges, replaying training exactly") {
@@ -126,24 +119,12 @@ class BpeSpec extends SparkTestBase {
     assert(Bpe.planBatch(Nil, windowFull = false, maxAccept = 5) === Nil)
   }
 
-  test("mergeBatch/hasAdjacentAny: combined pass equals per-pair sequential passes") {
-    val df = Seq(
-      (1L, Seq("a", "b", "c", "d")),        // both pairs fire
-      (2L, Seq("b", "a", "b", "a", "b")),   // overlapping same-pair run
-      (3L, Seq("c", "a", "b", "d")),        // merge does NOT bridge c,d
-      (4L, Seq("x", "y"))                   // untouched
-    ).toDF("id", "syms")
-    val batch = Seq(("a", "b"), ("c", "d"))
-    val got = df.select(col("id"), Bpe.mergeBatch(col("syms"), batch).as("m"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toList).toMap
-    assert(got(1L) === List("ab", "cd"))
-    assert(got(2L) === List("b", "ab", "ab"))
-    assert(got(3L) === List("c", "ab", "d"))
-    assert(got(4L) === List("x", "y"))
-    val hits = df.select(col("id"),
-        Bpe.hasAdjacentAny(col("syms"), batch).as("h"))
-      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    assert(hits === Map(1L -> true, 2L -> true, 3L -> true, 4L -> false))
+  test("trainBpeSyms: a NULL syms row leaves the local gate and counts no pair") {
+    val words = (fixture.map { case (w, c) => (Option(w.map(_.toString)), c) } :+
+      (Option.empty[Seq[String]], 4L)).toDF("syms", "cnt")
+    assert(Bpe.trainBpeSyms(words, 4) === expected)
+    assert(Bpe.trainBpeSyms(words, 4, localThreshold = 0,
+      localSymThreshold = 0) === expected)
   }
 
   test("plan audit: one merge round costs exactly one shuffle") {

@@ -1259,6 +1259,17 @@ class LlmSpec extends SparkTestBase {
     wExp.foreach { case (b, w) =>
       assert(math.abs(wGot(b) - w) < 1e-9, s"bucket $b: ${wGot(b)} vs $w")
     }
+    // a NULL feature fails the local gate's NULL rule: the distributed
+    // loop runs, and its sums skip the NULL term
+    val withNull = feats.unionByName(Seq((1L, wExp.keys.max, Option.empty[Double]))
+      .toDF("doc_id", "bucket", "x"))
+    val wNull = Regression.fitLogistic(withNull, "doc_id", labels, "y",
+        iters = iters, lr = lr)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(wNull.keySet === wExp.keySet)
+    wExp.foreach { case (b, w) =>
+      assert(math.abs(wNull(b) - w) < 1e-9, s"bucket $b: ${wNull(b)} vs $w")
+    }
     // separable vocabulary: positives share 'good/great', negatives
     // 'bad/awful' — 20 rounds drive every training doc to the right
     // side of 0.5, and a held-out positive-vocab doc scores positive

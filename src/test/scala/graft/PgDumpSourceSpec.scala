@@ -156,6 +156,23 @@ class PgDumpSourceSpec extends SparkTestBase {
     assert(back(2).getAs[Map[String, String]]("tags") === Map.empty)
   }
 
+  test("writer round-trip: non-ASCII tag keys and values read back as UTF-8") {
+    // the writer's text sink writes UTF-8; a reader that decoded with
+    // the JVM default charset failed on these under an ASCII locale
+    import org.apache.spark.sql.Row
+    val tags = Map("name" -> "Nikšić", "name:sr" -> "Никшић",
+      "naïve:東京" -> "café ☕")
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(101L, 1, 7, null, 9L, tags, Seq(1L, 2L), null)), 1),
+      sources.PgSnapshotDump.schemaFor("ways"))
+    val dir = Files.createTempDirectory("dumputf8").toString + "/ways"
+    sources.PgSnapshotDumpWriter.write(df, "ways", dir)
+    val back = spark.read.format(fmt).option("entity", "ways").load(dir)
+      .collect()
+    assert(back.length === 1)
+    assert(back(0).getAs[Map[String, String]]("tags") === tags)
+  }
+
   test("dump round-trips into the road-graph pipeline (nodes + ways dir scan)") {
     val dir = Files.createTempDirectory("pgdump2").toFile
     def put(name: String, lines: Seq[String]): Unit = {
