@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
@@ -71,7 +72,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(
       (new FunctionIdentifier("matvec"),
         new ExpressionInfo(classOf[MatVec].getName, "matvec"),
-        (children: Seq[Expression]) => MatVec(children(0), children(1))))
+        (children: Seq[Expression]) =>
+          MatVec(ConstMatrix.fromLiteral(children(0)), children(1))))
     ext.injectFunction(
       (new FunctionIdentifier("ear_triangulate"),
         new ExpressionInfo(classOf[EarTriangulate].getName, "ear_triangulate"),
@@ -153,9 +155,28 @@ object GraftFunctions {
   /** Register name-addressable functions on an existing session (for
     * `spark.sql(...)` use and `call_function`). Extension-injected
     * functions (get_ints_from_text) need `withExtensions` instead.
+    *
+    * Also turns `spark.sql.icu.caseMappings.enabled` off, so `lower` and
+    * `upper` run the JVM's `UTF8String.toLowerCase`/`toUpperCase`. With
+    * it on (Spark's default) the first `lower()` in the JVM initializes
+    * Spark's `CollationAwareUTF8String`, whose static table calls ICU's
+    * `toTitleCase` once per code point: 3.2 GB allocated and ~0.9 s of
+    * CPU, about 37% of a cold `query_mix` pass's allocation (8.7 GB
+    * with ICU, 5.4 GB without, 4-core runs). The two
+    * mappings agree on every code point except 134, all pinned in
+    * `CaseMappingSpec`: ICU 77 knows Unicode 16, JDK 17 Unicode 13.
+    *   - `lower` differs on 67 capitals added in Unicode 14/16: U+1C89,
+    *     U+2C2F, U+A7C0, U+A7CB-A7CC, U+A7D0, U+A7D6, U+A7D8, U+A7DA,
+    *     U+A7DC, U+10570-1057A, U+1057C-1058A, U+1058C-10592,
+    *     U+10594-10595 and U+10D50-10D65 (the JVM leaves them as is).
+    *   - `upper` differs on their 67 small letters, two of them old:
+    *     U+019B and U+0264, whose capitals U+A7DC and U+A7CB are new in
+    *     Unicode 16 (the JVM leaves all 67 as they are).
+    * `initcap` follows the same setting; the engine calls none.
     */
   def register(spark: SparkSession): Unit = {
     spark.udf.register("median_exact", medianExact)
+    spark.conf.set(SQLConf.ICU_CASE_MAPPINGS_ENABLED.key, "false")
   }
 
   /** F1 as a pure built-in composition — semantically identical to the
@@ -203,8 +224,9 @@ object GraftFunctions {
     * (injected [[SimhashAgg]]): packed majority-vote LONG per group. */
   def simhashAgg(c: Column): Column = call_function("simhash_agg", c)
 
-  /** Codegen'd matrix-vector product against a literal matrix
-    * (injected [[MatVec]]): per-row dots of `vec` with each matrix row. */
+  /** Codegen'd matrix-vector product against a constant matrix
+    * (injected [[MatVec]], which holds it as a [[ConstMatrix]]): per-row
+    * dots of `vec` with each matrix row. */
   def matVec(matrix: Seq[Seq[Double]], vec: Column): Column =
     call_function("matvec", typedlit(matrix), vec)
 

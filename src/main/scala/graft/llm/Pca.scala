@@ -16,7 +16,7 @@ import graft.functions.GraftFunctions
   * so fitting scales like `count(*)` regardless of corpus size. The
   * eigensolve is O(d³) cyclic Jacobi on the driver (d = embedding
   * width, 64–4096; sanctioned driver work like the IVF centroid loop),
-  * and projection is [[graft.functions.MatVec]] against the literal
+  * and projection is [[graft.functions.MatVec]] against the constant
   * component matrix — codegen'd, scan-local, pipelines into whatever
   * follows. No gradient iterations, no per-row driver traffic, no
   * second pass.
@@ -85,7 +85,7 @@ object Pca {
   }
 
   /** Projection column: `components · (x - mean)` — MatVec against the
-    * literal component matrix minus the precomputed `components·mean`
+    * constant component matrix minus the precomputed `components·mean`
     * offsets, so the per-row work stays inside the codegen'd dot. */
   def project(vecCol: Column, model: PcaModel): Column = {
     val offs = model.components.map(c =>

@@ -51,7 +51,9 @@ object PlanDump {
     // Per-query dumps land in PLANS/<q>.md (r19 rotation: the single-file
     // form had grown to 5.3 MB); PLANS.md keeps only an index plus the
     // hand-maintained notes. Lines are capped — plan STRUCTURE is the
-    // evidence, not half-megabyte literal arrays in expression trees.
+    // evidence, not the literal arrays (PQ codebooks, IVF centroids)
+    // some expression trees still carry; the index keeps the full
+    // length of each executed plan.
     val lineCap = 1000
     val planDir = Paths.get(out).toAbsolutePath.getParent.resolve("PLANS")
     Files.createDirectories(planDir)
@@ -62,10 +64,14 @@ object PlanDump {
     sb.append("`PLANS/<query>.md` (rotated out of this file in r19 — it had grown to\n")
     sb.append("5.3 MB; regenerate with `runMain graft.tools.PlanDump`). Hand-maintained\n")
     sb.append("audit notes and A/B attributions follow below the marker.\n\n")
-    sb.append("Headline queries with committed dumps:\n\n")
+    sb.append("Headline queries with committed dumps, each with the length in\n")
+    sb.append("characters of its final executed plan's `toString`: Spark formats\n")
+    sb.append("that string at every execution start and AQE update, so a large\n")
+    sb.append("one is a driver cost paid per run, not just a long file.\n\n")
     headline.foreach { q =>
       val df = SparkEntry.queries(q)(spark, sf)
       df.collect() // finalize the adaptive plan
+      val planChars = df.queryExecution.executedPlan.toString.length
       val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
       val capped = plan.split("\n", -1).map { l =>
         if (l.length > lineCap)
@@ -75,7 +81,7 @@ object PlanDump {
       }.mkString("\n")
       Files.writeString(planDir.resolve(s"$q.md"),
         s"# $q — final physical plan\n\n```\n$capped```\n")
-      sb.append(s"- [$q](PLANS/$q.md)\n")
+      sb.append(f"- [$q](PLANS/$q.md) — $planChars%,d chars\n")
       spark.catalog.clearCache()
     }
     sb.append("\n")

@@ -391,8 +391,7 @@ class PlanAuditSpec extends SparkTestBase {
     val toks = BoundReference(0, ArrayType(StringType), nullable = true)
     val vec = BoundReference(1, ArrayType(DoubleType), nullable = true)
     val txt = BoundReference(2, StringType, nullable = true)
-    val mat = Literal.create(Seq(Seq(1.0, 0.0), Seq(0.0, 1.0)),
-      ArrayType(ArrayType(DoubleType)))
+    val mat = functions.ConstMatrix(Array(Array(1.0, 0.0), Array(0.0, 1.0)))
     val ptType = StructType(Seq(StructField("lon", DoubleType),
       StructField("lat", DoubleType)))
     val line = BoundReference(3, ArrayType(ptType), nullable = true)
@@ -431,6 +430,57 @@ class PlanAuditSpec extends SparkTestBase {
     assert(out.getArray(6).toDoubleArray().toSeq === Seq(3.0, 4.0, 9.0, 12.0, 16.0))
     assert(out.getLong(7) === 25L)                   // int_dot [3,4]·[3,4]
     assert(out.getArray(8).numElements() === 1)      // one CCW triangle
+  }
+
+  test("MatVec keeps its matrix out of the plan string (q_d_embedding_pairs at sf0.01)") {
+    // the 384x64 LSH plane matrix held as a Literal child made this
+    // plan 3.9 M characters, formatted again at every execution start
+    // and AQE update; the ConstMatrix prints by shape and hash
+    val df = SparkEntry.queries("q_d_embedding_pairs")(spark,
+      "/root/testdata/sf0.01")
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.length < 64 * 1024, s"plan is ${p.length} chars")
+    assert(p.contains("matvec(matrix[384x64#"), "plan should name the matrix by shape")
+    assert(p.contains("ReusedExchange"),
+      "both bucket sides should read one exchange")
+  }
+
+  test("MatVecs over equal matrices are semanticEquals, over different ones not") {
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    val v = BoundReference(0, ArrayType(DoubleType), nullable = true)
+    def mv(rows: Array[Array[Double]]) =
+      functions.MatVec(functions.ConstMatrix(rows), v)
+    val a = mv(Array(Array(1.0, 2.0), Array(3.0, 4.0)))
+    val b = mv(Array(Array(1.0, 2.0), Array(3.0, 4.0))) // equal content, new arrays
+    assert(a.semanticEquals(b) && a.semanticHash() == b.semanticHash())
+    assert(!a.semanticEquals(mv(Array(Array(1.0, 2.0), Array(3.0, 5.0)))))
+    assert(!a.semanticEquals(mv(Array(Array(1.0, 2.0)))))
+    assert(a.toString.startsWith("matvec(matrix[2x2#"), a.toString)
+  }
+
+  test("SQL matvec(matrix, vec) returns the Column form's rows") {
+    val session = spark
+    import session.implicits._
+    val df = Seq(Tuple1(Seq(3.0, 4.0)), Tuple1(Seq(-1.5, 0.25, 9.0)),
+      Tuple1(null: Seq[Double])).toDF("v")
+    val viaSql = df.selectExpr(
+      "matvec(array(array(1d, 0d), array(0d, 1d)), v) AS r").collect()
+    val viaColumn = df.select(functions.GraftFunctions.matVec(
+      Seq(Seq(1.0, 0.0), Seq(0.0, 1.0)), $"v").as("r")).collect()
+    assert(viaSql.toSeq === viaColumn.toSeq)
+    assert(viaSql.head.getSeq[Double](0) === Seq(3.0, 4.0))
+    assert(viaSql.last.isNullAt(0))
+  }
+
+  test("matvec over a non-foldable matrix fails with the literal message") {
+    val df = spark.range(1).selectExpr("array(1d, 2d) AS v")
+    val e = intercept[Exception](
+      df.selectExpr("matvec(array(v, v), v) AS r").collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).flatMap(t => Option(t.getMessage))
+    assert(msgs.exists(_.contains("matvec: matrix must be a literal")), e)
   }
 
   test("convex hull aggregate runs with map-side partials (O(hull) state ships)") {
