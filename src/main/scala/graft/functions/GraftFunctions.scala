@@ -2,10 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.Median
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, NumericType}
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 
 import scala.reflect.runtime.universe.typeTag
@@ -21,13 +22,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo(classOf[ExtractInts].getName, "get_ints_from_text"),
         (children: Seq[Expression]) => ExtractInts(children.head)))
     ext.injectFunction(
-      (new FunctionIdentifier("median_exact_native"),
-        new ExpressionInfo(classOf[MedianImperative].getName, "median_exact_native"),
-        (children: Seq[Expression]) =>
-          MedianImperative(org.apache.spark.sql.catalyst.expressions.Cast(
-            children.head, org.apache.spark.sql.types.DoubleType))
-            .toAggregateExpression()))
-    ext.injectFunction(
       (new FunctionIdentifier("vector_sum"),
         new ExpressionInfo(classOf[VectorSum].getName, "vector_sum"),
         (children: Seq[Expression]) =>
@@ -38,8 +32,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(
       (new FunctionIdentifier("median_any"),
         new ExpressionInfo(classOf[MedianAny].getName, "median_any"),
-        (children: Seq[Expression]) =>
-          MedianAny(children.head).toAggregateExpression()))
+        // numeric input goes to Spark's exact `median`; MedianAny holds
+        // only the orderable types `median` rejects
+        (children: Seq[Expression]) => (children.head.dataType match {
+          case _: NumericType => Median(children.head)
+          case _ => MedianAny(children.head)
+        }).toAggregateExpression()))
     ext.injectFunction(
       (new FunctionIdentifier("simhash_agg"),
         new ExpressionInfo(classOf[SimhashAgg].getName, "simhash_agg"),
@@ -199,11 +197,9 @@ object GraftFunctions {
   /** The custom-expression form, resolved through the injected function. */
   def extractInts(c: Column): Column = call_function("get_ints_from_text", c)
 
-  /** The TypedImperativeAggregate median (injected function). */
-  def medianExactNative(c: Column): Column = call_function("median_exact_native", c)
-
-  /** Polymorphic median over any orderable atomic type (injected
-    * [[MedianAny]]) — text/timestamp/date medians included. */
+  /** Polymorphic median over any orderable atomic type: built-in
+    * `median` on numbers, the injected [[MedianAny]] on text, dates,
+    * timestamps and booleans. */
   def medianAny(c: Column): Column = call_function("median_any", c)
 
   /** ST_ConvexHull aggregate over a point-struct column: the CCW hull

@@ -16,11 +16,12 @@ case class MedianBuf(xs: List[Double])
   * combiner merge), so the state shipped per partition is one buffer,
   * not one row per value per shuffle record.
   *
-  * Scale note: state is O(group size). Fine for the reference's use
-  * (median speed limit per highway class — groups are large but values
-  * are small ints); at 100 TB prefer `percentile(x, 0.5)` (same exact
-  * semantics, sort-based) or `percentile_approx`. Tests assert this
-  * aggregator == built-in `percentile(0.5)` (FIXTURES.md §1).
+  * It is the X4 surface demo behind `q_a10_median` only: the engine's
+  * own exact medians (speed-limit imputation, `median_any` on numbers)
+  * run Spark's built-in `median`, which skips this aggregator's
+  * encoder round-trip per update. State is O(group size); at 100 TB
+  * use `percentile_approx`. Tests assert this aggregator == built-in
+  * `percentile(0.5)`, exactly on integers (FIXTURES.md §1).
   */
 object MedianAggregator extends Aggregator[java.lang.Double, MedianBuf, java.lang.Double] {
   override def zero: MedianBuf = MedianBuf(Nil)

@@ -11,17 +11,16 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable.ArrayBuffer
 
-/** Polymorphic exact median over any orderable atomic type — the
+/** Exact median over the orderable non-numeric types — the
   * `median(anyelement)` surface of the reference's type-generic
-  * aggregate (general-functions.sql:29-34, `anyarray` state), which the
-  * numeric-only [[MedianAggregator]]/[[MedianImperative]] did not cover
-  * (a text or timestamp median raised before r16).
+  * aggregate (general-functions.sql:29-34, `anyarray` state) for the
+  * inputs Spark's built-in `median` rejects. The injected `median_any`
+  * sends numeric input to built-in `median` (mean of the two middles,
+  * as DOUBLE) and everything else here.
   *
   * Even-count semantics BY TYPE (documented choice, matching DuckDB so
   * the oracle can replay it; PostgreSQL itself would ERROR running the
   * reference's `avg(middle two)` on text):
-  *   - numeric: mean of the two middles, returned as DOUBLE (DuckDB's
-  *     `median(int) -> double`, and the existing numeric medians);
   *   - timestamp: midpoint of the two middle instants (micros mean,
   *     floorDiv — exact whenever the operands are at >= millisecond
   *     granularity);
@@ -29,14 +28,12 @@ import scala.collection.mutable.ArrayBuffer
   *     (DuckDB's ordinal rule for strings; for DATE DuckDB instead
   *     widens to a TIMESTAMP midpoint — deviation documented, dates
   *     keep their type here).
-  * Odd counts return the middle element type-preserved (numeric still
-  * widened to double for a stable output schema). NULLs are dropped;
-  * empty input yields NULL. Strings compare in UTF-8 binary order
-  * (Spark's own string ordering).
+  * Odd counts return the middle element. NULLs are dropped; empty
+  * input yields NULL. Strings compare in UTF-8 binary order (Spark's
+  * own string ordering).
   *
   * State is the group's value list (exact median is inherently
-  * holistic); partials ship as length-prefixed bytes, same shape as
-  * [[MedianImperative]].
+  * holistic); partials ship as 8-byte longs or length-prefixed UTF-8.
   */
 case class MedianAny(
     child: Expression,
@@ -44,25 +41,13 @@ case class MedianAny(
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[ArrayBuffer[Any]] {
 
-  private def kind: Int = child.dataType match {
-    case ByteType | ShortType | IntegerType | LongType => 0 // integral
-    case FloatType | DoubleType => 1                        // fractional
-    case _: DecimalType => 1
-    case TimestampType | TimestampNTZType => 2              // micros
-    case DateType => 3                                      // days
-    case StringType => 4
-    case BooleanType => 5
+  override def dataType: DataType = child.dataType match {
+    case TimestampType | TimestampNTZType | DateType | StringType | BooleanType =>
+      child.dataType
     case dt => throw new IllegalArgumentException(
       s"median_any: unsupported type $dt")
   }
-
-  override def dataType: DataType = kind match {
-    case 0 | 1 => DoubleType
-    case 2 => child.dataType
-    case 3 => DateType
-    case 4 => StringType
-    case 5 => BooleanType
-  }
+  private def isString: Boolean = dataType == StringType
   override def nullable: Boolean = true
   override def children: Seq[Expression] = Seq(child)
   override def prettyName: String = "median_any"
@@ -70,24 +55,15 @@ case class MedianAny(
   override def createAggregationBuffer(): ArrayBuffer[Any] =
     ArrayBuffer.empty[Any]
 
-  // normalized buffer element: Long (integral/timestamp/date/boolean),
-  // Double (fractional), String (string) — all JVM-orderable
+  // normalized buffer element: String (string) or Long (timestamp
+  // micros, date days, boolean 0/1) — both JVM-orderable
   override def update(buf: ArrayBuffer[Any], input: InternalRow): ArrayBuffer[Any] = {
     val v = child.eval(input)
-    if (v != null) buf += (kind match {
-      case 0 | 2 | 3 => v match {
-        case b: Byte => b.toLong
-        case s: Short => s.toLong
-        case i: Int => i.toLong
-        case l: Long => l
-      }
-      case 1 => v match {
-        case f: Float => f.toDouble
-        case d: Double => d
-        case d: org.apache.spark.sql.types.Decimal => d.toDouble
-      }
-      case 4 => v.asInstanceOf[UTF8String].toString
-      case 5 => if (v.asInstanceOf[Boolean]) 1L else 0L
+    if (v != null) buf += (v match {
+      case s: UTF8String => s.toString
+      case b: Boolean => if (b) 1L else 0L
+      case d: Int => d.toLong
+      case t: Long => t
     })
     buf
   }
@@ -100,72 +76,47 @@ case class MedianAny(
   override def eval(buf: ArrayBuffer[Any]): Any = {
     val n = buf.length
     if (n == 0) return null
-    kind match {
-      case 0 =>
-        val s = buf.asInstanceOf[ArrayBuffer[Long]].sorted
-        if (n % 2 == 1) s(n / 2).toDouble
-        else {
-          // overflow-safe midpoint: lo + diff/2 (+ .5 if diff is odd).
-          // hi >= lo after the sort, so diff as an UNSIGNED Long is the
-          // true distance even when hi - lo wraps (range > Long.MAX).
-          val lo = s(n / 2 - 1); val diff = s(n / 2) - lo
-          (lo + (diff >>> 1)).toDouble + (diff & 1L) * 0.5
-        }
-      case 1 =>
-        val s = buf.asInstanceOf[ArrayBuffer[Double]].sorted
-        if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
-      case 2 =>
-        val s = buf.asInstanceOf[ArrayBuffer[Long]].sorted
-        if (n % 2 == 1) s(n / 2)
-        else {
-          // floor midpoint without the a+b overflow; >>> treats a
-          // wrapped diff as unsigned so this holds for any Long range.
-          val lo = s(n / 2 - 1)
-          lo + ((s(n / 2) - lo) >>> 1)
-        }
-      case 3 | 5 =>
-        val s = buf.asInstanceOf[ArrayBuffer[Long]].sorted
-        val m = s((n - 1) / 2) // lower middle
-        if (kind == 3) m.toInt else m == 1L
-      case 4 =>
-        // sort as UTF8String: Spark's binary string order, not UTF-16
-        val s = buf.asInstanceOf[ArrayBuffer[String]]
-          .map(UTF8String.fromString).sorted
-        s((n - 1) / 2) // lower middle
+    if (isString) {
+      // sort as UTF8String: Spark's binary string order, not UTF-16
+      val s = buf.asInstanceOf[ArrayBuffer[String]]
+        .map(UTF8String.fromString).sorted
+      return s((n - 1) / 2) // lower middle
+    }
+    val s = buf.asInstanceOf[ArrayBuffer[Long]].sorted
+    val m = s((n - 1) / 2) // lower middle
+    dataType match {
+      case DateType => m.toInt
+      case BooleanType => m == 1L
+      case _ if n % 2 == 1 => m
+      // timestamp floor midpoint without the a+b overflow; >>> treats a
+      // wrapped diff as unsigned so this holds for any Long range.
+      case _ => m + ((s(n / 2) - m) >>> 1)
     }
   }
 
-  override def serialize(buf: ArrayBuffer[Any]): Array[Byte] = kind match {
-    case 4 =>
+  override def serialize(buf: ArrayBuffer[Any]): Array[Byte] =
+    if (isString) {
       val bytes = buf.asInstanceOf[ArrayBuffer[String]]
         .map(_.getBytes(StandardCharsets.UTF_8))
       val bb = ByteBuffer.allocate(bytes.map(_.length + 4).sum)
       bytes.foreach { b => bb.putInt(b.length); bb.put(b) }
       bb.array()
-    case 1 =>
-      val bb = ByteBuffer.allocate(buf.length * 8)
-      buf.asInstanceOf[ArrayBuffer[Double]].foreach(bb.putDouble)
-      bb.array()
-    case _ =>
+    } else {
       val bb = ByteBuffer.allocate(buf.length * 8)
       buf.asInstanceOf[ArrayBuffer[Long]].foreach(bb.putLong)
       bb.array()
-  }
+    }
 
   override def deserialize(bytes: Array[Byte]): ArrayBuffer[Any] = {
     val bb = ByteBuffer.wrap(bytes)
     val out = ArrayBuffer.empty[Any]
-    kind match {
-      case 4 =>
-        while (bb.remaining() >= 4) {
-          val len = bb.getInt
-          val b = new Array[Byte](len)
-          bb.get(b)
-          out += new String(b, StandardCharsets.UTF_8)
-        }
-      case 1 => while (bb.remaining() >= 8) out += bb.getDouble
-      case _ => while (bb.remaining() >= 8) out += bb.getLong
-    }
+    if (isString) {
+      while (bb.remaining() >= 4) {
+        val b = new Array[Byte](bb.getInt)
+        bb.get(b)
+        out += new String(b, StandardCharsets.UTF_8)
+      }
+    } else while (bb.remaining() >= 8) out += bb.getLong
     out
   }
 

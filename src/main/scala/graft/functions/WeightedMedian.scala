@@ -124,7 +124,9 @@ object WeightedMedian {
     withCums
       .filter((col("__total") / 2).between(col("__prevsum"), col("__runsum")))
       .groupBy(col(g))
-      .agg(max(col(x)).as("__mx"), first(col("__cnt")).as("__cnt"))
+      // double before the even-count sum: a BIGINT __mx >= 2^62 would
+      // overflow (ARITHMETIC_OVERFLOW under ANSI) in __mx + __mx
+      .agg(max(col(x)).cast("double").as("__mx"), first(col("__cnt")).as("__cnt"))
       .select(
         col(g).cast("string").as("group_id"),
         when(col("__cnt") % 2 === 0, (col("__mx") + col("__mx")) / 2.0)

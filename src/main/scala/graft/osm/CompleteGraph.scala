@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
 import graft.functions.{Geo, GraftFunctions => GF}
-import graft.ops.RelOps
 
 /** The complete multi-modal network (osm-complete-graphs.sql): one
   * network table for ALL modes, with car/pedestrian/bicycle SMALLINT
@@ -43,18 +42,6 @@ object CompleteGraph {
         element_at(col("tags"), "access").as("access"),
         element_at(col("tags"), "oneway").as("oneway"),
         col("linestring").as("geom"))
-
-  /** Steps 2-4 (osm-complete-graphs.sql:22-46): speed summary uses the
-    * built-in PERCENTILE_CONT(0.5) (A11) rather than the custom
-    * aggregate — exactly as the reference does here. */
-  def imputeSpeedLimits(net: DataFrame): DataFrame = {
-    val medians = net.groupBy("highway")
-      .agg(percentile(col("speed_limit"), lit(0.5)).as("median_speed"))
-      .withColumn("median_speed_int", round(col("median_speed")).cast("int"))
-    RelOps.updateFrom(net, medians, Seq("highway"),
-      Map("speed_limit" -> "median_speed_int"),
-      whereTarget = col("speed_limit").isNull)
-  }
 
   private def t(k: String): Column = element_at(col("tags"), k)
 
@@ -133,7 +120,10 @@ object CompleteGraph {
     df
   }
 
-  /** The full chain: network -> imputation -> mode flags. */
+  /** The full chain: network -> imputation -> mode flags. Steps 2-4
+    * (osm-complete-graphs.sql:22-46) impute with PERCENTILE_CONT(0.5),
+    * the road graph's median: one imputation for both networks. */
   def build(ways: DataFrame, strictOsmSemantics: Boolean = true): DataFrame =
-    withModeFlags(imputeSpeedLimits(completeNetwork(ways)), strictOsmSemantics)
+    withModeFlags(RoadGraph.imputeSpeedLimits(completeNetwork(ways)),
+      strictOsmSemantics)
 }

@@ -82,11 +82,17 @@ private[graft] object LocalGate {
   }
 
   /** The node sequence `from`..`to` along `pred` (as returned by
-    * [[dijkstra]] from `from`). */
+    * [[dijkstra]] from `from`). A walk longer than `pred.size` steps
+    * has entered a predecessor cycle, and throws
+    * `IllegalStateException` naming a node on it. */
   def walkBack(pred: collection.Map[Long, Long], from: Long,
       to: Long): List[Long] = {
-    var path = List(to); var cur = to
-    while (cur != from) { cur = pred(cur); path = cur :: path }
+    var path = List(to); var cur = to; var steps = 0
+    while (cur != from) {
+      if (steps == pred.size) throw new IllegalStateException(
+        s"walkBack $from -> $to: predecessor cycle through node $cur")
+      cur = pred(cur); path = cur :: path; steps += 1
+    }
     path
   }
 

@@ -69,11 +69,14 @@ object RoadGraph {
     network.groupBy("highway", "speed_limit").agg(count(lit(1)).as("count"))
       .orderBy(col("highway"), col("count").desc, col("speed_limit"))
 
-  /** Step 4 (osm-road-graphs.sql:43-46): per-class median speed via the
-    * custom median Aggregator (X4). */
+  /** Step 4 (osm-road-graphs.sql:43-46): per-class median speed. The
+    * reference's custom `median(anyelement)` averages the two middles;
+    * Spark's built-in `median` (`percentile(x, 0.5)`, the
+    * PERCENTILE_CONT of osm-complete-graphs.sql:22-46) interpolates
+    * a + (b - a) * 0.5, which is the same double on integer speeds. */
   def speedMedians(network: DataFrame): DataFrame =
     network.groupBy("highway")
-      .agg(GF.medianExact(col("speed_limit").cast("double")).as("median_speed"))
+      .agg(median(col("speed_limit")).as("median_speed"))
 
   /** Step 5 (osm-road-graphs.sql:49-54): UPDATE..FROM median imputation —
     * left join against the (broadcast) per-class median table, replacing

@@ -262,8 +262,6 @@ object OsmQueries {
     //      in reference-shaped SQL — osm-road-graphs.sql:66-165)
     Query("q_osm_split_merge", (s, dir) => {
       val t = osm.OsmModel.microFixture(s)
-      val net = osm.RoadGraph.imputeSpeedLimits(
-        osm.RoadGraph.excludeModes(osm.RoadGraph.carNetwork(t.ways)))
       osm.RoadGraph.buildMergedNetworkCached(t, "micro")
         .select(col("edge_id"),
           col("start_node"), col("end_node"),

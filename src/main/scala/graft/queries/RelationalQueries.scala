@@ -285,11 +285,12 @@ object RelationalQueries {
 
     // ---- A10/X4 custom median Aggregator (general-functions.sql:29-34)
     //      BENCH NOTE: this typed-Aggregator path is ~4.7x slower than
-    //      q_a10b_median_native on identical input — the gap is encoder
-    //      round-trips on the ArrayBuffer state (every update() deserializes
-    //      and reserializes the buffer), not engine cost. It is kept as the
-    //      deliberate X4 surface demo; the native twin below is the
-    //      implementation a production path should use.
+    //      the built-in twin q_a10b_median_native on identical input —
+    //      the gap is encoder round-trips on the buffer state (every
+    //      update() deserializes and reserializes it), not engine cost.
+    //      It is kept as the deliberate X4 surface demo; the engine's
+    //      own medians (speed-limit imputation, median_any on numbers)
+    //      use the built-in.
     Query("q_a10_median", (s, dir) => {
       lineitem(s, dir)
         .groupBy("l_returnflag")
@@ -299,12 +300,13 @@ object RelationalQueries {
       """SELECT l_returnflag, median(l_quantity) AS med_qty
          FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""),
 
-    // ---- A10 again through the native TypedImperativeAggregate path
-    //      (raw buffer + binary partial state vs the typed Aggregator)
+    // ---- A10 again through Spark's built-in exact `median`
+    //      (percentile(x, 0.5): a + (b - a) * 0.5, the same double as
+    //      the reference's mean of the middles on integer quantities)
     Query("q_a10b_median_native", (s, dir) => {
       lineitem(s, dir)
         .groupBy("l_returnflag")
-        .agg(GF.medianExactNative(col("l_quantity")).as("med_qty"))
+        .agg(median(col("l_quantity")).as("med_qty"))
         .orderBy("l_returnflag")
     },
       """SELECT l_returnflag, median(l_quantity) AS med_qty
@@ -312,7 +314,7 @@ object RelationalQueries {
 
     // ---- A10 polymorphic: the reference median is `anyelement`
     //      (general-functions.sql:29-34); MedianAny covers the
-    //      non-numeric types the numeric aggregators can't. Text
+    //      non-numeric types the built-in median can't. Text
     //      median = LOWER-MIDDLE order statistic on even counts
     //      (DuckDB's ordinal rule; PG replaying the reference's
     //      avg-of-middles would ERROR on text — choice documented in
@@ -353,7 +355,7 @@ object RelationalQueries {
     Query("q_a10c_median_approx", (s, dir) => {
       val li = lineitem(s, dir)
       val exact = li.groupBy("l_returnflag")
-        .agg(GF.medianExactNative(col("l_quantity")).as("exact_med"))
+        .agg(median(col("l_quantity")).as("exact_med"))
       val approx = li.groupBy("l_returnflag")
         .agg(percentile_approx(col("l_quantity"), lit(0.5), lit(10000))
           .as("approx_med"))

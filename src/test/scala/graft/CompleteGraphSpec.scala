@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.osm.{CompleteGraph, OsmModel}
+import graft.osm.{CompleteGraph, OsmModel, RoadGraph}
 
 class CompleteGraphSpec extends SparkTestBase {
   import spark.implicits._
@@ -29,7 +29,9 @@ class CompleteGraphSpec extends SparkTestBase {
   }
 
   test("speed imputation via percentile_cont path") {
-    val sl = CompleteGraph.imputeSpeedLimits(CompleteGraph.completeNetwork(t.ways))
+    // the complete network shares the road graph's imputation: built-in
+    // median, which Spark runs as percentile(speed_limit, 0.5)
+    val sl = RoadGraph.imputeSpeedLimits(CompleteGraph.completeNetwork(t.ways))
       .select("edge_id", "speed_limit").collect()
       .map(r => r.getLong(0) -> Option(r.get(1))).toMap
     assert(sl(102L) === Some(60)) // tertiary median imputed

@@ -6,7 +6,8 @@ import graft.functions.{GraftFunctions => GF, MedianAggregator, WeightedMedian}
 
 /** FIXTURES.md §1 — the reference's own median fixtures
   * (general-functions.sql:109-129), ported verbatim, plus the
-  * median == percentile(0.5) identity as a property.
+  * median == percentile(0.5) identity as a property and the exact
+  * built-in == aggregator identity on integers.
   */
 class MedianSpec extends SparkTestBase {
   import spark.implicits._
@@ -59,6 +60,14 @@ class MedianSpec extends SparkTestBase {
     assert(r("a") === 2.7)
     // group b: total=3, half=1.5 -> k=20 row (prevsum 1 <= 1.5 <= runsum 2); odd -> 20
     assert(r("b") === 20.0)
+    // BIGINT near 2^62, even count: total=4, half=2 -> the 5.1e18 and
+    // 5.2e18 rows qualify, max 5.2e18; the even branch's __mx + __mx
+    // must not overflow (ARITHMETIC_OVERFLOW under ANSI)
+    val big = Seq(5000000000000000000L, 5100000000000000000L,
+        5200000000000000000L, 5300000000000000000L)
+      .map(x => ("c", x, 1)).toDF("g", "x", "v")
+    assert(WeightedMedian.weightedMedianByGroup(big, "x", "v", "g")
+      .head.getDouble(1) === 5.2e18)
   }
 
   test("property: aggregator median == percentile(0.5) on random vectors (seeded)") {
@@ -77,21 +86,38 @@ class MedianSpec extends SparkTestBase {
     assert(df.agg(GF.medianExact($"x")).head.getDouble(0) === 501.0)
   }
 
-  test("TypedImperativeAggregate median == Aggregator median == percentile") {
-    val r = tempTable.agg(
-      graft.functions.GraftFunctions.medianExactNative($"k"),
-      GF.medianExact($"k"), percentile($"k", lit(0.5))).head
+  test("median_any on numeric input == built-in median") {
+    val r = tempTable.agg(GF.medianAny($"k"), median($"k")).head
     assert(r.getDouble(0) === 2.35)
     assert(r.getDouble(0) === r.getDouble(1))
-    assert(r.getDouble(0) === r.getDouble(2))
-    // serialize/deserialize round-trip across partitions + null handling
-    val big = spark.sparkContext.parallelize(
-      (1 to 1001).map(_.toDouble), 9).toDF("x")
-    assert(big.agg(graft.functions.GraftFunctions.medianExactNative($"x"))
-      .head.getDouble(0) === 501.0)
-    val allNull = Seq[Option[Double]](None, None).toDF("x")
-    assert(allNull.agg(graft.functions.GraftFunctions.medianExactNative($"x"))
-      .head.isNullAt(0))
+    // integral input across partitions, and decimal input
+    val big = spark.sparkContext.parallelize((1L to 1000L), 9).toDF("x")
+    val b = big.agg(GF.medianAny($"x"), median($"x")).head
+    assert(b.getDouble(0) === 500.5 && b.getDouble(0) === b.getDouble(1))
+    val dec = Seq(BigDecimal("1.25"), BigDecimal("2.5")).toDF("d")
+    val d = dec.agg(GF.medianAny($"d"), median($"d")).head
+    assert(d.getDouble(0) === 1.875 && d.getDouble(0) === d.getDouble(1))
+    // NULLs dropped; all-NULL -> NULL
+    val allNull = Seq[Option[Int]](None, None).toDF("x")
+    assert(allNull.agg(GF.medianAny($"x")).head.isNullAt(0))
+    // numbers resolve to the built-in, not to the MedianAny aggregate
+    assert(!big.agg(GF.medianAny($"x")).queryExecution.optimizedPlan
+      .toString.contains("median_any"))
+  }
+
+  test("property: built-in median == aggregator exactly on integers") {
+    // The speed-limit imputation and q_a10b rest on this: percentile
+    // interpolates a + (b - a) * 0.5, the aggregator takes (a + b) / 2;
+    // on integers both are exact, so the doubles are EQUAL (no epsilon).
+    val rnd = new scala.util.Random(11)
+    val rows = (0 until 200).flatMap { g =>
+      val bound = if (g % 2 == 0) 200 else Int.MaxValue
+      Seq.fill(1 + rnd.nextInt(40))((g, rnd.nextInt(bound) - bound / 2))
+    }
+    val r = rows.toDF("g", "x").repartition(5).groupBy("g")
+      .agg(median($"x"), GF.medianExact($"x")).collect()
+    assert(r.length === 200)
+    r.foreach(x => assert(x.getDouble(1) === x.getDouble(2), s"group ${x.getInt(0)}"))
   }
 
   test("median_any: polymorphic semantics per type (text lower-middle, timestamp midpoint, numeric mean)") {

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.ScalaAggregator
 import org.apache.spark.sql.functions._
 
 /** Physical-plan audits: the scale properties the 100 TB design rests on,
@@ -124,10 +126,16 @@ class PlanAuditSpec extends SparkTestBase {
 
   test("median imputation broadcasts the per-class median table") {
     val t = osm.OsmModel.microFixture(spark)
-    val p = osm.RoadGraph.imputeSpeedLimits(
+    val df = osm.RoadGraph.imputeSpeedLimits(
       osm.RoadGraph.excludeModes(osm.RoadGraph.carNetwork(t.ways)))
-      .queryExecution.executedPlan.toString
+    val p = df.queryExecution.executedPlan.toString
     assert(p.contains("BroadcastHashJoin"))
+    // the median is the built-in, not a typed Aggregator (ScalaAggregator)
+    df.collect()
+    val udafs = new AdaptiveSparkPlanHelper {}.collectWithSubqueries(
+        df.queryExecution.executedPlan) { case n => n.expressions }
+      .flatten.flatMap(_.collect { case a: ScalaAggregator[_, _, _] => a })
+    assert(udafs.isEmpty, udafs)
   }
 
   test("AQE is enabled in the session") {

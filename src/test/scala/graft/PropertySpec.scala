@@ -642,6 +642,25 @@ class PropertySpec extends SparkTestBase {
     }
   }
 
+  test("shortestPathTo ends on a zero-weight predecessor cycle") {
+    // Edges 5->3 (1), 5->4 (1), 3->4 (0), 4->3 (0): the local Dijkstra's
+    // smaller-predecessor tie rule sets pred(4) = 3 and pred(3) = 4; an
+    // unbounded walk back from 4 never reaches 5. walkBack stops after
+    // pred.size steps and names the cycle. Returning the right path
+    // (distance 1.0) is still open: ROADMAP direction 9.
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    import graft.osm.{GraphCheck => G}
+    val e = Seq((5L, 3L, 1.0), (5L, 4L, 1.0), (3L, 4L, 0.0), (4L, 3L, 0.0))
+      .toDF("start_node", "end_node", "w").localCheckpoint(true)
+    val run = Future(scala.util.Try(G.shortestPathTo(e, 5L, 4L)))(
+      ExecutionContext.global)
+    val r = Await.result(run, 120.seconds) // a spinning walk times out here
+    val ex = intercept[IllegalStateException](r.get)
+    assert(ex.getMessage.contains("5 -> 4") &&
+      ex.getMessage.matches(".*cycle through node [34]$"), ex.getMessage)
+  }
+
   test("LocalGate.rows: one probe; None at t <= 0, above t, or on a NULL") {
     import graft.osm.LocalGate
     val five = (1L to 5L).toDF("v").localCheckpoint(true)
