@@ -448,35 +448,37 @@ object Geo {
     *
     * 100 TB shape: pure per-row HOF expression — scan-local, no
     * shuffle, no UDF. */
-  def bufferConvex(ring: Column, r: Double, quadSegs: Int = 8): Column = {
-    val n = size(ring)
-    val twoPi = 2 * math.Pi
-    val stepRad = math.Pi / 2 / quadSegs
-    flatten(transform(sequence(lit(0), n - 1), i => {
-      val cur = element_at(ring, i + 1)
-      val prev = element_at(ring, pmod(i - 1 + n, n) + 1)
-      val nxt = element_at(ring, pmod(i + 1, n) + 1)
-      def normalAngle(a: Column, b: Column): Column = {
-        // outward (right-hand) normal of edge a->b for a CCW ring:
-        // (dy, -dx) — atan2 normalizes, so no explicit length division
-        val dx = b.getField("lon") - a.getField("lon")
-        val dy = b.getField("lat") - a.getField("lat")
-        atan2(-dx, dy)
-      }
-      val a1 = normalAngle(prev, cur)
-      val delta = pmod(normalAngle(cur, nxt) - a1, lit(twoPi))
-      val steps = greatest(ceil(delta / stepRad).cast("int"), lit(1))
-      // collinear vertex: delta == 0 would emit the same point at j=0
-      // and j=1 (a degenerate zero-length ring edge) — emit one point
-      val hi = when(delta > 0d, steps).otherwise(lit(0))
-      transform(sequence(lit(0), hi), j => {
-        val ang = a1 + delta * j.cast("double") / steps.cast("double")
-        struct(
-          (cur.getField("lon") + lit(r) * cos(ang)).as("lon"),
-          (cur.getField("lat") + lit(r) * sin(ang)).as("lat"))
-      })
-    }))
-  }
+  def bufferConvex(ring: Column, r: Double, quadSegs: Int = 8): Column =
+    // bound once per row: each vertex reads the ring three times
+    GraftFunctions.let(ring) { ring =>
+      val n = size(ring)
+      val twoPi = 2 * math.Pi
+      val stepRad = math.Pi / 2 / quadSegs
+      flatten(transform(sequence(lit(0), n - 1), i => {
+        val cur = element_at(ring, i + 1)
+        val prev = element_at(ring, pmod(i - 1 + n, n) + 1)
+        val nxt = element_at(ring, pmod(i + 1, n) + 1)
+        def normalAngle(a: Column, b: Column): Column = {
+          // outward (right-hand) normal of edge a->b for a CCW ring:
+          // (dy, -dx) — atan2 normalizes, so no explicit length division
+          val dx = b.getField("lon") - a.getField("lon")
+          val dy = b.getField("lat") - a.getField("lat")
+          atan2(-dx, dy)
+        }
+        val a1 = normalAngle(prev, cur)
+        val delta = pmod(normalAngle(cur, nxt) - a1, lit(twoPi))
+        val steps = greatest(ceil(delta / stepRad).cast("int"), lit(1))
+        // collinear vertex: delta == 0 would emit the same point at j=0
+        // and j=1 (a degenerate zero-length ring edge) — emit one point
+        val hi = when(delta > 0d, steps).otherwise(lit(0))
+        transform(sequence(lit(0), hi), j => {
+          val ang = a1 + delta * j.cast("double") / steps.cast("double")
+          struct(
+            (cur.getField("lon") + lit(r) * cos(ang)).as("lon"),
+            (cur.getField("lat") + lit(r) * sin(ang)).as("lat"))
+        })
+      }))
+    }
 
   /** ST_Buffer of a POINT: the disc of radius `r` as a regular
     * (4·quadSegs)-gon, CCW from angle 0 — PostGIS point-buffer
@@ -558,27 +560,30 @@ object Geo {
     * equi-join (the reference's own form is flagged "Does not work
     * with large maps").  */
   def lineIntersections(lineA: Column, lineB: Column): Column = {
-    val hits = flatten(transform(lineSegs(lineA), ea =>
-      flatten(transform(lineSegs(lineB), eb => {
-        val a1 = ea.getField("a"); val a2 = ea.getField("b")
-        val b1 = eb.getField("a"); val b2 = eb.getField("b")
-        val rx = a2.getField("lon") - a1.getField("lon")
-        val ry = a2.getField("lat") - a1.getField("lat")
-        val sx = b2.getField("lon") - b1.getField("lon")
-        val sy = b2.getField("lat") - b1.getField("lat")
-        val qpx = b1.getField("lon") - a1.getField("lon")
-        val qpy = b1.getField("lat") - a1.getField("lat")
-        // try_divide: parallel/collinear pairs (den = 0) yield null t/u,
-        // which fails `between` into the empty branch — ANSI-safe
-        // without a second pass over the pair
-        val den = rx * sy - ry * sx
-        val t = try_divide(qpx * sy - qpy * sx, den)
-        val u = try_divide(qpx * ry - qpy * rx, den)
-        val hit = array(struct((a1.getField("lon") + t * rx).as("lon"),
-          (a1.getField("lat") + t * ry).as("lat")))
-        when(t.between(0.0, 1.0) && u.between(0.0, 1.0), hit)
-          .otherwise(slice(hit, lit(1), lit(0)))
-      }))))
+    // B's segments are bound once per row, not rebuilt per segment of A
+    val hits = GraftFunctions.let(lineSegs(lineB)) { segsB =>
+      flatten(transform(lineSegs(lineA), ea =>
+        flatten(transform(segsB, eb => {
+          val a1 = ea.getField("a"); val a2 = ea.getField("b")
+          val b1 = eb.getField("a"); val b2 = eb.getField("b")
+          val rx = a2.getField("lon") - a1.getField("lon")
+          val ry = a2.getField("lat") - a1.getField("lat")
+          val sx = b2.getField("lon") - b1.getField("lon")
+          val sy = b2.getField("lat") - b1.getField("lat")
+          val qpx = b1.getField("lon") - a1.getField("lon")
+          val qpy = b1.getField("lat") - a1.getField("lat")
+          // try_divide: parallel/collinear pairs (den = 0) yield null t/u,
+          // which fails `between` into the empty branch — ANSI-safe
+          // without a second pass over the pair
+          val den = rx * sy - ry * sx
+          val t = try_divide(qpx * sy - qpy * sx, den)
+          val u = try_divide(qpx * ry - qpy * rx, den)
+          val hit = array(struct((a1.getField("lon") + t * rx).as("lon"),
+            (a1.getField("lat") + t * ry).as("lat")))
+          when(t.between(0.0, 1.0) && u.between(0.0, 1.0), hit)
+            .otherwise(slice(hit, lit(1), lit(0)))
+        }))))
+    }
     array_sort(array_distinct(hits))
   }
 
@@ -853,9 +858,11 @@ object Geo {
     val x1 = floor((array_max(xs) + pad) / cellDeg).cast("long")
     val y0 = floor((array_min(ys) - pad) / cellDeg).cast("long")
     val y1 = floor((array_max(ys) + pad) / cellDeg).cast("long")
-    flatten(transform(sequence(x0, x1), cx =>
-      transform(sequence(y0, y1), cy =>
-        struct(cx.as("cx"), cy.as("cy")))))
+    // the row of y cells is bound once, not rebuilt per x cell
+    GraftFunctions.let(sequence(y0, y1)) { cys =>
+      flatten(transform(sequence(x0, x1), cx =>
+        transform(cys, cy => struct(cx.as("cx"), cy.as("cy")))))
+    }
   }
 
   /** Nearest-EDGE snap as a JOIN, grid-bucketed (never all-pairs): for

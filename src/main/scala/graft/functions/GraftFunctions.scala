@@ -177,6 +177,26 @@ object GraftFunctions {
     spark.conf.set(SQLConf.ICU_CASE_MAPPINGS_ENABLED.key, "false")
   }
 
+  /** `body(v)` with `v` evaluated once per row — the engine's one way to
+    * share a per-row value between several uses inside one expression.
+    *
+    * The once-per-row rule: a lambda body never re-evaluates a
+    * row-invariant array or string. A higher-order function evaluates
+    * its lambda once per element, and Catalyst eliminates no common
+    * subexpression across those calls, so a document's token array used
+    * inside its n-gram windows is re-split per window (O(L²) for an
+    * L-token text) unless it is bound first. A caller holding the
+    * DataFrame may instead project the value as a column (as
+    * [[graft.llm.TextAnalysis.chunkByTokens]] does), provided the
+    * projection is referenced more than once so CollapseProject cannot
+    * inline it back. Here the value rides a one-element array,
+    * `element_at(transform(array(v), x => body(x)), 1)`, so the body
+    * runs once and every use of `x` reads the bound value. NULL `v`
+    * binds as NULL, so `let(v)(f)` returns exactly `f(v)`.
+    * `LambdaAuditSpec` holds every registry query to the rule. */
+  def let(v: Column)(body: Column => Column): Column =
+    element_at(transform(array(v), body), 1)
+
   /** F1 as a pure built-in composition — semantically identical to the
     * [[ExtractInts]] expression (tested equivalent); stays entirely in
     * codegen'd built-ins. get_ints_from_text per general-functions.sql:3-5.

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
+import graft.functions.GraftFunctions.let
+
 /** Corpus-curation operators: deterministic sampling / split assignment
   * and benchmark decontamination. Beyond the reference's surface — part
   * of the engine's training-data-pipeline family (SURVEY §2 sibling of
@@ -225,24 +227,29 @@ object Curation {
       minAvgTokenLen: Double = 3.0, maxAvgTokenLen: Double = 10.0,
       maxSymbolRatio: Double = 0.1, minStopwordHits: Int = 2,
       maxDupTokenFrac: Double = 0.6): DataFrame = {
-    val (okLen, okWordLen, okSymbol, okStopwords, okRepetition) =
-      gopherFlags(text, minTokens, maxTokens, minAvgTokenLen,
-        maxAvgTokenLen, maxSymbolRatio, minStopwordHits, maxDupTokenFrac)
-    docs.select(col(idCol),
-      okLen.as("ok_len"), okWordLen.as("ok_word_len"),
-      okSymbol.as("ok_symbol"), okStopwords.as("ok_stopwords"),
-      okRepetition.as("ok_repetition"),
-      (okLen && okWordLen && okSymbol && okStopwords && okRepetition)
-        .as("pass"))
+    // the flags struct is projected once and read six times, so each
+    // document is split and scored once
+    val flags = let(TextAnalysis.tokens(text)) { toks =>
+      val (okLen, okWordLen, okSymbol, okStopwords, okRepetition) =
+        gopherFlags(text, toks, minTokens, maxTokens, minAvgTokenLen,
+          maxAvgTokenLen, maxSymbolRatio, minStopwordHits, maxDupTokenFrac)
+      struct(okLen.as("ok_len"), okWordLen.as("ok_word_len"),
+        okSymbol.as("ok_symbol"), okStopwords.as("ok_stopwords"),
+        okRepetition.as("ok_repetition"),
+        (okLen && okWordLen && okSymbol && okStopwords && okRepetition)
+          .as("pass"))
+    }
+    docs.select(col(idCol), flags.as("__flags"))
+      .select(col(idCol), col("__flags.*"))
   }
 
-  /** The five [[gopherFilter]] rule columns, unbound — shared by the
+  /** The five [[gopherFilter]] rule columns of `text`, whose whitespace
+    * tokens `toks` the caller has bound once per row — shared by the
     * audit-table form above and the scan-local [[gopherPass]]. */
-  private def gopherFlags(text: Column, minTokens: Int, maxTokens: Int,
-      minAvgTokenLen: Double, maxAvgTokenLen: Double,
+  private def gopherFlags(text: Column, toks: Column, minTokens: Int,
+      maxTokens: Int, minAvgTokenLen: Double, maxAvgTokenLen: Double,
       maxSymbolRatio: Double, minStopwordHits: Int,
       maxDupTokenFrac: Double): (Column, Column, Column, Column, Column) = {
-    val toks = TextAnalysis.tokens(text)
     val n = size(toks)
     val nChars = length(text)
     val okLen = n.between(minTokens, maxTokens)
@@ -269,12 +276,13 @@ object Curation {
       minTokens: Int = 50, maxTokens: Int = 100000,
       minAvgTokenLen: Double = 3.0, maxAvgTokenLen: Double = 10.0,
       maxSymbolRatio: Double = 0.1, minStopwordHits: Int = 2,
-      maxDupTokenFrac: Double = 0.6): Column = {
-    val (okLen, okWordLen, okSymbol, okStopwords, okRepetition) =
-      gopherFlags(text, minTokens, maxTokens, minAvgTokenLen,
-        maxAvgTokenLen, maxSymbolRatio, minStopwordHits, maxDupTokenFrac)
-    okLen && okWordLen && okSymbol && okStopwords && okRepetition
-  }
+      maxDupTokenFrac: Double = 0.6): Column =
+    let(TextAnalysis.tokens(text)) { toks =>
+      val (okLen, okWordLen, okSymbol, okStopwords, okRepetition) =
+        gopherFlags(text, toks, minTokens, maxTokens, minAvgTokenLen,
+          maxAvgTokenLen, maxSymbolRatio, minStopwordHits, maxDupTokenFrac)
+      okLen && okWordLen && okSymbol && okStopwords && okRepetition
+    }
 
   /** Temperature-scaled domain mixture weights — the sampling weights a
     * multi-domain pre-training run draws with: w_g ∝ (n_g / N)^alpha,

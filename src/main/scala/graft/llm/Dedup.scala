@@ -33,13 +33,15 @@ object Dedup {
       sequence(lit(1), greatest(length(text) - (k - 1), lit(1))),
       i => text.substr(i, lit(k)))
 
-  /** Word n-gram set of a text column. */
-  def wordNgrams(text: Column, n: Int): Column = {
-    val toks = split(text, "\\s+")
-    array_distinct(transform(
-      sequence(lit(0), greatest(size(toks) - n, lit(0))),
-      i => array_join(slice(toks, i + 1, lit(n)), " ")))
-  }
+  /** Word n-gram set of a text column; a text of fewer than `n` tokens
+    * is its own one gram. The tokens are split once per row
+    * ([[graft.functions.GraftFunctions.let]]). */
+  def wordNgrams(text: Column, n: Int): Column =
+    graft.functions.GraftFunctions.let(TextAnalysis.tokens(text)) { toks =>
+      array_distinct(transform(
+        sequence(lit(0), greatest(size(toks) - n, lit(0))),
+        i => array_join(slice(toks, i + 1, lit(n)), " ")))
+    }
 
   /** Portable 31-bit content hash: first 8 hex chars of md5, parsed as
     * an int, reduced mod p = 2^31-1. md5 is the one hash both this

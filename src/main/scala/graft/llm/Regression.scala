@@ -138,10 +138,10 @@ object Regression {
     * vocabulary size (the hashing trick). */
   def hashedNgramFeatures(docs: DataFrame, idCol: String, text: Column,
       dim: Int, maxN: Int = 2, binary: Boolean = false): DataFrame = {
-    val toks = TextAnalysis.tokens(text)
-    val grams = (1 to maxN)
-      .map(TextAnalysis.rawNgramsOfTokens(toks, _))
-      .reduce(concat(_, _))
+    val grams = graft.functions.GraftFunctions.let(TextAnalysis.tokens(text)) {
+      toks => (1 to maxN).map(TextAnalysis.rawNgramsOfTokens(toks, _))
+        .reduce(concat(_, _))
+    }
     val cnt = docs.select(col(idCol), explode(grams).as("__g"))
       .select(col(idCol),
         pmod(Dedup.md5Hash31(col("__g")), lit(dim.toLong)).as("bucket"))

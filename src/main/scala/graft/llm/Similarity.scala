@@ -4,6 +4,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
+import graft.functions.GraftFunctions.let
+
 /** Similarity search over an embedding column (`ARRAY<FLOAT>`).
   *
   * Two paths, per the standard ANN playbook:
@@ -196,15 +198,18 @@ object Similarity {
     * scan, 8 bytes of index per 256-byte vector at (m=8, k≤256). */
   def pqEncode(vec: Column, codebooks: Seq[Seq[Seq[Double]]]): Column = {
     val sub = codebooks.head.head.length
-    val codes = codebooks.zipWithIndex.map { case (cb, mi) =>
-      val cc = cb.map(c => c.foldLeft(0.0)((s, x) => s + x * x))
-      val vm = slice(vec, mi * sub + 1, sub)
-      val scores = zip_with(
-        graft.functions.GraftFunctions.matVec(cb, vm),
-        typedlit(cc), (d, n2) => n2 - d * 2)
-      (array_position(scores, array_min(scores)) - 1).cast("int")
+    // `vec` and each subspace's scores are bound once per row: the
+    // vector feeds m slices, the scores both the min and its position
+    let(vec) { v =>
+      array(codebooks.zipWithIndex.map { case (cb, mi) =>
+        val cc = cb.map(c => c.foldLeft(0.0)((s, x) => s + x * x))
+        let(zip_with(
+            graft.functions.GraftFunctions.matVec(cb, slice(v, mi * sub + 1, sub)),
+            typedlit(cc), (d, n2) => n2 - d * 2)) { scores =>
+          (array_position(scores, array_min(scores)) - 1).cast("int")
+        }
+      }: _*)
     }
-    array(codes: _*)
   }
 
   /** Per-query ADC lookup table as ONE flat `ARRAY<DOUBLE>` of length
@@ -212,14 +217,19 @@ object Similarity {
     * q·q − 2 q·c + c·c (the structure the oracle mirrors). */
   def pqAdcTable(vec: Column, codebooks: Seq[Seq[Seq[Double]]]): Column = {
     val sub = codebooks.head.head.length
-    val parts = codebooks.zipWithIndex.map { case (cb, mi) =>
-      val cc = cb.map(c => c.foldLeft(0.0)((s, x) => s + x * x))
-      val vm = slice(vec, mi * sub + 1, sub)
-      val qq = dot(vm, vm)
-      zip_with(graft.functions.GraftFunctions.matVec(cb, vm),
-        typedlit(cc), (d, n2) => qq - d * 2 + n2)
+    // bound once per row: the vector, each sub-vector, and its q·q —
+    // inside the zip_with lambda they would be rebuilt per centroid
+    let(vec) { v =>
+      concat(codebooks.zipWithIndex.map { case (cb, mi) =>
+        val cc = cb.map(c => c.foldLeft(0.0)((s, x) => s + x * x))
+        let(slice(v, mi * sub + 1, sub)) { vm =>
+          let(dot(vm, vm)) { qq =>
+            zip_with(graft.functions.GraftFunctions.matVec(cb, vm),
+              typedlit(cc), (d, n2) => qq - d * 2 + n2)
+          }
+        }
+      }: _*)
     }
-    concat(parts: _*)
   }
 
   /** Asymmetric-distance (ADC) top-k: corpus is scanned as CODES ONLY
@@ -649,30 +659,24 @@ object Similarity {
     * Returns (scaleCol, codesCol); all-zero vectors get scale 0 and
     * all-zero codes.
     *
-    * PERF CAVEAT: the codes lambda closes over the O(dim) scale fold,
-    * so a single-projection plan evaluates it per ELEMENT — O(dim²)
-    * per row, real at dim 1024+. Use [[withInt8]] on DataFrames: it
-    * materializes scale as its own projection (referenced twice in the
-    * codes lambda, so CollapseProject keeps the alias) and costs
-    * O(dim) per row. This Column pair remains the semantic
-    * definition for composition in tests and single-use expressions. */
+    * The codes bind the scale once per row, so the O(dim) scale fold
+    * never runs per element. [[withInt8]] projects both as columns. */
   def quantizeInt8(vec: Column): (Column, Column) = {
     val scale = array_max(transform(vec, x => abs(x.cast("double")))) / 127.0
     (scale, int8Codes(vec, scale))
   }
 
-  /** code_i = round(x_i / scale), 0 where scale is 0. Pass a
-    * MATERIALIZED scale column (see [[withInt8]]) to keep the per-row
-    * cost O(dim). */
+  /** code_i = round(x_i / scale), 0 where scale is 0; `scale` is bound
+    * once per row, not evaluated per element. */
   private def int8Codes(vec: Column, scale: Column): Column =
-    transform(vec, x =>
-      when(scale === 0.0, 0)
-        .otherwise(round(x.cast("double") / scale).cast("int")))
+    let(scale) { s =>
+      transform(vec, x =>
+        when(s === 0.0, 0)
+          .otherwise(round(x.cast("double") / s).cast("int")))
+    }
 
-  /** [[quantizeInt8]] at O(dim) per row: scale lands in its own
-    * projection, codes reference it as a bound attribute. The scale
-    * alias is non-cheap and referenced twice, so CollapseProject will
-    * not inline it back into the codes lambda. */
+  /** [[quantizeInt8]] as two columns: the scale in its own projection,
+    * the codes reading it as an attribute. */
   def withInt8(df: DataFrame, vec: Column, scaleName: String,
       codesName: String): DataFrame = {
     df.withColumn(scaleName,
@@ -773,8 +777,13 @@ object Similarity {
     * Materialize with withColumn before reusing. */
   def centroidScores(vec: Column, centroids: Seq[Seq[Double]]): Column = {
     val norms = centroids.map(c => math.sqrt(c.foldLeft(0.0)((s, x) => s + x * x)))
-    val dots = graft.functions.GraftFunctions.matVec(centroids, vec)
-    zip_with(dots, typedlit(norms), (d, n) => d / (norm(vec) * n))
+    // the vector and its norm are bound once per row, not per centroid
+    let(vec) { v =>
+      let(norm(v)) { nv =>
+        zip_with(graft.functions.GraftFunctions.matVec(centroids, v),
+          typedlit(norms), (d, n) => d / (nv * n))
+      }
+    }
   }
 
   /** Argmax over a materialized scores column: 0-based centroid id,

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.let
+
 /** Text-analysis operators for large-scale training-data pipelines:
   * tokenization, quality scoring, language identification, document
   * fingerprinting. All pure column compositions (codegen'd built-ins,
@@ -11,7 +13,10 @@ import org.apache.spark.sql.functions._
   */
 object TextAnalysis {
 
-  /** Whitespace tokens. */
+  /** Whitespace tokens. One regex split per call: an expression that
+    * uses a document's tokens more than once, or inside a lambda, binds
+    * them once per row with [[graft.functions.GraftFunctions.let]]
+    * (the once-per-row rule stated there). */
   def tokens(text: Column): Column = split(text, "\\s+")
 
   /** BPE-ish subword-boundary tokens: word runs and single punctuation
@@ -23,8 +28,7 @@ object TextAnalysis {
 
   /** Quality features: length, token stats, punctuation/digit/upper
     * ratios, stopword ratio. Returns a struct column. */
-  def qualityFeatures(text: Column): Column = {
-    val toks = tokens(text)
+  def qualityFeatures(text: Column): Column = let(tokens(text)) { toks =>
     val n = length(text).cast("double")
     struct(
       length(text).cast("long").as("n_chars"),
@@ -83,8 +87,18 @@ object TextAnalysis {
     * codepoints present -> 'zh' short-circuit. Deterministic and
     * SQL-expressible (oracle mirrors the same formula).
     */
-  def languageId(text: Column): Column = {
-    val toks = tokens(lower(text))
+  def languageId(text: Column): Column =
+    when(text.rlike("[\\u4e00-\\u9fff]"), lit("zh"))
+      .otherwise(let(tokens(lower(text))) { toks =>
+        let(bestProfile(toks)) { best =>
+          when(best.getField("hits") <= 0, lit("und"))
+            .otherwise(best.getField("lang"))
+        }
+      })
+
+  /** (hits, lang) of the [[LangProfiles]] entry with the most stopword
+    * hits among `toks`, ties to the alphabetically first language. */
+  private def bestProfile(toks: Column): Column = {
     val scores = LangProfiles.map { case (lang, sw) =>
       struct(size(filter(toks, t => t.isin(sw: _*))).as("hits"),
         lit(lang).as("lang"))
@@ -93,7 +107,7 @@ object TextAnalysis {
     // tie-break we negate via sorting on (hits desc, lang asc): use
     // array_sort over (hits, lang) and take the element that sorts last
     // on hits but first on lang: encode as (hits, reversed-rank lang).
-    val best = aggregate(
+    aggregate(
       array(scores: _*),
       struct(lit(-1).as("hits"), lit("und").as("lang")),
       (acc, x) =>
@@ -102,9 +116,6 @@ object TextAnalysis {
             x.getField("lang") < acc.getField("lang") &&
             acc.getField("hits") > lit(-1), x)
           .otherwise(acc))
-    when(text.rlike("[\\u4e00-\\u9fff]"), lit("zh"))
-      .when(best.getField("hits") <= 0, lit("und"))
-      .otherwise(best.getField("lang"))
   }
 
   /** Top-`k` TF-IDF terms per document. Classic two-aggregate shape,
@@ -149,15 +160,18 @@ object TextAnalysis {
   private[graft] def rawWordNgrams(text: Column, n: Int): Column =
     rawNgramsOfTokens(tokens(text), n)
 
-  /** Space-joined n-gram windows sliced off an ALREADY-tokenized
-    * array — the one shared window expression (rawWordNgrams,
-    * Dedup.substringDedup, Regression.hashedNgramFeatures), so callers
-    * holding a token array pay one regex split per scan, not two. */
+  /** Space-joined n-gram windows sliced off a token array — the one
+    * shared window expression (rawWordNgrams,
+    * Regression.hashedNgramFeatures). `toks` is bound once per row
+    * ([[graft.functions.GraftFunctions.let]]), so a `tokens(text)`
+    * argument is split once per document, not once per window. */
   private[graft] def rawNgramsOfTokens(toks: Column, n: Int): Column =
-    when(size(toks) >= n,
-      transform(sequence(lit(0), size(toks) - n),
-        i => array_join(slice(toks, i + 1, lit(n)), " ")))
-      .otherwise(array().cast("array<string>"))
+    let(toks) { t =>
+      when(size(t) >= n,
+        transform(sequence(lit(0), size(t) - n),
+          i => array_join(slice(t, i + 1, lit(n)), " ")))
+        .otherwise(array().cast("array<string>"))
+    }
 
   def topNgrams(docs: DataFrame, text: Column, n: Int = 2,
       k: Int = 20): DataFrame = {

@@ -103,30 +103,44 @@ object GraphCheck {
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
-      val viaNeighbor = sym
-        .join(labels, sym("b") === labels("node_id"))
-        .select(col("a").as("node_id"), col("component"))
-      val lowered = labels.unionByName(viaNeighbor)
-        .groupBy("node_id").agg(min(col("component")).as("component"))
-      // pointer jump: component := component's component (one-hop chain
-      // contraction). Every label value is a node_id key of `lowered`,
-      // so the inner join is total.
-      val ptr = lowered
-        .select(col("node_id").as("__c"), col("component").as("__cc"))
       // cast BEFORE summing: planet-scale node ids (~1e10) over ~1e9
       // nodes overflow a Long accumulator (ANSI mode throws); a
       // decimal(38,0) accumulator has ~19 digits of headroom. An empty
       // edge set yields a null sum — treat it as converged.
       val (next, s) = checkpointObserved[java.math.BigDecimal](
-        lowered.join(ptr, lowered("component") === ptr("__c"))
-          .select(col("node_id"), col("__cc").as("component")),
-        sum(col("component").cast("decimal(38,0)")))
+        ccRound(sym, labels), sum(col("component").cast("decimal(38,0)")))
       converged = s == null || s.compareTo(prevSum) == 0
       prevSum = if (s == null) prevSum else s
       labels = next
       i += 1
     }
     (labels, i)
+  }
+
+  /** One hash-min round of [[connectedComponentsDistributed]] over the
+    * symmetric edges `(a, b)` and the current `(node_id, component)`
+    * labels: each node takes the least label among itself and its
+    * neighbours, then jumps to its label's own label. */
+  private[graft] def ccRound(sym: DataFrame, labels: DataFrame): DataFrame = {
+    val viaNeighbor = sym
+      .join(labels, sym("b") === labels("node_id"))
+      .select(col("a").as("node_id"), col("component"))
+    // The jump's two sides must plan alike, so that the aggregate's
+    // shuffle runs once and the other side reuses it. An `===` jump
+    // infers `isnotnull(node_id)` below the aggregate on the `ptr` side
+    // only; `<=>` infers nothing. Rows are unchanged: a label is NULL
+    // only on a NULL node and never matched the jump, and a non-NULL
+    // label does not match a NULL node under `<=>` either.
+    val lowered = labels.unionByName(viaNeighbor)
+      .groupBy("node_id").agg(min(col("component")).as("component"))
+      .filter(col("component").isNotNull)
+    // pointer jump: component := component's component (one-hop chain
+    // contraction). Every label value is a node_id key of `lowered`,
+    // so the inner join is total.
+    val ptr = lowered
+      .select(col("node_id").as("__c"), col("component").as("__cc"))
+    lowered.join(ptr, lowered("component") <=> ptr("__c"))
+      .select(col("node_id"), col("__cc").as("component"))
   }
 
   /** `df` materialized by `localCheckpoint`, plus the value of

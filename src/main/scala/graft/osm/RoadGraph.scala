@@ -253,10 +253,12 @@ object RoadGraph {
     // 1-based element positions; sequence(1, n) never runs backwards
     val interior = filter(sequence(lit(1), n),
       p => p > 1 && p < n && element_at(col("__ns"), p).getField("sh"))
-    val bounds = concat(array(lit(1)), interior, array(n))
-    val segments = transform(sequence(lit(1), size(bounds) - 1), i =>
-      slice(col("__ns"), element_at(bounds, i),
-        element_at(bounds, i + lit(1)) - element_at(bounds, i) + lit(1)))
+    // the boundaries are bound once per way, not rebuilt per segment
+    val segments = GF.let(concat(array(lit(1)), interior, array(n))) { bounds =>
+      transform(sequence(lit(1), size(bounds) - 1), i =>
+        slice(col("__ns"), element_at(bounds, i),
+          element_at(bounds, i + lit(1)) - element_at(bounds, i) + lit(1)))
+    }
     ways
       .select(col(wayCol), explode(segments).as("__seg"))
       .select(col(wayCol),

@@ -1093,6 +1093,121 @@ class LlmSpec extends SparkTestBase {
       (3L, 0L, 7L, 4L)))
   }
 
+  test("token helpers split once per row and return the inline re-split forms' rows") {
+    // the inline forms are the helpers as they were before the token
+    // array was bound once per row: `split(text)` rebuilt at each use
+    def toks(t: org.apache.spark.sql.Column) = split(t, "\\s+")
+    def inlineRawNgrams(t: org.apache.spark.sql.Column, n: Int) =
+      when(size(toks(t)) >= n,
+        transform(sequence(lit(0), size(toks(t)) - n),
+          i => array_join(slice(toks(t), i + 1, lit(n)), " ")))
+        .otherwise(array().cast("array<string>"))
+    def inlineNgramSet(t: org.apache.spark.sql.Column, n: Int) =
+      array_distinct(transform(
+        sequence(lit(0), greatest(size(toks(t)) - n, lit(0))),
+        i => array_join(slice(toks(t), i + 1, lit(n)), " ")))
+    def inlineGopherPass(t: org.apache.spark.sql.Column) = {
+      val n = size(toks(t))
+      n.between(3, 40) &&
+        (length(t).cast("double") / n).between(2.0, 8.0) &&
+        (length(regexp_replace(t, "[^\\p{Punct}]", "")).cast("double") /
+          length(t)) <= 0.1 &&
+        size(filter(toks(t), w => w.isin(TextAnalysis.EnStopwords: _*))) >= 1 &&
+        ((n - size(array_distinct(toks(t)))).cast("double") / n) <= 0.6
+    }
+    def inlineLanguageId(t: org.apache.spark.sql.Column) = {
+      val lt = toks(lower(t))
+      val best = aggregate(
+        array(TextAnalysis.LangProfiles.map { case (lang, sw) =>
+          struct(size(filter(lt, w => w.isin(sw: _*))).as("hits"),
+            lit(lang).as("lang"))
+        }: _*),
+        struct(lit(-1).as("hits"), lit("und").as("lang")),
+        (acc, x) =>
+          when(x.getField("hits") > acc.getField("hits"), x)
+            .when(x.getField("hits") === acc.getField("hits") &&
+              x.getField("lang") < acc.getField("lang") &&
+              acc.getField("hits") > lit(-1), x)
+            .otherwise(acc))
+      when(t.rlike("[\\u4e00-\\u9fff]"), lit("zh"))
+        .when(best.getField("hits") <= 0, lit("und"))
+        .otherwise(best.getField("lang"))
+    }
+    // NULL, empty, blank, fewer than / exactly n tokens, leading and
+    // trailing whitespace and runs (an empty first token), non-ASCII
+    // words; then seeded random texts over a mixed-language vocabulary
+    // with runs of mixed whitespace
+    val fixed = Seq[String](null, "", " ", "   ", "solo", "a b", "a b c",
+      " a b c", "a b c ", "  a \t b\n\n c  d ", "naïve café à la carte",
+      "straße über die brücke und der fluss", "el niño y la niña",
+      "中文 文本 the cat", "the  the   the the")
+    val rnd = new scala.util.Random(20261020L)
+    val vocab = Seq("the", "and", "of", "is", "der", "und", "ist", "el", "la",
+      "de", "les", "est", "fox", "brücke", "café", "niño", "über", "ok!",
+      "x", "y", "z", "中文")
+    val seps = Seq(" ", " ", " ", "  ", "\t", "\n", " \t ")
+    val random = Seq.fill(60) {
+      val words = Seq.fill(rnd.nextInt(14))(vocab(rnd.nextInt(vocab.size)))
+      val lead = if (rnd.nextInt(4) == 0) seps(rnd.nextInt(seps.size)) else ""
+      val trail = if (rnd.nextInt(4) == 0) seps(rnd.nextInt(seps.size)) else ""
+      lead + words.map(_ + seps(rnd.nextInt(seps.size))).mkString.dropRight(1) + trail
+    }
+    // repartitioned, so the projections run in the codegen'd stage
+    // rather than being folded into the local relation
+    val fix = (fixed ++ random).zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text").repartition(3)
+    def sameRows(what: String, got: org.apache.spark.sql.Column,
+        want: org.apache.spark.sql.Column): Unit =
+      fix.select($"doc_id", $"text", got, want).collect().foreach { r =>
+        assert(r.get(2) == r.get(3),
+          s"$what differs on doc ${r.getLong(0)} [${r.getString(1)}]")
+      }
+    for (n <- Seq(1, 2, 3, 8)) {
+      sameRows(s"rawWordNgrams n=$n", TextAnalysis.rawWordNgrams($"text", n),
+        inlineRawNgrams($"text", n))
+      sameRows(s"wordNgrams n=$n", Dedup.wordNgrams($"text", n),
+        inlineNgramSet($"text", n))
+    }
+    sameRows("gopherPass", Curation.gopherPass($"text", minTokens = 3,
+        maxTokens = 40, minAvgTokenLen = 2.0, maxAvgTokenLen = 8.0,
+        maxSymbolRatio = 0.1, minStopwordHits = 1, maxDupTokenFrac = 0.6),
+      inlineGopherPass($"text"))
+    sameRows("languageId", TextAnalysis.languageId($"text"),
+      inlineLanguageId($"text"))
+    // the inputs reach every branch: a passing and a failing gopher doc,
+    // each language, and NULL rows
+    val pass = fix.select(Curation.gopherPass($"text", minTokens = 3,
+        maxTokens = 40, minAvgTokenLen = 2.0, maxAvgTokenLen = 8.0,
+        maxSymbolRatio = 0.1, minStopwordHits = 1, maxDupTokenFrac = 0.6))
+      .collect().map(r => Option(r.get(0))).toSet
+    assert(pass === Set(Some(true), Some(false), None))
+    val langs = fix.select(TextAnalysis.languageId($"text")).collect()
+      .map(r => Option(r.getString(0))).toSet
+    assert(Set("en", "de", "es", "fr", "zh", "und").map(Option(_)).subsetOf(langs))
+    // duplicatePassages over the same texts: its spans are the
+    // gaps-and-islands merge of the inline form's repeated windows
+    val n = 2
+    val grams = fix.select($"doc_id",
+        posexplode(inlineRawNgrams($"text", n)).as(Seq("pos", "g")))
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
+    val repeated = grams.groupBy(_._3).filter(_._2.length >= 2).keySet
+    val want = grams.filter(g => repeated(g._3)).groupBy(_._1).toSeq
+      .flatMap { case (doc, gs) =>
+        val ps = gs.map(_._2).sorted
+        val islands = ps.tail.foldLeft(List(List(ps.head))) {
+          case (cur :: done, p) =>
+            if (p > cur.head + n) List(p) :: cur :: done else (p :: cur) :: done
+          case (Nil, _) => Nil
+        }
+        islands.map(is => (doc, is.min.toLong, (is.max + n - 1).toLong,
+          is.size.toLong))
+      }.toSet
+    val got = Dedup.duplicatePassages(fix, "doc_id", $"text", n = n)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3))).toSet
+    assert(want.nonEmpty && got === want)
+  }
+
   test("normalizeUrl: each rewrite rule on hand-built URLs; non-defaults survive") {
     val cases = Seq(
       // every rule at once: case, www, default port, utm, slash, fragment

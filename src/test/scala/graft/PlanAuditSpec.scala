@@ -250,11 +250,11 @@ class PlanAuditSpec extends SparkTestBase {
   }
 
   test("int8 quantization: scale fold evaluates once per ROW, not per element") {
-    // withInt8 materializes the O(dim) array_max fold as its own alias;
-    // if CollapseProject ever inlined it back into the codes lambda the
-    // fold would run per element — O(dim²) per row (VERDICT r7 #2). The
-    // alias is referenced 2x in the lambda plus 1x as the scale output,
-    // which is what keeps the projection split; this pins that.
+    // withInt8 materializes the O(dim) array_max fold as its own alias
+    // and the codes bind it once per row; a fold inside the codes lambda
+    // would run per element — O(dim²) per row (VERDICT r7 #2). The alias
+    // is referenced by the codes and by the scale output, which keeps
+    // the projection split, so the fold appears once; this pins that.
     val df = SparkEntry.queries("q_s_quantize")(spark, sf)
     df.collect()
     val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
@@ -743,5 +743,101 @@ class PlanAuditSpec extends SparkTestBase {
     pin("rescoreTopKPerQuery",
       Similarity.rescoreTopKPerQuery(emb, red, qs, redQs, "vec_id",
         "embedding", "red", "query_id", k = 5, candK = 20))
+  }
+}
+
+/** Lambda audit: a higher-order function evaluates its lambda body once
+  * per element, and Catalyst eliminates no common subexpression across
+  * those calls. A row-invariant array, map, string or binary subtree
+  * inside the body is therefore rebuilt per element — a document split
+  * once per n-gram window is O(L²) for an L-token text. */
+object LambdaAudit {
+  import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, CreateArray,
+    Expression, HigherOrderFunction, LambdaFunction, LeafExpression,
+    NamedLambdaVariable}
+  import org.apache.spark.sql.catalyst.plans.QueryPlan
+  import org.apache.spark.sql.execution.columnar.InMemoryRelation
+  import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, MapType, StringType}
+
+  private def heavy(t: DataType): Boolean = t match {
+    case _: ArrayType | _: MapType | _: StringType | BinaryType => true
+    case _ => false
+  }
+
+  /** The lambdas `h` runs once per element. A HOF over one-element
+    * arrays (`GraftFunctions.let`'s binding form) runs its body once per
+    * row, and `aggregate`'s finish runs once per row. */
+  private def perElement(h: HigherOrderFunction): Seq[Expression] = h match {
+    case _ if h.arguments.forall {
+      case CreateArray(Seq(_), _) => true
+      case _ => false
+    } => Nil
+    case a: ArrayAggregate => Seq(a.merge)
+    case _ => h.functions
+  }
+
+  private def lambdaVars(e: Expression) =
+    e.collect { case f: LambdaFunction => f.arguments }.flatten
+      .collect { case v: NamedLambdaVariable => v.exprId }.toSet
+
+  /** Lambda variables `e` reads but does not bind itself. */
+  private def freeVars(e: Expression) =
+    e.collect { case v: NamedLambdaVariable => v.exprId }.toSet -- lambdaVars(e)
+
+  /** The SQL of every maximal non-leaf, deterministic, non-foldable
+    * subtree of a per-element lambda body that reads no variable bound by
+    * that lambda or by a lambda nested in it, and that yields (itself or
+    * in a non-leaf part) an array, map, string or binary. */
+  def findings(e: Expression): Seq[String] =
+    e.collect { case h: HigherOrderFunction => perElement(h) }.flatten.collect {
+      case l: LambdaFunction =>
+        val bound = lambdaVars(l)
+        def invariant(x: Expression): Boolean =
+          !x.isInstanceOf[LeafExpression] && x.deterministic && !x.foldable &&
+            freeVars(x).intersect(bound).isEmpty &&
+            x.exists(y => !y.isInstanceOf[LeafExpression] && heavy(y.dataType))
+        def walk(x: Expression): Seq[String] =
+          if (invariant(x)) Seq(x.sql) else x.children.flatMap(walk)
+        walk(l.function)
+    }.flatten.distinct
+
+  /** [[findings]] over every expression of a plan, its subqueries and
+    * the plans behind its cached relations. */
+  def findings(plan: QueryPlan[_]): Seq[String] = {
+    val nested: Seq[QueryPlan[_]] = plan match {
+      case r: InMemoryRelation => Seq(r.cacheBuilder.cachedPlan)
+      case _ => Nil
+    }
+    (plan.expressions.flatMap(findings) ++
+      (plan.children ++ plan.subqueries ++ nested)
+        .flatMap(p => findings(p.asInstanceOf[QueryPlan[_]]))).distinct
+  }
+}
+
+class LambdaAuditSpec extends SparkTestBase {
+  private val sf = "/root/testdata/sf0.001"
+
+  test("lambda audit flags a per-window re-split and passes a bound token array") {
+    val docs = spark.range(1)
+      .select(concat(lit("a b c "), col("id").cast("string")).as("text"))
+    val toks = split(col("text"), "\\s+")
+    val resplit = docs.select(transform(sequence(lit(0), size(toks) - 2),
+      i => array_join(slice(toks, i + 1, lit(2)), " ")).as("g"))
+    val found = LambdaAudit.findings(resplit.queryExecution.optimizedPlan)
+    assert(found.exists(_.startsWith("split(")), found)
+    val bound = docs.select(element_at(transform(array(toks), t =>
+      transform(sequence(lit(0), size(t) - 2),
+        i => array_join(slice(t, i + 1, lit(2)), " "))), 1).as("g"))
+    assert(LambdaAudit.findings(bound.queryExecution.optimizedPlan).isEmpty)
+    assert(resplit.collect().toSeq === bound.collect().toSeq)
+  }
+
+  test("no registry query re-evaluates a row-invariant array or string per lambda element") {
+    val found = SparkEntry.registry.flatMap { q =>
+      LambdaAudit.findings(q.build(spark, sf).queryExecution.optimizedPlan)
+        .map(s => s"${q.name}: $s")
+    }
+    spark.catalog.clearCache()
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 }

@@ -347,6 +347,58 @@ class RoadGraphSpec extends SparkTestBase {
     assert(comp.forall(_._2 === 1L), "all labels must reach the chain min")
   }
 
+  test("connected components: NULL node ids keep their labels (dirty input)") {
+    import spark.implicits._
+    // a NULL id joins no label but takes its neighbours' least label:
+    // the round's NULL-label filter and null-safe pointer jump must
+    // leave (NULL, 1) in place and 3 in its own component
+    val e = Seq[(Option[Long], Option[Long])]((Some(1L), Some(2L)),
+      (None, Some(2L)), (Some(3L), None), (None, None), (Some(4L), Some(5L)))
+      .toDF("start_node", "end_node")
+    val (labels, rounds) = GraphCheck.connectedComponentsWithRounds(e,
+      localThreshold = 0L)
+    assert(rounds > 0, "NULL ids must take the distributed loop")
+    assert(labels.collect().map(r => (Option(r.get(0)), Option(r.get(1))))
+      .toSet === Set[(Option[Any], Option[Any])](
+        (Some(1L), Some(1L)), (Some(2L), Some(1L)), (Some(3L), Some(3L)),
+        (Some(4L), Some(4L)), (Some(5L), Some(4L)), (None, Some(1L))))
+  }
+
+  test("connected components: a round shuffles its neighbour-min aggregate once") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    // an 8x8 grid, node r*8+c, with nullable ids as read from parquet.
+    // The round's pointer jump joins the aggregate with itself; when
+    // the two sides plan differently the scan, broadcast, partial
+    // aggregate and shuffle all run twice
+    val k = 8L
+    val es = for (r <- 0L until k; c <- 0L until k;
+        (dr, dc) <- Seq((0L, 1L), (1L, 0L)) if r + dr < k && c + dc < k)
+      yield (r * k + c, (r + dr) * k + c + dc)
+    val sym = (es ++ es.map(_.swap)).map { case (a, b) => (Option(a), Option(b)) }
+      .toDF("a", "b").localCheckpoint(true)
+    val labels = sym.select(col("a").as("node_id")).distinct()
+      .withColumn("component", col("node_id")).localCheckpoint(true)
+    val round = GraphCheck.ccRound(sym, labels)
+    // one round from identity labels: the least id of the closed
+    // neighbourhood, then that node's own least id
+    val nbrMin = (es ++ es.map(_.swap)).groupBy(_._1)
+      .map { case (v, ns) => v -> (v +: ns.map(_._2)).min }
+    assert(round.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+      nbrMin.map { case (v, m) => v -> nbrMin(m) })
+    val plan = round.queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    val partials = helper.collect(plan) {
+      case a: HashAggregateExec if a.aggregateExpressions.exists(_.mode == Partial) => a
+    }
+    val reused = helper.collect(plan) { case r: ReusedExchangeExec => r }
+    assert(partials.size === 1 && reused.size === 1,
+      s"the aggregate should run once and be reused once:\n$plan")
+  }
+
   /** Spark jobs `body` starts, counted by a listener on a job group of
     * its own. A marker job in a second group drains the listener bus:
     * events arrive in order, so once the marker's start is seen every
