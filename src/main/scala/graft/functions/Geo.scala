@@ -852,16 +852,17 @@ object Geo {
     * the geometry is inside the padded bbox). */
   private[graft] def bboxCells(ring: Column, cellDeg: Double,
       pad: Double = 0.0): Column = {
-    val xs = transform(ring, p => p.getField("lon"))
-    val ys = transform(ring, p => p.getField("lat"))
-    val x0 = floor((array_min(xs) - pad) / cellDeg).cast("long")
-    val x1 = floor((array_max(xs) + pad) / cellDeg).cast("long")
-    val y0 = floor((array_min(ys) - pad) / cellDeg).cast("long")
-    val y1 = floor((array_max(ys) + pad) / cellDeg).cast("long")
-    // the row of y cells is bound once, not rebuilt per x cell
-    GraftFunctions.let(sequence(y0, y1)) { cys =>
-      flatten(transform(sequence(x0, x1), cx =>
-        transform(cys, cy => struct(cx.as("cx"), cy.as("cy")))))
+    def lo(v: Column) = floor((array_min(v) - pad) / cellDeg).cast("long")
+    def hi(v: Column) = floor((array_max(v) + pad) / cellDeg).cast("long")
+    // each projected coordinate array is bound once for its min and
+    // max, and the row of y cells once, not rebuilt per x cell
+    GraftFunctions.let(transform(ring, p => p.getField("lon"))) { xs =>
+      GraftFunctions.let(transform(ring, p => p.getField("lat"))) { ys =>
+        GraftFunctions.let(sequence(lo(ys), hi(ys))) { cys =>
+          flatten(transform(sequence(lo(xs), hi(xs)), cx =>
+            transform(cys, cy => struct(cx.as("cx"), cy.as("cy")))))
+        }
+      }
     }
   }
 

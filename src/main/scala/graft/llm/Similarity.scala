@@ -111,17 +111,6 @@ object Similarity {
       .filter(col("__rn") <= k).drop("__rn")
   }
 
-  /** Two-stage retrieval: candidate generation in a compact space +
-    * exact full-vector rescore of the survivors — THE production ANN
-    * shape (what an IVF-PQ or PCA-compressed index does). `reduced`
-    * carries `(idCol, redCol)` compact vectors for the SAME ids as
-    * `corpus`; candidates are the reduced-space top-`candK` per query,
-    * rescored against the original vectors, ranked, cut to `k`.
-    *
-    * 100 TB shape: the corpus-sized scan reads ONLY the compact column
-    * (e.g. 16 of 1024 dims — a 64x bandwidth cut with column pruning);
-    * the full-width vectors are fetched for `candK × |queries|` rows
-    * via an equi-join, broadcast territory at any realistic batch. */
   /** Product-quantization codebooks (Jégou et al., TPAMI 2011 — the
     * IVF-PQ index family): split the `dim`-vector into `m` subspaces
     * and give each its own `k`-centroid codebook. This FIXED variant
@@ -634,6 +623,17 @@ object Similarity {
     (best._1, best._2, best._3, seedMse)
   }
 
+  /** Two-stage retrieval: candidate generation in a compact space +
+    * exact full-vector rescore of the survivors — THE production ANN
+    * shape (what an IVF-PQ or PCA-compressed index does). `reduced`
+    * carries `(idCol, redCol)` compact vectors for the SAME ids as
+    * `corpus`; candidates are the reduced-space top-`candK` per query,
+    * rescored against the original vectors, ranked, cut to `k`.
+    *
+    * 100 TB shape: the corpus-sized scan reads ONLY the compact column
+    * (e.g. 16 of 1024 dims — a 64x bandwidth cut with column pruning);
+    * the full-width vectors are fetched for `candK × |queries|` rows
+    * via an equi-join, broadcast territory at any realistic batch. */
   def rescoreTopKPerQuery(corpus: DataFrame, reduced: DataFrame,
       queries: DataFrame, redQueries: DataFrame, idCol: String,
       vecCol: String, redCol: String, qidCol: String, k: Int,

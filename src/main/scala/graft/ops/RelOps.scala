@@ -44,8 +44,8 @@ object RelOps {
   /** S8: PG `UPDATE target SET tcol = source.scol FROM source WHERE
     * whereTarget AND join-keys match` (osm-road-graphs.sql:49-54) as an
     * immutable rewrite: left join + conditional replace. The source is
-    * broadcast by default — UPDATE..FROM sources in the reference are
-    * tiny summary tables (per-highway medians), the classic broadcast
+    * always broadcast — UPDATE..FROM sources in the reference are tiny
+    * summary tables (per-highway medians), the classic broadcast
     * dimension. `set` maps target column -> source column.
     */
   def updateFrom(
@@ -53,13 +53,11 @@ object RelOps {
       source: DataFrame,
       keys: Seq[String],
       set: Map[String, String],
-      whereTarget: Column = lit(true),
-      broadcastSource: Boolean = true): DataFrame = {
+      whereTarget: Column = lit(true)): DataFrame = {
     val srcCols = (keys ++ set.values).distinct
-    val renamed0 = source
+    val renamed = broadcast(source
       .select(srcCols.map(c => col(c).as("__u_" + c)): _*)
-      .withColumn("__u_matched", lit(true))
-    val renamed = if (broadcastSource) broadcast(renamed0) else renamed0
+      .withColumn("__u_matched", lit(true)))
     val cond = keys.map(k => target.col(k) <=> col("__u_" + k)).reduce(_ && _)
     val joined = target.join(renamed, cond, "left")
     val updated = set.foldLeft(joined) { case (df, (tcol, scol)) =>
@@ -67,7 +65,7 @@ object RelOps {
         when(coalesce(col("__u_matched"), lit(false)) && whereTarget, col("__u_" + scol))
           .otherwise(col(tcol)))
     }
-    updated.drop(renamed0.columns.toSeq: _*)
+    updated.drop(renamed.columns.toSeq: _*)
   }
 
   /** U1: SQL `UNION` (distinct across both inputs), osm-road-graphs.sql:60. */
@@ -125,18 +123,16 @@ object RelOps {
     *
     * Contract (the standard MERGE cardinality rule): at most one source
     * row per key — duplicate source keys would fan matched rows out
-    * nondeterministically, which ANSI MERGE treats as an ERROR, so with
-    * `enforceCardinality = true` (the default) the op pre-flights one
-    * hash-agg over the source keys and fails loudly on a duplicate
+    * nondeterministically, which ANSI MERGE treats as an ERROR, so the
+    * op pre-flights one hash-agg over the source keys and fails loudly
+    * on a duplicate
     * instead of silently duplicating target rows. Source rows with a
     * NULL in any key column are exempt from the check — under the
     * AND-chained `===` join condition they can never match, so they
     * cannot fan out (each simply INSERTs). Note the pre-flight is an
     * EAGER job (`limit(1).collect()`) inside an otherwise lazy plan
-    * builder. At 100 TB that
-    * pre-flight is one extra source-sized job; callers who already
-    * guarantee uniqueness upstream (e.g. via [[top1PerGroup]]) pass
-    * `enforceCardinality = false` to skip it. Presence is tracked by
+    * builder; at 100 TB that pre-flight is one extra source-sized job.
+    * Presence is tracked by
     * injected marker columns, so NULL-valued key columns in the data
     * cannot masquerade as "not matched"; the injected names live under
     * the reserved `__` prefix, which input schemas must not use (a user
@@ -146,7 +142,7 @@ object RelOps {
     * join); no window, no collect. AQE handles a skewed key the same
     * way it does every other join in this engine. */
   def mergeInto(target: DataFrame, source: DataFrame, keys: Seq[String],
-      updateCols: Seq[String], enforceCardinality: Boolean = true): DataFrame = {
+      updateCols: Seq[String]): DataFrame = {
     val cols = target.columns.toSeq
     require(source.columns.toSeq == cols,
       s"mergeInto needs identical schemas, got ${cols.mkString(",")} vs " +
@@ -157,20 +153,18 @@ object RelOps {
     require(!cols.exists(_.startsWith("__")),
       "mergeInto reserves the __ column-name prefix for its presence " +
         s"markers; rename ${cols.filter(_.startsWith("__")).mkString(",")}")
-    if (enforceCardinality) {
-      // A NULL in ANY key column makes the AND-chained === join condition
-      // non-true, so such a source row can never match a target row and
-      // duplicates among them cannot fan out — exclude them from the check
-      // (they still INSERT, one row each).
-      val dup = source
-        .filter(keys.map(k => col(k).isNotNull).reduce(_ && _))
-        .groupBy(keys.map(col): _*)
-        .agg(count(lit(1)).as("__c")).filter(col("__c") > 1)
-        .limit(1).collect()
-      require(dup.isEmpty,
-        s"MERGE source has duplicate key ${dup.headOption.orNull} — ANSI " +
-          "MERGE forbids more than one source row per target row")
-    }
+    // A NULL in ANY key column makes the AND-chained === join condition
+    // non-true, so such a source row can never match a target row and
+    // duplicates among them cannot fan out — exclude them from the check
+    // (they still INSERT, one row each).
+    val dup = source
+      .filter(keys.map(k => col(k).isNotNull).reduce(_ && _))
+      .groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("__c")).filter(col("__c") > 1)
+      .limit(1).collect()
+    require(dup.isEmpty,
+      s"MERGE source has duplicate key ${dup.headOption.orNull} — ANSI " +
+        "MERGE forbids more than one source row per target row")
     val t = target.withColumn("__tp", lit(true))
       .select(col("__tp") +: cols.map(c => col(c).as(s"__t_$c")): _*)
     val s = source.withColumn("__sp", lit(true))

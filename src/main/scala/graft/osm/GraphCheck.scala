@@ -2210,29 +2210,44 @@ object GraphCheck {
     }
     val first = sp(Set.empty, Set.empty, source)
     if (first.isEmpty || k <= 0) return Seq.empty
-    if (k == 1) return Seq(first.get)
-    // per-pair min weights (pairWeights' local twin)
-    val minW = (for ((a, vs) <- adj.toSeq; (b, w) <- vs) yield (a, b) -> w)
+    // per-pair min weights (pairWeights' local twin), built on the
+    // first outer iteration
+    lazy val minW = (for ((a, vs) <- adj.toSeq; (b, w) <- vs) yield (a, b) -> w)
       .groupBy(_._1).map { case (kk, v) => kk -> v.map(_._2).min }
-    val accepted = scala.collection.mutable.ArrayBuffer(first.get)
+    yenLoop(first.get, k, _ => minW) { (removedEdges, removedNodes, from) =>
+      sp(removedEdges.toSet, removedNodes.toSet, from)
+    }
+  }
+
+  /** Yen's outer loop, shared by [[yenLocal]] and [[yenCore]]: for every
+    * spur node of the last accepted path, remove the continuation edges
+    * of every accepted path sharing its root and the root's other
+    * nodes, run `spur(removedEdges, removedNodes, spurNode)`, and keep
+    * the root + spur as a candidate; candidates rank by (cost,
+    * path-string) and the best is accepted. `weights(path)` gives the
+    * per-pair min weights along an accepted path (its prefix costs). */
+  private def yenLoop(first: (Seq[Long], Double), k: Int,
+      weights: Seq[Long] => Map[(Long, Long), Double])(
+      spur: (Seq[(Long, Long)], Seq[Long], Long) => Option[(Seq[Long], Double)])
+      : Seq[(Seq[Long], Double)] = {
+    val accepted = scala.collection.mutable.ArrayBuffer(first)
     implicit val candOrd: Ordering[(Double, Seq[Long])] =
       Ordering.by { case (c, p) => (c, p.mkString(",")) }
-    val candidates =
-      scala.collection.mutable.SortedSet.empty[(Double, Seq[Long])]
+    val candidates = scala.collection.mutable.SortedSet.empty[(Double, Seq[Long])]
     while (accepted.size < k) {
       val prev = accepted.last._1
+      val w = weights(prev)
       val prefixCost = prev.zip(prev.tail)
-        .scanLeft(0.0) { case (acc, pair) => acc + minW(pair) }
+        .scanLeft(0.0) { case (acc, pair) => acc + w(pair) }
       for (i <- 0 until prev.size - 1) {
         val spurNode = prev(i)
         val rootPath = prev.take(i + 1)
         val removedEdges = accepted.map(_._1)
           .filter(p => p.size > i + 1 && p.take(i + 1) == rootPath)
-          .map(p => (p(i), p(i + 1))).toSet
-        val removedNodes = rootPath.dropRight(1).toSet
-        sp(removedEdges, removedNodes, spurNode).foreach {
-          case (spur, spurDist) =>
-            val full = rootPath.dropRight(1) ++ spur
+          .map(p => (p(i), p(i + 1))).distinct.toSeq
+        spur(removedEdges, rootPath.dropRight(1), spurNode).foreach {
+          case (spurPath, spurDist) =>
+            val full = rootPath.dropRight(1) ++ spurPath
             if (!accepted.exists(_._1 == full))
               candidates += ((prefixCost(i) + spurDist, full))
         }
@@ -2265,43 +2280,16 @@ object GraphCheck {
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
         .toMap
     }
-    val accepted = scala.collection.mutable.ArrayBuffer(first.get)
-    implicit val candOrd: Ordering[(Double, Seq[Long])] =
-      Ordering.by { case (c, p) => (c, p.mkString(",")) }
-    val candidates = scala.collection.mutable.SortedSet.empty[(Double, Seq[Long])]
-    while (accepted.size < k) {
-      val prev = accepted.last._1
-      val w = pairWeights(prev)
-      val prefixCost = prev.zip(prev.tail)
-        .scanLeft(0.0) { case (acc, pair) => acc + w(pair) }
-      for (i <- 0 until prev.size - 1) {
-        val spurNode = prev(i)
-        val rootPath = prev.take(i + 1)
-        // continuation edges of every accepted path sharing this root
-        val removedEdges = accepted.map(_._1)
-          .filter(p => p.size > i + 1 && p.take(i + 1) == rootPath)
-          .map(p => (p(i), p(i + 1))).distinct
-        val removedNodes = rootPath.dropRight(1)
-        var filtered = eChk.join(
-          broadcast(removedEdges.toSeq.toDF("start_node", "end_node")),
-          Seq("start_node", "end_node"), "left_anti")
-        if (removedNodes.nonEmpty)
-          filtered = filtered.filter(
-            !col("start_node").isin(removedNodes: _*) &&
-            !col("end_node").isin(removedNodes: _*))
-        shortestPathTo(filtered, spurNode, target, maxIter, localThreshold)
-          .foreach { case (spur, spurDist) =>
-            val full = rootPath.dropRight(1) ++ spur
-            if (!accepted.exists(_._1 == full))
-              candidates += ((prefixCost(i) + spurDist, full))
-          }
-      }
-      if (candidates.isEmpty) return accepted.toSeq
-      val best = candidates.head
-      candidates -= best
-      accepted += ((best._2, best._1))
+    yenLoop(first.get, k, pairWeights) { (removedEdges, removedNodes, from) =>
+      var filtered = eChk.join(
+        broadcast(removedEdges.toDF("start_node", "end_node")),
+        Seq("start_node", "end_node"), "left_anti")
+      if (removedNodes.nonEmpty)
+        filtered = filtered.filter(
+          !col("start_node").isin(removedNodes: _*) &&
+          !col("end_node").isin(removedNodes: _*))
+      shortestPathTo(filtered, from, target, maxIter, localThreshold)
     }
-    accepted.toSeq
   }
 
   /** Strongly connected components of the DIRECTED edge list — the

@@ -10,35 +10,11 @@ import QueryHelpers._
   * edit distance, SimHash, passage, paragraph, content-defined chunk
   * and exact-substring dedup, plus embedding near-dup pairs. */
 object DedupQueries {
-  /** DuckDB replica of the whole MinHash-LSH pipeline — possible only
-    * because every hash is md5-derived (portable by design; see
-    * [[graft.llm.Dedup.md5Hash31]]). Generated from the SAME
-    * `minhashParams` the engine uses, so the two sides cannot drift. */
-  private def minhashOracleSql: String = {
-    val ps = llm.Dedup.minhashParams(32)
-    val mins = ps.zipWithIndex.map { case ((a, b), i) =>
-      s"min((h*$a + $b) % 2147483647) AS m$i"
-    }.mkString(",\n    ")
-    val bandVals = (0 until 4).map { b =>
-      val cols = (0 until 8).map(j => s"m${b * 8 + j}").mkString(",")
-      s"($b, concat_ws('|',$cols))"
-    }.mkString(",")
-    s"""WITH sh AS (
-    SELECT doc_id, substr(text, CAST(i AS INTEGER), 5) AS s
-    FROM documents, LATERAL unnest(range(1, greatest(length(text)-4,1)+1)) AS t(i)
-  ),
-  h AS (
-    SELECT doc_id, CAST(('0x' || substr(md5(s),1,8)) AS BIGINT) % 2147483647 AS h
-    FROM sh
-  ),
-  sig AS (
-    SELECT doc_id,
-    $mins
-    FROM h GROUP BY doc_id
-  ),
-  bands AS (
-    SELECT doc_id, b.band, b.bh FROM sig, LATERAL (VALUES $bandVals) AS b(band, bh)
-  ),
+  /** DuckDB replica of the whole MinHash-LSH pipeline: the shared
+    * signature + banding CTEs (32 permutations, 4 bands of 8), then
+    * candidate pairs verified by exact shingle-set Jaccard. */
+  private def minhashOracleSql: String =
+    minhashBandsSql(numPerm = 32, rowsPerBand = 8) + """,
   cand AS (
     SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
     FROM bands a JOIN bands c ON a.band = c.band AND a.bh = c.bh AND a.doc_id < c.doc_id
@@ -55,7 +31,6 @@ object DedupQueries {
   )
   SELECT id_a, id_b, round(j, 4) AS jaccard FROM verified
   WHERE j >= 0.4 ORDER BY id_a, id_b"""
-  }
 
   /** Same candidate CTEs, verified by DuckDB's own levenshtein instead
     * of Jaccard — an independent edit-distance implementation agreeing
@@ -313,26 +288,12 @@ object DedupQueries {
       // chunk string — the engine's xxhash64 key is collision-checked by
       // this exact-string compare), same per-doc reassembly; string_agg
       // skips the NULLed-out losers
-      """WITH toks AS (
-           SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         tok AS (
-           SELECT doc_id, CAST(i AS INT) AS ord, t[i] AS tok
-           FROM toks, UNNEST(range(1, len(t) + 1)) AS r(i)),
+      (docTokens + """),
          chunks AS (
            SELECT doc_id, CAST(floor((ord - 1) / 8) AS INT) AS chunk_id,
                   string_agg(tok, ' ' ORDER BY ord) AS chunk_text
            FROM tok GROUP BY doc_id, CAST(floor((ord - 1) / 8) AS INT)),
-         flagged AS (
-           SELECT doc_id, chunk_id, chunk_text,
-                  row_number() OVER (PARTITION BY chunk_text
-                                     ORDER BY doc_id, chunk_id) AS rn
-           FROM chunks)
-         SELECT doc_id,
-                coalesce(string_agg(CASE WHEN rn = 1 THEN chunk_text END,
-                                    ' ' ORDER BY chunk_id), '') AS clean_text,
-                count(*) FILTER (WHERE rn = 1) AS kept_chunks,
-                count(*) FILTER (WHERE rn > 1) AS dropped_chunks
-         FROM flagged GROUP BY doc_id ORDER BY doc_id"""),
+         """ + keepFirstChunks)),
 
     // ---- content-defined chunking dedup (the LBFS/FastCDC idea at
     //      token granularity): a chunk boundary opens at every token
@@ -349,11 +310,7 @@ object DedupQueries {
       // (('0x'||hex8)::BIGINT mod 2^31-1, then mod 8), running-sum chunk
       // ids per doc, keep-first by (doc, chunk) via row_number over the
       // exact chunk text, reassemble in chunk order
-      """WITH toks AS (
-           SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         tok AS (
-           SELECT doc_id, CAST(i AS INT) AS ord, t[i] AS tok
-           FROM toks, UNNEST(range(1, len(t) + 1)) AS r(i)
+      (docTokens + """
            WHERE t[i] <> ''),
          b AS (
            SELECT doc_id, ord, tok,
@@ -372,17 +329,7 @@ object DedupQueries {
            SELECT doc_id, chunk_id,
                   string_agg(tok, ' ' ORDER BY ord) AS chunk_text
            FROM c GROUP BY doc_id, chunk_id),
-         flagged AS (
-           SELECT doc_id, chunk_id, chunk_text,
-                  row_number() OVER (PARTITION BY chunk_text
-                                     ORDER BY doc_id, chunk_id) AS rn
-           FROM chunks)
-         SELECT doc_id,
-                coalesce(string_agg(CASE WHEN rn = 1 THEN chunk_text END,
-                                    ' ' ORDER BY chunk_id), '') AS clean_text,
-                count(*) FILTER (WHERE rn = 1) AS kept_chunks,
-                count(*) FILTER (WHERE rn > 1) AS dropped_chunks
-         FROM flagged GROUP BY doc_id ORDER BY doc_id"""),
+         """ + keepFirstChunks)),
 
     // ---- EXACT substring dedup (Lee et al. 2022 ExactSubstr): every
     //      duplicated >=12-token span removed from all but its first
@@ -476,22 +423,7 @@ object DedupQueries {
     },
       // SemDeDup re-derived: same fixed-centroid assignment idiom as
       // q_s_ivf_fixed, then within-cluster pair cosines only.
-      """WITH cents AS (
-           SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid,
-                  CAST(embedding AS DOUBLE[]) AS c
-           FROM (SELECT * FROM embeddings ORDER BY vec_id LIMIT 8)),
-         scores AS (
-           SELECT v.vec_id, c.cid,
-             list_dot_product(CAST(v.embedding AS DOUBLE[]), c.c) /
-               (sqrt(list_dot_product(CAST(v.embedding AS DOUBLE[]),
-                                      CAST(v.embedding AS DOUBLE[]))) *
-                sqrt(list_dot_product(c.c, c.c))) AS cs
-           FROM embeddings v CROSS JOIN cents c),
-         assign AS (
-           SELECT vec_id, cid FROM (
-             SELECT vec_id, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid) AS rn
-             FROM scores) WHERE rn = 1),
+      s"""WITH ${cosineCells(8)},
          pairs AS (
            SELECT a.cid AS cluster, a.vec_id AS id_a, b.vec_id AS id_b,
              list_dot_product(CAST(va.embedding AS DOUBLE[]),

@@ -34,8 +34,7 @@ object GraphQueries {
                        JOIN od ON od.node = e.src
              GROUP BY e.dst) s ON s.node = nd.node)"""
     }.mkString(",\n")
-    OsmOracle.graphPrefix.replaceFirst("WITH", "WITH RECURSIVE") +
-      oracleRouteCore + s""",
+    routeSssp + s""",
          dm AS MATERIALIZED (SELECT src, dst FROM dedges),
          pgnodes AS MATERIALIZED (
            -- GROUP BY, not UNION: under WITH RECURSIVE DuckDB 1.0 does
@@ -76,8 +75,7 @@ $chain
                        JOIN od ON od.node = e.src
              GROUP BY e.dst) s ON s.node = nd.node)"""
     }.mkString(",\n")
-    OsmOracle.graphPrefix.replaceFirst("WITH", "WITH RECURSIVE") +
-      oracleRouteCore + s""",
+    routeSssp + s""",
          dm AS MATERIALIZED (SELECT src, dst FROM dedges),
          pgnodes AS MATERIALIZED (
            SELECT node FROM (SELECT src AS node FROM dm
@@ -125,8 +123,7 @@ $chain
            FROM hnodes nd CROSS JOIN sh$k s
            LEFT JOIN hr$k hr ON hr.node = nd.node)"""
     }.mkString(",\n")
-    OsmOracle.graphPrefix.replaceFirst("WITH", "WITH RECURSIVE") +
-      oracleRouteCore + s""",
+    routeSssp + s""",
          dm AS MATERIALIZED (SELECT src, dst FROM dedges),
          hnodes AS MATERIALIZED (
            SELECT node FROM (SELECT src AS node FROM dm
@@ -157,7 +154,7 @@ $chain
              GROUP BY s.a, l.label)
            WHERE rn = 1)"""
     }.mkString(",\n")
-    OsmOracle.graphPrefix + s""",
+    graphPrefix + s""",
          lsym AS MATERIALIZED (
            SELECT start_node AS a, end_node AS b FROM merged
            WHERE start_node <> end_node
@@ -579,7 +576,7 @@ $chain
           osm.RoadGraph.buildMergedNetworkCached(t, "micro"))
         .orderBy("node_id")
     },
-      (OsmOracle.graphPrefix.replaceFirst("WITH",
+      (graphPrefix.replaceFirst("WITH",
       "WITH RECURSIVE") +
       """,
          sym AS (
@@ -719,11 +716,7 @@ $chain
     //      that reaches it + the reaching count — division happens at
     //      presentation time, so the relation stays hash-exact.
     Query("q_osm_closeness", (s, dir) => {
-      val t = osm.OsmModel.microFixture(s)
-      val merged = osm.RoadGraph.buildMergedNetworkCached(t, "micro")
-      val e = osm.RoadGraph.directed(merged)
-        .select(col("start_node"), col("end_node"),
-          round(col("length") * 100).cast("long").as("w"))
+      val e = microCmEdges(osm.OsmModel.microFixture(s))
       osm.GraphCheck.closenessFromSources(e, Seq(1L, 3L, 4L, 5L, 6L))
         .select(col("node_id"), col("sum_dist").as("sum_cm"), col("n_from"))
         .orderBy("node_id")
@@ -732,16 +725,7 @@ $chain
       // sampled source (seed column), per-(seed,node) min, then integer
       // sum + count per node — the unused single-seed `r` CTE from the
       // shared core is simply not referenced
-      (OsmOracle.graphPrefix.replaceFirst("WITH",
-      "WITH RECURSIVE") + oracleRouteCore +
-      """,
-         rc(seed, node, dist, hops) AS (
-           SELECT seed, seed, CAST(0 AS BIGINT), 0
-           FROM (VALUES (1), (3), (4), (5), (6)) s(seed)
-           UNION ALL
-           SELECT rc.seed, e.dst, rc.dist + e.w, rc.hops + 1
-           FROM rc JOIN dedges e ON e.src = rc.node WHERE rc.hops < 8),
-         mc AS (SELECT seed, node, min(dist) AS d FROM rc GROUP BY seed, node)
+      (seededSssp("(1), (3), (4), (5), (6)") + """
          SELECT CAST(node AS BIGINT) AS node_id,
                 CAST(sum(d) AS BIGINT) AS sum_cm,
                 count(*) AS n_from
@@ -752,11 +736,7 @@ $chain
     //      applied BEFORE rounding so the cm-exact distances keep
     //      six significant digits
     Query("q_osm_harmonic", (s, dir) => {
-      val t = osm.OsmModel.microFixture(s)
-      val merged = osm.RoadGraph.buildMergedNetworkCached(t, "micro")
-      val e = osm.RoadGraph.directed(merged)
-        .select(col("start_node"), col("end_node"),
-          round(col("length") * 100).cast("long").as("w"))
+      val e = microCmEdges(osm.OsmModel.microFixture(s))
       osm.GraphCheck.harmonicFromSources(e, Seq(1L, 3L, 4L, 5L, 6L))
         .select(col("node_id"), col("n_from"),
           round(col("inv_sum") * 100, 6).as("harmonic_per_m"))
@@ -764,16 +744,7 @@ $chain
     },
       // harmonic: same per-seed BFS relation, the fold is sum(1/d) over
       // d > 0 with the same pre-round meter scaling as the engine
-      (OsmOracle.graphPrefix.replaceFirst("WITH",
-      "WITH RECURSIVE") + oracleRouteCore +
-      """,
-         rc(seed, node, dist, hops) AS (
-           SELECT seed, seed, CAST(0 AS BIGINT), 0
-           FROM (VALUES (1), (3), (4), (5), (6)) s(seed)
-           UNION ALL
-           SELECT rc.seed, e.dst, rc.dist + e.w, rc.hops + 1
-           FROM rc JOIN dedges e ON e.src = rc.node WHERE rc.hops < 8),
-         mc AS (SELECT seed, node, min(dist) AS d FROM rc GROUP BY seed, node)
+      (seededSssp("(1), (3), (4), (5), (6)") + """
          SELECT CAST(node AS BIGINT) AS node_id,
                 count(*) AS n_from,
                 round(100.0 * sum(1.0 / d), 6) AS harmonic_per_m
@@ -783,27 +754,14 @@ $chain
     //      count): exact integer centimeters; max over seeds = diameter
     //      lower bound, min = radius upper bound
     Query("q_osm_eccentricity", (s, dir) => {
-      val t = osm.OsmModel.microFixture(s)
-      val merged = osm.RoadGraph.buildMergedNetworkCached(t, "micro")
-      val e = osm.RoadGraph.directed(merged)
-        .select(col("start_node"), col("end_node"),
-          round(col("length") * 100).cast("long").as("w"))
+      val e = microCmEdges(osm.OsmModel.microFixture(s))
       osm.GraphCheck.eccentricityFromSources(e, Seq(1L, 3L, 4L, 5L, 6L))
         .select(col("node_id"), col("ecc").as("ecc_cm"), col("reached"))
         .orderBy("node_id")
     },
       // eccentricity: per SEED max distance + reach count off the same
       // BFS relation (the seed's own 0-row counts as reached)
-      (OsmOracle.graphPrefix.replaceFirst("WITH",
-      "WITH RECURSIVE") + oracleRouteCore +
-      """,
-         rc(seed, node, dist, hops) AS (
-           SELECT seed, seed, CAST(0 AS BIGINT), 0
-           FROM (VALUES (1), (3), (4), (5), (6)) s(seed)
-           UNION ALL
-           SELECT rc.seed, e.dst, rc.dist + e.w, rc.hops + 1
-           FROM rc JOIN dedges e ON e.src = rc.node WHERE rc.hops < 8),
-         mc AS (SELECT seed, node, min(dist) AS d FROM rc GROUP BY seed, node)
+      (seededSssp("(1), (3), (4), (5), (6)") + """
          SELECT CAST(seed AS BIGINT) AS node_id,
                 CAST(max(d) AS BIGINT) AS ecc_cm,
                 count(*) AS reached
@@ -820,8 +778,7 @@ $chain
     },
       // pseudo-diameter: both hop-BFS sweeps replayed, argmax ties to
       // the smallest node id at each sweep
-      (OsmOracle.graphPrefix.replaceFirst("WITH",
-      "WITH RECURSIVE") + oracleRouteCore +
+      (routeSssp +
       """,
          r1(node, d, hops) AS (
            SELECT CAST(1 AS BIGINT), 0, 0
@@ -861,11 +818,7 @@ $chain
     //      the oracle enumerates ALL simple paths from each seed,
     //      keeps per-(s,t) shortest ones, and counts pass-throughs.
     Query("q_osm_betweenness", (s, dir) => {
-      val t = osm.OsmModel.microFixture(s)
-      val merged = osm.RoadGraph.buildMergedNetworkCached(t, "micro")
-      val e = osm.RoadGraph.directed(merged)
-        .select(col("start_node"), col("end_node"),
-          round(col("length") * 100).cast("long").as("w"))
+      val e = microCmEdges(osm.OsmModel.microFixture(s))
       osm.GraphCheck.betweennessFromSources(e, Seq(1L, 3L, 4L, 5L, 6L))
         .select(col("node_id"),
           round(col("betweenness"), 6).as("betweenness"))
@@ -875,8 +828,7 @@ $chain
       // ALL simple paths from each seed (revisit guard terminates the
       // recursion), keep the per-(s,t) minimum-cost ones, count how many
       // pass through each interior node, and sum σ_st(v)/σ_st.
-      (OsmOracle.graphPrefix.replaceFirst("WITH",
-      "WITH RECURSIVE") + oracleRouteCore +
+      (routeSssp +
       """,
          sp(seed, node, dist, path) AS (
            SELECT seed, seed, CAST(0 AS BIGINT), CAST(seed AS VARCHAR)
@@ -937,8 +889,7 @@ $chain
       // a DISTINCT recursive CTE (terminates on cycles without a hop
       // bound), SCC label = max mutually-reachable node — the engine's
       // coloring-algorithm label is provably the same max
-      (OsmOracle.graphPrefix.replaceFirst("WITH",
-      "WITH RECURSIVE") + oracleRouteCore +
+      (routeSssp +
       """,
          gnodes AS (SELECT DISTINCT src AS node FROM dedges
                     UNION SELECT DISTINCT dst FROM dedges),

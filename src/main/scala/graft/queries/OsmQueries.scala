@@ -39,56 +39,6 @@ object OsmQueries {
       |  </create>
       |</osmChange>""".stripMargin
 
-  /** Shared by q_osm_split_scale (relational chain) and
-    * q_osm_split_array (array formulation): both must reproduce this
-    * result exactly. */
-  private val oracleSplitScaleSql =
-    """WITH way_nodes AS (
-         SELECT l_orderkey AS way_id, l_partkey AS node_id,
-                CAST(row_number() OVER (PARTITION BY l_orderkey
-                     ORDER BY l_linenumber, l_partkey) - 1 AS INT) AS sequence_id
-         FROM lineitem),
-       shared AS (SELECT node_id FROM way_nodes GROUP BY node_id HAVING count(*) > 1),
-       lengths AS (SELECT way_id, max(sequence_id) AS length
-                   FROM way_nodes WHERE sequence_id > 1 GROUP BY way_id),
-       splits AS (
-         SELECT n.way_id, n.node_id, n.sequence_id
-         FROM way_nodes n
-         JOIN shared s ON n.node_id = s.node_id
-         JOIN lengths l ON n.way_id = l.way_id AND n.sequence_id < l.length
-         WHERE n.sequence_id > 0),
-       base AS (
-         SELECT way_id,
-                lag(sequence_id, 1, 0) OVER (PARTITION BY way_id ORDER BY sequence_id) AS bottom_limit,
-                sequence_id AS top_limit
-         FROM way_nodes
-         WHERE sequence_id > 0
-           AND way_id IN (SELECT way_id FROM splits)
-           AND node_id IN (SELECT node_id FROM shared)),
-       lastseg AS (
-         SELECT b.way_id, b.top_limit AS bottom_limit, l.length AS top_limit
-         FROM (SELECT way_id, max(top_limit) AS top_limit FROM base GROUP BY way_id) b
-         JOIN lengths l ON b.way_id = l.way_id AND b.top_limit < l.length),
-       lims AS (SELECT * FROM base UNION ALL SELECT * FROM lastseg),
-       ntm AS (
-         SELECT w.way_id, l.top_limit AS group_id, w.sequence_id, w.node_id
-         FROM way_nodes w
-         JOIN lims l ON w.way_id = l.way_id
-                    AND w.sequence_id BETWEEN l.bottom_limit AND l.top_limit),
-       segs AS (
-         SELECT way_id,
-                array_to_string(list(CAST(node_id AS VARCHAR)
-                  ORDER BY sequence_id), ',') AS nodes_csv
-         FROM ntm GROUP BY way_id, group_id
-         UNION ALL
-         SELECT way_id,
-                array_to_string(list(CAST(node_id AS VARCHAR)
-                  ORDER BY sequence_id), ',') AS nodes_csv
-         FROM way_nodes
-         WHERE way_id NOT IN (SELECT DISTINCT way_id FROM ntm)
-         GROUP BY way_id)
-       SELECT way_id, nodes_csv FROM segs ORDER BY way_id, nodes_csv"""
-
   /** Deterministic sf-proportional OSM-shaped ways synthesized from
     * `part`: 8 highway classes, sparse access/foot/bicycle tags and a
     * textual maxspeed, all keyed off p_partkey residues so an
@@ -113,22 +63,31 @@ object OsmQueries {
         struct(lit(0.001).as("lon"), lit(0.0).as("lat"))).as("linestring"))
   }
 
-  /** The `w`-CTE both scale oracles share: the SQL re-derivation of
-    * [[scaleWays]]. */
-  private val scaleWaysSql: String =
-    """w AS (
-      SELECT p_partkey AS id,
-        list_extract(['residential','footway','motorway','cycleway',
-                      'primary','steps','service','path'],
-                     CAST(p_partkey % 8 + 1 AS INTEGER)) AS highway,
-        CASE WHEN p_partkey % 7 = 0 THEN 'private' END AS access,
-        CASE WHEN p_partkey % 5 = 0 THEN 'designated' END AS foot,
-        CASE WHEN p_partkey % 11 = 0 THEN 'designated' END AS bicycle_t,
-        CAST(NULL AS VARCHAR) AS service, CAST(NULL AS VARCHAR) AS cycleway,
-        CAST(NULL AS VARCHAR) AS footway, CAST(NULL AS VARCHAR) AS motor_vehicle,
-        CAST(NULL AS VARCHAR) AS bus,
-        CASE WHEN p_partkey % 3 = 0 THEN CAST(p_size * 10 AS INTEGER) END AS speed_raw
-      FROM part)"""
+  /** The micro network's directed expansion (the q_osm_directed pair):
+    * `strict` keeps the reference's NULL-oneway motorway drop. */
+  private def microDirected(s: SparkSession, strict: Boolean): DataFrame = {
+    val t = osm.OsmModel.microFixture(s)
+    // the merged network feeds all four direction branches: checkpoint
+    // once instead of re-running the split chain per branch
+    osm.RoadGraph.directed(
+        osm.RoadGraph.buildMergedNetworkCached(t, "micro"),
+        strictOsmSemantics = strict)
+      .select(col("edge_id"), col("start_node"), col("end_node"),
+        array_join(col("nodes").cast("array<string>"), ",").as("nodes_csv"))
+      .orderBy("edge_id", "start_node", "end_node", "nodes_csv")
+  }
+
+  /** The micro fixture's car/pedestrian/bicycle flags (the
+    * q_osm_complete pair) under strict or evident-intent semantics. */
+  private def microModeFlags(s: SparkSession, strict: Boolean): DataFrame = {
+    val t = osm.OsmModel.microFixture(s)
+    osm.CompleteGraph.build(t.ways, strictOsmSemantics = strict)
+      .select(col("edge_id"), col("highway"),
+        col("car").cast("short").as("car"),
+        col("pedestrian").cast("short").as("pedestrian"),
+        col("bicycle").cast("short").as("bicycle"))
+      .orderBy("edge_id")
+  }
 
   val all: Seq[Query] = Seq(
     // ---- the way-splitter at data scale: lineitem reinterpreted as
@@ -166,7 +125,7 @@ object OsmQueries {
           ",").as("nodes_csv"))
       segs.unionByName(unsplit).orderBy("way_id", "nodes_csv")
     },
-      oracleSplitScaleSql),
+      splitScaleOracle),
 
     // ---- the SAME split at data scale, array-first: 3 shuffles total
     //      (node ref-count, count join-back, per-way ordered collect) +
@@ -186,7 +145,7 @@ object OsmQueries {
     },
       // identical oracle: the array formulation must match the relational
       // chain row for row
-      oracleSplitScaleSql),
+      splitScaleOracle),
 
     // ---- complete-graph mode-flag cascade at DATA SCALE: ways
     //      synthesized deterministically from `part` (sf-proportional),
@@ -211,27 +170,7 @@ object OsmQueries {
                  FROM w WHERE speed_raw IS NOT NULL GROUP BY highway),
          ws AS (SELECT w.*, COALESCE(speed_raw, med_speed) AS speed_limit
                 FROM w LEFT JOIN med USING (highway)),
-         base AS (SELECT *, CASE
-             WHEN access IN ('no','private','permit','customers','forestry','agricultural','military','emergency','bus','delivery','restricted') THEN 0
-             WHEN service IN ('drive-through','emergency_access','bus') THEN 0
-             WHEN highway IN ('disused','dismantled','razed','rest_area','corridor','construction','abandoned','raceway','proposed','planned','platform') THEN 0
-             ELSE NULL END AS b FROM ws),
-         carc AS (SELECT *, CASE
-             WHEN highway IN ('steps','footway','pedestrian','cycleway','bridleway','elevator','sidewalk') THEN 0
-             WHEN bicycle_t = 'designated' OR cycleway = 'designated' OR foot = 'designated'
-                  OR footway IN ('sidewalk','crossing','yes')
-                  OR motor_vehicle IN ('no','private')
-                  OR service IN ('parking_aisle','parking') OR bus = 'designated' THEN 0
-             WHEN b IS NULL AND highway IN ('motorway','primary','tertiary','secondary','primary_link','tertiary_link','secondary_link','trunk','trunk_link','motorway_link','motorway_junction') THEN 1
-             ELSE b END AS car FROM base),
-         p1 AS (SELECT *, CASE WHEN highway IN ('motorway','trunk','trunk_link','motorway_link','motorway_junction') THEN 0
-                               WHEN bus = 'designated' THEN 0 ELSE b END AS pp FROM carc),
-         p2 AS (SELECT *, CASE WHEN pp IS NULL AND highway IN ('steps','footway','pedestrian','bridleway','elevator','sidewalk','living_street','path') THEN 1 ELSE pp END AS pq FROM p1),
-         p3 AS (SELECT *, CASE WHEN (pq IS NULL AND foot = 'designated') OR footway IN ('sidewalk','crossing','yes') THEN 1 ELSE pq END AS pedestrian FROM p2),
-         b1 AS (SELECT *, CASE WHEN highway IN ('motorway','trunk','trunk_link','motorway_link','motorway_junction') THEN 0
-                               WHEN bus = 'designated' THEN 0 ELSE b END AS bb FROM p3),
-         b2 AS (SELECT *, CASE WHEN bb IS NULL AND highway IN ('cycleway','living_street') THEN 1 ELSE bb END AS bq FROM b1),
-         b3 AS (SELECT *, CASE WHEN (bq IS NULL AND bicycle_t = 'designated') OR cycleway = 'designated' THEN 1 ELSE bq END AS bicycle FROM b2)
+         ${modeFlagCascade("ws", strict = true)}
          SELECT highway, count(*) AS cnt,
                 CAST(sum(CASE WHEN car = 1 THEN 1 ELSE 0 END) AS BIGINT) AS car_yes,
                 CAST(sum(CASE WHEN car = 0 THEN 1 ELSE 0 END) AS BIGINT) AS car_no,
@@ -268,7 +207,7 @@ object OsmQueries {
           array_join(col("nodes").cast("array<string>"), ",").as("nodes_csv"))
         .orderBy("edge_id", "nodes_csv")
     },
-      (OsmOracle.graphPrefix +
+      (graphPrefix +
       """
          SELECT CAST(edge_id AS BIGINT) AS edge_id,
                 CAST(start_node AS BIGINT) AS start_node,
@@ -277,79 +216,14 @@ object OsmQueries {
 
     // ---- OSM directed expansion, strict reference semantics incl. the
     //      NULL-oneway motorway drop (osm-road-graphs.sql:183-220)
-    Query("q_osm_directed", (s, dir) => {
-      val t = osm.OsmModel.microFixture(s)
-      // the merged network feeds all four direction branches: checkpoint
-      // once instead of re-running the split chain per branch
-      osm.RoadGraph.directed(
-          osm.RoadGraph.buildMergedNetworkCached(t, "micro"),
-          strictOsmSemantics = true)
-        .select(col("edge_id"), col("start_node"), col("end_node"),
-          array_join(col("nodes").cast("array<string>"), ",").as("nodes_csv"))
-        .orderBy("edge_id", "start_node", "end_node", "nodes_csv")
-    },
-      (OsmOracle.graphPrefix +
-      """,
-         attrs(way_id, highway, oneway) AS (VALUES
-           (101,'residential',CAST(NULL AS VARCHAR)),(102,'tertiary',CAST(NULL AS VARCHAR)),
-           (103,'primary','yes'),(104,'motorway','-1'),
-           (106,'motorway',CAST(NULL AS VARCHAR)),(109,'tertiary',CAST(NULL AS VARCHAR))),
-         merged2 AS (SELECT m.*, a.highway, a.oneway
-                     FROM merged m JOIN attrs a ON m.edge_id = a.way_id),
-         directed AS (
-           SELECT edge_id, start_node, end_node, nodes_csv FROM merged2
-            WHERE (oneway IS NULL OR oneway = 'no') AND highway != 'motorway'
-           UNION ALL
-           SELECT edge_id, end_node, start_node, nodes_csv_rev FROM merged2
-            WHERE (oneway IS NULL OR oneway = 'no') AND highway != 'motorway'
-           UNION ALL
-           SELECT edge_id, start_node, end_node, nodes_csv FROM merged2
-            WHERE oneway = 'yes' OR (highway = 'motorway' AND oneway != '-1')
-           UNION ALL
-           SELECT edge_id, end_node, start_node, nodes_csv_rev FROM merged2
-            WHERE oneway = '-1')
-         SELECT CAST(edge_id AS BIGINT) AS edge_id,
-                CAST(start_node AS BIGINT) AS start_node,
-                CAST(end_node AS BIGINT) AS end_node, nodes_csv
-         FROM directed ORDER BY edge_id, start_node, end_node, nodes_csv""")),
+    Query("q_osm_directed", (s, _) => microDirected(s, strict = true),
+      directedOracle(strict = true)),
 
     // ---- directed expansion under the documented evident-intent mode:
     //      NULL-oneway motorways become forward edges instead of
     //      silently vanishing in the reference's 3VL trap
-    Query("q_osm_directed_intent", (s, dir) => {
-      val t = osm.OsmModel.microFixture(s)
-      osm.RoadGraph.directed(
-          osm.RoadGraph.buildMergedNetworkCached(t, "micro"),
-          strictOsmSemantics = false)
-        .select(col("edge_id"), col("start_node"), col("end_node"),
-          array_join(col("nodes").cast("array<string>"), ",").as("nodes_csv"))
-        .orderBy("edge_id", "start_node", "end_node", "nodes_csv")
-    },
-      (OsmOracle.graphPrefix +
-      """,
-         attrs(way_id, highway, oneway) AS (VALUES
-           (101,'residential',CAST(NULL AS VARCHAR)),(102,'tertiary',CAST(NULL AS VARCHAR)),
-           (103,'primary','yes'),(104,'motorway','-1'),
-           (106,'motorway',CAST(NULL AS VARCHAR)),(109,'tertiary',CAST(NULL AS VARCHAR))),
-         merged2 AS (SELECT m.*, a.highway, a.oneway
-                     FROM merged m JOIN attrs a ON m.edge_id = a.way_id),
-         directed AS (
-           SELECT edge_id, start_node, end_node, nodes_csv FROM merged2
-            WHERE (oneway IS NULL OR oneway = 'no') AND highway != 'motorway'
-           UNION ALL
-           SELECT edge_id, end_node, start_node, nodes_csv_rev FROM merged2
-            WHERE (oneway IS NULL OR oneway = 'no') AND highway != 'motorway'
-           UNION ALL
-           SELECT edge_id, start_node, end_node, nodes_csv FROM merged2
-            WHERE oneway = 'yes'
-               OR (highway = 'motorway' AND (oneway IS NULL OR oneway != '-1'))
-           UNION ALL
-           SELECT edge_id, end_node, start_node, nodes_csv_rev FROM merged2
-            WHERE oneway = '-1')
-         SELECT CAST(edge_id AS BIGINT) AS edge_id,
-                CAST(start_node AS BIGINT) AS start_node,
-                CAST(end_node AS BIGINT) AS end_node, nodes_csv
-         FROM directed ORDER BY edge_id, start_node, end_node, nodes_csv""")),
+    Query("q_osm_directed_intent", (s, _) => microDirected(s, strict = false),
+      directedOracle(strict = false)),
 
     // ---- OSM median speed imputation (osm-road-graphs.sql:43-54)
     Query("q_osm_impute", (s, dir) => {
@@ -486,101 +360,15 @@ object OsmQueries {
     // ---- complete multi-modal network with car/pedestrian/bicycle
     //      flags (osm-complete-graphs.sql:8-151, strict semantics incl.
     //      the AND/OR-precedence quirk; oracle mirrors the cascade)
-    Query("q_osm_complete_flags", (s, dir) => {
-      val t = osm.OsmModel.microFixture(s)
-      osm.CompleteGraph.build(t.ways, strictOsmSemantics = true)
-        .select(col("edge_id"), col("highway"),
-          col("car").cast("short").as("car"),
-          col("pedestrian").cast("short").as("pedestrian"),
-          col("bicycle").cast("short").as("bicycle"))
-        .orderBy("edge_id")
-    },
-      """WITH w(edge_id, highway, access, service, bicycle_t, cycleway, foot,
-                footway, motor_vehicle, bus) AS (VALUES
-           (101, 'residential', CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR)),
-           (102, 'tertiary', NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL),
-           (103, 'primary', NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL),
-           (104, 'motorway', NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL),
-           (105, 'footway', NULL, NULL, NULL, NULL, NULL, 'sidewalk', NULL, NULL),
-           (106, 'motorway', NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL),
-           (107, 'residential', 'private', NULL, NULL, NULL, NULL, NULL, NULL, NULL),
-           (109, 'tertiary', NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL)),
-         base AS (SELECT *, CASE
-             WHEN access IN ('no','private','permit','customers','forestry','agricultural','military','emergency','bus','delivery','restricted') THEN 0
-             WHEN service IN ('drive-through','emergency_access','bus') THEN 0
-             WHEN highway IN ('disused','dismantled','razed','rest_area','corridor','construction','abandoned','raceway','proposed','planned','platform') THEN 0
-             ELSE NULL END AS b FROM w),
-         carc AS (SELECT *, CASE
-             WHEN highway IN ('steps','footway','pedestrian','cycleway','bridleway','elevator','sidewalk') THEN 0
-             WHEN bicycle_t = 'designated' OR cycleway = 'designated' OR foot = 'designated'
-                  OR footway IN ('sidewalk','crossing','yes')
-                  OR motor_vehicle IN ('no','private')
-                  OR service IN ('parking_aisle','parking') OR bus = 'designated' THEN 0
-             WHEN b IS NULL AND highway IN ('motorway','primary','tertiary','secondary','primary_link','tertiary_link','secondary_link','trunk','trunk_link','motorway_link','motorway_junction') THEN 1
-             ELSE b END AS car FROM base),
-         p1 AS (SELECT *, CASE WHEN highway IN ('motorway','trunk','trunk_link','motorway_link','motorway_junction') THEN 0
-                               WHEN bus = 'designated' THEN 0 ELSE b END AS pp FROM carc),
-         p2 AS (SELECT *, CASE WHEN pp IS NULL AND highway IN ('steps','footway','pedestrian','bridleway','elevator','sidewalk','living_street','path') THEN 1 ELSE pp END AS pq FROM p1),
-         p3 AS (SELECT *, CASE WHEN (pq IS NULL AND foot = 'designated') OR footway IN ('sidewalk','crossing','yes') THEN 1 ELSE pq END AS pedestrian FROM p2),
-         b1 AS (SELECT *, CASE WHEN highway IN ('motorway','trunk','trunk_link','motorway_link','motorway_junction') THEN 0
-                               WHEN bus = 'designated' THEN 0 ELSE b END AS bb FROM p3),
-         b2 AS (SELECT *, CASE WHEN bb IS NULL AND highway IN ('cycleway','living_street') THEN 1 ELSE bb END AS bq FROM b1),
-         b3 AS (SELECT *, CASE WHEN (bq IS NULL AND bicycle_t = 'designated') OR cycleway = 'designated' THEN 1 ELSE bq END AS bicycle FROM b2)
-         SELECT CAST(edge_id AS BIGINT) AS edge_id, highway,
-                CAST(car AS SMALLINT) AS car,
-                CAST(pedestrian AS SMALLINT) AS pedestrian,
-                CAST(bicycle AS SMALLINT) AS bicycle
-         FROM b3 ORDER BY edge_id"""),
+    Query("q_osm_complete_flags", (s, _) => microModeFlags(s, strict = true),
+      completeFlagsOracle(strict = true)),
 
     // ---- mode-flag cascade under evident intent: the NULL-guard
     //      distributes over both disjuncts of the pedestrian/bicycle
     //      dedicated rules, so a designated-footway match can no longer
     //      overturn an earlier pedestrian=0
-    Query("q_osm_complete_intent", (s, dir) => {
-      val t = osm.OsmModel.microFixture(s)
-      osm.CompleteGraph.build(t.ways, strictOsmSemantics = false)
-        .select(col("edge_id"), col("highway"),
-          col("car").cast("short").as("car"),
-          col("pedestrian").cast("short").as("pedestrian"),
-          col("bicycle").cast("short").as("bicycle"))
-        .orderBy("edge_id")
-    },
-      """WITH w(edge_id, highway, access, service, bicycle_t, cycleway, foot,
-                footway, motor_vehicle, bus) AS (VALUES
-           (101, 'residential', CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR)),
-           (102, 'tertiary', NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL),
-           (103, 'primary', NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL),
-           (104, 'motorway', NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL),
-           (105, 'footway', NULL, NULL, NULL, NULL, NULL, 'sidewalk', NULL, NULL),
-           (106, 'motorway', NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL),
-           (107, 'residential', 'private', NULL, NULL, NULL, NULL, NULL, NULL, NULL),
-           (109, 'tertiary', NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL)),
-         base AS (SELECT *, CASE
-             WHEN access IN ('no','private','permit','customers','forestry','agricultural','military','emergency','bus','delivery','restricted') THEN 0
-             WHEN service IN ('drive-through','emergency_access','bus') THEN 0
-             WHEN highway IN ('disused','dismantled','razed','rest_area','corridor','construction','abandoned','raceway','proposed','planned','platform') THEN 0
-             ELSE NULL END AS b FROM w),
-         carc AS (SELECT *, CASE
-             WHEN highway IN ('steps','footway','pedestrian','cycleway','bridleway','elevator','sidewalk') THEN 0
-             WHEN bicycle_t = 'designated' OR cycleway = 'designated' OR foot = 'designated'
-                  OR footway IN ('sidewalk','crossing','yes')
-                  OR motor_vehicle IN ('no','private')
-                  OR service IN ('parking_aisle','parking') OR bus = 'designated' THEN 0
-             WHEN b IS NULL AND highway IN ('motorway','primary','tertiary','secondary','primary_link','tertiary_link','secondary_link','trunk','trunk_link','motorway_link','motorway_junction') THEN 1
-             ELSE b END AS car FROM base),
-         p1 AS (SELECT *, CASE WHEN highway IN ('motorway','trunk','trunk_link','motorway_link','motorway_junction') THEN 0
-                               WHEN bus = 'designated' THEN 0 ELSE b END AS pp FROM carc),
-         p2 AS (SELECT *, CASE WHEN pp IS NULL AND highway IN ('steps','footway','pedestrian','bridleway','elevator','sidewalk','living_street','path') THEN 1 ELSE pp END AS pq FROM p1),
-         p3 AS (SELECT *, CASE WHEN pq IS NULL AND (foot = 'designated' OR footway IN ('sidewalk','crossing','yes')) THEN 1 ELSE pq END AS pedestrian FROM p2),
-         b1 AS (SELECT *, CASE WHEN highway IN ('motorway','trunk','trunk_link','motorway_link','motorway_junction') THEN 0
-                               WHEN bus = 'designated' THEN 0 ELSE b END AS bb FROM p3),
-         b2 AS (SELECT *, CASE WHEN bb IS NULL AND highway IN ('cycleway','living_street') THEN 1 ELSE bb END AS bq FROM b1),
-         b3 AS (SELECT *, CASE WHEN bq IS NULL AND (bicycle_t = 'designated' OR cycleway = 'designated') THEN 1 ELSE bq END AS bicycle FROM b2)
-         SELECT CAST(edge_id AS BIGINT) AS edge_id, highway,
-                CAST(car AS SMALLINT) AS car,
-                CAST(pedestrian AS SMALLINT) AS pedestrian,
-                CAST(bicycle AS SMALLINT) AS bicycle
-         FROM b3 ORDER BY edge_id"""),
+    Query("q_osm_complete_intent", (s, _) => microModeFlags(s, strict = false),
+      completeFlagsOracle(strict = false)),
 
     // ---- OSM POI pivot from nodes (osm-pois-extract.sql:3-48)
     Query("q_osm_pois_nodes", (s, dir) => {

@@ -1,13 +1,21 @@
 package graft
 package queries
 
+import org.apache.spark.sql.functions.{col, round}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Tables._
 
-/** Helpers that more than one query family uses: fixture temp dirs,
-  * the core-count spreads of the single-split test tables, and oracle
-  * SQL fragments shared across families. */
+/** Helpers that more than one query uses: fixture temp dirs, the
+  * core-count spreads of the single-split test tables, shared fixture
+  * builds, and the DuckDB oracle fragments.
+  *
+  * The oracle rule: a fragment that two oracles share lives here once,
+  * and every oracle that needs it composes it from here — no oracle
+  * carries a pasted copy of another's derivation, so a fix to a
+  * reference derivation is made in one place. RegistrySpec's
+  * duplication audit fails on any 12-line run that appears twice under
+  * `queries/`. */
 object QueryHelpers {
   /** Fixture temp dirs registered here live until JVM exit, then the
     * whole tree is removed (ADVICE r19: every Verify/Bench rep of the
@@ -51,20 +59,90 @@ object QueryHelpers {
   private[queries] def spreadEmb(s: SparkSession, dir: String): DataFrame =
     embeddings(s, dir).repartition(s.sparkContext.defaultParallelism)
 
-  /** Shared DuckDB re-derivation for the IndexStore serve oracles
-    * (q_s_index_persist's chain, parameterized): fixed quantizers from
-    * the embeddings table (centroids = first 16 by vec_id, codebooks
-    * from residuals of 16..31), full-corpus codes, nprobe=3 probe
-    * expansion, per-cell re-centered ADC, top-10. `prelude` prepends
-    * extra CTEs (must be self-contained — they run before `base`);
-    * `pairPredicate` restricts which INDEXED ids are scored (the
-    * delete/stream oracles' knob — frozen-quantizer codes don't depend
-    * on what else is indexed, so restricting the scored set IS the
-    * rebuild-without-them index). */
-  private[queries] def ivfPqServeOracle(prelude: String, pairPredicate: String): String =
-    s"""WITH $prelude base AS (
-           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         cents AS (
+  /** The first `n` vectors as the query panel (`query_id`, `embedding`). */
+  private[queries] def queryPanel(e: DataFrame, n: Int = 5): DataFrame =
+    e.filter(col("vec_id") < n)
+      .select(col("vec_id").as("query_id"), col("embedding"))
+
+  /** The fixed residual IVF-PQ quantizers over `e`: centroids = the
+    * first 16 vectors, codebooks (m=8, k=16) from the residuals of ids
+    * 16..31 — NOT 0..15: the first 16 vectors ARE the centroids, so
+    * their residuals are all zero and would make every codebook entry
+    * the zero vector (degenerate all-zero ADC). */
+  private[queries] def residualQuantizers(e: DataFrame)
+      : (Seq[Seq[Double]], Seq[Seq[Seq[Double]]]) = {
+    val cents = llm.Similarity.initCentroids(e, "vec_id", "embedding", 16)
+    val cb = llm.Similarity.pqCodebooksFixed(
+      llm.Similarity.residualCorpus(e, "vec_id", "embedding", cents)
+        .filter(col("vec_id").between(16, 31)),
+      "vec_id", "embedding", m = 8, k = 16)
+    (cents, cb)
+  }
+
+  /** The micro fixture's strict directed road graph with integer
+    * CENTIMETER weights `w` (bit-portable path sums), carrying the
+    * way-derived `edge_id` when `withEdgeId`. */
+  private[queries] def microCmEdges(t: osm.OsmTables,
+      withEdgeId: Boolean = false): DataFrame = {
+    val merged = osm.RoadGraph.buildMergedNetworkCached(t, "micro")
+    val e = osm.RoadGraph.directed(merged)
+    val w = round(col("length") * 100).cast("long").as("w")
+    if (withEdgeId) e.select(col("start_node"), col("end_node"), col("edge_id"), w)
+    else e.select(col("start_node"), col("end_node"), w)
+  }
+
+  // ---- vector-search oracle fragments (the embeddings table)
+
+  /** `base`: every embedding as DOUBLE[] `v`. */
+  private val pqBase: String =
+    """base AS (
+           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)"""
+
+  /** `base` after the value-exact permutation y_i = x_{5i mod 64} (the
+    * fixed stand-in for a trained OPQ rotation). */
+  private val permutedBase: String =
+    """raw AS (
+           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v0 FROM embeddings),
+         base AS (
+           SELECT vec_id,
+             list_transform(range(0, 64), i -> v0[(i*5)%64 + 1]) AS v
+           FROM raw)"""
+
+  /** argmax-cosine cell per vector over `scores`, ties to the lowest cid. */
+  private def assignCte(scores: String): String =
+    s"""assign AS (
+           SELECT vec_id, cid FROM (
+             SELECT vec_id, cid,
+               row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid) AS rn
+             FROM $scores) WHERE rn = 1)"""
+
+  /** The `nprobe` best cells of each of the 5 panel queries. */
+  private[queries] def probesCte(scores: String, nprobe: Int): String =
+    s"""probes AS (
+           SELECT vec_id AS query_id, cid FROM (
+             SELECT vec_id, cid,
+               row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid) AS rn
+             FROM $scores WHERE vec_id < 5) WHERE rn <= $nprobe)"""
+
+  /** The fixed coarse quantizer straight off the embeddings table:
+    * first `nlist` vectors as centroids, cosine `scores`, `assign`. */
+  private[queries] def cosineCells(nlist: Int): String =
+    s"""cents AS (
+           SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid,
+                  CAST(embedding AS DOUBLE[]) AS c
+           FROM (SELECT * FROM embeddings ORDER BY vec_id LIMIT $nlist)),
+         scores AS (
+           SELECT v.vec_id, c.cid,
+             list_dot_product(CAST(v.embedding AS DOUBLE[]), c.c) /
+               (sqrt(list_dot_product(CAST(v.embedding AS DOUBLE[]),
+                                      CAST(v.embedding AS DOUBLE[]))) *
+                sqrt(list_dot_product(c.c, c.c))) AS cs
+           FROM embeddings v CROSS JOIN cents c),
+         ${assignCte("scores")}"""
+
+  /** [[cosineCells]] over `base` (16 cells, scores in `cscores`). */
+  private val coarseCells: String =
+    s"""cents AS (
            SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, v AS c
            FROM (SELECT * FROM base ORDER BY vec_id LIMIT 16)),
          cscores AS (
@@ -73,61 +151,47 @@ object QueryHelpers {
                (sqrt(list_dot_product(b.v, b.v)) *
                 sqrt(list_dot_product(ct.c, ct.c))) AS cs
            FROM base b CROSS JOIN cents ct),
-         assign AS (
-           SELECT vec_id, cid FROM (
-             SELECT vec_id, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid) AS rn
-             FROM cscores) WHERE rn = 1),
-         resid AS (
-           SELECT b.vec_id, a.cid,
-             list_transform(range(1, 1 + len(b.v)),
-               i -> b.v[i] - ct.c[i]) AS r
-           FROM base b
-           JOIN assign a ON a.vec_id = b.vec_id
-           JOIN cents ct ON ct.cid = a.cid),
-         cb AS (
-           SELECT m.range AS m, r.vec_id - 16 AS j,
-                  list_slice(r.r, m.range*8 + 1, m.range*8 + 8) AS c
-           FROM range(8) m,
-                (SELECT vec_id, r FROM resid
-                 WHERE vec_id BETWEEN 16 AND 31) r),
-         pqscores AS (
-           SELECT r.vec_id, c.m, c.j,
-             list_dot_product(c.c, c.c) -
-               2*list_dot_product(c.c,
-                   list_slice(r.r, c.m*8 + 1, c.m*8 + 8)) AS s
-           FROM resid r CROSS JOIN cb c),
-         codes AS (
+         ${assignCte("cscores")}"""
+
+  /** PQ codes: per (vector, subspace) the argmin of `scores.s`, ties to
+    * the lowest codeword j. */
+  private def pqCodes(scores: String): String =
+    s"""codes AS (
            SELECT vec_id, m, j AS code FROM (
              SELECT vec_id, m, j,
                row_number() OVER (PARTITION BY vec_id, m ORDER BY s, j) AS rn
-             FROM pqscores) WHERE rn = 1),
-         probes AS (
-           SELECT vec_id AS query_id, cid FROM (
-             SELECT vec_id, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid) AS rn
-             FROM cscores WHERE vec_id < 5) WHERE rn <= 3),
-         qres AS (
-           SELECT p.query_id, p.cid,
-             list_transform(range(1, 1 + len(b.v)),
-               i -> b.v[i] - ct.c[i]) AS r
-           FROM probes p
-           JOIN base b ON b.vec_id = p.query_id
-           JOIN cents ct ON ct.cid = p.cid),
+             FROM $scores) WHERE rn = 1)"""
+
+  /** Raw-vector PQ (8 subspaces of 8 dims): codebooks = sub-slices of
+    * the first 16 vectors, per-codeword `scores` c·c − 2 c·v_m, codes,
+    * and the panel queries' sub-vectors `qsub`. */
+  private def rawPqCtes(scores: String): String =
+    s"""cb AS (
+           SELECT m.range AS m, b.vec_id AS j,
+                  list_slice(b.v, m.range*8 + 1, m.range*8 + 8) AS c
+           FROM range(8) m, (SELECT vec_id, v FROM base WHERE vec_id < 16) b),
+         $scores AS (
+           SELECT b.vec_id, c.m, c.j,
+             list_dot_product(c.c, c.c) -
+               2*list_dot_product(c.c,
+                   list_slice(b.v, c.m*8 + 1, c.m*8 + 8)) AS s
+           FROM base b CROSS JOIN cb c),
+         ${pqCodes(scores)},
          qsub AS (
-           SELECT q.query_id, q.cid, m.range AS m,
-                  list_slice(q.r, m.range*8 + 1, m.range*8 + 8) AS qm
-           FROM qres q, range(8) m),
-         pair AS (
+           SELECT b.vec_id AS query_id, m.range AS m,
+                  list_slice(b.v, m.range*8 + 1, m.range*8 + 8) AS qm
+           FROM base b, range(8) m WHERE b.vec_id < 5)"""
+
+  /** ADC = Σ_m (q·q − 2 q·c + c·c) over `qsub` joined by `joins`, then
+    * the top 10 per query by (adc, vec_id). */
+  private def adcTop10(joins: String): String =
+    s"""pair AS (
            SELECT q.query_id, d.vec_id,
              sum(list_dot_product(q.qm, q.qm) -
                  2*list_dot_product(q.qm, c.c) +
                  list_dot_product(c.c, c.c)) AS adc
            FROM qsub q
-           JOIN assign a ON a.cid = q.cid
-           JOIN codes d ON d.vec_id = a.vec_id AND d.m = q.m
-           JOIN cb c ON c.m = d.m AND c.j = d.code
-           WHERE $pairPredicate
+$joins
            GROUP BY q.query_id, d.vec_id),
          ranked AS (
            SELECT query_id, vec_id, adc,
@@ -138,10 +202,443 @@ object QueryHelpers {
          FROM ranked WHERE rn <= 10
          ORDER BY query_id, vec_id"""
 
-  /** Shared CTE chain for the routing oracles: rebuilt merged graph
-    * (graphPrefix) + node coords + per-edge haversine cm lengths +
-    * strict directed expansion + hop-bounded SSSP recursion `r`. */
-  private[queries] val oracleRouteCore: String = """,
+  /** PQ ADC search over raw vectors, every vector scored. */
+  private[queries] val pqAdcOracle: String =
+    s"""WITH $pqBase,
+         ${rawPqCtes("scores")},
+         ${adcTop10("""           JOIN codes d ON d.m = q.m
+           JOIN cb c ON c.m = d.m AND c.j = d.code""")}"""
+
+  /** IVF-PQ over raw vectors: [[pqAdcOracle]] restricted to the
+    * vectors of each query's 4 probed cells. */
+  private[queries] val ivfPqOracle: String =
+    s"""WITH $pqBase,
+         $coarseCells,
+         ${probesCte("cscores", 4)},
+         ${rawPqCtes("pqscores")},
+         ${adcTop10("""           JOIN codes d ON d.m = q.m
+           JOIN assign a ON a.vec_id = d.vec_id
+           JOIN probes p ON p.query_id = q.query_id AND p.cid = a.cid
+           JOIN cb c ON c.m = d.m AND c.j = d.code""")}"""
+
+  /** Residual IVF-PQ (FAISS IndexIVFPQ layout) with the fixed
+    * quantizers of [[residualQuantizers]]: residuals r = v − c_cell in
+    * double, residual codebooks from ids 16..31, codes, and the query
+    * residual (so its ADC table) rebuilt PER PROBED CELL.
+    *  - `m` subspaces of 64/m dims;
+    *  - `permuteBase` permutes every vector first (OPQ∘IVF-PQ),
+    *    `permuteResidual` permutes the residual only (LOPQ), both by
+    *    y_i = x_{5i mod 64};
+    *  - `prelude` prepends self-contained CTEs (they run before
+    *    `base`); `pairPredicate` restricts which indexed ids are scored.
+    */
+  private[queries] def residualIvfPqOracle(nprobe: Int, m: Int = 8,
+      permuteBase: Boolean = false, permuteResidual: Boolean = false,
+      prelude: String = "", pairPredicate: String = ""): String = {
+    val w = 64 / m
+    val diff =
+      if (permuteResidual) """list_transform(range(0, 64),
+               i -> b.v[(i*5)%64 + 1] - ct.c[(i*5)%64 + 1]) AS r"""
+      else """list_transform(range(1, 1 + len(b.v)),
+               i -> b.v[i] - ct.c[i]) AS r"""
+    val where =
+      if (pairPredicate.isEmpty) "" else s"\n           WHERE $pairPredicate"
+    s"""WITH $prelude${if (permuteBase) permutedBase else pqBase},
+         $coarseCells,
+         resid AS (
+           SELECT b.vec_id, a.cid,
+             $diff
+           FROM base b
+           JOIN assign a ON a.vec_id = b.vec_id
+           JOIN cents ct ON ct.cid = a.cid),
+         cb AS (
+           SELECT m.range AS m, r.vec_id - 16 AS j,
+                  list_slice(r.r, m.range*$w + 1, m.range*$w + $w) AS c
+           FROM range($m) m,
+                (SELECT vec_id, r FROM resid
+                 WHERE vec_id BETWEEN 16 AND 31) r),
+         pqscores AS (
+           SELECT r.vec_id, c.m, c.j,
+             list_dot_product(c.c, c.c) -
+               2*list_dot_product(c.c,
+                   list_slice(r.r, c.m*$w + 1, c.m*$w + $w)) AS s
+           FROM resid r CROSS JOIN cb c),
+         ${pqCodes("pqscores")},
+         ${probesCte("cscores", nprobe)},
+         qres AS (
+           SELECT p.query_id, p.cid,
+             $diff
+           FROM probes p
+           JOIN base b ON b.vec_id = p.query_id
+           JOIN cents ct ON ct.cid = p.cid),
+         qsub AS (
+           SELECT q.query_id, q.cid, m.range AS m,
+                  list_slice(q.r, m.range*$w + 1, m.range*$w + $w) AS qm
+           FROM qres q, range($m) m),
+         ${adcTop10(s"""           JOIN assign a ON a.cid = q.cid
+           JOIN codes d ON d.vec_id = a.vec_id AND d.m = q.m
+           JOIN cb c ON c.m = d.m AND c.j = d.code$where""")}"""
+  }
+
+  /** The IndexStore serve oracle: [[residualIvfPqOracle]] at nprobe=3,
+    * one space between `prelude` and `base`, every pair row filtered by
+    * `pairPredicate` (the delete/stream oracles' knob — frozen-quantizer
+    * codes don't depend on what else is indexed, so restricting the
+    * scored set IS the rebuild-without-them index). */
+  private[queries] def ivfPqServeOracle(prelude: String,
+      pairPredicate: String): String =
+    residualIvfPqOracle(3, prelude = s"$prelude ", pairPredicate = pairPredicate)
+
+  // ---- text oracle fragments (the documents table)
+
+  /** DuckDB replica of the MinHash-LSH signature and banding: md5-derived
+    * 5-char shingle hashes (portable by design, see
+    * [[graft.llm.Dedup.md5Hash31]]), `numPerm` minima generated from the
+    * SAME `minhashParams` the engine uses, bands of `rowsPerBand`.
+    * Ends with `bands`. */
+  private[queries] def minhashBandsSql(numPerm: Int, rowsPerBand: Int): String = {
+    val ps = llm.Dedup.minhashParams(numPerm)
+    val mins = ps.zipWithIndex.map { case ((a, b), i) =>
+      s"min((h*$a + $b) % 2147483647) AS m$i"
+    }.mkString(",\n    ")
+    val bandVals = (0 until numPerm / rowsPerBand).map { b =>
+      val cols = (0 until rowsPerBand).map(j => s"m${b * rowsPerBand + j}")
+        .mkString(",")
+      s"($b, concat_ws('|',$cols))"
+    }.mkString(",")
+    s"""WITH sh AS (
+    SELECT doc_id, substr(text, CAST(i AS INTEGER), 5) AS s
+    FROM documents, LATERAL unnest(range(1, greatest(length(text)-4,1)+1)) AS t(i)
+  ),
+  h AS (
+    SELECT doc_id, CAST(('0x' || substr(md5(s),1,8)) AS BIGINT) % 2147483647 AS h
+    FROM sh
+  ),
+  sig AS (
+    SELECT doc_id,
+    $mins
+    FROM h GROUP BY doc_id
+  ),
+  bands AS (
+    SELECT doc_id, b.band, b.bh FROM sig, LATERAL (VALUES $bandVals) AS b(band, bh)
+  )"""
+  }
+
+  /** The curation-survivor CTEs (the curation stream's batch replay):
+    * language gate, gopher gate, URL-group dedup with first-by-(batch,
+    * doc_id) preference. Ends with `surv` and a trailing comma. */
+  private[queries] val curationSurvivorCtes: String =
+    """d AS (SELECT doc_id, text,
+                    string_split(lower(text), ' ') AS toks
+             FROM documents),
+         langs AS (SELECT doc_id,
+           len(list_filter(toks, t -> t IN ('the','and','of','to','in','is','that','it','for','with'))) AS en,
+           len(list_filter(toks, t -> t IN ('der','die','und','das','ist','nicht','ein','mit','auf','zu'))) AS de,
+           len(list_filter(toks, t -> t IN ('el','la','de','que','y','los','en','un','por','con'))) AS es,
+           len(list_filter(toks, t -> t IN ('le','la','de','et','les','des','est','un','une','dans'))) AS fr
+           FROM d),
+         en AS (SELECT doc_id FROM langs
+                WHERE greatest(en, de, es, fr) > 0
+                  AND NOT de >= greatest(en, es, fr)
+                  AND en >= greatest(es, fr)),
+         f AS (SELECT doc_id,
+           len(string_split(text, ' ')) AS n_tok,
+           length(text) AS n_chars,
+           length(regexp_replace(text, '[^[:punct:]]', '', 'g')) AS n_punct,
+           len(list_filter(string_split(text, ' '),
+               t -> t IN ('the','a','an','and','or','of','to','in','is','it',
+                          'that','for','on','with','as','at','by'))) AS sw,
+           len(list_distinct(string_split(text, ' '))) AS n_uniq
+           FROM documents),
+         pass AS (SELECT doc_id FROM f
+           WHERE n_tok BETWEEN 30 AND 10000
+             AND n_chars / CAST(n_tok AS DOUBLE) BETWEEN 3.0 AND 10.0
+             AND n_punct / CAST(n_chars AS DOUBLE) <= 0.1
+             AND sw >= 2
+             AND (n_tok - n_uniq) / CAST(n_tok AS DOUBLE) <= 0.6),
+         kept AS (SELECT d.doc_id, d.text FROM d
+                  JOIN en USING (doc_id) JOIN pass USING (doc_id)),
+         surv AS (SELECT doc_id, text FROM (
+             SELECT doc_id, text,
+               row_number() OVER (PARTITION BY doc_id // 3
+                                  ORDER BY doc_id % 2, doc_id) AS rn
+             FROM kept) WHERE rn = 1),"""
+
+  /** Exact 8-gram decontamination against every 97th document (the
+    * bloom-prefiltered form must match it exactly). */
+  private[queries] val decontamOracle: String =
+    """WITH toks AS (SELECT doc_id, lang, string_split(text, ' ') AS t
+                       FROM documents),
+         grams AS (
+           SELECT doc_id, lang,
+                  array_to_string(t[i:i+7], ' ') AS g
+           FROM toks,
+                UNNEST(range(1, greatest(len(t) - 6, 2))) AS r(i)),
+         bench AS (SELECT DISTINCT g FROM grams WHERE doc_id % 97 = 0),
+         dirty AS (SELECT DISTINCT doc_id FROM grams
+                   WHERE g IN (SELECT g FROM bench))
+         SELECT lang, count(*) AS kept
+         FROM documents WHERE doc_id NOT IN (SELECT doc_id FROM dirty)
+         GROUP BY lang ORDER BY lang"""
+
+  /** Per-token rows `tok` (doc_id, 1-based ord, tok) of every document;
+    * ends just before its WHERE/closing parenthesis. */
+  private[queries] val docTokens: String =
+    """WITH toks AS (
+           SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+         tok AS (
+           SELECT doc_id, CAST(i AS INT) AS ord, t[i] AS tok
+           FROM toks, UNNEST(range(1, len(t) + 1)) AS r(i)"""
+
+  /** Keep-globally-first chunk rewrite over `chunks` (doc_id, chunk_id,
+    * chunk_text): first occurrence by (doc_id, chunk_id) survives, each
+    * document reassembled in chunk order. */
+  private[queries] val keepFirstChunks: String =
+    """flagged AS (
+           SELECT doc_id, chunk_id, chunk_text,
+                  row_number() OVER (PARTITION BY chunk_text
+                                     ORDER BY doc_id, chunk_id) AS rn
+           FROM chunks)
+         SELECT doc_id,
+                coalesce(string_agg(CASE WHEN rn = 1 THEN chunk_text END,
+                                    ' ' ORDER BY chunk_id), '') AS clean_text,
+                count(*) FILTER (WHERE rn = 1) AS kept_chunks,
+                count(*) FILTER (WHERE rn > 1) AS dropped_chunks
+         FROM flagged GROUP BY doc_id ORDER BY doc_id"""
+
+  // ---- relational oracle fragments (TPC-H tables)
+
+  /** Scalar weighted median of l_quantity weighted by the rounded
+    * l_extendedprice (general-functions.sql:52-75): the window form,
+    * which the scalable prefix-sum form must agree with. */
+  private[queries] val weightedMedianOracle: String =
+    """WITH src AS (SELECT l_quantity AS x,
+                             CAST(round(l_extendedprice) AS BIGINT) AS w
+                      FROM lineitem),
+         wm AS (SELECT x,
+                  sum(coalesce(w, 0)) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS runsum,
+                  sum(coalesce(w, 0)) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prevsum,
+                  sum(coalesce(w, 0)) OVER () AS total
+                FROM src)
+         SELECT avg(x) AS weighted_median FROM wm
+         WHERE total / 2 BETWEEN prevsum AND runsum"""
+
+  /** The (flag, status) grouping-set totals' select list over lineitem;
+    * callers append the GROUP BY. */
+  private[queries] val flagStatusTotals: String =
+    """SELECT CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid,
+                COALESCE(l_returnflag, 'ALL') AS flag,
+                COALESCE(l_linestatus, 'ALL') AS status,
+                count(*) AS cnt, round(sum(l_quantity), 2) AS sum_qty
+         FROM lineitem"""
+
+  // ---- OSM oracle fragments
+
+  /** The reference-shaped way-splitting chain (osm-road-graphs.sql:
+    * 66-127) over a `way_nodes` CTE whose column list and body are
+    * `wayNodes`: shared nodes, way lengths, split points, lag-window
+    * merge limits, dead-end append, range join. Ends with `ntm`. */
+  private def splitChain(wayNodes: String): String =
+    s"""WITH way_nodes$wayNodes,
+       shared AS (SELECT node_id FROM way_nodes GROUP BY node_id HAVING count(*) > 1),
+       lengths AS (SELECT way_id, max(sequence_id) AS length
+                   FROM way_nodes WHERE sequence_id > 1 GROUP BY way_id),
+       splits AS (
+         SELECT n.way_id, n.node_id, n.sequence_id
+         FROM way_nodes n
+         JOIN shared s ON n.node_id = s.node_id
+         JOIN lengths l ON n.way_id = l.way_id AND n.sequence_id < l.length
+         WHERE n.sequence_id > 0),
+       base AS (
+         SELECT way_id,
+                lag(sequence_id, 1, 0) OVER (PARTITION BY way_id ORDER BY sequence_id) AS bottom_limit,
+                sequence_id AS top_limit
+         FROM way_nodes
+         WHERE sequence_id > 0
+           AND way_id IN (SELECT way_id FROM splits)
+           AND node_id IN (SELECT node_id FROM shared)),
+       lastseg AS (
+         SELECT b.way_id, b.top_limit AS bottom_limit, l.length AS top_limit
+         FROM (SELECT way_id, max(top_limit) AS top_limit FROM base GROUP BY way_id) b
+         JOIN lengths l ON b.way_id = l.way_id AND b.top_limit < l.length),
+       lims AS (SELECT * FROM base UNION ALL SELECT * FROM lastseg),
+       ntm AS (
+         SELECT w.way_id, l.top_limit AS group_id, w.sequence_id, w.node_id
+         FROM way_nodes w
+         JOIN lims l ON w.way_id = l.way_id
+                    AND w.sequence_id BETWEEN l.bottom_limit AND l.top_limit)"""
+
+  /** The micro fixture's way_nodes as VALUES, [[splitChain]], and the
+    * ordered re-assembly into `merged` (osm-road-graphs.sql:66-165). */
+  private[queries] val graphPrefix: String =
+    splitChain("""(way_id, sequence_id, node_id) AS (VALUES
+         (101,0,1),(101,1,2),(101,2,3),(101,3,4),
+         (102,0,5),(102,1,3),(102,2,6),
+         (103,0,7),(103,1,8),
+         (104,0,9),(104,1,10),
+         (106,0,10),(106,1,9),
+         (109,0,8),(109,1,12))""") + """,
+       merged AS (
+         SELECT way_id AS edge_id, group_id,
+                (list(node_id ORDER BY sequence_id))[1] AS start_node,
+                (list(node_id ORDER BY sequence_id))[-1] AS end_node,
+                array_to_string(list(CAST(node_id AS VARCHAR) ORDER BY sequence_id), ',') AS nodes_csv,
+                array_to_string(list(CAST(node_id AS VARCHAR) ORDER BY sequence_id DESC), ',') AS nodes_csv_rev
+         FROM ntm GROUP BY way_id, group_id
+         UNION ALL
+         SELECT way_id, -1,
+                (list(node_id ORDER BY sequence_id))[1],
+                (list(node_id ORDER BY sequence_id))[-1],
+                array_to_string(list(CAST(node_id AS VARCHAR) ORDER BY sequence_id), ','),
+                array_to_string(list(CAST(node_id AS VARCHAR) ORDER BY sequence_id DESC), ',')
+         FROM way_nodes
+         WHERE way_id NOT IN (SELECT DISTINCT way_id FROM ntm)
+         GROUP BY way_id)"""
+
+  /** The split at data scale: lineitem as way_nodes (way = order, node =
+    * part, seq = line order), [[splitChain]], one csv row per segment.
+    * The relational and array formulations must both reproduce it. */
+  private[queries] val splitScaleOracle: String =
+    splitChain(""" AS (
+         SELECT l_orderkey AS way_id, l_partkey AS node_id,
+                CAST(row_number() OVER (PARTITION BY l_orderkey
+                     ORDER BY l_linenumber, l_partkey) - 1 AS INT) AS sequence_id
+         FROM lineitem)""") + """,
+       segs AS (
+         SELECT way_id,
+                array_to_string(list(CAST(node_id AS VARCHAR)
+                  ORDER BY sequence_id), ',') AS nodes_csv
+         FROM ntm GROUP BY way_id, group_id
+         UNION ALL
+         SELECT way_id,
+                array_to_string(list(CAST(node_id AS VARCHAR)
+                  ORDER BY sequence_id), ',') AS nodes_csv
+         FROM way_nodes
+         WHERE way_id NOT IN (SELECT DISTINCT way_id FROM ntm)
+         GROUP BY way_id)
+       SELECT way_id, nodes_csv FROM segs ORDER BY way_id, nodes_csv"""
+
+  /** The `w`-CTE both data-scale OSM oracles share: the SQL
+    * re-derivation of OsmQueries.scaleWays. */
+  private[queries] val scaleWaysSql: String =
+    """w AS (
+      SELECT p_partkey AS id,
+        list_extract(['residential','footway','motorway','cycleway',
+                      'primary','steps','service','path'],
+                     CAST(p_partkey % 8 + 1 AS INTEGER)) AS highway,
+        CASE WHEN p_partkey % 7 = 0 THEN 'private' END AS access,
+        CASE WHEN p_partkey % 5 = 0 THEN 'designated' END AS foot,
+        CASE WHEN p_partkey % 11 = 0 THEN 'designated' END AS bicycle_t,
+        CAST(NULL AS VARCHAR) AS service, CAST(NULL AS VARCHAR) AS cycleway,
+        CAST(NULL AS VARCHAR) AS footway, CAST(NULL AS VARCHAR) AS motor_vehicle,
+        CAST(NULL AS VARCHAR) AS bus,
+        CASE WHEN p_partkey % 3 = 0 THEN CAST(p_size * 10 AS INTEGER) END AS speed_raw
+      FROM part)"""
+
+  /** The mode-flag cascade (osm-complete-graphs.sql:8-151) over the
+    * tag columns of `src`: blocked `b`, car, then pedestrian and bicycle
+    * in three steps each. `strict` keeps the reference's AND/OR
+    * precedence quirk in the dedicated rules (a designated-footway match
+    * can overturn an earlier pedestrian=0); evident intent distributes
+    * the NULL-guard over both disjuncts. Ends with `b3`. */
+  private[queries] def modeFlagCascade(src: String, strict: Boolean): String = {
+    val (ped, bike) =
+      if (strict) ("(pq IS NULL AND foot = 'designated') OR footway IN ('sidewalk','crossing','yes')",
+        "(bq IS NULL AND bicycle_t = 'designated') OR cycleway = 'designated'")
+      else ("pq IS NULL AND (foot = 'designated' OR footway IN ('sidewalk','crossing','yes'))",
+        "bq IS NULL AND (bicycle_t = 'designated' OR cycleway = 'designated')")
+    s"""base AS (SELECT *, CASE
+             WHEN access IN ('no','private','permit','customers','forestry','agricultural','military','emergency','bus','delivery','restricted') THEN 0
+             WHEN service IN ('drive-through','emergency_access','bus') THEN 0
+             WHEN highway IN ('disused','dismantled','razed','rest_area','corridor','construction','abandoned','raceway','proposed','planned','platform') THEN 0
+             ELSE NULL END AS b FROM $src),
+         carc AS (SELECT *, CASE
+             WHEN highway IN ('steps','footway','pedestrian','cycleway','bridleway','elevator','sidewalk') THEN 0
+             WHEN bicycle_t = 'designated' OR cycleway = 'designated' OR foot = 'designated'
+                  OR footway IN ('sidewalk','crossing','yes')
+                  OR motor_vehicle IN ('no','private')
+                  OR service IN ('parking_aisle','parking') OR bus = 'designated' THEN 0
+             WHEN b IS NULL AND highway IN ('motorway','primary','tertiary','secondary','primary_link','tertiary_link','secondary_link','trunk','trunk_link','motorway_link','motorway_junction') THEN 1
+             ELSE b END AS car FROM base),
+         p1 AS (SELECT *, CASE WHEN highway IN ('motorway','trunk','trunk_link','motorway_link','motorway_junction') THEN 0
+                               WHEN bus = 'designated' THEN 0 ELSE b END AS pp FROM carc),
+         p2 AS (SELECT *, CASE WHEN pp IS NULL AND highway IN ('steps','footway','pedestrian','bridleway','elevator','sidewalk','living_street','path') THEN 1 ELSE pp END AS pq FROM p1),
+         p3 AS (SELECT *, CASE WHEN $ped THEN 1 ELSE pq END AS pedestrian FROM p2),
+         b1 AS (SELECT *, CASE WHEN highway IN ('motorway','trunk','trunk_link','motorway_link','motorway_junction') THEN 0
+                               WHEN bus = 'designated' THEN 0 ELSE b END AS bb FROM p3),
+         b2 AS (SELECT *, CASE WHEN bb IS NULL AND highway IN ('cycleway','living_street') THEN 1 ELSE bb END AS bq FROM b1),
+         b3 AS (SELECT *, CASE WHEN $bike THEN 1 ELSE bq END AS bicycle FROM b2)"""
+  }
+
+  /** The micro fixture's mode flags: its ways' tags as VALUES through
+    * [[modeFlagCascade]]. */
+  private[queries] def completeFlagsOracle(strict: Boolean): String =
+    s"""WITH w(edge_id, highway, access, service, bicycle_t, cycleway, foot,
+                footway, motor_vehicle, bus) AS (VALUES
+           (101, 'residential', CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR)),
+           (102, 'tertiary', NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL),
+           (103, 'primary', NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL),
+           (104, 'motorway', NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL),
+           (105, 'footway', NULL, NULL, NULL, NULL, NULL, 'sidewalk', NULL, NULL),
+           (106, 'motorway', NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL),
+           (107, 'residential', 'private', NULL, NULL, NULL, NULL, NULL, NULL, NULL),
+           (109, 'tertiary', NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL)),
+         ${modeFlagCascade("w", strict)}
+         SELECT CAST(edge_id AS BIGINT) AS edge_id, highway,
+                CAST(car AS SMALLINT) AS car,
+                CAST(pedestrian AS SMALLINT) AS pedestrian,
+                CAST(bicycle AS SMALLINT) AS bicycle
+         FROM b3 ORDER BY edge_id"""
+
+  /** The micro fixture ways' highway/oneway attributes. */
+  private val microAttrs: String =
+    """attrs(way_id, highway, oneway) AS (VALUES
+           (101,'residential',CAST(NULL AS VARCHAR)),(102,'tertiary',CAST(NULL AS VARCHAR)),
+           (103,'primary','yes'),(104,'motorway','-1'),
+           (106,'motorway',CAST(NULL AS VARCHAR)),(109,'tertiary',CAST(NULL AS VARCHAR)))"""
+
+  /** Directed expansion of the micro graph (osm-road-graphs.sql:
+    * 183-220). `strict` keeps the reference's NULL-oneway motorway drop;
+    * evident intent makes those motorways forward edges. */
+  private[queries] def directedOracle(strict: Boolean): String = {
+    val forward =
+      if (strict) "oneway = 'yes' OR (highway = 'motorway' AND oneway != '-1')"
+      else """oneway = 'yes'
+               OR (highway = 'motorway' AND (oneway IS NULL OR oneway != '-1'))"""
+    graphPrefix + s""",
+         $microAttrs,
+         merged2 AS (SELECT m.*, a.highway, a.oneway
+                     FROM merged m JOIN attrs a ON m.edge_id = a.way_id),
+         directed AS (
+           SELECT edge_id, start_node, end_node, nodes_csv FROM merged2
+            WHERE (oneway IS NULL OR oneway = 'no') AND highway != 'motorway'
+           UNION ALL
+           SELECT edge_id, end_node, start_node, nodes_csv_rev FROM merged2
+            WHERE (oneway IS NULL OR oneway = 'no') AND highway != 'motorway'
+           UNION ALL
+           SELECT edge_id, start_node, end_node, nodes_csv FROM merged2
+            WHERE $forward
+           UNION ALL
+           SELECT edge_id, end_node, start_node, nodes_csv_rev FROM merged2
+            WHERE oneway = '-1')
+         SELECT CAST(edge_id AS BIGINT) AS edge_id,
+                CAST(start_node AS BIGINT) AS start_node,
+                CAST(end_node AS BIGINT) AS end_node, nodes_csv
+         FROM directed ORDER BY edge_id, start_node, end_node, nodes_csv"""
+  }
+
+  /** The routing graph: [[graphPrefix]] under WITH RECURSIVE + node
+    * coords + per-edge haversine lengths in integer cm + the strict
+    * directed edge set `dedges` (src, dst, w), carrying the way-derived
+    * edge id `eid` when `withEid` (the pgRouting-shaped per-edge row
+    * oracles). Ends with `dedges`. */
+  private[queries] def routeGraph(withEid: Boolean): String = {
+    val eid = if (withEid) ", eid" else ""
+    val m4 =
+      if (withEid) """m4 AS (SELECT m.start_node, m.end_node, l.w,
+                       CAST(a.way_id AS BIGINT) AS eid, a.highway, a.oneway"""
+      else "m4 AS (SELECT m.start_node, m.end_node, l.w, a.highway, a.oneway"
+    graphPrefix.replaceFirst("WITH", "WITH RECURSIVE") + s""",
          coords(node_id, lon, lat) AS (VALUES
            (1,0.00,0.0),(2,0.01,0.0),(3,0.02,0.0),(4,0.03,0.0),
            (5,0.02,-0.01),(6,0.02,0.01),(7,0.10,0.0),(8,0.12,0.0),
@@ -165,28 +662,111 @@ object QueryHelpers {
                     cos(radians(lat)) * cos(radians(lat2)) *
                       sin(radians(lon2 - lon)/2)^2))) * 100) AS BIGINT) AS w
            FROM segpts WHERE lon2 IS NOT NULL GROUP BY edge_id, group_id),
-         attrs(way_id, highway, oneway) AS (VALUES
-           (101,'residential',CAST(NULL AS VARCHAR)),(102,'tertiary',CAST(NULL AS VARCHAR)),
-           (103,'primary','yes'),(104,'motorway','-1'),
-           (106,'motorway',CAST(NULL AS VARCHAR)),(109,'tertiary',CAST(NULL AS VARCHAR))),
-         m4 AS (SELECT m.start_node, m.end_node, l.w, a.highway, a.oneway
+         $microAttrs,
+         $m4
                 FROM merged m
                 JOIN elen l ON m.edge_id = l.edge_id AND m.group_id = l.group_id
                 JOIN attrs a ON m.edge_id = a.way_id),
          dedges AS (
-           SELECT start_node AS src, end_node AS dst, w FROM m4
+           SELECT start_node AS src, end_node AS dst, w$eid FROM m4
             WHERE (oneway IS NULL OR oneway = 'no') AND highway != 'motorway'
            UNION ALL
-           SELECT end_node, start_node, w FROM m4
+           SELECT end_node, start_node, w$eid FROM m4
             WHERE (oneway IS NULL OR oneway = 'no') AND highway != 'motorway'
            UNION ALL
-           SELECT start_node, end_node, w FROM m4
+           SELECT start_node, end_node, w$eid FROM m4
             WHERE oneway = 'yes' OR (highway = 'motorway' AND oneway != '-1')
            UNION ALL
-           SELECT end_node, start_node, w FROM m4 WHERE oneway = '-1'),
+           SELECT end_node, start_node, w$eid FROM m4 WHERE oneway = '-1')"""
+  }
+
+  /** [[routeGraph]] + the hop-bounded SSSP recursion `r` from node 1. */
+  private[queries] val routeSssp: String = routeGraph(withEid = false) + """,
          r(node, dist, hops) AS (
            SELECT 1, CAST(0 AS BIGINT), 0
            UNION ALL
            SELECT e.dst, r.dist + e.w, r.hops + 1
            FROM r JOIN dedges e ON e.src = r.node WHERE r.hops < 8)"""
+
+  /** [[routeSssp]] + one BFS relation per seed of `seeds` (a VALUES row
+    * list) and its per-(seed, node) minimum `mc`. */
+  private[queries] def seededSssp(seeds: String): String = routeSssp + s""",
+         rc(seed, node, dist, hops) AS (
+           SELECT seed, seed, CAST(0 AS BIGINT), 0
+           FROM (VALUES $seeds) s(seed)
+           UNION ALL
+           SELECT rc.seed, e.dst, rc.dist + e.w, rc.hops + 1
+           FROM rc JOIN dedges e ON e.src = rc.node WHERE rc.hops < 8),
+         mc AS (SELECT seed, node, min(dist) AS d FROM rc GROUP BY seed, node)"""
+
+  /** The best 1→4 path by (dist, node list) over the path enumeration
+    * `r2` on `dedges`, as `sel`. */
+  private[queries] val routeBestPath: String = """,
+         r2(node, dist, path) AS (
+           SELECT 1, CAST(0 AS BIGINT), [CAST(1 AS BIGINT)]
+           UNION ALL
+           SELECT e.dst, r2.dist + e.w, list_append(r2.path, CAST(e.dst AS BIGINT))
+           FROM r2 JOIN dedges e ON e.src = r2.node WHERE len(r2.path) <= 8),
+         sel AS (SELECT dist, path FROM r2 WHERE node = 4
+                 ORDER BY dist, path LIMIT 1)"""
+
+  /** The 1→4 route as (seq, node_id, total_cm) rows: Dijkstra and A*
+    * must both return exactly this relation. */
+  private[queries] def routePathOracle(withEid: Boolean): String =
+    routeGraph(withEid) + routeBestPath + """
+         SELECT CAST(generate_subscripts(path, 1) AS BIGINT) AS seq,
+                CAST(unnest(path) AS BIGINT) AS node_id,
+                CAST(dist AS BIGINT) AS total_cm
+         FROM sel ORDER BY seq"""
+
+  /** The turn-restriction fixture (diamond edges + type=restriction
+    * relations) re-derived as the restricted line graph `lg`: the same
+    * relation->restriction extraction (from/via/to member roles, only_*
+    * -> mandatory) and the same only_* expansion against actual turns
+    * as the engine. */
+  private[queries] val restrictedLineGraph: String =
+    """WITH RECURSIVE
+         edges(edge_id, src, dst, w, way) AS (VALUES
+           (1,1,2,1,201),(2,2,4,1,202),(3,1,3,3,203),
+           (4,3,4,2,204),(5,2,3,1,205),(6,3,5,1,206)),
+         rels(relation_id, rtype, restriction) AS (VALUES
+           (301,'restriction','no_straight_on'),
+           (302,'restriction','only_right_turn'),
+           (303,'route',CAST(NULL AS VARCHAR)),
+           (304,'restriction','no_left_turn')),
+         mem(relation_id, member_id, mtype, role) AS (VALUES
+           (301,201,'W','from'),(301,2,'N','via'),(301,202,'W','to'),
+           (302,205,'W','from'),(302,3,'N','via'),(302,204,'W','to'),
+           (303,201,'W','from'),(303,202,'W','to'),
+           (304,203,'W','from'),(304,204,'W','to')),
+         restr AS (
+           SELECT f.member_id AS from_way, v.member_id AS via_node,
+                  t.member_id AS to_way,
+                  CASE WHEN r.restriction LIKE 'only%' THEN 'only'
+                       ELSE 'no' END AS kind
+           FROM rels r
+           JOIN mem f ON f.relation_id = r.relation_id
+                     AND f.role = 'from' AND f.mtype = 'W'
+           JOIN mem v ON v.relation_id = r.relation_id
+                     AND v.role = 'via' AND v.mtype = 'N'
+           JOIN mem t ON t.relation_id = r.relation_id
+                     AND t.role = 'to' AND t.mtype = 'W'
+           WHERE r.rtype = 'restriction'),
+         turns AS (
+           SELECT e1.edge_id AS a, e2.edge_id AS b, e2.w,
+                  e1.way AS fw, e1.dst AS via, e2.way AS tw
+           FROM edges e1 JOIN edges e2 ON e1.dst = e2.src),
+         bans AS (
+           SELECT from_way AS fw, via_node AS via, to_way AS tw
+           FROM restr WHERE kind = 'no'
+           UNION ALL
+           SELECT t.fw, t.via, t.tw
+           FROM turns t JOIN restr r
+             ON r.kind = 'only' AND t.fw = r.from_way
+            AND t.via = r.via_node AND t.tw <> r.to_way),
+         lg AS (
+           SELECT t.a, t.b, t.w FROM turns t
+           LEFT JOIN bans bn ON bn.fw = t.fw AND bn.via = t.via
+                            AND bn.tw = t.tw
+           WHERE bn.fw IS NULL)"""
 }

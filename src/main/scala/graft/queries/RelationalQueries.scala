@@ -3,6 +3,7 @@ package queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, RelationalGroupedDataset, SparkSession}
 
 import graft.Tables._
 import graft.functions.{GraftFunctions => GF, WeightedMedian}
@@ -14,6 +15,29 @@ import QueryHelpers._
   * round-trips, the weighted medians and the batch event-time queries,
   * over the TPC-H-shaped test tables. */
 object RelationalQueries {
+  /** gid-tagged (flag, status) totals of a lineitem grouping — the
+    * CUBE and GROUPING SETS rows; subtotal keys read 'ALL'. */
+  private def flagStatusRows(g: RelationalGroupedDataset): DataFrame =
+    g.agg(grouping_id().cast("long").as("gid"),
+        count(lit(1)).as("cnt"),
+        round(sum(col("l_quantity")), 2).as("sum_qty"))
+      .select(col("gid"),
+        coalesce(col("l_returnflag"), lit("ALL")).as("flag"),
+        coalesce(col("l_linestatus"), lit("ALL")).as("status"),
+        col("cnt"), col("sum_qty"))
+      .orderBy("gid", "flag", "status")
+
+  /** The scalar weighted median of l_quantity weighted by the rounded
+    * l_extendedprice (integer weights, so cumulative sums are exact),
+    * computed by `wm` over (x, w). */
+  private def scalarWeightedMedian(s: SparkSession, dir: String)(
+      wm: DataFrame => Option[Double]): DataFrame = {
+    import s.implicits._
+    val li = lineitem(s, dir).select(col("l_quantity").as("x"),
+      round(col("l_extendedprice")).cast("long").as("w"))
+    Seq(wm(li).getOrElse(Double.NaN)).toDF("weighted_median")
+  }
+
   val all: Seq[Query] = Seq(
     // ---- flagship: scan -> map ops -> filter -> agg -> sort (P1,P2,A1,O1;
     //      osm-explore.sql:9-16 shape). tags is a real MapType column so the
@@ -219,52 +243,24 @@ object RelationalQueries {
     //      Expand->hash-agg pass; grouping_id disambiguates real NULL
     //      keys from subtotal rows (keys coalesced to 'ALL' for the
     //      deterministic compare)
-    Query("q_a17_cube", (s, dir) => {
-      lineitem(s, dir)
-        .cube("l_returnflag", "l_linestatus")
-        .agg(grouping_id().cast("long").as("gid"),
-          count(lit(1)).as("cnt"),
-          round(sum(col("l_quantity")), 2).as("sum_qty"))
-        .select(col("gid"),
-          coalesce(col("l_returnflag"), lit("ALL")).as("flag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("status"),
-          col("cnt"), col("sum_qty"))
-        .orderBy("gid", "flag", "status")
-    },
-      """SELECT CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid,
-                COALESCE(l_returnflag, 'ALL') AS flag,
-                COALESCE(l_linestatus, 'ALL') AS status,
-                count(*) AS cnt, round(sum(l_quantity), 2) AS sum_qty
-         FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
-         ORDER BY gid, flag, status"""),
+    Query("q_a17_cube", (s, dir) => flagStatusRows(
+        lineitem(s, dir).cube("l_returnflag", "l_linestatus")),
+      (flagStatusTotals + """ GROUP BY CUBE(l_returnflag, l_linestatus)
+         ORDER BY gid, flag, status""")),
 
     // ---- A18 explicit GROUPING SETS (the free-built-ins row beside
     //      rollup/cube): a set list NO rollup/cube can express —
     //      ((flag,status),(status),()) skips the (flag) level — still
     //      one Expand->hash-agg pass
-    Query("q_a18_grouping_sets", (s, dir) => {
-      lineitem(s, dir)
-        .groupingSets(
+    Query("q_a18_grouping_sets", (s, dir) => flagStatusRows(
+        lineitem(s, dir).groupingSets(
           Seq(Seq(col("l_returnflag"), col("l_linestatus")),
             Seq(col("l_linestatus")), Seq()),
-          col("l_returnflag"), col("l_linestatus"))
-        .agg(grouping_id().cast("long").as("gid"),
-          count(lit(1)).as("cnt"),
-          round(sum(col("l_quantity")), 2).as("sum_qty"))
-        .select(col("gid"),
-          coalesce(col("l_returnflag"), lit("ALL")).as("flag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("status"),
-          col("cnt"), col("sum_qty"))
-        .orderBy("gid", "flag", "status")
-    },
-      """SELECT CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid,
-                COALESCE(l_returnflag, 'ALL') AS flag,
-                COALESCE(l_linestatus, 'ALL') AS status,
-                count(*) AS cnt, round(sum(l_quantity), 2) AS sum_qty
-         FROM lineitem
+          col("l_returnflag"), col("l_linestatus"))),
+      (flagStatusTotals + """
          GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
                                  (l_linestatus), ())
-         ORDER BY gid, flag, status"""),
+         ORDER BY gid, flag, status""")),
 
     // ---- A6/O2 ordered array_agg (osm-road-graphs.sql:144): deterministic
     //      via array_sort(collect_list(struct(...))), never bare collect_list
@@ -825,23 +821,9 @@ object RelationalQueries {
 
     // ---- X5 weighted median, scalar form (general-functions.sql:52-75)
     //      with integer weights so cumulative sums are exact
-    Query("q_x5_weighted_median", (s, dir) => {
-      import s.implicits._
-      val li = lineitem(s, dir).select(col("l_quantity").as("x"),
-        round(col("l_extendedprice")).cast("long").as("w"))
-      val wm = WeightedMedian.weightedMedian(li, "x", "w")
-      Seq(wm.getOrElse(Double.NaN)).toDF("weighted_median")
-    },
-      """WITH src AS (SELECT l_quantity AS x,
-                             CAST(round(l_extendedprice) AS BIGINT) AS w
-                      FROM lineitem),
-         wm AS (SELECT x,
-                  sum(coalesce(w, 0)) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS runsum,
-                  sum(coalesce(w, 0)) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prevsum,
-                  sum(coalesce(w, 0)) OVER () AS total
-                FROM src)
-         SELECT avg(x) AS weighted_median FROM wm
-         WHERE total / 2 BETWEEN prevsum AND runsum"""),
+    Query("q_x5_weighted_median", (s, dir) =>
+      scalarWeightedMedian(s, dir)(WeightedMedian.weightedMedian(_, "x", "w")),
+      weightedMedianOracle),
 
     // ---- X6 weighted median by group (general-functions.sql:84-106)
     Query("q_x6_wm_by_group", (s, dir) => {
@@ -901,23 +883,9 @@ object RelationalQueries {
     // ---- X5 scalable form: range-partitioned prefix sums instead of a
     //      global window — must agree with the window semantics, so it
     //      shares q_x5's oracle
-    Query("q_x5b_wm_scalable", (s, dir) => {
-      import s.implicits._
-      val li = lineitem(s, dir).select(col("l_quantity").as("x"),
-        round(col("l_extendedprice")).cast("long").as("w"))
-      val wm = WeightedMedian.weightedMedianScalable(li, "x", "w")
-      Seq(wm.getOrElse(Double.NaN)).toDF("weighted_median")
-    },
-      """WITH src AS (SELECT l_quantity AS x,
-                             CAST(round(l_extendedprice) AS BIGINT) AS w
-                      FROM lineitem),
-         wm AS (SELECT x,
-                  sum(coalesce(w, 0)) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS runsum,
-                  sum(coalesce(w, 0)) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prevsum,
-                  sum(coalesce(w, 0)) OVER () AS total
-                FROM src)
-         SELECT avg(x) AS weighted_median FROM wm
-         WHERE total / 2 BETWEEN prevsum AND runsum"""),
+    Query("q_x5b_wm_scalable", (s, dir) =>
+      scalarWeightedMedian(s, dir)(WeightedMedian.weightedMedianScalable(_, "x", "w")),
+      weightedMedianOracle),
 
     // ---- event-time tumbling window aggregation (the batch shape of the
     //      Structured Streaming windowed agg)

@@ -2,6 +2,7 @@ package graft
 package queries
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import QueryHelpers._
 
@@ -10,54 +11,19 @@ import QueryHelpers._
   * driving-distance isochrones, cost matrices, accessibility and graph
   * contraction. */
 object RoutingQueries {
-  /** [[oracleRouteCore]] with the way-derived edge id carried through
-    * `m4`/`dedges` (for the pgRouting-shaped per-edge row oracles) and
-    * without the trailing distance recursion — callers append their
-    * own path enumeration. */
-  private val oracleRouteIdCore: String = """,
-         coords(node_id, lon, lat) AS (VALUES
-           (1,0.00,0.0),(2,0.01,0.0),(3,0.02,0.0),(4,0.03,0.0),
-           (5,0.02,-0.01),(6,0.02,0.01),(7,0.10,0.0),(8,0.12,0.0),
-           (9,0.20,0.0),(10,0.22,0.0),(12,0.31,0.0)),
-         segsrc AS (
-           SELECT way_id AS edge_id, group_id, sequence_id, node_id FROM ntm
-           UNION ALL
-           SELECT way_id, -1, sequence_id, node_id FROM way_nodes
-           WHERE way_id NOT IN (SELECT DISTINCT way_id FROM ntm)),
-         segpts AS (
-           SELECT s.edge_id, s.group_id, s.sequence_id,
-                  CAST(c.lon AS DOUBLE) AS lon, CAST(c.lat AS DOUBLE) AS lat,
-                  lead(CAST(c.lon AS DOUBLE)) OVER w AS lon2,
-                  lead(CAST(c.lat AS DOUBLE)) OVER w AS lat2
-           FROM segsrc s JOIN coords c ON c.node_id = s.node_id
-           WINDOW w AS (PARTITION BY s.edge_id, s.group_id ORDER BY s.sequence_id)),
-         elen AS (
-           SELECT edge_id, group_id,
-                  CAST(round(sum(2 * 6371008.8 * asin(sqrt(
-                    sin(radians(lat2 - lat)/2)^2 +
-                    cos(radians(lat)) * cos(radians(lat2)) *
-                      sin(radians(lon2 - lon)/2)^2))) * 100) AS BIGINT) AS w
-           FROM segpts WHERE lon2 IS NOT NULL GROUP BY edge_id, group_id),
-         attrs(way_id, highway, oneway) AS (VALUES
-           (101,'residential',CAST(NULL AS VARCHAR)),(102,'tertiary',CAST(NULL AS VARCHAR)),
-           (103,'primary','yes'),(104,'motorway','-1'),
-           (106,'motorway',CAST(NULL AS VARCHAR)),(109,'tertiary',CAST(NULL AS VARCHAR))),
-         m4 AS (SELECT m.start_node, m.end_node, l.w,
-                       CAST(a.way_id AS BIGINT) AS eid, a.highway, a.oneway
-                FROM merged m
-                JOIN elen l ON m.edge_id = l.edge_id AND m.group_id = l.group_id
-                JOIN attrs a ON m.edge_id = a.way_id),
-         dedges AS (
-           SELECT start_node AS src, end_node AS dst, w, eid FROM m4
-            WHERE (oneway IS NULL OR oneway = 'no') AND highway != 'motorway'
-           UNION ALL
-           SELECT end_node, start_node, w, eid FROM m4
-            WHERE (oneway IS NULL OR oneway = 'no') AND highway != 'motorway'
-           UNION ALL
-           SELECT start_node, end_node, w, eid FROM m4
-            WHERE oneway = 'yes' OR (highway = 'motorway' AND oneway != '-1')
-           UNION ALL
-           SELECT end_node, start_node, w, eid FROM m4 WHERE oneway = '-1')"""
+  /** The turn-restriction diamond (edges carry their way ids) and the
+    * restrictions the REAL extractor pulls from its type=restriction
+    * relations — [[restrictedLineGraph]] re-derives both in SQL. */
+  private def restrictedFixture(s: SparkSession): (DataFrame, DataFrame) = {
+    import s.implicits._
+    val edges = Seq(
+      (1L, 1L, 2L, 1L, 201L), (2L, 2L, 4L, 1L, 202L),
+      (3L, 1L, 3L, 3L, 203L), (4L, 3L, 4L, 2L, 204L),
+      (5L, 2L, 3L, 1L, 205L), (6L, 3L, 5L, 1L, 206L)
+    ).toDF("edge_id", "start_node", "end_node", "w", "way_id")
+    val (rels, mems) = osm.OsmModel.restrictionRelations(s)
+    (edges, osm.RoadGraph.turnRestrictions(rels, mems))
+  }
 
   val all: Seq[Query] = Seq(
     // ---- distributed routing (pgr_dijkstra analog): single-source
@@ -75,14 +41,7 @@ object RoutingQueries {
     //      (205->204 via 3) closes the 2-3-5 shortcut (dist 4 via the
     //      long branch instead of 3)
     Query("q_osm_route_restricted", (s, dir) => {
-      import s.implicits._
-      val edges = Seq(
-        (1L, 1L, 2L, 1L, 201L), (2L, 2L, 4L, 1L, 202L),
-        (3L, 1L, 3L, 3L, 203L), (4L, 3L, 4L, 2L, 204L),
-        (5L, 2L, 3L, 1L, 205L), (6L, 3L, 5L, 1L, 206L)
-      ).toDF("edge_id", "start_node", "end_node", "w", "way_id")
-      val (rels, mems) = osm.OsmModel.restrictionRelations(s)
-      val restr = osm.RoadGraph.turnRestrictions(rels, mems)
+      val (edges, restr) = restrictedFixture(s)
       osm.GraphCheck.restrictedShortestPaths(edges, restr, source = 1L)
         .orderBy("node_id")
     },
@@ -90,50 +49,7 @@ object RoutingQueries {
       // extraction (from/via/to member roles, only_* -> mandatory), the
       // same line-graph expansion with only_* expanded against actual
       // turns, recursive relaxation over edge states
-      """WITH RECURSIVE
-         edges(edge_id, src, dst, w, way) AS (VALUES
-           (1,1,2,1,201),(2,2,4,1,202),(3,1,3,3,203),
-           (4,3,4,2,204),(5,2,3,1,205),(6,3,5,1,206)),
-         rels(relation_id, rtype, restriction) AS (VALUES
-           (301,'restriction','no_straight_on'),
-           (302,'restriction','only_right_turn'),
-           (303,'route',CAST(NULL AS VARCHAR)),
-           (304,'restriction','no_left_turn')),
-         mem(relation_id, member_id, mtype, role) AS (VALUES
-           (301,201,'W','from'),(301,2,'N','via'),(301,202,'W','to'),
-           (302,205,'W','from'),(302,3,'N','via'),(302,204,'W','to'),
-           (303,201,'W','from'),(303,202,'W','to'),
-           (304,203,'W','from'),(304,204,'W','to')),
-         restr AS (
-           SELECT f.member_id AS from_way, v.member_id AS via_node,
-                  t.member_id AS to_way,
-                  CASE WHEN r.restriction LIKE 'only%' THEN 'only'
-                       ELSE 'no' END AS kind
-           FROM rels r
-           JOIN mem f ON f.relation_id = r.relation_id
-                     AND f.role = 'from' AND f.mtype = 'W'
-           JOIN mem v ON v.relation_id = r.relation_id
-                     AND v.role = 'via' AND v.mtype = 'N'
-           JOIN mem t ON t.relation_id = r.relation_id
-                     AND t.role = 'to' AND t.mtype = 'W'
-           WHERE r.rtype = 'restriction'),
-         turns AS (
-           SELECT e1.edge_id AS a, e2.edge_id AS b, e2.w,
-                  e1.way AS fw, e1.dst AS via, e2.way AS tw
-           FROM edges e1 JOIN edges e2 ON e1.dst = e2.src),
-         bans AS (
-           SELECT from_way AS fw, via_node AS via, to_way AS tw
-           FROM restr WHERE kind = 'no'
-           UNION ALL
-           SELECT t.fw, t.via, t.tw
-           FROM turns t JOIN restr r
-             ON r.kind = 'only' AND t.fw = r.from_way
-            AND t.via = r.via_node AND t.tw <> r.to_way),
-         lg AS (
-           SELECT t.a, t.b, t.w FROM turns t
-           LEFT JOIN bans bn ON bn.fw = t.fw AND bn.via = t.via
-                            AND bn.tw = t.tw
-           WHERE bn.fw IS NULL),
+      (restrictedLineGraph + """,
          r(edge, dist, hops) AS (
            SELECT e.edge_id, e.w, 1 FROM edges e WHERE e.src = 1
            UNION ALL
@@ -147,7 +63,7 @@ object RoutingQueries {
          FROM (SELECT 1 AS node_id, 0 AS dist
                UNION ALL
                SELECT node_id, dist FROM nd WHERE node_id <> 1)
-         ORDER BY node_id"""),
+         ORDER BY node_id""")),
 
     // ---- the full pgr_trsp surface: point-to-point restricted route
     //      WITH path reconstruction — pgRouting-shaped rows
@@ -155,13 +71,7 @@ object RoutingQueries {
     //      forces 1-2-3-4 over the direct 1-2-4
     Query("q_osm_route_restricted_path", (s, dir) => {
       import s.implicits._
-      val edges = Seq(
-        (1L, 1L, 2L, 1L, 201L), (2L, 2L, 4L, 1L, 202L),
-        (3L, 1L, 3L, 3L, 203L), (4L, 3L, 4L, 2L, 204L),
-        (5L, 2L, 3L, 1L, 205L), (6L, 3L, 5L, 1L, 206L)
-      ).toDF("edge_id", "start_node", "end_node", "w", "way_id")
-      val (rels, mems) = osm.OsmModel.restrictionRelations(s)
-      val restr = osm.RoadGraph.turnRestrictions(rels, mems)
+      val (edges, restr) = restrictedFixture(s)
       val (es, ns, _) = osm.GraphCheck.restrictedRoute(
         edges, restr, source = 1L, target = 4L).get
       val w = edges.filter(col("edge_id").isin(es: _*))
@@ -174,58 +84,9 @@ object RoutingQueries {
         }
       rows.toDF("seq", "node_id", "edge_id", "agg_cost").orderBy("seq")
     },
-      // independent SSSP: the oracle rebuilds the split/merged graph
-      // (graphPrefix), computes per-edge geodesic lengths from node
-      // coords (same haversine, rounded to integer centimeters — path
-      // sums exact), expands the strict directed edge set, and runs a
-      // hop-bounded recursive CTE with min-per-node — a completely
-      // different algorithm arriving at the same distances
       // restricted route WITH path: same expansion, recursion carries the
       // edge path and cumulative costs; the unique optimum's rows unrolled
-      """WITH RECURSIVE
-         edges(edge_id, src, dst, w, way) AS (VALUES
-           (1,1,2,1,201),(2,2,4,1,202),(3,1,3,3,203),
-           (4,3,4,2,204),(5,2,3,1,205),(6,3,5,1,206)),
-         rels(relation_id, rtype, restriction) AS (VALUES
-           (301,'restriction','no_straight_on'),
-           (302,'restriction','only_right_turn'),
-           (303,'route',CAST(NULL AS VARCHAR)),
-           (304,'restriction','no_left_turn')),
-         mem(relation_id, member_id, mtype, role) AS (VALUES
-           (301,201,'W','from'),(301,2,'N','via'),(301,202,'W','to'),
-           (302,205,'W','from'),(302,3,'N','via'),(302,204,'W','to'),
-           (303,201,'W','from'),(303,202,'W','to'),
-           (304,203,'W','from'),(304,204,'W','to')),
-         restr AS (
-           SELECT f.member_id AS from_way, v.member_id AS via_node,
-                  t.member_id AS to_way,
-                  CASE WHEN r.restriction LIKE 'only%' THEN 'only'
-                       ELSE 'no' END AS kind
-           FROM rels r
-           JOIN mem f ON f.relation_id = r.relation_id
-                     AND f.role = 'from' AND f.mtype = 'W'
-           JOIN mem v ON v.relation_id = r.relation_id
-                     AND v.role = 'via' AND v.mtype = 'N'
-           JOIN mem t ON t.relation_id = r.relation_id
-                     AND t.role = 'to' AND t.mtype = 'W'
-           WHERE r.rtype = 'restriction'),
-         turns AS (
-           SELECT e1.edge_id AS a, e2.edge_id AS b, e2.w,
-                  e1.way AS fw, e1.dst AS via, e2.way AS tw
-           FROM edges e1 JOIN edges e2 ON e1.dst = e2.src),
-         bans AS (
-           SELECT from_way AS fw, via_node AS via, to_way AS tw
-           FROM restr WHERE kind = 'no'
-           UNION ALL
-           SELECT t.fw, t.via, t.tw
-           FROM turns t JOIN restr r
-             ON r.kind = 'only' AND t.fw = r.from_way
-            AND t.via = r.via_node AND t.tw <> r.to_way),
-         lg AS (
-           SELECT t.a, t.b, t.w FROM turns t
-           LEFT JOIN bans bn ON bn.fw = t.fw AND bn.via = t.via
-                            AND bn.tw = t.tw
-           WHERE bn.fw IS NULL),
+      (restrictedLineGraph + """,
          r(edge, dist, hops, epath, cpath) AS (
            SELECT e.edge_id, e.w, 1, [e.edge_id], [e.w]
            FROM edges e WHERE e.src = 1
@@ -253,7 +114,7 @@ object RoutingQueries {
                   CAST(NULL AS BIGINT) AS edge_id,
                   CAST(0 AS BIGINT) AS agg_cost
            UNION ALL SELECT seq, node_id, edge_id, agg_cost FROM hops)
-         ORDER BY seq"""),
+         ORDER BY seq""")),
 
     // ---- VIA-WAY restrictions (the pgr_trsp surface node-via bans
     //      cannot express): shadow states ban the full F-V-T sequence
@@ -436,18 +297,18 @@ object RoutingQueries {
          ORDER BY route, seq"""),
 
     Query("q_osm_route", (s, dir) => {
-      val t = osm.OsmModel.microFixture(s)
-      val merged = osm.RoadGraph.buildMergedNetworkCached(t, "micro")
-      val e = osm.RoadGraph.directed(merged)
-        .select(col("start_node"), col("end_node"),
-          round(col("length") * 100).cast("long").as("w"))
+      val e = microCmEdges(osm.OsmModel.microFixture(s))
       osm.GraphCheck.shortestPaths(e, source = 1L)
         .select(col("node_id"), col("dist").as("dist_cm"))
         .orderBy("node_id")
     },
-      (OsmOracle.graphPrefix.replaceFirst("WITH",
-      "WITH RECURSIVE") +
-      oracleRouteCore +
+      // independent SSSP: the oracle rebuilds the split/merged graph
+      // (graphPrefix), computes per-edge geodesic lengths from node
+      // coords (same haversine, rounded to integer centimeters — path
+      // sums exact), expands the strict directed edge set, and runs a
+      // hop-bounded recursive CTE with min-per-node — a completely
+      // different algorithm arriving at the same distances
+      (routeSssp +
       """
          SELECT CAST(node AS BIGINT) AS node_id,
                 CAST(min(dist) AS BIGINT) AS dist_cm
@@ -459,11 +320,7 @@ object RoutingQueries {
     //      every POI node at distance 0 costs the same as one source;
     //      integer-centimeter weights keep it hash-exact.
     Query("q_osm_accessibility", (s, dir) => {
-      val t = osm.OsmModel.microFixture(s)
-      val merged = osm.RoadGraph.buildMergedNetworkCached(t, "micro")
-      val e = osm.RoadGraph.directed(merged)
-        .select(col("start_node"), col("end_node"),
-          round(col("length") * 100).cast("long").as("w"))
+      val e = microCmEdges(osm.OsmModel.microFixture(s))
       // the POI nodes that are graph vertices (cafe n5, bakery n6)
       osm.GraphCheck.multiSourceShortestPaths(e, Seq(5L, 6L))._1
         .select(col("node_id"), col("dist").as("dist_cm"))
@@ -472,51 +329,7 @@ object RoutingQueries {
       // nearest-amenity distances: the same rebuilt graph, recursion
       // seeded at BOTH POI vertices — min per node is then the distance
       // to the nearest seed
-      (OsmOracle.graphPrefix.replaceFirst("WITH",
-      "WITH RECURSIVE") +
-      """,
-         coords(node_id, lon, lat) AS (VALUES
-           (1,0.00,0.0),(2,0.01,0.0),(3,0.02,0.0),(4,0.03,0.0),
-           (5,0.02,-0.01),(6,0.02,0.01),(7,0.10,0.0),(8,0.12,0.0),
-           (9,0.20,0.0),(10,0.22,0.0),(12,0.31,0.0)),
-         segsrc AS (
-           SELECT way_id AS edge_id, group_id, sequence_id, node_id FROM ntm
-           UNION ALL
-           SELECT way_id, -1, sequence_id, node_id FROM way_nodes
-           WHERE way_id NOT IN (SELECT DISTINCT way_id FROM ntm)),
-         segpts AS (
-           SELECT s.edge_id, s.group_id, s.sequence_id,
-                  CAST(c.lon AS DOUBLE) AS lon, CAST(c.lat AS DOUBLE) AS lat,
-                  lead(CAST(c.lon AS DOUBLE)) OVER w AS lon2,
-                  lead(CAST(c.lat AS DOUBLE)) OVER w AS lat2
-           FROM segsrc s JOIN coords c ON c.node_id = s.node_id
-           WINDOW w AS (PARTITION BY s.edge_id, s.group_id ORDER BY s.sequence_id)),
-         elen AS (
-           SELECT edge_id, group_id,
-                  CAST(round(sum(2 * 6371008.8 * asin(sqrt(
-                    sin(radians(lat2 - lat)/2)^2 +
-                    cos(radians(lat)) * cos(radians(lat2)) *
-                      sin(radians(lon2 - lon)/2)^2))) * 100) AS BIGINT) AS w
-           FROM segpts WHERE lon2 IS NOT NULL GROUP BY edge_id, group_id),
-         attrs(way_id, highway, oneway) AS (VALUES
-           (101,'residential',CAST(NULL AS VARCHAR)),(102,'tertiary',CAST(NULL AS VARCHAR)),
-           (103,'primary','yes'),(104,'motorway','-1'),
-           (106,'motorway',CAST(NULL AS VARCHAR)),(109,'tertiary',CAST(NULL AS VARCHAR))),
-         m4 AS (SELECT m.start_node, m.end_node, l.w, a.highway, a.oneway
-                FROM merged m
-                JOIN elen l ON m.edge_id = l.edge_id AND m.group_id = l.group_id
-                JOIN attrs a ON m.edge_id = a.way_id),
-         dedges AS (
-           SELECT start_node AS src, end_node AS dst, w FROM m4
-            WHERE (oneway IS NULL OR oneway = 'no') AND highway != 'motorway'
-           UNION ALL
-           SELECT end_node, start_node, w FROM m4
-            WHERE (oneway IS NULL OR oneway = 'no') AND highway != 'motorway'
-           UNION ALL
-           SELECT start_node, end_node, w FROM m4
-            WHERE oneway = 'yes' OR (highway = 'motorway' AND oneway != '-1')
-           UNION ALL
-           SELECT end_node, start_node, w FROM m4 WHERE oneway = '-1'),
+      (routeGraph(withEid = false) + """,
          r(node, dist, hops) AS (
            SELECT seed, CAST(0 AS BIGINT), 0
            FROM (VALUES (5), (6)) s(seed)
@@ -532,11 +345,7 @@ object RoutingQueries {
     //      new operator needed. Cutoff 3300 m keeps {1, 3} and proves
     //      real pruning (node 4 sits at 3335.85 m).
     Query("q_osm_isochrone", (s, dir) => {
-      val t = osm.OsmModel.microFixture(s)
-      val merged = osm.RoadGraph.buildMergedNetworkCached(t, "micro")
-      val e = osm.RoadGraph.directed(merged)
-        .select(col("start_node"), col("end_node"),
-          round(col("length") * 100).cast("long").as("w"))
+      val e = microCmEdges(osm.OsmModel.microFixture(s))
       osm.GraphCheck.multiSourceShortestPaths(e, Seq(1L))._1
         .filter(col("dist") <= 330000L)
         .select(col("node_id"), col("dist").as("dist_cm"))
@@ -545,8 +354,7 @@ object RoutingQueries {
       // the service area: same recursion, cutoff applied to the per-node
       // minimum (not the raw path rows — a long path to a near node must
       // not drop it)
-      (OsmOracle.graphPrefix.replaceFirst("WITH",
-      "WITH RECURSIVE") + oracleRouteCore +
+      (routeSssp +
       """
          SELECT CAST(node AS BIGINT) AS node_id,
                 CAST(min(dist) AS BIGINT) AS dist_cm
@@ -565,10 +373,7 @@ object RoutingQueries {
     Query("q_osm_isochrone_poly", (s, dir) => {
       import s.implicits._
       val t = osm.OsmModel.microFixture(s)
-      val merged = osm.RoadGraph.buildMergedNetworkCached(t, "micro")
-      val e = osm.RoadGraph.directed(merged)
-        .select(col("start_node"), col("end_node"),
-          round(col("length") * 100).cast("long").as("w"))
+      val e = microCmEdges(t)
       val reached = osm.GraphCheck.multiSourceShortestPaths(e, Seq(1L))._1
         .filter(col("dist") <= 340000L)
       val coords = t.nodes.select(col("id").as("node_id"),
@@ -602,11 +407,7 @@ object RoutingQueries {
     //      weights; rank ties (none here) break on the path string.
     Query("q_osm_ksp", (s, dir) => {
       import s.implicits._
-      val t = osm.OsmModel.microFixture(s)
-      val merged = osm.RoadGraph.buildMergedNetworkCached(t, "micro")
-      val base = osm.RoadGraph.directed(merged)
-        .select(col("start_node"), col("end_node"),
-          round(col("length") * 100).cast("long").as("w"))
+      val base = microCmEdges(osm.OsmModel.microFixture(s))
       val shortcuts = Seq((1L, 5L, 150000L), (6L, 4L, 140000L))
         .toDF("start_node", "end_node", "w")
       val e = base.unionByName(shortcuts)
@@ -620,8 +421,7 @@ object RoutingQueries {
       // rebuilt graph + the two literal shortcut edges (the recursion
       // forbids node revisits, so it terminates), rank by (dist, path)
       // — Yen's loopless semantics is exactly top-k of this enumeration
-      (OsmOracle.graphPrefix.replaceFirst("WITH",
-      "WITH RECURSIVE") + oracleRouteCore +
+      (routeSssp +
       """,
          dedges2 AS (
            SELECT src, dst, w FROM dedges
@@ -644,11 +444,7 @@ object RoutingQueries {
     //      costs, no self rows, unreachable pairs absent — the
     //      VRP/logistics input surface
     Query("q_osm_cost_matrix", (s, dir) => {
-      val t = osm.OsmModel.microFixture(s)
-      val merged = osm.RoadGraph.buildMergedNetworkCached(t, "micro")
-      val e = osm.RoadGraph.directed(merged)
-        .select(col("start_node"), col("end_node"),
-          round(col("length") * 100).cast("long").as("w"))
+      val e = microCmEdges(osm.OsmModel.microFixture(s))
       osm.GraphCheck.costMatrix(e, Seq(1L, 3L, 5L), Seq(4L, 5L, 6L))
         .select(col("start_vid"), col("end_vid"),
           col("agg_cost").as("cost_cm"))
@@ -656,16 +452,7 @@ object RoutingQueries {
     },
       // cost matrix: per-seed BFS relation, min per (seed, node), target
       // filter, self rows dropped (pgr_dijkstraCost semantics)
-      (OsmOracle.graphPrefix.replaceFirst("WITH",
-      "WITH RECURSIVE") + oracleRouteCore +
-      """,
-         rc(seed, node, dist, hops) AS (
-           SELECT seed, seed, CAST(0 AS BIGINT), 0
-           FROM (VALUES (1), (3), (5)) s(seed)
-           UNION ALL
-           SELECT rc.seed, e.dst, rc.dist + e.w, rc.hops + 1
-           FROM rc JOIN dedges e ON e.src = rc.node WHERE rc.hops < 8),
-         mc AS (SELECT seed, node, min(dist) AS d FROM rc GROUP BY seed, node)
+      (seededSssp("(1), (3), (5)") + """
          SELECT CAST(seed AS BIGINT) AS start_vid,
                 CAST(node AS BIGINT) AS end_vid,
                 CAST(d AS BIGINT) AS cost_cm
@@ -679,11 +466,7 @@ object RoutingQueries {
     //      predecessor, so the sequence is deterministic.
     Query("q_osm_route_path", (s, dir) => {
       import s.implicits._
-      val t = osm.OsmModel.microFixture(s)
-      val merged = osm.RoadGraph.buildMergedNetworkCached(t, "micro")
-      val e = osm.RoadGraph.directed(merged)
-        .select(col("start_node"), col("end_node"),
-          round(col("length") * 100).cast("long").as("w"))
+      val e = microCmEdges(osm.OsmModel.microFixture(s))
       val (path, total) = osm.GraphCheck.shortestPathTo(e, 1L, 4L).get
       path.zipWithIndex
         .map { case (n, i) => (i.toLong + 1, n, math.round(total)) }
@@ -693,62 +476,7 @@ object RoutingQueries {
       // the node list, the best (dist, path) row for the target is
       // exploded positionally — independent of the engine's
       // predecessor-walk reconstruction
-      (OsmOracle.graphPrefix.replaceFirst("WITH",
-      "WITH RECURSIVE") +
-      """,
-         coords(node_id, lon, lat) AS (VALUES
-           (1,0.00,0.0),(2,0.01,0.0),(3,0.02,0.0),(4,0.03,0.0),
-           (5,0.02,-0.01),(6,0.02,0.01),(7,0.10,0.0),(8,0.12,0.0),
-           (9,0.20,0.0),(10,0.22,0.0),(12,0.31,0.0)),
-         segsrc AS (
-           SELECT way_id AS edge_id, group_id, sequence_id, node_id FROM ntm
-           UNION ALL
-           SELECT way_id, -1, sequence_id, node_id FROM way_nodes
-           WHERE way_id NOT IN (SELECT DISTINCT way_id FROM ntm)),
-         segpts AS (
-           SELECT s.edge_id, s.group_id, s.sequence_id,
-                  CAST(c.lon AS DOUBLE) AS lon, CAST(c.lat AS DOUBLE) AS lat,
-                  lead(CAST(c.lon AS DOUBLE)) OVER w AS lon2,
-                  lead(CAST(c.lat AS DOUBLE)) OVER w AS lat2
-           FROM segsrc s JOIN coords c ON c.node_id = s.node_id
-           WINDOW w AS (PARTITION BY s.edge_id, s.group_id ORDER BY s.sequence_id)),
-         elen AS (
-           SELECT edge_id, group_id,
-                  CAST(round(sum(2 * 6371008.8 * asin(sqrt(
-                    sin(radians(lat2 - lat)/2)^2 +
-                    cos(radians(lat)) * cos(radians(lat2)) *
-                      sin(radians(lon2 - lon)/2)^2))) * 100) AS BIGINT) AS w
-           FROM segpts WHERE lon2 IS NOT NULL GROUP BY edge_id, group_id),
-         attrs(way_id, highway, oneway) AS (VALUES
-           (101,'residential',CAST(NULL AS VARCHAR)),(102,'tertiary',CAST(NULL AS VARCHAR)),
-           (103,'primary','yes'),(104,'motorway','-1'),
-           (106,'motorway',CAST(NULL AS VARCHAR)),(109,'tertiary',CAST(NULL AS VARCHAR))),
-         m4 AS (SELECT m.start_node, m.end_node, l.w, a.highway, a.oneway
-                FROM merged m
-                JOIN elen l ON m.edge_id = l.edge_id AND m.group_id = l.group_id
-                JOIN attrs a ON m.edge_id = a.way_id),
-         dedges AS (
-           SELECT start_node AS src, end_node AS dst, w FROM m4
-            WHERE (oneway IS NULL OR oneway = 'no') AND highway != 'motorway'
-           UNION ALL
-           SELECT end_node, start_node, w FROM m4
-            WHERE (oneway IS NULL OR oneway = 'no') AND highway != 'motorway'
-           UNION ALL
-           SELECT start_node, end_node, w FROM m4
-            WHERE oneway = 'yes' OR (highway = 'motorway' AND oneway != '-1')
-           UNION ALL
-           SELECT end_node, start_node, w FROM m4 WHERE oneway = '-1'),
-         r2(node, dist, path) AS (
-           SELECT 1, CAST(0 AS BIGINT), [CAST(1 AS BIGINT)]
-           UNION ALL
-           SELECT e.dst, r2.dist + e.w, list_append(r2.path, CAST(e.dst AS BIGINT))
-           FROM r2 JOIN dedges e ON e.src = r2.node WHERE len(r2.path) <= 8),
-         sel AS (SELECT dist, path FROM r2 WHERE node = 4
-                 ORDER BY dist, path LIMIT 1)
-         SELECT CAST(generate_subscripts(path, 1) AS BIGINT) AS seq,
-                CAST(unnest(path) AS BIGINT) AS node_id,
-                CAST(dist AS BIGINT) AS total_cm
-         FROM sel ORDER BY seq""")),
+      routePathOracle(withEid = false)),
 
     // ---- pgRouting result-relation shape (pgr_dijkstra): per-edge
     //      rows (seq, path_seq, node, edge, cost, agg_cost) for the
@@ -756,14 +484,10 @@ object RoutingQueries {
     //      consumers script against. `edge` is the way-derived edge id
     //      from the merged network; terminal row edge=-1, cost=0.
     Query("q_osm_route_edges", (s, dir) => {
-      val t = osm.OsmModel.microFixture(s)
-      val merged = osm.RoadGraph.buildMergedNetworkCached(t, "micro")
       // checkpoint ONCE: the route search and the edge-row attribution
       // both consume this relation — without it each re-runs the whole
       // merged-network build
-      val e = osm.RoadGraph.directed(merged)
-        .select(col("start_node"), col("end_node"), col("edge_id"),
-          round(col("length") * 100).cast("long").as("w"))
+      val e = microCmEdges(osm.OsmModel.microFixture(s), withEdgeId = true)
         .localCheckpoint(true)
       val (path, _) = osm.GraphCheck.shortestPathTo(
         e.select("start_node", "end_node", "w"), 1L, 4L).get
@@ -777,16 +501,7 @@ object RoutingQueries {
       // plus a per-hop best-edge lookup (min (w, edge_id) — the only
       // edge Dijkstra can have used, id tiebreak for determinism);
       // running agg_cost via a 1-PRECEDING window; terminal row -1/0
-      (OsmOracle.graphPrefix.replaceFirst("WITH",
-      "WITH RECURSIVE") + oracleRouteIdCore +
-      """,
-         r2(node, dist, path) AS (
-           SELECT 1, CAST(0 AS BIGINT), [CAST(1 AS BIGINT)]
-           UNION ALL
-           SELECT e.dst, r2.dist + e.w, list_append(r2.path, CAST(e.dst AS BIGINT))
-           FROM r2 JOIN dedges e ON e.src = r2.node WHERE len(r2.path) <= 8),
-         sel AS (SELECT dist, path FROM r2 WHERE node = 4
-                 ORDER BY dist, path LIMIT 1),
+      (routeGraph(withEid = true) + routeBestPath + """,
          expd AS (SELECT CAST(generate_subscripts(path, 1) AS BIGINT) AS seq,
                          CAST(unnest(path) AS BIGINT) AS node
                   FROM sel),
@@ -814,11 +529,7 @@ object RoutingQueries {
     //      row carries edge=-1. Attribution is the relational
     //      dist(u)+w=dist(v) join, no pred state in the SSSP loop.
     Query("q_osm_driving_edges", (s, dir) => {
-      val t = osm.OsmModel.microFixture(s)
-      val merged = osm.RoadGraph.buildMergedNetworkCached(t, "micro")
-      val e = osm.RoadGraph.directed(merged)
-        .select(col("start_node"), col("end_node"), col("edge_id"),
-          round(col("length") * 100).cast("long").as("w"))
+      val e = microCmEdges(osm.OsmModel.microFixture(s), withEdgeId = true)
       osm.GraphCheck.drivingDistanceRows(e, Seq(1L), cutoff = 340000.0)
         .select(col("node_id"), col("edge"),
           col("cost").cast("long").as("cost_cm"),
@@ -828,8 +539,7 @@ object RoutingQueries {
       // pgr_drivingDistance-shaped rows: per-node min over the recursive
       // enumeration, cutoff on the min, then the same dist(u)+w=dist(v)
       // attribution with the (pred, edge-id) tie rule in SQL
-      (OsmOracle.graphPrefix.replaceFirst("WITH",
-      "WITH RECURSIVE") + oracleRouteIdCore +
+      (routeGraph(withEid = true) +
       """,
          r(node, dist, hops) AS (
            SELECT 1, CAST(0 AS BIGINT), 0
@@ -861,11 +571,7 @@ object RoutingQueries {
     //      9001/9002, exactly how pgRouting users tag virtual edges).
     Query("q_osm_ksp_edges", (s, dir) => {
       import s.implicits._
-      val t = osm.OsmModel.microFixture(s)
-      val merged = osm.RoadGraph.buildMergedNetworkCached(t, "micro")
-      val base = osm.RoadGraph.directed(merged)
-        .select(col("start_node"), col("end_node"), col("edge_id"),
-          round(col("length") * 100).cast("long").as("w"))
+      val base = microCmEdges(osm.OsmModel.microFixture(s), withEdgeId = true)
       val shortcuts = Seq((1L, 5L, 9001L, 150000L), (6L, 4L, 9002L, 140000L))
         .toDF("start_node", "end_node", "edge_id", "w")
       val e = base.unionByName(shortcuts).localCheckpoint(true)
@@ -882,8 +588,7 @@ object RoutingQueries {
       // pgr_ksp-shaped per-edge rows: the KSP string enumeration ranked
       // to top-3, split back to node lists, same best-edge lookup over
       // the shortcut-augmented relation (virtual ids 9001/9002)
-      (OsmOracle.graphPrefix.replaceFirst("WITH",
-      "WITH RECURSIVE") + oracleRouteIdCore +
+      (routeGraph(withEid = true) +
       """,
          dedges2 AS (
            SELECT src, dst, w, eid FROM dedges
@@ -938,10 +643,7 @@ object RoutingQueries {
     Query("q_osm_astar", (s, dir) => {
       import s.implicits._
       val t = osm.OsmModel.microFixture(s)
-      val merged = osm.RoadGraph.buildMergedNetworkCached(t, "micro")
-      val e = osm.RoadGraph.directed(merged)
-        .select(col("start_node"), col("end_node"),
-          round(col("length") * 100).cast("long").as("w"))
+      val e = microCmEdges(t)
       val coords = t.nodes.select(col("id").as("node_id"),
         col("geom.lon").as("lon"), col("geom.lat").as("lat"))
       val (path, total, settled) =
@@ -955,20 +657,7 @@ object RoutingQueries {
       // A* must return the IDENTICAL relation to route_path (admissible +
       // consistent heuristic), so the same enumeration oracle re-verifies
       // the A* code path independently
-      (OsmOracle.graphPrefix.replaceFirst("WITH",
-      "WITH RECURSIVE") + oracleRouteIdCore +
-      """,
-         r2(node, dist, path) AS (
-           SELECT 1, CAST(0 AS BIGINT), [CAST(1 AS BIGINT)]
-           UNION ALL
-           SELECT e.dst, r2.dist + e.w, list_append(r2.path, CAST(e.dst AS BIGINT))
-           FROM r2 JOIN dedges e ON e.src = r2.node WHERE len(r2.path) <= 8),
-         sel AS (SELECT dist, path FROM r2 WHERE node = 4
-                 ORDER BY dist, path LIMIT 1)
-         SELECT CAST(generate_subscripts(path, 1) AS BIGINT) AS seq,
-                CAST(unnest(path) AS BIGINT) AS node_id,
-                CAST(dist AS BIGINT) AS total_cm
-         FROM sel ORDER BY seq""")),
+      routePathOracle(withEid = true)),
 
     // ---- pgr_contraction analog (VERDICT r19 item 5): dead-end +
     //      linear contraction on a micro graph that exercises every

@@ -29,76 +29,94 @@ object StreamingQueries {
     try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
-  /** The curation-survivor CTEs (q_cc_curation_stream's oracle,
-    * reusable as a prelude): language gate, gopher gate, URL-group
-    * dedup with first-by-(batch, doc_id) preference. Ends with `surv`. */
-  private val curationSurvivorCtes: String =
-    """d AS (SELECT doc_id, text,
-                    string_split(lower(text), ' ') AS toks
-             FROM documents),
-         langs AS (SELECT doc_id,
-           len(list_filter(toks, t -> t IN ('the','and','of','to','in','is','that','it','for','with'))) AS en,
-           len(list_filter(toks, t -> t IN ('der','die','und','das','ist','nicht','ein','mit','auf','zu'))) AS de,
-           len(list_filter(toks, t -> t IN ('el','la','de','que','y','los','en','un','por','con'))) AS es,
-           len(list_filter(toks, t -> t IN ('le','la','de','et','les','des','est','un','une','dans'))) AS fr
-           FROM d),
-         en AS (SELECT doc_id FROM langs
-                WHERE greatest(en, de, es, fr) > 0
-                  AND NOT de >= greatest(en, es, fr)
-                  AND en >= greatest(es, fr)),
-         f AS (SELECT doc_id,
-           len(string_split(text, ' ')) AS n_tok,
-           length(text) AS n_chars,
-           length(regexp_replace(text, '[^[:punct:]]', '', 'g')) AS n_punct,
-           len(list_filter(string_split(text, ' '),
-               t -> t IN ('the','a','an','and','or','of','to','in','is','it',
-                          'that','for','on','with','as','at','by'))) AS sw,
-           len(list_distinct(string_split(text, ' '))) AS n_uniq
-           FROM documents),
-         pass AS (SELECT doc_id FROM f
-           WHERE n_tok BETWEEN 30 AND 10000
-             AND n_chars / CAST(n_tok AS DOUBLE) BETWEEN 3.0 AND 10.0
-             AND n_punct / CAST(n_chars AS DOUBLE) <= 0.1
-             AND sw >= 2
-             AND (n_tok - n_uniq) / CAST(n_tok AS DOUBLE) <= 0.6),
-         kept AS (SELECT d.doc_id, d.text FROM d
-                  JOIN en USING (doc_id) JOIN pass USING (doc_id)),
-         surv AS (SELECT doc_id, text FROM (
-             SELECT doc_id, text,
-               row_number() OVER (PARTITION BY doc_id // 3
-                                  ORDER BY doc_id % 2, doc_id) AS rn
-             FROM kept) WHERE rn = 1),"""
+  /** The WET crawl stream both curation rows drive: the documents table
+    * written as gzip WET records (URL group doc_id/3) in two files —
+    * even ids first, odd ids as a second, atomically moved file — each
+    * micro-batch decoded, language- and gopher-gated, URL-deduped in
+    * batch and against every earlier landed batch, landed as
+    * `batch=<id>` parquet, then handed to `onLanded(session, landed
+    * batch dir, batchId)`. Returns the landing root. */
+  private def runCurationStream(s: SparkSession, dir: String, tag: String)(
+      onLanded: (SparkSession, String, Long) => Unit): java.nio.file.Path = {
+    val docs = documents(s, dir)
+      .select(col("doc_id"), col("text")).collect()
+      .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
+    def wet(part: Array[(Long, String)]): Array[Byte] =
+      sources.Warc.writeRecords(part.map { case (id, text) =>
+        ("conversion", s"http://graft.test/g/${id / 3}#d$id",
+          "2024-03-01T12:00:00Z", "text/plain", text.getBytes("UTF-8"))
+      }.toIndexedSeq, gzipPerRecord = true)
+    val fixDir = tempFixtureDir(s"$tag-stream")
+    val outDir = tempFixtureDir(s"$tag-landed")
+    java.nio.file.Files.write(fixDir.resolve("wet-00001.warc.gz"),
+      wet(docs.filter(_._1 % 2 == 0)))
+    def curateBatch(batch: org.apache.spark.sql.DataFrame,
+        batchId: Long): Unit = {
+      val decoded = batch
+        .filter(col("record_type") === "conversion")
+        .select(col("target_uri"),
+          regexp_extract(col("target_uri"), "#d(\\d+)$", 1)
+            .cast("long").as("doc_id"),
+          col("payload").cast("string").as("text"))
+        .filter(llm.TextAnalysis.languageId(col("text")) === "en")
+      // gate with the scan-local pass column, not the audit-table
+      // join-back: the upstream is a gzip WARC decode, and the join's
+      // second branch re-decoded every record (guide §2.4)
+      val kept = decoded.filter(llm.Curation.gopherPass(col("text"),
+        minTokens = 30, maxTokens = 10000, maxDupTokenFrac = 0.6))
+      val inBatch = llm.Curation.dedupByUrl(kept, col("target_uri"),
+        Seq(col("doc_id")))
+      // enumerate landed batches through the FS abstraction, not
+      // java.io (ADVICE r19): the landing dir is parquet-through-
+      // any-object-store like every other sink in this file
+      val outPath = new org.apache.hadoop.fs.Path(outDir.toString)
+      val ofs = outPath.getFileSystem(
+        batch.sparkSession.sessionState.newHadoopConf())
+      val priorDirs =
+        (if (ofs.exists(outPath)) ofs.listStatus(outPath).toSeq else Nil)
+          .filter(st => st.isDirectory &&
+            st.getPath.getName.startsWith("batch="))
+          .filter(_.getPath.getName.stripPrefix("batch=").toLong < batchId)
+          .map(_.getPath.toString)
+      val fresh =
+        if (priorDirs.isEmpty) inBatch
+        else {
+          val seen = batch.sparkSession.read.parquet(priorDirs: _*)
+            .select(llm.Curation.normalizeUrl(col("target_uri")).as("__u"))
+          inBatch.join(seen,
+            llm.Curation.normalizeUrl(col("target_uri")) === col("__u"),
+            "left_anti")
+        }
+      // batchId-keyed OVERWRITE: replay rewrites, never appends —
+      // exactly-once landed output from at-least-once execution
+      fresh.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+      onLanded(batch.sparkSession, s"$outDir/batch=$batchId", batchId)
+    }
+    withShufflePartitions(s, 4) {
+      val q = sources.Warc.readStream(s, fixDir.toString)
+        .writeStream
+        .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
+          curateBatch(df, id))
+        .start()
+      try {
+        q.processAllAvailable()
+        val tmp2 = fixDir.resolve(".wet-00002.warc.gz.tmp")
+        java.nio.file.Files.write(tmp2, wet(docs.filter(_._1 % 2 == 1)))
+        java.nio.file.Files.move(tmp2, fixDir.resolve("wet-00002.warc.gz"),
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        q.processAllAvailable()
+      } finally q.stop()
+    }
+    outDir
+  }
 
   /** Oracle for the streaming LSH candidate stage: same portable
     * md5 minhash family (numPerm=16, 4 bands of 4) as the operator;
     * "first doc per (band, bucket)" is min(doc_id) because the query
     * feeds batches in id order with ts monotone in id, so the emitted
     * candidate set is exactly (bucket-first, other, band). */
-  private def neardupStreamOracleSql: String = {
-    val ps = llm.Dedup.minhashParams(16)
-    val mins = ps.zipWithIndex.map { case ((a, b), i) =>
-      s"min((h*$a + $b) % 2147483647) AS m$i"
-    }.mkString(",\n    ")
-    val bandVals = (0 until 4).map { b =>
-      val cols = (0 until 4).map(j => s"m${b * 4 + j}").mkString(",")
-      s"($b, concat_ws('|',$cols))"
-    }.mkString(",")
-    s"""WITH sh AS (
-    SELECT doc_id, substr(text, CAST(i AS INTEGER), 5) AS s
-    FROM documents, LATERAL unnest(range(1, greatest(length(text)-4,1)+1)) AS t(i)
-  ),
-  h AS (
-    SELECT doc_id, CAST(('0x' || substr(md5(s),1,8)) AS BIGINT) % 2147483647 AS h
-    FROM sh
-  ),
-  sig AS (
-    SELECT doc_id,
-    $mins
-    FROM h GROUP BY doc_id
-  ),
-  bands AS (
-    SELECT doc_id, b.band, b.bh FROM sig, LATERAL (VALUES $bandVals) AS b(band, bh)
-  ),
+  private def neardupStreamOracleSql: String =
+    minhashBandsSql(numPerm = 16, rowsPerBand = 4) + """,
   buckets AS (
     SELECT band, bh, min(doc_id) AS id_a FROM bands GROUP BY band, bh
   )
@@ -106,7 +124,6 @@ object StreamingQueries {
   FROM bands x JOIN buckets b ON x.band = b.band AND x.bh = b.bh
   WHERE x.doc_id <> b.id_a
   ORDER BY 1, 2, 3"""
-  }
 
   val all: Seq[Query] = Seq(
     // ---- §2.11 streaming dedup as a DRIVER-CHECKED row (previously
@@ -336,73 +353,8 @@ object StreamingQueries {
     //      an earlier batch's landing always wins — which the oracle
     //      replays as ORDER BY (doc_id % 2, doc_id).
     Query("q_cc_curation_stream", (s, dir) => {
-      val docs = documents(s, dir)
-        .select(col("doc_id"), col("text")).collect()
-        .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-      def wet(part: Array[(Long, String)]): Array[Byte] =
-        sources.Warc.writeRecords(part.map { case (id, text) =>
-          ("conversion", s"http://graft.test/g/${id / 3}#d$id",
-            "2024-03-01T12:00:00Z", "text/plain", text.getBytes("UTF-8"))
-        }.toIndexedSeq, gzipPerRecord = true)
-      val fixDir = tempFixtureDir("cur-stream")
-      val outDir = tempFixtureDir("cur-landed")
-      java.nio.file.Files.write(fixDir.resolve("wet-00001.warc.gz"),
-        wet(docs.filter(_._1 % 2 == 0)))
-      def curateBatch(batch: org.apache.spark.sql.DataFrame,
-          batchId: Long): Unit = {
-        val decoded = batch
-          .filter(col("record_type") === "conversion")
-          .select(col("target_uri"),
-            regexp_extract(col("target_uri"), "#d(\\d+)$", 1)
-              .cast("long").as("doc_id"),
-            col("payload").cast("string").as("text"))
-          .filter(llm.TextAnalysis.languageId(col("text")) === "en")
-        // gate with the scan-local pass column, not the audit-table
-        // join-back: the upstream is a gzip WARC decode, and the join's
-        // second branch re-decoded every record (guide §2.4)
-        val kept = decoded.filter(llm.Curation.gopherPass(col("text"),
-          minTokens = 30, maxTokens = 10000, maxDupTokenFrac = 0.6))
-        val inBatch = llm.Curation.dedupByUrl(kept, col("target_uri"),
-          Seq(col("doc_id")))
-        // enumerate landed batches through the FS abstraction, not
-        // java.io (ADVICE r19): the landing dir is parquet-through-
-        // any-object-store like every other sink in this file
-        val outPath = new org.apache.hadoop.fs.Path(outDir.toString)
-        val ofs = outPath.getFileSystem(
-          batch.sparkSession.sessionState.newHadoopConf())
-        val priorDirs =
-          (if (ofs.exists(outPath)) ofs.listStatus(outPath).toSeq else Nil)
-            .filter(st => st.isDirectory &&
-              st.getPath.getName.startsWith("batch="))
-            .filter(_.getPath.getName.stripPrefix("batch=").toLong < batchId)
-            .map(_.getPath.toString)
-        val fresh =
-          if (priorDirs.isEmpty) inBatch
-          else {
-            val seen = batch.sparkSession.read.parquet(priorDirs: _*)
-              .select(llm.Curation.normalizeUrl(col("target_uri")).as("__u"))
-            inBatch.join(seen,
-              llm.Curation.normalizeUrl(col("target_uri")) === col("__u"),
-              "left_anti")
-          }
-        // batchId-keyed OVERWRITE: replay rewrites, never appends —
-        // exactly-once landed output from at-least-once execution
-        fresh.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
+      val outDir = runCurationStream(s, dir, "cur")((_, _, _) => ())
       withShufflePartitions(s, 4) {
-        val q = sources.Warc.readStream(s, fixDir.toString)
-          .writeStream
-          .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-            curateBatch(df, id))
-          .start()
-        try {
-          q.processAllAvailable()
-          val tmp2 = fixDir.resolve(".wet-00002.warc.gz.tmp")
-          java.nio.file.Files.write(tmp2, wet(docs.filter(_._1 % 2 == 1)))
-          java.nio.file.Files.move(tmp2, fixDir.resolve("wet-00002.warc.gz"),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          q.processAllAvailable()
-        } finally q.stop()
         s.read.parquet(outDir.toString)
           .groupBy((col("doc_id") % 10).as("bucket"))
           .agg(count(lit(1)).as("n_docs"),
@@ -417,45 +369,11 @@ object StreamingQueries {
       // thresholds), then one survivor per URL group doc_id//3, first by
       // (batch = doc_id % 2, doc_id) — in-batch preference is doc_id asc
       // and an earlier landed batch always beats a later one
-      """WITH d AS (SELECT doc_id, text,
-                           string_split(lower(text), ' ') AS toks
-                    FROM documents),
-         langs AS (SELECT doc_id,
-           len(list_filter(toks, t -> t IN ('the','and','of','to','in','is','that','it','for','with'))) AS en,
-           len(list_filter(toks, t -> t IN ('der','die','und','das','ist','nicht','ein','mit','auf','zu'))) AS de,
-           len(list_filter(toks, t -> t IN ('el','la','de','que','y','los','en','un','por','con'))) AS es,
-           len(list_filter(toks, t -> t IN ('le','la','de','et','les','des','est','un','une','dans'))) AS fr
-           FROM d),
-         en AS (SELECT doc_id FROM langs
-                WHERE greatest(en, de, es, fr) > 0
-                  AND NOT de >= greatest(en, es, fr)
-                  AND en >= greatest(es, fr)),
-         f AS (SELECT doc_id,
-           len(string_split(text, ' ')) AS n_tok,
-           length(text) AS n_chars,
-           length(regexp_replace(text, '[^[:punct:]]', '', 'g')) AS n_punct,
-           len(list_filter(string_split(text, ' '),
-               t -> t IN ('the','a','an','and','or','of','to','in','is','it',
-                          'that','for','on','with','as','at','by'))) AS sw,
-           len(list_distinct(string_split(text, ' '))) AS n_uniq
-           FROM documents),
-         pass AS (SELECT doc_id FROM f
-           WHERE n_tok BETWEEN 30 AND 10000
-             AND n_chars / CAST(n_tok AS DOUBLE) BETWEEN 3.0 AND 10.0
-             AND n_punct / CAST(n_chars AS DOUBLE) <= 0.1
-             AND sw >= 2
-             AND (n_tok - n_uniq) / CAST(n_tok AS DOUBLE) <= 0.6),
-         kept AS (SELECT d.doc_id, d.text FROM d
-                  JOIN en USING (doc_id) JOIN pass USING (doc_id)),
-         surv AS (SELECT doc_id, text FROM (
-             SELECT doc_id, text,
-               row_number() OVER (PARTITION BY doc_id // 3
-                                  ORDER BY doc_id % 2, doc_id) AS rn
-             FROM kept) WHERE rn = 1)
+      ("WITH " + curationSurvivorCtes.stripSuffix(",") + """
          SELECT doc_id % 10 AS bucket, count(*) AS n_docs,
                 min(doc_id) AS min_doc, max(doc_id) AS max_doc,
                 CAST(sum(strlen(text)) AS BIGINT) AS sum_chars
-         FROM surv GROUP BY 1 ORDER BY bucket"""),
+         FROM surv GROUP BY 1 ORDER BY bucket""")),
 
     // ---- STREAMING index maintenance (VERDICT r19 item 4) — the last
     //      edge of the crawl->curate->index lifecycle: the same WET
@@ -478,92 +396,26 @@ object StreamingQueries {
     //      the same id set.
     Query("q_s_index_stream", (s, dir) => {
       val e = spreadEmb(s, dir)
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      val cents = llm.Similarity.initCentroids(e, "vec_id", "embedding", 16)
-      val cb = llm.Similarity.pqCodebooksFixed(
-        llm.Similarity.residualCorpus(e, "vec_id", "embedding", cents)
-          .filter(col("vec_id").between(16, 31)),
-        "vec_id", "embedding", m = 8, k = 16)
+      val queries = queryPanel(e)
+      val (cents, cb) = residualQuantizers(e)
       val idxDir = tempFixtureDir("graft-ivfpq-stream").toString
       llm.IndexStore.save(
         llm.IndexStore.build("ivfpq_residual",
           e.filter(col("vec_id").between(16, 31)), "vec_id", "embedding",
           cents, cb), idxDir)
       val baseIdx = llm.IndexStore.load(s, idxDir)
-      val docs = documents(s, dir)
-        .select(col("doc_id"), col("text")).collect()
-        .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-      def wet(part: Array[(Long, String)]): Array[Byte] =
-        sources.Warc.writeRecords(part.map { case (id, text) =>
-          ("conversion", s"http://graft.test/g/${id / 3}#d$id",
-            "2024-03-01T12:00:00Z", "text/plain", text.getBytes("UTF-8"))
-        }.toIndexedSeq, gzipPerRecord = true)
-      val fixDir = tempFixtureDir("idx-stream")
-      val outDir = tempFixtureDir("idx-landed")
-      java.nio.file.Files.write(fixDir.resolve("wet-00001.warc.gz"),
-        wet(docs.filter(_._1 % 2 == 0)))
-      def curateAndIndex(batch: org.apache.spark.sql.DataFrame,
-          batchId: Long): Unit = {
-        val decoded = batch
-          .filter(col("record_type") === "conversion")
-          .select(col("target_uri"),
-            regexp_extract(col("target_uri"), "#d(\\d+)$", 1)
-              .cast("long").as("doc_id"),
-            col("payload").cast("string").as("text"))
-          .filter(llm.TextAnalysis.languageId(col("text")) === "en")
-        // scan-local gopher gate — same one-pass rationale as
-        // q_cc_curation_stream's curateBatch
-        val kept = decoded.filter(llm.Curation.gopherPass(col("text"),
-          minTokens = 30, maxTokens = 10000, maxDupTokenFrac = 0.6))
-        val inBatch = llm.Curation.dedupByUrl(kept, col("target_uri"),
-          Seq(col("doc_id")))
-        val outPath = new org.apache.hadoop.fs.Path(outDir.toString)
-        val ofs = outPath.getFileSystem(
-          batch.sparkSession.sessionState.newHadoopConf())
-        val priorDirs =
-          (if (ofs.exists(outPath)) ofs.listStatus(outPath).toSeq else Nil)
-            .filter(st => st.isDirectory &&
-              st.getPath.getName.startsWith("batch="))
-            .filter(_.getPath.getName.stripPrefix("batch=").toLong < batchId)
-            .map(_.getPath.toString)
-        val fresh =
-          if (priorDirs.isEmpty) inBatch
-          else {
-            val seen = batch.sparkSession.read.parquet(priorDirs: _*)
-              .select(llm.Curation.normalizeUrl(col("target_uri")).as("__u"))
-            inBatch.join(seen,
-              llm.Curation.normalizeUrl(col("target_uri")) === col("__u"),
-              "left_anti")
-          }
-        fresh.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        // the new edge: survivors fetch their embeddings and append to
-        // the index as this batch's idempotent delta. The landed batch
-        // (just written) is the source of truth, so a replay re-derives
-        // the identical delta. Ids 16..31 are already in the base.
-        val embs = batch.sparkSession.read.parquet(s"$outDir/batch=$batchId")
+      val outDir = runCurationStream(s, dir, "idx") { (ss, landed, batchId) =>
+        // survivors fetch their embeddings and append to the index as
+        // this batch's idempotent delta. The landed batch (just
+        // written) is the source of truth, so a replay re-derives the
+        // identical delta. Ids 16..31 are already in the base.
+        val embs = ss.read.parquet(landed)
           .select(col("doc_id"))
           .filter(!col("doc_id").between(16, 31))
-          .join(spreadEmb(batch.sparkSession, dir),
-            col("doc_id") === col("vec_id"))
+          .join(spreadEmb(ss, dir), col("doc_id") === col("vec_id"))
           .select(col("vec_id"), col("embedding"))
         llm.IndexStore.appendBatch(baseIdx, idxDir, embs, "embedding",
           batchId)
-      }
-      withShufflePartitions(s, 4) {
-        val q = sources.Warc.readStream(s, fixDir.toString)
-          .writeStream
-          .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-            curateAndIndex(df, id))
-          .start()
-        try {
-          q.processAllAvailable()
-          val tmp2 = fixDir.resolve(".wet-00002.warc.gz.tmp")
-          java.nio.file.Files.write(tmp2, wet(docs.filter(_._1 % 2 == 1)))
-          java.nio.file.Files.move(tmp2, fixDir.resolve("wet-00002.warc.gz"),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          q.processAllAvailable()
-        } finally q.stop()
       }
       def fmt(df: DataFrame) = df
         .select(col("query_id"), col("vec_id"), round(col("adc"), 6).as("adc"))

@@ -3,7 +3,7 @@ package queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Tables._
 import QueryHelpers._
@@ -169,6 +169,25 @@ $chain,
     "WITH " + (head +: stages).mkString(",")
   }
 
+  /** Trained merges as (rank, left_sym, right_sym) rows. */
+  private def mergeRows(s: SparkSession,
+      merges: Seq[(String, String)]): DataFrame = {
+    import s.implicits._
+    merges.zipWithIndex
+      .map { case ((l, r), i) => (i, l, r) }
+      .toDF("rank", "left_sym", "right_sym")
+      .select(col("rank").cast("int").as("rank"),
+        col("left_sym"), col("right_sym"))
+      .orderBy("rank")
+  }
+
+  /** Per-document token and distinct-token counts of BPE output. */
+  private def tokenCounts(tokenized: DataFrame): DataFrame =
+    tokenized.select(col("doc_id"),
+        size(col("tokens")).cast("long").as("n_tokens"),
+        size(array_distinct(col("tokens"))).cast("long").as("n_distinct"))
+      .orderBy("doc_id")
+
   private def bpeTrainOracleSql(nMerges: Int): String = {
     val rows = (0 until nMerges)
       .map(i => s"SELECT $i AS rank, l AS left_sym, r AS right_sym FROM best$i")
@@ -275,15 +294,8 @@ $chain,
     //      same (count DESC, l, r) tie-break, same greedy left-to-right
     //      rewrite (string replace over <>-fenced symbols).
     Query("q_t_bpe_trained", (s, dir) => {
-      import s.implicits._
-      val merges = llm.Bpe.trainBpe(
-        llm.Bpe.wordCounts(documents(s, dir), "text"), numMerges = 8)
-      merges.zipWithIndex
-        .map { case ((l, r), i) => (i, l, r) }
-        .toDF("rank", "left_sym", "right_sym")
-        .select(col("rank").cast("int").as("rank"),
-          col("left_sym"), col("right_sym"))
-        .orderBy("rank")
+      mergeRows(s, llm.Bpe.trainBpe(
+        llm.Bpe.wordCounts(documents(s, dir), "text"), numMerges = 8))
     },
       bpeTrainOracleSql(8)),
 
@@ -294,13 +306,9 @@ $chain,
     Query("q_t_bpe_apply", (s, dir) => {
       val merges = llm.Bpe.trainBpe(
         llm.Bpe.wordCounts(documents(s, dir), "text"), numMerges = 8)
-      llm.Bpe.applyBpe(
-          documents(s, dir).filter(col("doc_id") < 20), "doc_id", "text",
-          merges)
-        .select(col("doc_id"),
-          size(col("tokens")).cast("long").as("n_tokens"),
-          size(array_distinct(col("tokens"))).cast("long").as("n_distinct"))
-        .orderBy("doc_id")
+      tokenCounts(llm.Bpe.applyBpe(
+        documents(s, dir).filter(col("doc_id") < 20), "doc_id", "text",
+        merges))
     },
       bpeApplyOracleSql(8)),
 
@@ -314,15 +322,8 @@ $chain,
     //      replays pre-tokenization (same regex), byte symbolization
     //      (hex(encode(word))), and all 8 merge rounds.
     Query("q_t_bpe_bytelevel", (s, dir) => {
-      import s.implicits._
-      val merges = llm.Bpe.trainBpeBytes(
-        llm.Bpe.byteWordCounts(documents(s, dir), "text"), numMerges = 8)
-      merges.zipWithIndex
-        .map { case ((l, r), i) => (i, l, r) }
-        .toDF("rank", "left_sym", "right_sym")
-        .select(col("rank").cast("int").as("rank"),
-          col("left_sym"), col("right_sym"))
-        .orderBy("rank")
+      mergeRows(s, llm.Bpe.trainBpeBytes(
+        llm.Bpe.byteWordCounts(documents(s, dir), "text"), numMerges = 8))
     },
       bpeByteTrainOracleSql(8)),
 
@@ -335,13 +336,9 @@ $chain,
     Query("q_t_bpe_byteapply", (s, dir) => {
       val merges = llm.Bpe.trainBpeBytes(
         llm.Bpe.byteWordCounts(documents(s, dir), "text"), numMerges = 8)
-      llm.Bpe.applyBpeBytes(
-          documents(s, dir).filter(col("doc_id") < 20), "doc_id", "text",
-          merges)
-        .select(col("doc_id"),
-          size(col("tokens")).cast("long").as("n_tokens"),
-          size(array_distinct(col("tokens"))).cast("long").as("n_distinct"))
-        .orderBy("doc_id")
+      tokenCounts(llm.Bpe.applyBpeBytes(
+        documents(s, dir).filter(col("doc_id") < 20), "doc_id", "text",
+        merges))
     },
       bpeByteApplyOracleSql(8)),
 
@@ -828,19 +825,7 @@ $chain,
         .groupBy("lang").agg(count(lit(1)).as("kept"))
         .orderBy("lang")
     },
-      """WITH toks AS (SELECT doc_id, lang, string_split(text, ' ') AS t
-                       FROM documents),
-         grams AS (
-           SELECT doc_id, lang,
-                  array_to_string(t[i:i+7], ' ') AS g
-           FROM toks,
-                UNNEST(range(1, greatest(len(t) - 6, 2))) AS r(i)),
-         bench AS (SELECT DISTINCT g FROM grams WHERE doc_id % 97 = 0),
-         dirty AS (SELECT DISTINCT doc_id FROM grams
-                   WHERE g IN (SELECT g FROM bench))
-         SELECT lang, count(*) AS kept
-         FROM documents WHERE doc_id NOT IN (SELECT doc_id FROM dirty)
-         GROUP BY lang ORDER BY lang"""),
+      decontamOracle),
 
     // ---- Bloom-prefiltered decontamination: same fixture and SAME
     //      oracle as q_t_decontam — the bloom is a scan-local
@@ -858,19 +843,7 @@ $chain,
     },
       // bloom prefilter + exact verify == exact decontamination (FPs die
       // in the verify join), so the oracle is q_t_decontam's verbatim
-      """WITH toks AS (SELECT doc_id, lang, string_split(text, ' ') AS t
-                       FROM documents),
-         grams AS (
-           SELECT doc_id, lang,
-                  array_to_string(t[i:i+7], ' ') AS g
-           FROM toks,
-                UNNEST(range(1, greatest(len(t) - 6, 2))) AS r(i)),
-         bench AS (SELECT DISTINCT g FROM grams WHERE doc_id % 97 = 0),
-         dirty AS (SELECT DISTINCT doc_id FROM grams
-                   WHERE g IN (SELECT g FROM bench))
-         SELECT lang, count(*) AS kept
-         FROM documents WHERE doc_id NOT IN (SELECT doc_id FROM dirty)
-         GROUP BY lang ORDER BY lang"""),
+      decontamOracle),
 
     // ---- Thresholded (fractional-overlap) decontamination: the
     //      benchmark is a 20-word PREFIX EXCERPT of every 97th doc, so

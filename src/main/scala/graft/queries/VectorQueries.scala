@@ -173,8 +173,7 @@ object VectorQueries {
     //      gate
     Query("q_s_int8_topk", (s, dir) => {
       val e = spreadEmb(s, dir)
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding"))
+      val queries = queryPanel(e)
       llm.Similarity.int8TopKPerQuery(e, queries, "vec_id", "embedding",
           "query_id", k = 5)
         .select(col("query_id"), col("vec_id"),
@@ -217,8 +216,7 @@ object VectorQueries {
     //      bucket->join->rescore->rank pipeline is independently checked
     Query("q_s_ann_lsh", (s, dir) => {
       val e = spreadEmb(s, dir)
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding"))
+      val queries = queryPanel(e)
       llm.Similarity.annTopKPerQuery(e, queries, "vec_id", "embedding",
           "query_id", k = 5, numBits = 6)
         .select(col("query_id"), col("vec_id"), round(col("cos"), 6).as("cos"))
@@ -246,8 +244,7 @@ object VectorQueries {
     //      user's; the gate pins this config's quality.
     Query("q_s_ivf_ann", (s, dir) => {
       val e = spreadEmb(s, dir)
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding"))
+      val queries = queryPanel(e)
       val ann = llm.Similarity.ivfTopKPerQuery(e, queries, "vec_id",
         "embedding", "query_id", k = 5, nlist = 16, nprobe = 12)
       val exact = llm.Similarity.topKPerQuery(e, queries, "vec_id",
@@ -284,8 +281,7 @@ object VectorQueries {
       val model = llm.Pca.fit(e, col("embedding"), k = 32)
       val red = e.select(col("vec_id"),
         llm.Pca.project(col("embedding"), model).as("pv"))
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding"))
+      val queries = queryPanel(e)
       val redQ = red.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("pv"))
       val ann = llm.Similarity.rescoreTopKPerQuery(e, red, queries, redQ,
@@ -313,35 +309,19 @@ object VectorQueries {
     //      recomputed in DuckDB.
     Query("q_s_ivf_fixed", (s, dir) => {
       val e = spreadEmb(s, dir)
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding"))
+      val queries = queryPanel(e)
       val cents = llm.Similarity.initCentroids(e, "vec_id", "embedding", 16)
       llm.Similarity.ivfTopKWithCentroids(e, queries, "vec_id", "embedding",
           "query_id", k = 5, cents, nprobe = 4)
         .select(col("query_id"), col("vec_id"), round(col("cos"), 6).as("cos"))
         .orderBy(col("query_id"), col("cos").desc, col("vec_id"))
     },
-      """WITH cents AS (
-           SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid,
-                  CAST(embedding AS DOUBLE[]) AS c
-           FROM (SELECT * FROM embeddings ORDER BY vec_id LIMIT 16)),
-         scores AS (
-           SELECT v.vec_id, c.cid,
-             list_dot_product(CAST(v.embedding AS DOUBLE[]), c.c) /
-               (sqrt(list_dot_product(CAST(v.embedding AS DOUBLE[]),
-                                      CAST(v.embedding AS DOUBLE[]))) *
-                sqrt(list_dot_product(c.c, c.c))) AS cs
-           FROM embeddings v CROSS JOIN cents c),
-         assign AS (
-           SELECT vec_id, cid FROM (
-             SELECT vec_id, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid) AS rn
-             FROM scores) WHERE rn = 1),
-         probes AS (
-           SELECT vec_id AS query_id, cid FROM (
-             SELECT vec_id, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid) AS rn
-             FROM scores WHERE vec_id < 5) WHERE rn <= 4),
+      // IVF with the fixed first-16 quantizer: assignment (argmax cosine,
+      // ties to the lowest centroid id), nprobe=4 pruning, exact rescore,
+      // per-query top-5 — all recomputed independently. Cosines match
+      // bit-for-bit (left-to-right folds on both engines).
+      s"""WITH ${cosineCells(16)},
+         ${probesCte("scores", 4)},
          cand AS (
            SELECT p.query_id, a.vec_id,
              list_dot_product(CAST(cv.embedding AS DOUBLE[]),
@@ -369,8 +349,7 @@ object VectorQueries {
     //      codebooks, codes, and exact ADC distances.
     Query("q_s_pq_adc", (s, dir) => {
       val e = spreadEmb(s, dir)
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding"))
+      val queries = queryPanel(e)
       val cb = llm.Similarity.pqCodebooksFixed(e, "vec_id", "embedding",
         m = 8, k = 16)
       llm.Similarity.pqAdcTopK(e, queries, "vec_id", "embedding",
@@ -382,44 +361,7 @@ object VectorQueries {
       // vectors, codes = argmin(c·c − 2 c·v_m) with the same (score, j)
       // tie order, ADC = Σ_m (q·q − 2 q·c + c·c) over the chosen
       // centroids — identical expression structure to the engine.
-      """WITH base AS (
-           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         cb AS (
-           SELECT m.range AS m, b.vec_id AS j,
-                  list_slice(b.v, m.range*8 + 1, m.range*8 + 8) AS c
-           FROM range(8) m, (SELECT vec_id, v FROM base WHERE vec_id < 16) b),
-         scores AS (
-           SELECT b.vec_id, c.m, c.j,
-             list_dot_product(c.c, c.c) -
-               2*list_dot_product(c.c,
-                   list_slice(b.v, c.m*8 + 1, c.m*8 + 8)) AS s
-           FROM base b CROSS JOIN cb c),
-         codes AS (
-           SELECT vec_id, m, j AS code FROM (
-             SELECT vec_id, m, j,
-               row_number() OVER (PARTITION BY vec_id, m ORDER BY s, j) AS rn
-             FROM scores) WHERE rn = 1),
-         qsub AS (
-           SELECT b.vec_id AS query_id, m.range AS m,
-                  list_slice(b.v, m.range*8 + 1, m.range*8 + 8) AS qm
-           FROM base b, range(8) m WHERE b.vec_id < 5),
-         pair AS (
-           SELECT q.query_id, d.vec_id,
-             sum(list_dot_product(q.qm, q.qm) -
-                 2*list_dot_product(q.qm, c.c) +
-                 list_dot_product(c.c, c.c)) AS adc
-           FROM qsub q
-           JOIN codes d ON d.m = q.m
-           JOIN cb c ON c.m = d.m AND c.j = d.code
-           GROUP BY q.query_id, d.vec_id),
-         ranked AS (
-           SELECT query_id, vec_id, adc,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY adc, vec_id) AS rn
-           FROM pair)
-         SELECT query_id, vec_id, round(adc, 6) AS adc
-         FROM ranked WHERE rn <= 10
-         ORDER BY query_id, vec_id"""),
+      pqAdcOracle),
 
     // ---- PQ under Lloyd-TRAINED codebooks in the production shape:
     //      ADC candidate generation (candK=100) + exact L2 rescore of
@@ -440,8 +382,7 @@ object VectorQueries {
       // the ground-truth arm — materialize the spread ONCE instead of
       // re-paying the parquet read + repartition per consumer
       val e = spreadEmb(s, dir).localCheckpoint(true)
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding"))
+      val queries = queryPanel(e)
       val cb = llm.Similarity.pqCodebooksLloyd(e, "vec_id", "embedding",
         m = 8, k = 64, iters = 2, trainMaxRows = trainCap)
       val cand = llm.Similarity.pqAdcTopK(e, queries, "vec_id", "embedding",
@@ -479,8 +420,7 @@ object VectorQueries {
     //      q_s_ivf_fixed and q_s_pq_adc, value-checked end-to-end.
     Query("q_s_ivfpq", (s, dir) => {
       val e = spreadEmb(s, dir)
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding"))
+      val queries = queryPanel(e)
       val cents = llm.Similarity.initCentroids(e, "vec_id", "embedding", 16)
       val cb = llm.Similarity.pqCodebooksFixed(e, "vec_id", "embedding",
         m = 8, k = 16)
@@ -489,71 +429,9 @@ object VectorQueries {
         .select(col("query_id"), col("vec_id"), round(col("adc"), 6).as("adc"))
         .orderBy("query_id", "vec_id")
     },
-      // IVF with the fixed first-16 quantizer: assignment (argmax cosine,
-      // ties to the lowest centroid id), nprobe=4 pruning, exact rescore,
-      // per-query top-5 — all recomputed independently. Cosines match
-      // bit-for-bit (left-to-right folds on both engines).
       // IVF-PQ re-derived: coarse assignment + nprobe probes exactly as
       // q_s_ivf_fixed, codes/ADC exactly as q_s_pq_adc, composed.
-      """WITH base AS (
-           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         cents AS (
-           SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, v AS c
-           FROM (SELECT * FROM base ORDER BY vec_id LIMIT 16)),
-         cscores AS (
-           SELECT b.vec_id, ct.cid,
-             list_dot_product(b.v, ct.c) /
-               (sqrt(list_dot_product(b.v, b.v)) *
-                sqrt(list_dot_product(ct.c, ct.c))) AS cs
-           FROM base b CROSS JOIN cents ct),
-         assign AS (
-           SELECT vec_id, cid FROM (
-             SELECT vec_id, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid) AS rn
-             FROM cscores) WHERE rn = 1),
-         probes AS (
-           SELECT vec_id AS query_id, cid FROM (
-             SELECT vec_id, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid) AS rn
-             FROM cscores WHERE vec_id < 5) WHERE rn <= 4),
-         cb AS (
-           SELECT m.range AS m, b.vec_id AS j,
-                  list_slice(b.v, m.range*8 + 1, m.range*8 + 8) AS c
-           FROM range(8) m, (SELECT vec_id, v FROM base WHERE vec_id < 16) b),
-         pqscores AS (
-           SELECT b.vec_id, c.m, c.j,
-             list_dot_product(c.c, c.c) -
-               2*list_dot_product(c.c,
-                   list_slice(b.v, c.m*8 + 1, c.m*8 + 8)) AS s
-           FROM base b CROSS JOIN cb c),
-         codes AS (
-           SELECT vec_id, m, j AS code FROM (
-             SELECT vec_id, m, j,
-               row_number() OVER (PARTITION BY vec_id, m ORDER BY s, j) AS rn
-             FROM pqscores) WHERE rn = 1),
-         qsub AS (
-           SELECT b.vec_id AS query_id, m.range AS m,
-                  list_slice(b.v, m.range*8 + 1, m.range*8 + 8) AS qm
-           FROM base b, range(8) m WHERE b.vec_id < 5),
-         pair AS (
-           SELECT q.query_id, d.vec_id,
-             sum(list_dot_product(q.qm, q.qm) -
-                 2*list_dot_product(q.qm, c.c) +
-                 list_dot_product(c.c, c.c)) AS adc
-           FROM qsub q
-           JOIN codes d ON d.m = q.m
-           JOIN assign a ON a.vec_id = d.vec_id
-           JOIN probes p ON p.query_id = q.query_id AND p.cid = a.cid
-           JOIN cb c ON c.m = d.m AND c.j = d.code
-           GROUP BY q.query_id, d.vec_id),
-         ranked AS (
-           SELECT query_id, vec_id, adc,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY adc, vec_id) AS rn
-           FROM pair)
-         SELECT query_id, vec_id, round(adc, 6) AS adc
-         FROM ranked WHERE rn <= 10
-         ORDER BY query_id, vec_id"""),
+      ivfPqOracle),
 
     // ---- residual-encoding IVF-PQ (FAISS IndexIVFPQ layout): PQ codes
     //      cover the residual to the assigned coarse cell, and each
@@ -563,17 +441,8 @@ object VectorQueries {
     //      assignments, residuals, residual codebooks, codes, and ADC.
     Query("q_s_ivfpq_residual", (s, dir) => {
       val e = spreadEmb(s, dir)
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      val cents = llm.Similarity.initCentroids(e, "vec_id", "embedding", 16)
-      // codebook seeds from ids 16..31, NOT 0..15: the first 16 vectors
-      // ARE the coarse centroids, so their residuals are all zero and
-      // would make every codebook entry the zero vector (degenerate
-      // all-zero ADC). The next 16 ids give nontrivial codes.
-      val cb = llm.Similarity.pqCodebooksFixed(
-        llm.Similarity.residualCorpus(e, "vec_id", "embedding", cents)
-          .filter(col("vec_id").between(16, 31)),
-        "vec_id", "embedding", m = 8, k = 16)
+      val queries = queryPanel(e)
+      val (cents, cb) = residualQuantizers(e)
       llm.Similarity.ivfPqResidualTopK(e, queries, "vec_id", "embedding",
           "query_id", k = 10, cents, nprobe = 4, cb)
         .select(col("query_id"), col("vec_id"), round(col("adc"), 6).as("adc"))
@@ -585,80 +454,7 @@ object VectorQueries {
       // codes = argmin over residual slices; the query residual (and so
       // its ADC table) is rebuilt PER PROBED CELL. Same left-to-right
       // fold structure as the engine, so ADC matches at 6 decimals.
-      """WITH base AS (
-           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         cents AS (
-           SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, v AS c
-           FROM (SELECT * FROM base ORDER BY vec_id LIMIT 16)),
-         cscores AS (
-           SELECT b.vec_id, ct.cid,
-             list_dot_product(b.v, ct.c) /
-               (sqrt(list_dot_product(b.v, b.v)) *
-                sqrt(list_dot_product(ct.c, ct.c))) AS cs
-           FROM base b CROSS JOIN cents ct),
-         assign AS (
-           SELECT vec_id, cid FROM (
-             SELECT vec_id, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid) AS rn
-             FROM cscores) WHERE rn = 1),
-         resid AS (
-           SELECT b.vec_id, a.cid,
-             list_transform(range(1, 1 + len(b.v)),
-               i -> b.v[i] - ct.c[i]) AS r
-           FROM base b
-           JOIN assign a ON a.vec_id = b.vec_id
-           JOIN cents ct ON ct.cid = a.cid),
-         cb AS (
-           SELECT m.range AS m, r.vec_id - 16 AS j,
-                  list_slice(r.r, m.range*8 + 1, m.range*8 + 8) AS c
-           FROM range(8) m,
-                (SELECT vec_id, r FROM resid
-                 WHERE vec_id BETWEEN 16 AND 31) r),
-         pqscores AS (
-           SELECT r.vec_id, c.m, c.j,
-             list_dot_product(c.c, c.c) -
-               2*list_dot_product(c.c,
-                   list_slice(r.r, c.m*8 + 1, c.m*8 + 8)) AS s
-           FROM resid r CROSS JOIN cb c),
-         codes AS (
-           SELECT vec_id, m, j AS code FROM (
-             SELECT vec_id, m, j,
-               row_number() OVER (PARTITION BY vec_id, m ORDER BY s, j) AS rn
-             FROM pqscores) WHERE rn = 1),
-         probes AS (
-           SELECT vec_id AS query_id, cid FROM (
-             SELECT vec_id, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid) AS rn
-             FROM cscores WHERE vec_id < 5) WHERE rn <= 4),
-         qres AS (
-           SELECT p.query_id, p.cid,
-             list_transform(range(1, 1 + len(b.v)),
-               i -> b.v[i] - ct.c[i]) AS r
-           FROM probes p
-           JOIN base b ON b.vec_id = p.query_id
-           JOIN cents ct ON ct.cid = p.cid),
-         qsub AS (
-           SELECT q.query_id, q.cid, m.range AS m,
-                  list_slice(q.r, m.range*8 + 1, m.range*8 + 8) AS qm
-           FROM qres q, range(8) m),
-         pair AS (
-           SELECT q.query_id, d.vec_id,
-             sum(list_dot_product(q.qm, q.qm) -
-                 2*list_dot_product(q.qm, c.c) +
-                 list_dot_product(c.c, c.c)) AS adc
-           FROM qsub q
-           JOIN assign a ON a.cid = q.cid
-           JOIN codes d ON d.vec_id = a.vec_id AND d.m = q.m
-           JOIN cb c ON c.m = d.m AND c.j = d.code
-           GROUP BY q.query_id, d.vec_id),
-         ranked AS (
-           SELECT query_id, vec_id, adc,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY adc, vec_id) AS rn
-           FROM pair)
-         SELECT query_id, vec_id, round(adc, 6) AS adc
-         FROM ranked WHERE rn <= 10
-         ORDER BY query_id, vec_id"""),
+      residualIvfPqOracle(nprobe = 4)),
 
     // ---- the reason residual encoding exists, measured: ADC-ONLY
     //      recall@10 (no exact rescore anywhere) of residual IVF-PQ vs
@@ -675,8 +471,7 @@ object VectorQueries {
       // decode-once: e feeds kmeans, two Lloyd trainings, two index
       // scans and the ground-truth arm (~8 rescans of the spread)
       val e = spreadEmb(s, dir).localCheckpoint(true)
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding"))
+      val queries = queryPanel(e)
       val cents = llm.Similarity.kmeansCentroids(e, "vec_id", "embedding",
         nlist = 16, iters = 3, trainMaxRows = trainCap)
       val cbRaw = llm.Similarity.pqCodebooksLloyd(e, "vec_id", "embedding",
@@ -723,8 +518,7 @@ object VectorQueries {
         .select(col("vec_id"), transform(col("embedding"),
           (x, j) => x * (j.cast("double") + 1.0)).as("embedding"))
         .localCheckpoint(true)
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding"))
+      val queries = queryPanel(e)
       // session-memoized ground truth (the measurement, not the index)
       val exact = llm.Similarity.exactL2TopKCached(s"$dir|aniso5",
         e, queries, "vec_id", "embedding", "query_id", k = 10)
@@ -769,8 +563,7 @@ object VectorQueries {
           (x, y) => x * 0.8 + y * 0.6).as("embedding"))
         // decode-once: the alternation rescans this frame every round
         .localCheckpoint(true)
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding"))
+      val queries = queryPanel(e)
       // session-memoized ground truth (the measurement, not the index)
       val exact = llm.Similarity.exactL2TopKCached(s"$dir|aniso-mix5",
         e, queries, "vec_id", "embedding", "query_id", k = 10)
@@ -816,19 +609,12 @@ object VectorQueries {
     //      reproducible bit-for-bit by the DuckDB oracle.
     Query("q_s_opq_ivfpq", (s, dir) => {
       val e = spreadEmb(s, dir)
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding"))
+      val queries = queryPanel(e)
       val rot = llm.Similarity.permutationRotation(
         (0 until 64).map(i => i * 5 % 64))
       val er = e.select(col("vec_id"),
         llm.Pca.project(col("embedding"), rot).as("embedding"))
-      val cents = llm.Similarity.initCentroids(er, "vec_id", "embedding", 16)
-      // seeds from ids 16..31 — ids 0..15 are the centroids themselves
-      // (zero residuals, degenerate codebooks); see q_s_ivfpq_residual
-      val cb = llm.Similarity.pqCodebooksFixed(
-        llm.Similarity.residualCorpus(er, "vec_id", "embedding", cents)
-          .filter(col("vec_id").between(16, 31)),
-        "vec_id", "embedding", m = 8, k = 16)
+      val (cents, cb) = residualQuantizers(er)
       llm.Similarity.opqIvfPqResidualTopK(e, queries, "vec_id", "embedding",
           "query_id", k = 10, rot, cents, nprobe = 4, cb)
         .select(col("query_id"), col("vec_id"), round(col("adc"), 6).as("adc"))
@@ -839,84 +625,7 @@ object VectorQueries {
       // y_i = x_{5i mod 64} (the value-exact stand-in for a trained
       // rotation) — cells, residuals, codebooks, probes, and ADC all
       // computed in permuted space
-      """WITH raw AS (
-           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v0 FROM embeddings),
-         base AS (
-           SELECT vec_id,
-             list_transform(range(0, 64), i -> v0[(i*5)%64 + 1]) AS v
-           FROM raw),
-         cents AS (
-           SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, v AS c
-           FROM (SELECT * FROM base ORDER BY vec_id LIMIT 16)),
-         cscores AS (
-           SELECT b.vec_id, ct.cid,
-             list_dot_product(b.v, ct.c) /
-               (sqrt(list_dot_product(b.v, b.v)) *
-                sqrt(list_dot_product(ct.c, ct.c))) AS cs
-           FROM base b CROSS JOIN cents ct),
-         assign AS (
-           SELECT vec_id, cid FROM (
-             SELECT vec_id, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid) AS rn
-             FROM cscores) WHERE rn = 1),
-         resid AS (
-           SELECT b.vec_id, a.cid,
-             list_transform(range(1, 1 + len(b.v)),
-               i -> b.v[i] - ct.c[i]) AS r
-           FROM base b
-           JOIN assign a ON a.vec_id = b.vec_id
-           JOIN cents ct ON ct.cid = a.cid),
-         cb AS (
-           SELECT m.range AS m, r.vec_id - 16 AS j,
-                  list_slice(r.r, m.range*8 + 1, m.range*8 + 8) AS c
-           FROM range(8) m,
-                (SELECT vec_id, r FROM resid
-                 WHERE vec_id BETWEEN 16 AND 31) r),
-         pqscores AS (
-           SELECT r.vec_id, c.m, c.j,
-             list_dot_product(c.c, c.c) -
-               2*list_dot_product(c.c,
-                   list_slice(r.r, c.m*8 + 1, c.m*8 + 8)) AS s
-           FROM resid r CROSS JOIN cb c),
-         codes AS (
-           SELECT vec_id, m, j AS code FROM (
-             SELECT vec_id, m, j,
-               row_number() OVER (PARTITION BY vec_id, m ORDER BY s, j) AS rn
-             FROM pqscores) WHERE rn = 1),
-         probes AS (
-           SELECT vec_id AS query_id, cid FROM (
-             SELECT vec_id, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid) AS rn
-             FROM cscores WHERE vec_id < 5) WHERE rn <= 4),
-         qres AS (
-           SELECT p.query_id, p.cid,
-             list_transform(range(1, 1 + len(b.v)),
-               i -> b.v[i] - ct.c[i]) AS r
-           FROM probes p
-           JOIN base b ON b.vec_id = p.query_id
-           JOIN cents ct ON ct.cid = p.cid),
-         qsub AS (
-           SELECT q.query_id, q.cid, m.range AS m,
-                  list_slice(q.r, m.range*8 + 1, m.range*8 + 8) AS qm
-           FROM qres q, range(8) m),
-         pair AS (
-           SELECT q.query_id, d.vec_id,
-             sum(list_dot_product(q.qm, q.qm) -
-                 2*list_dot_product(q.qm, c.c) +
-                 list_dot_product(c.c, c.c)) AS adc
-           FROM qsub q
-           JOIN assign a ON a.cid = q.cid
-           JOIN codes d ON d.vec_id = a.vec_id AND d.m = q.m
-           JOIN cb c ON c.m = d.m AND c.j = d.code
-           GROUP BY q.query_id, d.vec_id),
-         ranked AS (
-           SELECT query_id, vec_id, adc,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY adc, vec_id) AS rn
-           FROM pair)
-         SELECT query_id, vec_id, round(adc, 6) AS adc
-         FROM ranked WHERE rn <= 10
-         ORDER BY query_id, vec_id"""),
+      residualIvfPqOracle(nprobe = 4, permuteBase = true)),
 
     // ---- the composed chain's payoff, measured: ADC-only recall@10 of
     //      OPQ∘residual-IVF-PQ vs PLAIN residual IVF-PQ, same corpus
@@ -937,8 +646,7 @@ object VectorQueries {
       // 20 queries, not 5: recall@10 over 5 queries moves in 0.02 steps
       // and the measured margins here are ~0.04 — the wider panel is
       // what makes the beats-plain verdict stable run to run
-      val queries = e.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("query_id"), col("embedding"))
+      val queries = queryPanel(e, 20)
       // session-memoized ground truth (the measurement, not the index)
       val exact = llm.Similarity.exactL2TopKCached(s"$dir|aniso20",
         e, queries, "vec_id", "embedding", "query_id", k = 10)
@@ -994,8 +702,7 @@ object VectorQueries {
     //      parameters are what make this a distinct correctness row.
     Query("q_s_lopq", (s, dir) => {
       val e = spreadEmb(s, dir)
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding"))
+      val queries = queryPanel(e)
       val rot = llm.Similarity.permutationRotation(
         (0 until 64).map(i => i * 5 % 64))
       val cents = llm.Similarity.initCentroids(e, "vec_id", "embedding", 16)
@@ -1004,7 +711,7 @@ object VectorQueries {
         .select(col("vec_id"),
           llm.Pca.project(col("embedding"), rot).as("embedding"))
       // seeds from ids 16..31 — ids 0..15 are the centroids themselves
-      // (zero residuals, degenerate codebooks); see q_s_ivfpq_residual
+      // (zero residuals, degenerate codebooks); see residualQuantizers
       val cb = llm.Similarity.pqCodebooksFixed(
         resRot.filter(col("vec_id").between(16, 31)), "vec_id",
         "embedding", m = 4, k = 16)
@@ -1016,80 +723,7 @@ object VectorQueries {
       // LOPQ-style fixed slots: cells + residuals exactly as the
       // q_s_ivfpq_residual oracle, then the RESIDUAL permuted
       // y_i = r_{5i mod 64} before codebook slicing / encode / ADC
-      """WITH base AS (
-           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         cents AS (
-           SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, v AS c
-           FROM (SELECT * FROM base ORDER BY vec_id LIMIT 16)),
-         cscores AS (
-           SELECT b.vec_id, ct.cid,
-             list_dot_product(b.v, ct.c) /
-               (sqrt(list_dot_product(b.v, b.v)) *
-                sqrt(list_dot_product(ct.c, ct.c))) AS cs
-           FROM base b CROSS JOIN cents ct),
-         assign AS (
-           SELECT vec_id, cid FROM (
-             SELECT vec_id, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid) AS rn
-             FROM cscores) WHERE rn = 1),
-         resid AS (
-           SELECT b.vec_id, a.cid,
-             list_transform(range(0, 64),
-               i -> b.v[(i*5)%64 + 1] - ct.c[(i*5)%64 + 1]) AS r
-           FROM base b
-           JOIN assign a ON a.vec_id = b.vec_id
-           JOIN cents ct ON ct.cid = a.cid),
-         cb AS (
-           SELECT m.range AS m, r.vec_id - 16 AS j,
-                  list_slice(r.r, m.range*16 + 1, m.range*16 + 16) AS c
-           FROM range(4) m,
-                (SELECT vec_id, r FROM resid
-                 WHERE vec_id BETWEEN 16 AND 31) r),
-         pqscores AS (
-           SELECT r.vec_id, c.m, c.j,
-             list_dot_product(c.c, c.c) -
-               2*list_dot_product(c.c,
-                   list_slice(r.r, c.m*16 + 1, c.m*16 + 16)) AS s
-           FROM resid r CROSS JOIN cb c),
-         codes AS (
-           SELECT vec_id, m, j AS code FROM (
-             SELECT vec_id, m, j,
-               row_number() OVER (PARTITION BY vec_id, m ORDER BY s, j) AS rn
-             FROM pqscores) WHERE rn = 1),
-         probes AS (
-           SELECT vec_id AS query_id, cid FROM (
-             SELECT vec_id, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid) AS rn
-             FROM cscores WHERE vec_id < 5) WHERE rn <= 3),
-         qres AS (
-           SELECT p.query_id, p.cid,
-             list_transform(range(0, 64),
-               i -> b.v[(i*5)%64 + 1] - ct.c[(i*5)%64 + 1]) AS r
-           FROM probes p
-           JOIN base b ON b.vec_id = p.query_id
-           JOIN cents ct ON ct.cid = p.cid),
-         qsub AS (
-           SELECT q.query_id, q.cid, m.range AS m,
-                  list_slice(q.r, m.range*16 + 1, m.range*16 + 16) AS qm
-           FROM qres q, range(4) m),
-         pair AS (
-           SELECT q.query_id, d.vec_id,
-             sum(list_dot_product(q.qm, q.qm) -
-                 2*list_dot_product(q.qm, c.c) +
-                 list_dot_product(c.c, c.c)) AS adc
-           FROM qsub q
-           JOIN assign a ON a.cid = q.cid
-           JOIN codes d ON d.vec_id = a.vec_id AND d.m = q.m
-           JOIN cb c ON c.m = d.m AND c.j = d.code
-           GROUP BY q.query_id, d.vec_id),
-         ranked AS (
-           SELECT query_id, vec_id, adc,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY adc, vec_id) AS rn
-           FROM pair)
-         SELECT query_id, vec_id, round(adc, 6) AS adc
-         FROM ranked WHERE rn <= 10
-         ORDER BY query_id, vec_id"""),
+      residualIvfPqOracle(nprobe = 3, m = 4, permuteResidual = true)),
 
     // ---- LOPQ-style composition's payoff: rotation trained on the
     //      RESIDUAL distribution (the covariance the codebooks actually
@@ -1105,8 +739,7 @@ object VectorQueries {
         .select(col("vec_id"), transform(col("embedding"),
           (x, j) => x * (j.cast("double") + 1.0)).as("embedding"))
         .localCheckpoint(true)
-      val queries = e.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("query_id"), col("embedding"))
+      val queries = queryPanel(e, 20)
       // session-memoized ground truth, SHARED with q_s_opq_ivfpq_recall
       // (same anisotropized fixture, same 20-query panel, same k)
       val exact = llm.Similarity.exactL2TopKCached(s"$dir|aniso20",
@@ -1172,8 +805,7 @@ object VectorQueries {
               * (j.cast("double") + 1.0)) + x.cast("double"))
             .as("embedding"))
         .localCheckpoint(true)
-      val queries = clustered.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("query_id"), col("embedding"))
+      val queries = queryPanel(clustered, 20)
       val exact = llm.Similarity.exactL2TopKCached(s"$dir|clust20",
         clustered, queries, "vec_id", "embedding", "query_id", k = 10)
       def recallOf(cents: Seq[Seq[Double]]): Double =
@@ -1207,13 +839,8 @@ object VectorQueries {
     //      so a round-trip that loses a double anywhere hash-fails.
     Query("q_s_index_persist", (s, dir) => {
       val e = spreadEmb(s, dir)
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      val cents = llm.Similarity.initCentroids(e, "vec_id", "embedding", 16)
-      val cb = llm.Similarity.pqCodebooksFixed(
-        llm.Similarity.residualCorpus(e, "vec_id", "embedding", cents)
-          .filter(col("vec_id").between(16, 31)),
-        "vec_id", "embedding", m = 8, k = 16)
+      val queries = queryPanel(e)
+      val (cents, cb) = residualQuantizers(e)
       val idxDir = tempFixtureDir("graft-ivfpq-index").toString
       llm.IndexStore.save(
         llm.IndexStore.build("ivfpq_residual", e, "vec_id", "embedding",
@@ -1228,80 +855,7 @@ object VectorQueries {
       // q_s_ivfpq_residual oracle with nprobe=3. A persistence bug that
       // drops a double anywhere (centroid order, codebook slice,
       // partition-column cell id) breaks the 6-decimal ADC hash.
-      """WITH base AS (
-           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         cents AS (
-           SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, v AS c
-           FROM (SELECT * FROM base ORDER BY vec_id LIMIT 16)),
-         cscores AS (
-           SELECT b.vec_id, ct.cid,
-             list_dot_product(b.v, ct.c) /
-               (sqrt(list_dot_product(b.v, b.v)) *
-                sqrt(list_dot_product(ct.c, ct.c))) AS cs
-           FROM base b CROSS JOIN cents ct),
-         assign AS (
-           SELECT vec_id, cid FROM (
-             SELECT vec_id, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid) AS rn
-             FROM cscores) WHERE rn = 1),
-         resid AS (
-           SELECT b.vec_id, a.cid,
-             list_transform(range(1, 1 + len(b.v)),
-               i -> b.v[i] - ct.c[i]) AS r
-           FROM base b
-           JOIN assign a ON a.vec_id = b.vec_id
-           JOIN cents ct ON ct.cid = a.cid),
-         cb AS (
-           SELECT m.range AS m, r.vec_id - 16 AS j,
-                  list_slice(r.r, m.range*8 + 1, m.range*8 + 8) AS c
-           FROM range(8) m,
-                (SELECT vec_id, r FROM resid
-                 WHERE vec_id BETWEEN 16 AND 31) r),
-         pqscores AS (
-           SELECT r.vec_id, c.m, c.j,
-             list_dot_product(c.c, c.c) -
-               2*list_dot_product(c.c,
-                   list_slice(r.r, c.m*8 + 1, c.m*8 + 8)) AS s
-           FROM resid r CROSS JOIN cb c),
-         codes AS (
-           SELECT vec_id, m, j AS code FROM (
-             SELECT vec_id, m, j,
-               row_number() OVER (PARTITION BY vec_id, m ORDER BY s, j) AS rn
-             FROM pqscores) WHERE rn = 1),
-         probes AS (
-           SELECT vec_id AS query_id, cid FROM (
-             SELECT vec_id, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid) AS rn
-             FROM cscores WHERE vec_id < 5) WHERE rn <= 3),
-         qres AS (
-           SELECT p.query_id, p.cid,
-             list_transform(range(1, 1 + len(b.v)),
-               i -> b.v[i] - ct.c[i]) AS r
-           FROM probes p
-           JOIN base b ON b.vec_id = p.query_id
-           JOIN cents ct ON ct.cid = p.cid),
-         qsub AS (
-           SELECT q.query_id, q.cid, m.range AS m,
-                  list_slice(q.r, m.range*8 + 1, m.range*8 + 8) AS qm
-           FROM qres q, range(8) m),
-         pair AS (
-           SELECT q.query_id, d.vec_id,
-             sum(list_dot_product(q.qm, q.qm) -
-                 2*list_dot_product(q.qm, c.c) +
-                 list_dot_product(c.c, c.c)) AS adc
-           FROM qsub q
-           JOIN assign a ON a.cid = q.cid
-           JOIN codes d ON d.vec_id = a.vec_id AND d.m = q.m
-           JOIN cb c ON c.m = d.m AND c.j = d.code
-           GROUP BY q.query_id, d.vec_id),
-         ranked AS (
-           SELECT query_id, vec_id, adc,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY adc, vec_id) AS rn
-           FROM pair)
-         SELECT query_id, vec_id, round(adc, 6) AS adc
-         FROM ranked WHERE rn <= 10
-         ORDER BY query_id, vec_id"""),
+      residualIvfPqOracle(nprobe = 3)),
 
     // ---- index MAINTENANCE as a driver-checked row: build the
     //      residual IVF-PQ index over HALF the corpus (even vec_ids),
@@ -1313,15 +867,10 @@ object VectorQueries {
     //      in the append path hash-fails.
     Query("q_s_index_append", (s, dir) => {
       val e = spreadEmb(s, dir)
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding"))
+      val queries = queryPanel(e)
       // quantizers from the FULL corpus (frozen model state; the split
       // only affects which half is encoded at build vs append time)
-      val cents = llm.Similarity.initCentroids(e, "vec_id", "embedding", 16)
-      val cb = llm.Similarity.pqCodebooksFixed(
-        llm.Similarity.residualCorpus(e, "vec_id", "embedding", cents)
-          .filter(col("vec_id").between(16, 31)),
-        "vec_id", "embedding", m = 8, k = 16)
+      val (cents, cb) = residualQuantizers(e)
       val idxDir = tempFixtureDir("graft-ivfpq-append").toString
       llm.IndexStore.save(
         llm.IndexStore.build("ivfpq_residual",
@@ -1336,80 +885,7 @@ object VectorQueries {
       // append == one-shot build: the q_s_index_persist re-derivation
       // verbatim — a correct frozen-quantizer append is
       // indistinguishable from indexing the full corpus at build time
-      """WITH base AS (
-           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         cents AS (
-           SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, v AS c
-           FROM (SELECT * FROM base ORDER BY vec_id LIMIT 16)),
-         cscores AS (
-           SELECT b.vec_id, ct.cid,
-             list_dot_product(b.v, ct.c) /
-               (sqrt(list_dot_product(b.v, b.v)) *
-                sqrt(list_dot_product(ct.c, ct.c))) AS cs
-           FROM base b CROSS JOIN cents ct),
-         assign AS (
-           SELECT vec_id, cid FROM (
-             SELECT vec_id, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid) AS rn
-             FROM cscores) WHERE rn = 1),
-         resid AS (
-           SELECT b.vec_id, a.cid,
-             list_transform(range(1, 1 + len(b.v)),
-               i -> b.v[i] - ct.c[i]) AS r
-           FROM base b
-           JOIN assign a ON a.vec_id = b.vec_id
-           JOIN cents ct ON ct.cid = a.cid),
-         cb AS (
-           SELECT m.range AS m, r.vec_id - 16 AS j,
-                  list_slice(r.r, m.range*8 + 1, m.range*8 + 8) AS c
-           FROM range(8) m,
-                (SELECT vec_id, r FROM resid
-                 WHERE vec_id BETWEEN 16 AND 31) r),
-         pqscores AS (
-           SELECT r.vec_id, c.m, c.j,
-             list_dot_product(c.c, c.c) -
-               2*list_dot_product(c.c,
-                   list_slice(r.r, c.m*8 + 1, c.m*8 + 8)) AS s
-           FROM resid r CROSS JOIN cb c),
-         codes AS (
-           SELECT vec_id, m, j AS code FROM (
-             SELECT vec_id, m, j,
-               row_number() OVER (PARTITION BY vec_id, m ORDER BY s, j) AS rn
-             FROM pqscores) WHERE rn = 1),
-         probes AS (
-           SELECT vec_id AS query_id, cid FROM (
-             SELECT vec_id, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid) AS rn
-             FROM cscores WHERE vec_id < 5) WHERE rn <= 3),
-         qres AS (
-           SELECT p.query_id, p.cid,
-             list_transform(range(1, 1 + len(b.v)),
-               i -> b.v[i] - ct.c[i]) AS r
-           FROM probes p
-           JOIN base b ON b.vec_id = p.query_id
-           JOIN cents ct ON ct.cid = p.cid),
-         qsub AS (
-           SELECT q.query_id, q.cid, m.range AS m,
-                  list_slice(q.r, m.range*8 + 1, m.range*8 + 8) AS qm
-           FROM qres q, range(8) m),
-         pair AS (
-           SELECT q.query_id, d.vec_id,
-             sum(list_dot_product(q.qm, q.qm) -
-                 2*list_dot_product(q.qm, c.c) +
-                 list_dot_product(c.c, c.c)) AS adc
-           FROM qsub q
-           JOIN assign a ON a.cid = q.cid
-           JOIN codes d ON d.vec_id = a.vec_id AND d.m = q.m
-           JOIN cb c ON c.m = d.m AND c.j = d.code
-           GROUP BY q.query_id, d.vec_id),
-         ranked AS (
-           SELECT query_id, vec_id, adc,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY adc, vec_id) AS rn
-           FROM pair)
-         SELECT query_id, vec_id, round(adc, 6) AS adc
-         FROM ranked WHERE rn <= 10
-         ORDER BY query_id, vec_id"""),
+      residualIvfPqOracle(nprobe = 3)),
 
     // ---- index COMPACTION (VERDICT r19 item 3a): a daily-append
     //      deployment accumulates one part file per touched cell per
@@ -1422,13 +898,8 @@ object VectorQueries {
     //      q_s_index_append's re-derivation verbatim).
     Query("q_s_index_compact", (s, dir) => {
       val e = spreadEmb(s, dir)
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      val cents = llm.Similarity.initCentroids(e, "vec_id", "embedding", 16)
-      val cb = llm.Similarity.pqCodebooksFixed(
-        llm.Similarity.residualCorpus(e, "vec_id", "embedding", cents)
-          .filter(col("vec_id").between(16, 31)),
-        "vec_id", "embedding", m = 8, k = 16)
+      val queries = queryPanel(e)
+      val (cents, cb) = residualQuantizers(e)
       val idxDir = tempFixtureDir("graft-ivfpq-compact").toString
       llm.IndexStore.save(
         llm.IndexStore.build("ivfpq_residual",
@@ -1466,13 +937,8 @@ object VectorQueries {
     //      (compact applies tombstones and clears them).
     Query("q_s_index_delete", (s, dir) => {
       val e = spreadEmb(s, dir)
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      val cents = llm.Similarity.initCentroids(e, "vec_id", "embedding", 16)
-      val cb = llm.Similarity.pqCodebooksFixed(
-        llm.Similarity.residualCorpus(e, "vec_id", "embedding", cents)
-          .filter(col("vec_id").between(16, 31)),
-        "vec_id", "embedding", m = 8, k = 16)
+      val queries = queryPanel(e)
+      val (cents, cb) = residualQuantizers(e)
       val idxDir = tempFixtureDir("graft-ivfpq-delete").toString
       llm.IndexStore.save(
         llm.IndexStore.build("ivfpq_residual", e, "vec_id", "embedding",

@@ -509,6 +509,10 @@ class PlanAuditSpec extends SparkTestBase {
       !p.contains("BroadcastNestedLoopJoin"),
       s"ST_Contains join must bucket, not pair all rows:\n$p")
     assert(p.contains("HashJoin"), s"cell join should be a hash equi-join:\n$p")
+    // Geo.bboxCells binds the ring's lon array once for its min and max
+    val o = df.queryExecution.optimizedPlan.toString
+    assert("""transform\(__ring#\d+, lambdafunction\(lambda \w+#\d+\.lon""".r
+      .findAllIn(o).size === 1, s"one lon projection of the ring:\n$o")
   }
 
   test("r12 operators keep their scale shapes (PQ, IVF-PQ, SemDeDup, multipolygon)") {
